@@ -35,14 +35,21 @@ import graft.operators.ScaleOps
   * admitted-corpus band state (self-rows excluded, the `excludeIds`
   * replay discipline).
   *
-  * Scale shape: three projections (source, quality, contamination —
-  * the Bloom probe is a bitmap column, no join), one banded
-  * broadcast-join sweep (bench state is eval-corpus-sized), two
-  * broadcast-model scoring passes with one doc_id rollup each, and one
-  * band-state equi-join keyed on (band, bkey) with a per-doc rollup —
-  * the whole report is a constant number of corpus scans with
-  * broadcast-bounded or band-keyed equi-joins, no doc-by-doc term
-  * anywhere.
+  * Scale shape: five projections in the scan of the documents
+  * (source, quality, contamination — the Bloom probe is a bitmap
+  * column, no join — and the LM and NB scores, each a lookup in a model
+  * broadcast once), one banded broadcast-join sweep (bench state is
+  * eval-corpus-sized), and one band-state equi-join keyed on
+  * (band, bkey) with a per-doc rollup — the whole report is a constant
+  * number of corpus scans with broadcast-bounded or band-keyed
+  * equi-joins, no doc-by-doc term anywhere.
+  *
+  * Frozen artifacts are resolved ONCE per consumer: [[report]] collects
+  * and broadcasts both models and validates the bench-signature and
+  * band-state layouts itself; a streaming pipeline does the same at
+  * start ([[requireLayouts]], [[TextAnalysis.resolveLm]],
+  * [[Classifier.resolveNb]]) and runs [[reportResolved]] per
+  * micro-batch, so no batch pays a probe.
   */
 object Admission {
 
@@ -118,6 +125,42 @@ object Admission {
              nbModel: DataFrame, allowedLabels: Seq[String],
              nbBuckets: Int = 1024,
              nearDup: Option[NearDupCfg] = None): DataFrame = {
+    requireLayouts(semantic, nearDup)
+    reportResolved(docs, benchSources, shingleGate, contamThreshold,
+      semantic, TextAnalysis.resolveLm(lmModel), minAvgLp,
+      Classifier.resolveNb(nbModel, nbBuckets), allowedLabels, nearDup)
+  }
+
+  /** Fail loudly when a gate's persisted state was built under a
+    * different layout than the gate is called with: the bench-signature
+    * state's banding, the near-dup band state's and a caller-supplied
+    * probe's (w, num_hashes, band_width). One one-row probe each; a
+    * consumer validates once per frozen state, not per evaluation.
+    */
+  private[graft] def requireLayouts(semantic: Option[SemanticCfg],
+                                    nearDup: Option[NearDupCfg]): Unit = {
+    semantic.foreach(g => Corpus.requireBenchSigLayout(g.benchState,
+      g.numPlanes, g.bandWidth, g.dim))
+    nearDup.foreach { g =>
+      val layout = Seq("w" -> g.w, "num_hashes" -> g.numHashes,
+        "band_width" -> g.bandWidth)
+      Dedup.requireStateLayout(g.seenBands, "seen band table", layout)
+      g.bands.foreach(Dedup.requireStateLayout(_, "probe band table", layout))
+    }
+  }
+
+  /** [[report]] over resolved models and layouts its caller validated
+    * ([[requireLayouts]]): builds the plan without running a job.
+    */
+  private[graft] def reportResolved(docs: DataFrame,
+                                    benchSources: Seq[String],
+                                    shingleGate: Column => Column,
+                                    contamThreshold: Double,
+                                    semantic: Option[SemanticCfg],
+                                    lm: LmScorer, minAvgLp: Double,
+                                    nb: NbScorer,
+                                    allowedLabels: Seq[String],
+                                    nearDup: Option[NearDupCfg]): DataFrame = {
     require(allowedLabels.nonEmpty,
       "admission report: empty allowed-label set would reject everything")
     // contamination probe: corpusCleanStream's projection verbatim
@@ -147,9 +190,13 @@ object Admission {
       .withColumn("_c_score", when(col("_n_sh") > 0,
         col("_n_hit").cast("double") / col("_n_sh").cast("double")))
       .drop("_sh")
+      // LM and NB gates: per-row lookups in the broadcast models, in the
+      // same scan — no pair explode, model join or doc_id rollup
+      .withColumn("_lm", lm.scoreColumn(col("text")))
+      .withColumn("_nb", nb.classifyColumn(col("text")))
     val withSem = semantic match {
       case Some(g) =>
-        val flagged = Corpus.embeddingContaminatedIds(
+        val flagged = Corpus.sweepBenchSignatures(
             docs.select(col("doc_id")), g.emb, g.benchState, g.threshold,
             g.numPlanes, g.bandWidth, g.dim)
           .withColumn("_sem_hit", lit(true))
@@ -170,16 +217,10 @@ object Admission {
     // evidence is a definite verdict, not an unscorable one.
     val withNd = nearDup match {
       case Some(g) =>
-        Dedup.requireStateLayout(g.seenBands, "seen band table",
-          Seq("w" -> g.w, "num_hashes" -> g.numHashes,
-            "band_width" -> g.bandWidth))
         // the probe: caller-precomputed when present (the pruned-state
         // pipeline builds it anyway to collect the batch's cells —
         // paying a second shingle→minhash pass here would double the
-        // per-batch cost), validated against the gate layout either way
-        g.bands.foreach(b => Dedup.requireStateLayout(b, "probe band table",
-          Seq("w" -> g.w, "num_hashes" -> g.numHashes,
-            "band_width" -> g.bandWidth)))
+        // per-batch cost)
         val bands = g.bands
           .getOrElse(Dedup.bandTable(docs, g.w, g.numHashes, g.bandWidth))
           .select(col("doc_id"), col("band"), col("bkey"))
@@ -217,21 +258,13 @@ object Admission {
       case None => withSem.withColumn("_nd_pass", lit(true))
         .withColumn("_nd_score", lit(null).cast("double"))
     }
-    // sparse scorer (round 18, guide §2.4): the zero-fill form re-scans
-    // docs and re-shuffles it on doc_id only to emit NULL-avg_lp rows —
-    // this report's own LEFT join encodes a miss identically (_lm_pass
-    // needs avg_lp non-null), so the extra scan + exchange go away.
-    val lm = TextAnalysis.lmScoreBigramSparse(docs, lmModel)
-      .select(col("doc_id"), col("avg_lp"))
-    val nb = Classifier.nbClassify(docs, nbModel, nbBuckets)
-      .select(col("doc_id"), col("pred_label"), col("score_fp"))
     val full = withNd
-      .join(lm, Seq("doc_id"), "left")
+      .withColumn("avg_lp",
+        TextAnalysis.avgLp(col("_lm.n_pairs"), col("_lm.sum_lp_fp")))
       .withColumn("_lm_pass",
         col("avg_lp").isNotNull && col("avg_lp") >= lit(minAvgLp))
-      .join(nb, Seq("doc_id"), "left")
       .withColumn("_nb_pass",
-        coalesce(col("pred_label").isin(allowedLabels: _*), lit(false)))
+        coalesce(col("_nb.pred_label").isin(allowedLabels: _*), lit(false)))
     def rec(gate: String, pass: Column, score: Column) =
       struct(lit(gate).as("gate"),
         coalesce(pass, lit(false)).as("pass"),
@@ -245,7 +278,7 @@ object Admission {
         rec("3_contamination", col("_c_pass"), col("_c_score")),
         rec("4_semantic", col("_sem_pass"), lit(null)),
         rec("5_lm", col("_lm_pass"), col("avg_lp")),
-        rec("6_nb", col("_nb_pass"), col("score_fp")),
+        rec("6_nb", col("_nb_pass"), col("_nb.score_fp")),
         rec("7_neardup", col("_nd_pass"), col("_nd_score")),
         rec(DecisionGate, keep, lit(null)))).as("r"))
       .select(col("doc_id"), col("r.gate").as("gate"),

@@ -1,8 +1,10 @@
 package graft.ext
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Hashed-feature multinomial Naive Bayes — the model-based selection
   * tier's SUPERVISED member (the fastText-style quality/domain
@@ -31,69 +33,26 @@ import org.apache.spark.sql.functions._
   *    the classifier live ([[graft.streaming.Streams.nbMaintainPipeline]])
   *    without re-reading the corpus — same discipline as the DSIR and
   *    histogram states.
-  *  - CLASSIFY is scan → per-doc bucket collapse → broadcast join with
-  *    the dense model (≤ labels×buckets rows by construction) → one
-  *    `(doc_id, label)` partial+final agg → per-doc argmax over the
-  *    bounded label set. No corpus-sized shuffle carries text.
+  *  - CLASSIFY is one scan: the dense model (≤ labels×(buckets+1) rows
+  *    by construction) is collected and broadcast once
+  *    ([[resolveNb]]), and each document's per-label scores and argmax
+  *    are computed in the projection that reads its text. No join, no
+  *    exchange, no aggregation touches the corpus side.
   */
 object Classifier {
 
-  /** Hashed uni+bigram feature occurrences: `(doc_id, bucket, n)` with
-    * occurrence multiplicity pre-collapsed per document (the multinomial
-    * event model counts occurrences; collapsing before the model join
-    * bounds the join fan-out by DISTINCT buckets per doc, not token
-    * count). Salt `nb|` keeps this hash family independent of the
-    * `dsir|` importance buckets. Features form inside the scan stage
-    * (array transform — no positional self-join).
-    */
-  def hashedFeatureCounts(docs: DataFrame, buckets: Int,
-                          carry: Seq[String] = Nil): DataFrame = {
-    // Typed flatMap (round 17): ONE pass emits every unigram and bigram
-    // occurrence's bucket directly — the round-13 form built the bigram
-    // strings through an interpreted array-transform lambda, unioned two
-    // corpus scans, and md5-hex'd each feature through
-    // conv(substring(...)); this is the Dedup.shingles finding applied
-    // to the feature kernel. Bit-identical buckets: the JVM hash is the
-    // same first-4-md5-bytes value ([[graft.functions.KeyFunctions
-    // .md5First32]]) of the same "nb|"-salted feature string, and split
-    // keeps trailing empty tokens (limit -1) like split()/string_split.
-    val spark = docs.sparkSession
-    import spark.implicits._
-    require(carry.size <= 1 && carry.forall(c =>
-      docs.schema(c).dataType == org.apache.spark.sql.types.StringType),
-      s"hashedFeatureCounts: carry must be at most one STRING column, " +
-        s"got ${carry.mkString(", ")}")
-    val biFn = bucketIter // local copy: the closure must not capture the object
-    def bucketsOf(text: String): Iterator[Int] = biFn(text, buckets)
-    val bucketed = carry match {
-      case Seq() =>
-        docs.select(col("doc_id").cast("long"), col("text"))
-          .as[(Long, String)]
-          .flatMap { case (id, text) => bucketsOf(text).map(bk => (id, bk)) }
-          .toDF("doc_id", "bucket")
-      case Seq(k) =>
-        docs.select(col("doc_id").cast("long"), col(k), col("text"))
-          .as[(Long, String, String)]
-          .flatMap { case (id, kv, text) =>
-            bucketsOf(text).map(bk => (id, kv, bk))
-          }
-          .toDF("doc_id", k, "bucket")
-    }
-    bucketed
-      .groupBy(col("doc_id") +: carry.map(col) :+ col("bucket"): _*)
-      .agg(count(lit(1)).as("n"))
-  }
-
   /** The hashed uni+bigram feature-bucket stream of one document — the
-    * ONE definition of the NB feature space, shared by the per-doc
-    * collapse ([[hashedFeatureCounts]]) and the direct label-grain
-    * training aggregation ([[nbCountsBuild]]). Salt `nb|`; split keeps
-    * trailing empty tokens (limit -1) like split()/string_split.
-    * A FUNCTION VALUE (bound to a local before each flatMap captures
-    * it): a method reference would drag the whole non-serializable
-    * Classifier object into the task closure.
+    * ONE definition of the NB feature space, shared by the training
+    * aggregation ([[nbCountsBuild]]) and the scoring kernel
+    * ([[NbTable]]). Salt `nb|` keeps this hash family independent of
+    * the `dsir|` importance buckets; split keeps trailing empty tokens
+    * (limit -1) like split()/string_split; each bucket is the first 4
+    * md5 bytes ([[graft.functions.KeyFunctions.md5First32]]) of the
+    * salted feature string. A FUNCTION VALUE (bound to a local before
+    * each flatMap captures it): a method reference would drag the whole
+    * non-serializable Classifier object into the task closure.
     */
-  private val bucketIter: (String, Int) => Iterator[Int] = (text, buckets) =>
+  private[ext] val bucketIter: (String, Int) => Iterator[Int] = (text, buckets) =>
     if (text == null) Iterator.empty
     else {
       import org.apache.spark.unsafe.types.UTF8String
@@ -133,14 +92,9 @@ object Classifier {
       .withColumn("_label", col(labelCol).cast("string"))
     // direct label-grain aggregation (round 18, guide §2.3 — aggregate
     // before you shuffle): training needs only Σ occurrences per
-    // (label, bucket), so routing the feature stream through
-    // hashedFeatureCounts' per-DOC collapse paid a corpus-grain
-    // exchange on (doc_id, label, bucket) before the label rollup.
-    // One aggregation instead of two: map-side combine collapses the
-    // occurrence stream to ≤ labels×buckets rows per partition before
-    // the only exchange. Counts are bit-identical (Σ over docs of
-    // per-doc occurrence counts == plain occurrence counts), and the
-    // per-doc form stays what classification joins on.
+    // (label, bucket), so map-side combine collapses the occurrence
+    // stream to ≤ labels×buckets rows per partition before the only
+    // exchange.
     val biFn = bucketIter // local copy: the closure must not capture the object
     val feat = labeled.select(col("_label"), col("text"))
       .as[(String, String)]
@@ -239,61 +193,73 @@ object Classifier {
               buckets: Int = 1024): DataFrame =
     nbModelFromCounts(nbCountsBuild(docs, labelCol, buckets), buckets)
 
-  /** Classify every document against a trained model: per-doc feature
-    * buckets join the BROADCAST dense model, scores sum in fixed point
-    * (`score_fp = prior_fp + Σ n·lp_fp`), and the argmax label wins
-    * with a deterministic `(score desc, label asc)` tie-break. Returns
-    * `(doc_id, pred_label, n_feats, score_fp)` for every input row —
-    * the per-doc argmax window runs over the bounded label set, never
-    * data-sized partitions.
+  /** Resolve a trained model ONCE for in-scan scoring: one collect —
+    * bounded by construction, labels × (buckets + 1) rows — with the
+    * geometry stamp checked on the collected rows (no separate probe),
+    * then `sparkContext.broadcast`. A long-lived consumer (a streaming
+    * admission gate) resolves once and classifies every micro-batch
+    * against the handle.
+    */
+  def resolveNb(model: DataFrame, buckets: Int = 1024): NbScorer = {
+    require(Seq("label", "bucket", "lp_fp").forall(model.columns.contains),
+      "nbScores: not an NB model — need (label, bucket, lp_fp) as " +
+        "built by nbModelFromCounts")
+    val stamped = model.columns.contains("buckets")
+    val rows = model.select(Seq(col("label").cast("string"),
+        col("bucket").cast("int"), col("lp_fp").cast("long")) ++
+        (if (stamped) Seq(col("buckets")) else Nil): _*)
+      .collect()
+    if (stamped) Stamp.requireValue(rows.headOption.map(_.getInt(3)),
+      "nbScores", "buckets", buckets)
+    new NbScorer(model.sparkSession.sparkContext
+      .broadcast(NbTable(rows, buckets)))
+  }
+
+  /** Classify every document against a trained model: the per-label
+    * fixed-point score `score_fp = prior_fp + Σ n·lp_fp` over the
+    * document's hashed feature occurrences, and the argmax label with a
+    * deterministic `(score desc, label asc)` tie-break. Returns
+    * `(doc_id, pred_label, n_feats, score_fp)` for every document with
+    * at least one feature (NULL text has none and emits nothing). One
+    * scan: the model is resolved once ([[resolveNb]]) and the argmax is
+    * taken per row over the bounded label set — no join, exchange or
+    * aggregation.
     */
   def nbClassify(docs: DataFrame, model: DataFrame,
                  buckets: Int = 1024): DataFrame = {
-    val perLabel = nbScores(docs, model, buckets)
-    // argmax as a partial aggregation (round 18, guide §2.4): the
-    // row_number window paid its own doc_id exchange plus a sort of the
-    // per-(doc, label) score table; min(struct(-score_fp, label, ...))
-    // picks the identical row (highest score, ties to the ascending
-    // label — struct ordering == the window's (score desc, label asc))
-    // with map-side combine and no sort. n_feats rides in the struct
-    // (it is the same value on every label row of a doc — the dense
-    // model joins every doc bucket to every label).
-    perLabel
-      .groupBy(col("doc_id"))
-      .agg(min(struct((-col("score_fp")).as("neg_score"),
-        col("label"), col("n_feats"))).as("b"))
-      .select(col("doc_id"), col("b.label").as("pred_label"),
-        col("b.n_feats").as("n_feats"),
-        (-col("b.neg_score")).as("score_fp"))
+    val table = resolveNb(model, buckets).table
+    val spark = docs.sparkSession
+    import spark.implicits._
+    docs.select(col("doc_id").cast("long"), col("text"))
+      .as[(Long, String)]
+      .flatMap { case (id, text) =>
+        Option(table.value.classify(text))
+          .map(p => (id, p.pred_label, p.n_feats, p.score_fp))
+      }
+      .toDF("doc_id", "pred_label", "n_feats", "score_fp")
   }
 
   /** The FULL per-(doc, label) score table [[nbClassify]] argmaxes
     * over: `(doc_id, label, n_feats, score_fp)` for every label of the
-    * model's bounded class enum (the dense model joins every per-doc
-    * bucket to every label, so each doc with ≥1 feature scores under
-    * ALL labels; feature-less docs — empty text — emit nothing, as in
+    * model's bounded class enum (the dense model covers every bucket
+    * under every label, so each doc with ≥1 feature scores under ALL
+    * labels; feature-less docs — NULL text — emit nothing, as in
     * classification). This is the evaluation tier's raw material:
     * one-vs-rest margins, ranking metrics (AUC), and calibration bins
     * all need the scores the argmax discards.
     */
   def nbScores(docs: DataFrame, model: DataFrame,
                buckets: Int = 1024): DataFrame = {
-    require(Seq("label", "bucket", "lp_fp").forall(model.columns.contains),
-      "nbScores: not an NB model — need (label, bucket, lp_fp) as " +
-        "built by nbModelFromCounts")
-    Stamp.requireMatch(model, "nbScores", "buckets", buckets)
-    val feat = model.filter(col("bucket") =!= DocCountBucket)
-      .select(col("label"), col("bucket"), col("lp_fp"))
-    val prior = model.filter(col("bucket") === DocCountBucket)
-      .select(col("label"), col("lp_fp").as("prior_fp"))
-    hashedFeatureCounts(docs, buckets)
-      .join(broadcast(feat), Seq("bucket"))
-      .groupBy(col("doc_id"), col("label"))
-      .agg(sum(col("n")).as("n_feats"),
-        sum(col("n") * col("lp_fp")).as("sum_lp_fp"))
-      .join(broadcast(prior), Seq("label"))
-      .select(col("doc_id"), col("label"), col("n_feats"),
-        (col("sum_lp_fp") + col("prior_fp")).as("score_fp"))
+    val table = resolveNb(model, buckets).table
+    val spark = docs.sparkSession
+    import spark.implicits._
+    docs.select(col("doc_id").cast("long"), col("text"))
+      .as[(Long, String)]
+      .flatMap { case (id, text) =>
+        table.value.scores(text).iterator
+          .map(s => (id, s.label, s.n_feats, s.score_fp))
+      }
+      .toDF("doc_id", "label", "n_feats", "score_fp")
   }
 
   /** One-vs-rest MARGINS from a [[nbScores]] table: per (doc, label),
@@ -325,5 +291,152 @@ object Classifier {
           .otherwise(col("_second")))
       .select(col("doc_id"), col("label"),
         (col("score_fp") - col("_others_max")).as("margin_fp"))
+  }
+}
+
+/** One label's score of one document. */
+private[graft] final case class NbLabelScore(label: String, n_feats: Long,
+                              score_fp: Option[Long])
+
+/** One document's NB argmax. */
+private[graft] final case class NbPrediction(pred_label: String, n_feats: Long,
+                              score_fp: Option[Long])
+
+/** An NB model resolved for in-scan scoring ([[Classifier.resolveNb]]):
+  * a handle on the broadcast [[NbTable]]. Serializable, so a streaming
+  * pipeline can hold it for its lifetime.
+  */
+final class NbScorer private[ext] (private[ext] val table: Broadcast[NbTable])
+    extends Serializable {
+
+  /** `struct<pred_label: string, n_feats: bigint, score_fp: bigint>` of
+    * a text column — the [[Classifier.nbClassify]] row, NULL for a
+    * document without features — evaluated in the projection that
+    * reads the text.
+    */
+  def classifyColumn(text: Column): Column = {
+    val t = table
+    udf((s: String) => t.value.classify(s)).apply(text)
+  }
+}
+
+/** The broadcast form of an [[Classifier.nbModelFromCounts]] model: the
+  * labels that carry a prior, in ascending UTF8String order (the order
+  * Spark compares labels in), and per label a dense bucket → `lp_fp`
+  * array. Scoring reproduces the join form exactly: a label scores a
+  * document when at least one of the document's buckets has a model
+  * row under it; `n_feats` sums the matched occurrences, and NULL
+  * `lp_fp` values are skipped as Spark's `sum` skips them.
+  */
+private[graft] final class NbTable private (
+    labels: Array[String], lp: Array[Array[Long]], has: Array[Array[Byte]],
+    prior: Array[java.lang.Long], buckets: Int) extends Serializable {
+  import NbTable.{Absent, NullLp}
+
+  /** Per-label scores of one document, labels ascending; empty when it
+    * has no features.
+    */
+  def scores(text: String): Array[NbLabelScore] = {
+    val bs = Classifier.bucketIter(text, buckets).toArray
+    if (bs.isEmpty) Array.empty
+    else {
+      java.util.Arrays.sort(bs)
+      // run-length: distinct buckets with their occurrence counts
+      val ub = new Array[Int](bs.length)
+      val un = new Array[Long](bs.length)
+      var k = -1
+      var i = 0
+      while (i < bs.length) {
+        if (k < 0 || ub(k) != bs(i)) { k += 1; ub(k) = bs(i) }
+        un(k) += 1
+        i += 1
+      }
+      val out = Array.newBuilder[NbLabelScore]
+      var l = 0
+      while (l < labels.length) {
+        var nFeats = 0L
+        var sum = 0L
+        var matched = false
+        var summed = false
+        var j = 0
+        while (j <= k) {
+          val h = has(l)(ub(j))
+          if (h != Absent) {
+            matched = true
+            nFeats += un(j)
+            if (h != NullLp) { sum += un(j) * lp(l)(ub(j)); summed = true }
+          }
+          j += 1
+        }
+        if (matched) out += NbLabelScore(labels(l), nFeats,
+          if (summed && prior(l) != null) Some(sum + prior(l)) else None)
+        l += 1
+      }
+      out.result()
+    }
+  }
+
+  /** The argmax of [[scores]] in `min(struct(-score_fp, label))` order:
+    * a NULL score orders first, then the highest score; labels are
+    * ascending, so the first of a tie wins. NULL without features.
+    */
+  def classify(text: String): NbPrediction = {
+    val ss = scores(text)
+    if (ss.isEmpty) null
+    else {
+      var best = ss(0)
+      ss.iterator.drop(1).foreach { s =>
+        val wins = (s.score_fp, best.score_fp) match {
+          case (None, b) => b.isDefined
+          case (Some(_), None) => false
+          case (Some(a), Some(b)) => a > b
+        }
+        if (wins) best = s
+      }
+      NbPrediction(best.label, best.n_feats, best.score_fp)
+    }
+  }
+}
+
+private[graft] object NbTable {
+  private val Absent: Byte = 0
+  private val Present: Byte = 1
+  private val NullLp: Byte = 2
+
+  /** Build from collected `(label, bucket, lp_fp)` rows. A label scores
+    * only with its [[Classifier.DocCountBucket]] prior row (the join
+    * form's inner join); rows with a NULL label or bucket, or a bucket
+    * outside [0, buckets), can never match a feature and are skipped.
+    * A repeated prior or (label, bucket) row is not an
+    * [[Classifier.nbModelFromCounts]] model (the join form would count
+    * it twice) and is refused.
+    */
+  def apply(rows: Array[Row], buckets: Int): NbTable = {
+    val keyed = rows.filter(r => !r.isNullAt(0) && !r.isNullAt(1))
+    val priors = keyed.filter(_.getInt(1) == Classifier.DocCountBucket)
+    priors.groupBy(_.getString(0)).foreach { case (l, rs) =>
+      require(rs.length == 1, s"nbScores: not an NB model — label '$l' " +
+        s"has ${rs.length} prior rows (nbModelFromCounts emits one)")
+    }
+    val sorted = priors.sortWith((a, b) =>
+      UTF8String.fromString(a.getString(0))
+        .compareTo(UTF8String.fromString(b.getString(0))) < 0)
+    val labels = sorted.map(_.getString(0))
+    val index = labels.zipWithIndex.toMap
+    val lp = Array.fill(labels.length)(new Array[Long](buckets))
+    val has = Array.fill(labels.length)(new Array[Byte](buckets))
+    keyed.foreach { r =>
+      val b = r.getInt(1)
+      if (b >= 0 && b < buckets) index.get(r.getString(0)).foreach { l =>
+        require(has(l)(b) == Absent, s"nbScores: not an NB model — " +
+          s"(label '${labels(l)}', bucket $b) appears twice " +
+          "(nbModelFromCounts emits one)")
+        if (r.isNullAt(2)) has(l)(b) = NullLp
+        else { has(l)(b) = Present; lp(l)(b) = r.getLong(2) }
+      }
+    }
+    val prior = sorted.map(r =>
+      if (r.isNullAt(2)) null else java.lang.Long.valueOf(r.getLong(2)))
+    new NbTable(labels, lp, has, prior, buckets)
   }
 }

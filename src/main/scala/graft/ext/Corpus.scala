@@ -475,6 +475,30 @@ object Corpus {
       .withColumn("band_width", lit(bandWidth))
       .withColumn("dim", lit(dim))
 
+  /** Cross-validate a persisted bench-signature table's layout stamp
+    * against the sweep's parameters — a mismatched banding would
+    * silently never collide and admit every paraphrase. Every stamp
+    * column the frame carries is read by ONE one-row probe; unstamped
+    * (in-flight) frames skip it, the family convention, and an empty
+    * state validates trivially.
+    */
+  private[graft] def requireBenchSigLayout(benchState: DataFrame,
+                                           numPlanes: Int, bandWidth: Int,
+                                           dim: Int): Unit = {
+    val expected = Seq("num_planes" -> numPlanes, "band_width" -> bandWidth,
+      "dim" -> dim).filter { case (c, _) => benchState.columns.contains(c) }
+    if (expected.nonEmpty)
+      benchState.select(expected.map { case (c, _) => col(c) }: _*)
+        .limit(1).collect().headOption.foreach { r =>
+          expected.zipWithIndex.foreach { case ((c, v), i) =>
+            require(r.getInt(i) == v,
+              s"bench-signature state layout mismatch: $c=${r.getInt(i)} " +
+                s"in state but sweep called with $c=$v — bands would never " +
+                "collide and every paraphrase would be admitted")
+          }
+        }
+  }
+
   /** Doc ids of `cohort` that SEMANTICALLY near-match the persisted
     * bench-signature state: the cohort is banded with the same planes
     * (the stamp is validated — mismatched banding would silently never
@@ -485,31 +509,26 @@ object Corpus {
     * simply absent, so callers anti-join the returned ids and
     * unembedded docs pass through un-swept.
     */
-  /** Cross-validate a persisted bench-signature table's layout stamp
-    * against the sweep's parameters — a mismatched banding would
-    * silently never collide and admit every paraphrase. Unstamped
-    * (in-flight) frames skip the probe, the family convention.
-    */
-  private[graft] def requireBenchSigLayout(benchState: DataFrame,
-                                           numPlanes: Int, bandWidth: Int,
-                                           dim: Int): Unit =
-    Seq("num_planes" -> numPlanes, "band_width" -> bandWidth, "dim" -> dim)
-      .foreach { case (c, v) =>
-        if (benchState.columns.contains(c)) {
-          val got = benchState.select(col(c)).limit(1).collect()
-          require(got.isEmpty || got(0).getInt(0) == v,
-            s"bench-signature state layout mismatch: $c=${got(0).getInt(0)} " +
-              s"in state but sweep called with $c=$v — bands would never " +
-              "collide and every paraphrase would be admitted")
-        }
-      }
-
   def embeddingContaminatedIds(cohort: DataFrame, emb: DataFrame,
                                benchState: DataFrame,
                                threshold: Double = 0.42,
                                numPlanes: Int = 16, bandWidth: Int = 4,
                                dim: Int = 64): DataFrame = {
     requireBenchSigLayout(benchState, numPlanes, bandWidth, dim)
+    sweepBenchSignatures(cohort, emb, benchState, threshold, numPlanes,
+      bandWidth, dim)
+  }
+
+  /** [[embeddingContaminatedIds]] over a bench state whose layout the
+    * caller already validated ([[requireBenchSigLayout]]) — the form a
+    * consumer that validated once at start (a streaming admission
+    * pipeline) runs per micro-batch.
+    */
+  private[graft] def sweepBenchSignatures(cohort: DataFrame, emb: DataFrame,
+                                          benchState: DataFrame,
+                                          threshold: Double, numPlanes: Int,
+                                          bandWidth: Int,
+                                          dim: Int): DataFrame = {
     val paired = cohort.select(col("doc_id"))
       .join(emb.select(col("vec_id"), col("embedding")),
         col("doc_id") === col("vec_id"))
@@ -726,7 +745,7 @@ object Corpus {
     */
   private def hashedNgramFeatures(docs: DataFrame, buckets: Int,
                                   carry: Seq[String] = Nil): DataFrame = {
-    // Typed flatMap (round 17, the hashedFeatureCounts rewrite applied
+    // Typed flatMap (round 17, the NB feature-kernel rewrite applied
     // to the DSIR family): one corpus pass emits every uni+bigram
     // occurrence's bucket directly via the JVM md5First32 kernel —
     // bit-identical buckets (same "dsir|"-salted md5-first-8-hex value,

@@ -3,6 +3,7 @@ package graft.ext
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DoubleType, FloatType}
 
 /** Similarity search over an embedding column (`array<float>`).
   *
@@ -204,12 +205,20 @@ object Similarity {
     * (the idiom shared with `keepBestPerCluster` and `silver_nearest`).
     * Output columns: (<id>, <embCol>, cell).
     */
-  private[ext] def assignCells(df: DataFrame, id: String, embCol: String,
-                               centroids: DataFrame): DataFrame = {
+  private[graft] def assignCells(df: DataFrame, id: String, embCol: String,
+                                 centroids: DataFrame): DataFrame = {
+    // the cosine kernel reads float or double elements: the literal
+    // path needs one of them without NULLs, and the join path widens any
+    // other element type (array<int> from a hand-built table) to double
+    val elem = centroids.schema("centroid").dataType match {
+      case ArrayType(t @ (FloatType | DoubleType), _) => Some(t)
+      case _ => None
+    }
     val rows = centroids.select(col("cell"), col("centroid")).collect()
-    val literalOk = rows.nonEmpty && rows.length <= LiteralAssignCap &&
+    val literalOk = elem.isDefined && rows.nonEmpty &&
+      rows.length <= LiteralAssignCap &&
       rows.forall(r => !r.isNullAt(0) && r.get(0).isInstanceOf[Long] &&
-        !r.isNullAt(1))
+        !r.isNullAt(1) && !r.getSeq[Any](1).contains(null))
     if (literalOk) {
       val scored = rows
         .map(r => (r.getLong(0), r.getSeq[Any](1)))
@@ -218,11 +227,9 @@ object Similarity {
           // preserve the centroid column's ELEMENT TYPE (float corpus
           // slices vs the k-means loop's double centroids) so the
           // cosine evaluates on exactly the values the join form saw
-          val centLit = cent.headOption match {
-            case Some(_: Float) =>
-              typedLit(cent.map(_.asInstanceOf[Float]))
-            case _ =>
-              typedLit(cent.map(_.asInstanceOf[Double]))
+          val centLit = elem match {
+            case Some(FloatType) => typedLit(cent.map(_.asInstanceOf[Float]))
+            case _ => typedLit(cent.map(_.asInstanceOf[Double]))
           }
           struct(cosine(col(embCol), centLit).as("csim"),
             lit(-cell).as("neg_cell"))
@@ -233,7 +240,9 @@ object Similarity {
         (-best.getField("neg_cell")).as("cell"))
     } else
       df.crossJoin(centroids)
-        .withColumn("csim", cosine(col(embCol), col("centroid")))
+        .withColumn("csim", cosine(col(embCol),
+          if (elem.isDefined) col("centroid")
+          else col("centroid").cast("array<double>")))
         .groupBy(col(id))
         .agg(max(struct(col("csim"), (-col("cell")).as("neg_cell"),
           col(embCol).as("e"))).as("best"))

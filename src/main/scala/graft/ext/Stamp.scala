@@ -36,7 +36,14 @@ private[graft] object Stamp {
     */
   def requireMatch(df: DataFrame, what: String, name: String,
                    expected: Int): Unit =
-    get(df, name).foreach(v => require(v == expected,
+    requireValue(get(df, name), what, name, expected)
+
+  /** [[requireMatch]] over a stamp the caller already read (e.g. with
+    * the rows it collects anyway).
+    */
+  def requireValue(stamp: Option[Int], what: String, name: String,
+                   expected: Int): Unit =
+    stamp.foreach(v => require(v == expected,
       s"$what geometry mismatch: state stamped with $name=$v but the " +
         s"operation was called with $name=$expected — hashed features " +
         "would land in the wrong bucket space, silently skewing every " +

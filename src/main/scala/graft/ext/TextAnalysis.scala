@@ -1,6 +1,7 @@
 package graft.ext
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -9,9 +10,10 @@ import org.apache.spark.sql.functions._
   * scoring, language ID, document fingerprinting.
   *
   * Scale design: every operator is a per-row projection or a single
-  * partial+final aggregation — no driver-side loops, no UDFs; all
-  * expressions are Catalyst built-ins (split/transform/aggregate are
-  * evaluated per-row inside the scan stage). At 100 TB the only shuffle
+  * partial+final aggregation — no driver-side loops; the expressions
+  * are Catalyst built-ins (split/transform/aggregate are evaluated
+  * per-row inside the scan stage) except the LM scorer, a typed UDF over
+  * the broadcast model ([[resolveLm]]). At 100 TB the only shuffle
   * here is the token-frequency groupBy, which map-side combines on a
   * ~vocabulary-sized key space.
   */
@@ -461,10 +463,11 @@ object TextAnalysis {
     * two tokens contribute nothing. A typed flatMap rather than the
     * round-13 `explode(transform(sequence(...)))` chain: Catalyst array
     * lambdas are interpreted per element, and this projection runs over
-    * the FULL corpus in every LM train and every LM scoring pass — the
+    * the FULL corpus in every LM train — the
     * [[graft.ext.Dedup.shingles]] finding (~7× at sf0.1) applied to the
-    * bigram kernel (round 17). Same rows: split keeps trailing empty
-    * tokens (limit -1), `size < 2` docs drop, pair multiplicity kept.
+    * bigram kernel (round 17). Same rows: [[LmTable.pairTokens]] keeps
+    * trailing empty tokens (limit -1), `size < 2` docs drop, pair
+    * multiplicity kept.
     */
   private def bigramPairs(docs: DataFrame): DataFrame = {
     val spark = docs.sparkSession
@@ -472,12 +475,8 @@ object TextAnalysis {
     docs.select(col("doc_id").cast("long"), col("text"))
       .as[(Long, String)]
       .flatMap { case (id, text) =>
-        if (text == null) Iterator.empty
-        else {
-          val t = text.split(" ", -1)
-          if (t.length < 2) Iterator.empty
-          else (0 until t.length - 1).iterator.map(i => (id, t(i), t(i + 1)))
-        }
+        val t = LmTable.pairTokens(text)
+        (0 until t.length - 1).iterator.map(i => (id, t(i), t(i + 1)))
       }
       .toDF("doc_id", "w1", "w2")
   }
@@ -509,17 +508,47 @@ object TextAnalysis {
       .select(col("w1"), col("w2"), col("c2"), col("c1"), col("v"))
   }
 
+  /** Row cap on an LM resolved for in-scan scoring ([[resolveLm]]): the
+    * model is collected to the driver and broadcast, so a model past
+    * this many rows (distinct bigrams) is refused loudly instead of
+    * exhausting driver memory. 2^20 rows is about 100 MB of hash maps;
+    * the registered corpora train models of under a thousand rows.
+    */
+  val LmBroadcastCap: Int = 1 << 20
+
+  /** Resolve a [[bigramLmTrain]] model ONCE for in-scan scoring: one
+    * bounded collect (`limit(cap + 1)`, refused above `cap`), the
+    * per-pair fixed-point log-probabilities precomputed per model row,
+    * then `sparkContext.broadcast`. Scoring a document is then hash
+    * lookups inside the scan of the documents — no pair explode, no
+    * model join, no doc_id rollup. A long-lived consumer (a streaming
+    * gate) resolves once and scores every micro-batch against the
+    * handle.
+    */
+  def resolveLm(model: DataFrame, cap: Int = LmBroadcastCap): LmScorer = {
+    require(Seq("w1", "w2", "c2", "c1", "v").forall(model.columns.contains),
+      "lmScoreBigram: not a bigram LM — need (w1, w2, c2, c1, v) as " +
+        "built by bigramLmTrain")
+    val rows = model.select(col("w1"), col("w2"), col("c2").cast("double"),
+        col("c1").cast("double"), col("v").cast("double"))
+      .limit(cap + 1).collect()
+    require(rows.length <= cap,
+      s"lmScoreBigram: the LM has more than $cap rows, above the in-scan " +
+        s"broadcast cap of $cap distinct bigrams (TextAnalysis.LmBroadcastCap) " +
+        "— score it with a smaller model or raise the cap deliberately")
+    new LmScorer(model.sparkSession.sparkContext.broadcast(LmTable(rows)))
+  }
+
   /** Per-document log-likelihood under a [[bigramLmTrain]] model — the
     * model-based quality score (CCNet trains on the target domain and
     * buckets the scored corpus into head/middle/tail by this number).
     * Per-pair probability is add-one smoothed,
-    * `p = (c2+1)/(c1+V)`; unseen bigrams (left-join miss) degrade to
-    * `(0+1)/(c1+V)` and unseen contexts to `1/V` — exactly the
-    * smoothing's out-of-vocabulary semantics, no special cases. An
-    * EMPTY model (trainable only from a corpus with no bigrams at all,
-    * which cannot carry V) scores every document NULL at its true
-    * `n_pairs` — the same unknown-model semantics as
-    * [[lmScoreBigramBy]]'s missing key.
+    * `p = (c2+1)/(c1+V)`; unseen bigrams degrade to `(0+1)/(c1+V)` and
+    * unseen contexts to `1/V` — exactly the smoothing's
+    * out-of-vocabulary semantics, no special cases. An EMPTY model
+    * (trainable only from a corpus with no bigrams at all, which cannot
+    * carry V) scores every document NULL at its true `n_pairs` — the
+    * same unknown-model semantics as [[lmScoreBigramBy]]'s missing key.
     *
     * Cross-engine determinism: `p` is an exact-int ratio (IEEE division
     * of integers is correctly rounded → bit-identical in any engine);
@@ -532,56 +561,45 @@ object TextAnalysis {
     * exact integers at the end. Documents with fewer than two tokens
     * score NULL with `n_pairs = 0`.
     *
-    * Scale: pairs join the model on (w1, w2) and the context table on
-    * w1 — both vocabulary-keyed equi-joins that AQE plans as broadcast
-    * when the model fits and sort-merge when it doesn't; the final
-    * rollup is one partial+final agg on doc_id. No windows, no
-    * driver-side state.
+    * Scale: the model is resolved once ([[resolveLm]]) and every
+    * document is scored in the scan that reads it — one projection,
+    * no shuffle, no join; the output keeps the input's rows.
     */
   def lmScoreBigram(docs: DataFrame, model: DataFrame): DataFrame =
-    docs.select(col("doc_id"))
-      .join(lmScoreBigramSparse(docs, model), Seq("doc_id"), "left")
+    docs.select(col("doc_id"),
+        resolveLm(model).scoreColumn(col("text")).as("_lm"))
       .select(col("doc_id"),
-        coalesce(col("n_pairs"), lit(0L)).as("n_pairs"),
-        coalesce(col("sum_lp_fp"), lit(0L)).as("sum_lp_fp"),
-        col("avg_lp"))
+        coalesce(col("_lm.n_pairs"), lit(0L)).as("n_pairs"),
+        coalesce(col("_lm.sum_lp_fp"), lit(0L)).as("sum_lp_fp"),
+        avgLp(col("_lm.n_pairs"), col("_lm.sum_lp_fp")).as("avg_lp"))
 
-  /** [[lmScoreBigram]] WITHOUT the zero-fill join — one row per document
-    * with ≥ 1 bigram pair, `(doc_id, n_pairs, sum_lp_fp, avg_lp)` with
-    * n_pairs ≥ 1 and avg_lp NULL only under an empty model. The form for
-    * consumers that LEFT-join the scores onto a per-document frame they
-    * already hold (the admission report): the zero-fill join re-scans
-    * the corpus and re-shuffles it on doc_id purely to emit rows whose
-    * avg_lp is NULL — verdicts a left-join miss encodes identically
-    * (round 18, guide §2.4: remove shuffles outright).
+  /** Mean per-pair log-probability: the two exact integers divided at
+    * the end; NULL when the document has no pairs or the model cannot
+    * score them.
+    */
+  private[graft] def avgLp(nPairs: Column, sumLpFp: Column): Column =
+    sumLpFp.cast("double") / (nPairs.cast("double") * lit(1000.0))
+
+  /** [[lmScoreBigram]] restricted to documents with ≥ 1 bigram pair:
+    * `(doc_id, n_pairs, sum_lp_fp, avg_lp)` with n_pairs ≥ 1 and avg_lp
+    * NULL only under an empty model — for a consumer that keeps only
+    * documents clearing an `avg_lp` cut ([[graft.streaming.Streams
+    * .lmGatePipeline]]). A typed flatMap, so the scorer runs once per
+    * row: a filter over the projected score would be pushed below the
+    * projection and evaluate it twice.
     */
   private[graft] def lmScoreBigramSparse(docs: DataFrame,
-                                         model: DataFrame): DataFrame = {
-    require(Seq("w1", "w2", "c2", "c1", "v").forall(model.columns.contains),
-      "lmScoreBigram: not a bigram LM — need (w1, w2, c2, c1, v) as " +
-        "built by bigramLmTrain")
-    val big = model.select(col("w1"), col("w2"), col("c2"))
-    val ctx = model.select(col("w1"), col("c1")).distinct()
-    // agg(max) instead of limit(1): ALWAYS one row, so an empty model
-    // (a training corpus of single-token docs has bigrams nowhere to
-    // ride V on) degrades to v = NULL → every pair scores NULL → docs
-    // report NULL with their true n_pairs — the unknown-model semantics
-    // of the keyed form — instead of the crossJoin with an EMPTY frame
-    // silently annihilating the pair stream and misreporting n_pairs=0.
-    val v = model.agg(max(col("v")).as("v"))
-    val p = (coalesce(col("c2"), lit(0L)).cast("double") + lit(1.0)) /
-      (coalesce(col("c1"), lit(0L)).cast("double") + col("v").cast("double"))
-    val scored = bigramPairs(docs)
-      .join(big, Seq("w1", "w2"), "left")
-      .join(ctx, Seq("w1"), "left")
-      .crossJoin(v)
-      .select(col("doc_id"),
-        round(log(p) * lit(1000), 0).cast("long").as("lp_fp"))
-    scored.groupBy(col("doc_id"))
-      .agg(count(lit(1)).as("n_pairs"), sum(col("lp_fp")).as("sum_lp_fp"))
-      .select(col("doc_id"), col("n_pairs"), col("sum_lp_fp"),
-        (col("sum_lp_fp").cast("double") /
-          (col("n_pairs").cast("double") * lit(1000.0))).as("avg_lp"))
+                                         lm: LmScorer): DataFrame = {
+    val spark = docs.sparkSession
+    import spark.implicits._
+    val table = lm.table
+    docs.select(col("doc_id").cast("long"), col("text"))
+      .as[(Long, String)]
+      .flatMap { case (id, text) =>
+        Option(table.value.score(text)).map(s => (id, s.n_pairs, s.sum_lp_fp))
+      }
+      .toDF("doc_id", "n_pairs", "sum_lp_fp")
+      .withColumn("avg_lp", avgLp(col("n_pairs"), col("sum_lp_fp")))
   }
 
   /** [[bigramLmTrain]] per partition key (CCNet trains ONE MODEL PER
@@ -653,12 +671,8 @@ object TextAnalysis {
     docs.select(col("doc_id").cast("long"), col(key), col("text"))
       .as[(Long, String, String)]
       .flatMap { case (id, k, text) =>
-        if (text == null) Iterator.empty
-        else {
-          val t = text.split(" ", -1)
-          if (t.length < 2) Iterator.empty
-          else (0 until t.length - 1).iterator.map(i => (id, k, t(i), t(i + 1)))
-        }
+        val t = LmTable.pairTokens(text)
+        (0 until t.length - 1).iterator.map(i => (id, k, t(i), t(i + 1)))
       }
       .toDF("doc_id", key, "w1", "w2")
   }
@@ -747,5 +761,143 @@ object TextAnalysis {
         .when(col("avg_lp") >= lit(headMin), lit("head"))
         .when(col("avg_lp") >= lit(middleMin), lit("middle"))
         .otherwise(lit("tail")).as("bucket"))
+  }
+}
+
+/** One document's bigram-LM score: its pair count and the fixed-point
+  * log-probability sum (None when the model cannot score any pair — an
+  * empty model has no V).
+  */
+private[graft] final case class LmScore(n_pairs: Long,
+                                        sum_lp_fp: Option[Long])
+
+/** A bigram LM resolved for in-scan scoring ([[TextAnalysis.resolveLm]]):
+  * a handle on the broadcast [[LmTable]]. Serializable, so a streaming
+  * pipeline can hold it for its lifetime.
+  */
+final class LmScorer private[ext] (private[ext] val table: Broadcast[LmTable])
+    extends Serializable {
+
+  /** `struct<n_pairs: bigint, sum_lp_fp: bigint>` of a text column, NULL
+    * for a document with fewer than two tokens — evaluated in the
+    * projection that reads the text.
+    */
+  def scoreColumn(text: Column): Column = {
+    val t = table
+    udf((s: String) => t.value.score(s)).apply(text)
+  }
+}
+
+/** The broadcast form of a [[TextAnalysis.bigramLmTrain]] model: per
+  * context word, the fixed-point log-probability of each seen
+  * continuation and of an unseen one, plus the unseen-context value.
+  * Every value is precomputed at resolve time, so scoring a pair is two
+  * hash lookups and no arithmetic beyond the long sum.
+  */
+private[graft] final class LmTable private (
+    contexts: java.util.HashMap[String, LmTable.Context],
+    unseenLp: Long) extends Serializable {
+  import LmTable.NullLp
+
+  /** Score one document; NULL below two tokens. Sums skip pairs the
+    * model cannot score and are None when none can — Spark's `sum`
+    * over NULLs.
+    */
+  def score(text: String): LmScore = {
+    val t = LmTable.pairTokens(text)
+    if (t.length < 2) null
+    else {
+      var sum = 0L
+      var scored = false
+      var i = 0
+      while (i < t.length - 1) {
+        val c = contexts.get(t(i))
+        val lp =
+          if (c == null) unseenLp
+          else {
+            val s = c.seen.get(t(i + 1))
+            if (s == null) c.missLp else s.longValue
+          }
+        if (lp != NullLp) { sum += lp; scored = true }
+        i += 1
+      }
+      LmScore(t.length - 1, if (scored) Some(sum) else None)
+    }
+  }
+}
+
+private[graft] object LmTable {
+
+  /** Marks a log-probability the model cannot produce (no V) — the NULL
+    * of the join form. Unreachable as a real value: |ln p|·1000 of any
+    * representable p is far below 2^63.
+    */
+  private val NullLp = Long.MinValue
+
+  private val NoTokens = new Array[String](0)
+
+  final class Context(val missLp: Long,
+                      val seen: java.util.HashMap[String, java.lang.Long])
+      extends Serializable
+
+  /** The whitespace tokens a document's bigrams are formed over: split
+    * on " " with limit -1 (trailing empty tokens kept, like
+    * split()/string_split); empty for NULL text and for fewer than two
+    * tokens, which have no pairs.
+    */
+  def pairTokens(text: String): Array[String] =
+    if (text == null) NoTokens
+    else {
+      val t = text.split(" ", -1)
+      if (t.length < 2) NoTokens else t
+    }
+
+  /** `round(log(num / den) * 1000, 0).cast("long")` as Spark evaluates
+    * it: `StrictMath.log`, NULL at or below log's asymptote, then
+    * HALF_UP on the decimal form of the double (`BigDecimal.valueOf`,
+    * Spark's Round). A zero divisor (no [[TextAnalysis.bigramLmTrain]]
+    * model has one: V ≥ 1 whenever a row exists) is NULL, as in
+    * non-ANSI division.
+    */
+  def lpFp(num: Double, den: Double): Long =
+    if (den == 0.0) NullLp
+    else {
+      val p = num / den
+      if (p <= 0.0) NullLp
+      else java.math.BigDecimal.valueOf(StrictMath.log(p) * 1000.0)
+        .setScale(0, java.math.RoundingMode.HALF_UP).doubleValue().toLong
+    }
+
+  /** Build from collected `(w1, w2, c2, c1, v)` rows, the counts as
+    * doubles. V is the maximum over every row (NULL for an empty
+    * model); a NULL count is 0, the join form's coalesce. A model whose
+    * context carries two c1 values, or that repeats a bigram, is not a
+    * [[TextAnalysis.bigramLmTrain]] model (the join form would
+    * duplicate pairs) and is refused.
+    */
+  def apply(rows: Array[Row]): LmTable = {
+    val vs = rows.filter(!_.isNullAt(4)).map(_.getDouble(4))
+    val v = if (vs.isEmpty) None else Some(vs.max)
+    def lp(c2: Double, c1: Double): Long =
+      v.fold(NullLp)(vv => lpFp(c2 + 1.0, c1 + vv))
+    def count(r: Row, i: Int): Double = if (r.isNullAt(i)) 0.0 else r.getDouble(i)
+    val contexts = new java.util.HashMap[String, Context]()
+    rows.filter(!_.isNullAt(0)).groupBy(_.getString(0)).foreach {
+      case (w1, rs) =>
+        val c1s = rs.map(r => if (r.isNullAt(3)) None else Some(r.getDouble(3)))
+          .distinct
+        require(c1s.length == 1,
+          s"lmScoreBigram: not a bigram LM — context '$w1' carries " +
+            s"${c1s.length} different c1 values (bigramLmTrain emits one)")
+        val c1 = c1s.head.getOrElse(0.0)
+        val seen = new java.util.HashMap[String, java.lang.Long]()
+        rs.filter(!_.isNullAt(1)).foreach { r =>
+          require(seen.put(r.getString(1), lp(count(r, 2), c1)) == null,
+            s"lmScoreBigram: not a bigram LM — bigram ($w1, " +
+              s"${r.getString(1)}) appears twice (bigramLmTrain emits one)")
+        }
+        contexts.put(w1, new Context(lp(0.0, c1), seen))
+    }
+    new LmTable(contexts, lp(0.0, 0.0))
   }
 }

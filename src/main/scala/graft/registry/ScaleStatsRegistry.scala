@@ -283,23 +283,25 @@ private[graft] object ScaleStatsRegistry {
       val day1 = tokens.filter(col("doc_id") % 2 === 0).select(col("token"))
       val day2 = tokens.filter(col("doc_id") % 2 =!= 0).select(col("token"))
       val tmp = TempDirs.create("graft-sketchstate-").toString
-      ext.Sketches.countMinWrite(
-        ext.Sketches.countMinBuild(day1, "token"), s"$tmp/cms1")
-      ext.Sketches.bloomWrite(
-        ext.Sketches.bloomBuild(day1, "token"), s"$tmp/bloom1")
-      ext.Sketches.kmvWrite(
-        ext.Sketches.kmvBuild(day1, "token", k = 256), s"$tmp/kmv1")
-      ext.Sketches.countMinWrite(ext.Sketches.countMinMerge(
-          s.read.parquet(s"$tmp/cms1"),
-          ext.Sketches.countMinBuild(day2, "token")), s"$tmp/cms2")
-      ext.Sketches.bloomWrite(ext.Sketches.bloomMerge(
-          s.read.parquet(s"$tmp/bloom1"),
-          ext.Sketches.bloomBuild(day2, "token")), s"$tmp/bloom2")
-      ext.Sketches.kmvWrite(ext.Sketches.kmvMerge(256,
-          s.read.parquet(s"$tmp/kmv1"),
-          ext.Sketches.kmvBuild(day2, "token", k = 256)), s"$tmp/kmv2")
-      // every build is persisted state now — the staged token table is done
-      tokens.unpersist(blocking = false)
+      // every build is persisted state afterwards — the staged token
+      // table is done then, or released on the way out of a failed build
+      try {
+        ext.Sketches.countMinWrite(
+          ext.Sketches.countMinBuild(day1, "token"), s"$tmp/cms1")
+        ext.Sketches.bloomWrite(
+          ext.Sketches.bloomBuild(day1, "token"), s"$tmp/bloom1")
+        ext.Sketches.kmvWrite(
+          ext.Sketches.kmvBuild(day1, "token", k = 256), s"$tmp/kmv1")
+        ext.Sketches.countMinWrite(ext.Sketches.countMinMerge(
+            s.read.parquet(s"$tmp/cms1"),
+            ext.Sketches.countMinBuild(day2, "token")), s"$tmp/cms2")
+        ext.Sketches.bloomWrite(ext.Sketches.bloomMerge(
+            s.read.parquet(s"$tmp/bloom1"),
+            ext.Sketches.bloomBuild(day2, "token")), s"$tmp/bloom2")
+        ext.Sketches.kmvWrite(ext.Sketches.kmvMerge(256,
+            s.read.parquet(s"$tmp/kmv1"),
+            ext.Sketches.kmvBuild(day2, "token", k = 256)), s"$tmp/kmv2")
+      } finally tokens.unpersist(blocking = false)
       val top = ext.TextAnalysis.topTokens(docs, 10).select(col("token"))
       val absent = s.range(10)
         .select(concat(lit("__absent_"), col("id")).as("token"))

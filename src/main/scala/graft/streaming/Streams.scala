@@ -726,29 +726,27 @@ object Streams {
     *
     * Replay safety is [[exactlyOnceSink]]'s: the gate is STATELESS per
     * batch given the frozen model, and a replayed batch overwrites its
-    * own `batch_id=` directory with identical content. At 100 TB the
-    * per-batch cost is the scorer's shape — batch-sized pair stream,
-    * vocabulary-keyed model joins, one rollup; the model materializes
-    * ONCE per gate run, not per batch.
+    * own `batch_id=` directory with identical content. The model is
+    * resolved ONCE per gate run ([[graft.ext.TextAnalysis.resolveLm]]:
+    * one bounded collect, then a broadcast), so a micro-batch scores in
+    * its own scan against the broadcast table.
     */
   def lmGatePipeline(spark: SparkSession, schema: StructType,
                      srcDir: String, lmStateDir: String, outDir: String,
                      checkpointDir: String, minAvgLp: Double,
                      maxFilesPerTrigger: Int = 1): StreamingQuery = {
     import graft.ext.TextAnalysis
-    val model = TextAnalysis.lmModelFromCounts(
-      lmReadCounts(spark, lmStateDir)).localCheckpoint(eager = true)
+    val lm = TextAnalysis.resolveLm(
+      TextAnalysis.lmModelFromCounts(lmReadCounts(spark, lmStateDir)))
     spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", maxFilesPerTrigger).parquet(srcDir)
       .writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
         // sparse scorer (round 18): the gate's >= cut rejects NULL
-        // avg_lp anyway, so the zero-fill join's rows could never
-        // survive — scoring only pair-bearing docs drops one batch
-        // scan + doc_id exchange per micro-batch (guide §2.4).
+        // avg_lp anyway, so only pair-bearing docs need a score row.
         val admitted = batch.toDF().join(
-          TextAnalysis.lmScoreBigramSparse(batch.toDF(), model)
+          TextAnalysis.lmScoreBigramSparse(batch.toDF(), lm)
             .filter(col("avg_lp") >= lit(minAvgLp))
             .select(col("doc_id"), col("n_pairs"), col("avg_lp")),
           Seq("doc_id"))
@@ -761,9 +759,11 @@ object Streams {
   /** STREAMING unified admission — the calibrated front door
     * ([[graft.ext.Admission.report]]) run live: every micro-batch is
     * evaluated against artifacts FROZEN at gate start (Bloom gate
-    * column, persisted bench-signature state, LM and NB models — all
-    * eagerly materialized once here, the [[lmGatePipeline]]
-    * discipline), and the batch's full per-document decision table
+    * column, persisted bench-signature state, LM and NB models — the
+    * models resolved to broadcast tables and every state layout
+    * validated once here, the [[lmGatePipeline]] discipline, so a
+    * micro-batch runs no layout or stamp probe), and the batch's full
+    * per-document decision table
     * lands in a per-batch sink directory. Because every verdict is a
     * function of the document and the frozen artifacts alone, the
     * union of the per-batch tables is BIT-IDENTICAL to one batch
@@ -786,12 +786,12 @@ object Streams {
                         nbBuckets: Int = 1024,
                         maxFilesPerTrigger: Int = 1,
                         nearDup: Option[graft.ext.Admission.NearDupCfg] = None): StreamingQuery = {
-    val lmFrozen = lmModel.localCheckpoint(eager = true)
-    val nbFrozen = nbModel.localCheckpoint(eager = true)
+    val lm = graft.ext.TextAnalysis.resolveLm(lmModel)
+    val nb = graft.ext.Classifier.resolveNb(nbModel, nbBuckets)
     admissionPipelineWith(spark, schema, srcDir, outDir, checkpointDir,
       benchSources, shingleGate, contamThreshold, semantic, minAvgLp,
-      allowedLabels, nbBuckets, maxFilesPerTrigger, nearDup,
-      modelsOf = _ => (lmFrozen, nbFrozen, None))
+      allowedLabels, maxFilesPerTrigger, nearDup,
+      modelsOf = _ => (lm, nb, None))
   }
 
   /** [[admissionPipeline]] with a MODEL ROLLOUT mid-stream: batches
@@ -822,13 +822,14 @@ object Streams {
     require(swapAtBatch > 0,
       "admissionModelSwapPipeline: swapAtBatch must be > 0 — a rollout " +
         "at batch 0 is a plain run under v1; use admissionPipeline")
-    val lm0 = lmV0.localCheckpoint(eager = true)
-    val nb0 = nbV0.localCheckpoint(eager = true)
-    val lm1 = lmV1.localCheckpoint(eager = true)
-    val nb1 = nbV1.localCheckpoint(eager = true)
+    import graft.ext.{Classifier, TextAnalysis}
+    val lm0 = TextAnalysis.resolveLm(lmV0)
+    val nb0 = Classifier.resolveNb(nbV0, nbBuckets)
+    val lm1 = TextAnalysis.resolveLm(lmV1)
+    val nb1 = Classifier.resolveNb(nbV1, nbBuckets)
     admissionPipelineWith(spark, schema, srcDir, outDir, checkpointDir,
       benchSources, shingleGate, contamThreshold, semantic, minAvgLp,
-      allowedLabels, nbBuckets, maxFilesPerTrigger, nearDup,
+      allowedLabels, maxFilesPerTrigger, nearDup,
       modelsOf = id =>
         if (id < swapAtBatch) (lm0, nb0, Some("v0"))
         else (lm1, nb1, Some("v1")))
@@ -837,7 +838,7 @@ object Streams {
   /** Shared foreachBatch body: per-batch models (and an optional
     * version tag emitted as `model_version`) chosen by batch id —
     * constant for the plain pipeline, a rollout step function for the
-    * swap form. Caller freezes the model frames.
+    * swap form. Caller resolves the models.
     */
   private def admissionPipelineWith(spark: SparkSession, schema: StructType,
                                     srcDir: String, outDir: String,
@@ -848,10 +849,9 @@ object Streams {
                                     semantic: Option[graft.ext.Admission.SemanticCfg],
                                     minAvgLp: Double,
                                     allowedLabels: Seq[String],
-                                    nbBuckets: Int,
                                     maxFilesPerTrigger: Int,
                                     nearDup: Option[graft.ext.Admission.NearDupCfg],
-                                    modelsOf: Long => (DataFrame, DataFrame, Option[String])): StreamingQuery = {
+                                    modelsOf: Long => (graft.ext.LmScorer, graft.ext.NbScorer, Option[String])): StreamingQuery = {
     val semFrozen = semantic.map(g =>
       g.copy(benchState = g.benchState.localCheckpoint(eager = true)))
     // the near-dup band state is NOT re-frozen here: at scale it is
@@ -875,10 +875,15 @@ object Streams {
     // one-row layout probe) is resolved ONCE here, not per batch: the
     // state is frozen for the pipeline's lifetime, and the r15 form
     // that re-opened it per micro-batch paid ~3 extra driver jobs ×
-    // batches × passes — the restart bench's 2.6× regression.
+    // batches × passes — the restart bench's 2.6× regression. The
+    // layouts of every frozen state (bench signatures, the band state
+    // the batches actually probe) are validated here once for the same
+    // reason; the per-batch probe is built with the gate's own layout.
     val ndFrozen = nearDup
     val ndState = ndFrozen.flatMap(g =>
       g.stateDir.map(graft.ext.Dedup.openBandState(spark, _)))
+    graft.ext.Admission.requireLayouts(semFrozen,
+      ndFrozen.map(g => ndState.fold(g)(h => g.copy(seenBands = h.state))))
     spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", maxFilesPerTrigger).parquet(srcDir)
       .writeStream
@@ -894,9 +899,9 @@ object Streams {
           case (other, _) => (other, None)
         }
         val (lmB, nbB, verB) = modelsOf(batchId)
-        val rep = graft.ext.Admission.report(batch.toDF(), benchSources,
-          shingleGate, contamThreshold, semFrozen, lmB, minAvgLp,
-          nbB, allowedLabels, nbBuckets, ndBatch)
+        val rep = graft.ext.Admission.reportResolved(batch.toDF(),
+          benchSources, shingleGate, contamThreshold, semFrozen, lmB,
+          minAvgLp, nbB, allowedLabels, ndBatch)
         try verB.fold(rep)(v => rep.withColumn("model_version", lit(v)))
           .write.mode("overwrite").parquet(s"$outDir/batch_id=$batchId")
         finally probe.foreach(_.unpersist(blocking = false))

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Join, LogicalPlan}
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.scalatest.funsuite.AnyFunSuite
 import graft.ext.Admission
@@ -16,11 +17,11 @@ import graft.registry.CorpusRegistry
   * The invariant: the 7-gate report reads the documents table a fixed
   * number of times (one scan per gate leg that consumes raw text),
   * and every calibration rollup is a bounded aggregate OVER the
-  * report — it must add ZERO documents scans of its own. A frozen
-  * model (localCheckpoint) appears as a leaf RDD scan; if the freeze
-  * discipline ever regresses, the train aggregation re-enters the
-  * plan and the documents-scan count jumps — exactly what these
-  * assertions catch, before any timing does.
+  * report — it must add ZERO documents scans of its own. The LM and NB
+  * models are broadcast tables resolved before the plan is built, so
+  * they appear nowhere in it; if a model leg regresses to a join, the
+  * model relation and a documents scan re-enter the plan — exactly what
+  * these assertions catch, before any timing does.
   */
 class AdmissionPlanAuditSpec extends AnyFunSuite {
   import SparkTestBase._
@@ -40,15 +41,15 @@ class AdmissionPlanAuditSpec extends AnyFunSuite {
 
   // The live report subtree every standalone consumer embeds. Its
   // documents-scan budget (measured on the current plan, leg by leg):
-  // the quality/contamination wide frame, the bloom-probe shingle leg,
-  // the semantic sweep's probe side, its bench-signature state, the
-  // near-dup probe's band table, LM scoring, NB scoring, and the
-  // decision assembly's base projection — a FIXED count independent of
-  // corpus size, with both MODELS as frozen leaf RDDs contributing
-  // zero. A regression to unmaterialized models re-enters each train
-  // aggregation into the plan (+1 full-text scan per model per
-  // consumer branch) and blows this budget — the round-13 bug class.
-  private val ReportScanBudget = 8
+  // the wide frame (source, quality, contamination, and the LM and NB
+  // scores — both models are broadcast tables, so their legs read no
+  // documents of their own), the semantic sweep's probe side, its
+  // bench-signature state, and the near-dup probe's band table — a
+  // FIXED count independent of corpus size. A regression to a model
+  // join re-adds a scan per model leg, and unmaterialized gate artifacts
+  // re-enter their builds into the plan — the round-13 bug class; either
+  // blows this budget.
+  private val ReportScanBudget = 4
 
   test("live report: documents-scan count stays at the fixed gate constant") {
     val rep = CorpusRegistry.admissionReportFor(spark, sfDir)
@@ -57,6 +58,46 @@ class AdmissionPlanAuditSpec extends AnyFunSuite {
       s"admission report reads documents $n times (budget $ReportScanBudget) — " +
         "a gate leg re-derives an artifact it should share:\n" +
         rep.queryExecution.optimizedPlan.toString.take(4000))
+  }
+
+  test("report plan: no Aggregate or Join is fed by the LM or NB model") {
+    // both models are resolved to broadcast tables before the plan is
+    // built, so the scoring legs are per-row projections of the
+    // documents scan: a regression to the join form re-enters the model
+    // relation under a Join and the per-doc rollup Aggregate
+    val docs = Tables.documents(spark, sfDir)
+    val tmp = java.nio.file.Files
+      .createTempDirectory("graft-planaudit-models-").toString
+    try {
+      graft.ext.TextAnalysis.bigramLmTrain(docs).write.parquet(s"$tmp/lm")
+      graft.ext.Classifier.nbTrain(docs).write.parquet(s"$tmp/nb")
+      val seen = graft.ext.Dedup.bandTable(docs.filter(col("doc_id") % 7 === 3),
+        w = 5, numHashes = 8, bandWidth = 2)
+      val rep = Admission.report(docs, Seq("src0", "src1"), _ => lit(false),
+        0.3, None, spark.read.parquet(s"$tmp/lm"), -3.40,
+        spark.read.parquet(s"$tmp/nb"), Seq("en"),
+        nearDup = Some(Admission.NearDupCfg(seen, w = 5, numHashes = 8,
+          bandWidth = 2)))
+      def readsModel(p: LogicalPlan): Boolean = p.collectLeaves().exists {
+        case l: LogicalRelation => l.relation match {
+          case f: HadoopFsRelation => f.location.rootPaths.exists { r =>
+            val s = r.toString
+            s.endsWith("/lm") || s.endsWith("/nb")
+          }
+          case _ => false
+        }
+        case _ => false
+      }
+      val plan = rep.queryExecution.optimizedPlan
+      val fed = plan.collect {
+        case a: Aggregate if readsModel(a) => a.nodeName
+        case j: Join if readsModel(j) => j.nodeName
+      }
+      assert(fed.isEmpty, s"model-fed ${fed.mkString(", ")} in the report " +
+        s"plan:\n${plan.toString.take(4000)}")
+      assert(!readsModel(plan), "the report plan reads a model relation")
+    } finally graft.plans.Pipeline
+      .deleteRecursively(java.nio.file.Paths.get(tmp))
   }
 
   test("every live standalone consumer adds zero documents scans beyond its report") {

@@ -266,6 +266,80 @@ class AdmissionSpec extends AnyFunSuite {
         "must not change one either")
   }
 
+  test("admissionPipeline refuses a mismatched band-state or bench-signature layout when it starts") {
+    val docs = Tables.documents(spark, sfDir)
+    val (gate, sem, lm, nb) = cfg(docs)
+    val base = java.nio.file.Files.createTempDirectory("graft_adm_layout").toString
+    try {
+      val src = s"$base/src"
+      docs.coalesce(1).write.parquet(src)
+      val sch = spark.read.parquet(src).schema
+      val stateDir = s"$base/bands"
+      Dedup.writeBandState(Dedup.bandTable(docs.filter(col("doc_id") % 7 === 3),
+        w = 5, numHashes = 8, bandWidth = 2), stateDir, "overwrite")
+      def start(semantic: Option[Admission.SemanticCfg], w: Int) =
+        Streams.admissionPipeline(spark, sch, src, s"$base/out", s"$base/ck",
+          Seq("src0", "src1"), gate, 0.3, semantic, lm, -3.40, nb, Seq("en"),
+          nearDup = Some(Admission.NearDupCfg(spark.read.parquet(stateDir),
+            w = w, numHashes = 8, bandWidth = 2, stateDir = Some(stateDir))))
+      // band state built with w = 5, gate called with w = 4
+      val e1 = intercept[IllegalArgumentException](start(sem, w = 4))
+      assert(e1.getMessage.contains("layout mismatch"), e1.getMessage)
+      // bench signatures banded with 16 planes, gate called with 8
+      val e2 = intercept[IllegalArgumentException](
+        start(sem.map(_.copy(numPlanes = 8)), w = 5))
+      assert(e2.getMessage.contains("layout mismatch"), e2.getMessage)
+      assert(spark.streams.active.isEmpty, "a refused pipeline must not start")
+      assert(!new java.io.File(s"$base/out").exists())
+    } finally graft.plans.Pipeline.deleteRecursively(java.nio.file.Paths.get(base))
+  }
+
+  test("a streamed micro-batch runs no layout, stamp or model-resolution probe") {
+    // every frozen artifact is resolved when the pipeline starts; a
+    // micro-batch's jobs are its own work only (band-state cell collect,
+    // probe, report write)
+    val docs = Tables.documents(spark, sfDir)
+    val (gate, sem, lm, nb) = cfg(docs)
+    val base = java.nio.file.Files.createTempDirectory("graft_adm_probes").toString
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.add((Option(e.properties).flatMap(p =>
+            Option(p.getProperty("sql.streaming.queryId"))).getOrElse(""),
+          e.stageInfos.map(_.details).mkString("\n")))
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val src = s"$base/src"
+      (0 until 3).foreach(i => docs.filter(col("doc_id") % 3 === i).coalesce(1)
+        .write.mode("append").parquet(src))
+      val stateDir = s"$base/bands"
+      Dedup.writeBandState(Dedup.bandTable(docs.filter(col("doc_id") % 7 === 3),
+        w = 5, numHashes = 8, bandWidth = 2), stateDir, "overwrite")
+      val q = Streams.admissionPipeline(spark, spark.read.parquet(src).schema,
+        src, s"$base/out", s"$base/ck", Seq("src0", "src1"), gate, 0.3, sem,
+        lm, -3.40, nb, Seq("en"),
+        nearDup = Some(Admission.NearDupCfg(spark.read.parquet(stateDir),
+          w = 5, numHashes = 8, bandWidth = 2, stateDir = Some(stateDir))))
+      q.awaitTermination()
+      assert(q.recentProgress.count(_.numInputRows > 0) === 3)
+      // listener events are delivered asynchronously: drain the bus
+      val bus = spark.sparkContext.getClass.getMethod("listenerBus")
+        .invoke(spark.sparkContext)
+      bus.getClass.getMethod("waitUntilEmpty").invoke(bus)
+      val batchJobs = jobs.toArray(Array.empty[(String, String)])
+        .filter(_._1 == q.id.toString).map(_._2)
+      assert(batchJobs.nonEmpty, "no micro-batch job was observed")
+      val probes = Seq("requireStateLayout", "requireBenchSigLayout",
+        "Stamp$", "resolveLm", "resolveNb", "openBandState")
+      batchJobs.foreach(site => probes.foreach(p =>
+        assert(!site.contains(p), s"micro-batch ran a $p probe:\n$site")))
+    } finally {
+      spark.sparkContext.removeSparkListener(listener)
+      graft.plans.Pipeline.deleteRecursively(java.nio.file.Paths.get(base))
+    }
+  }
+
   test("model-swap rollout: each batch's report equals the batch report under that batch's model version") {
     // batch==stream extended to MODEL VERSIONING: batches before the
     // swap must reproduce the v0 batch report over their docs, batches

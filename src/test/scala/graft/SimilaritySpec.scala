@@ -31,6 +31,21 @@ class SimilaritySpec extends AnyFunSuite {
       s"small-K cell assignment regressed to a join plan:\n$plan")
   }
 
+  test("cell assignment over an array<int> centroid table takes the join path and matches the same centroids as doubles") {
+    val emb = embDf(Seq((1L, Seq(1f, 0f)), (2L, Seq(0f, 1f)), (3L, Seq(0.9f, 0.2f))))
+      .select(col("vec_id").as("cid"), col("embedding").as("ce"))
+    val ints = Seq((0L, Seq(1, 0)), (1L, Seq(0, 1))).toDF("cell", "centroid")
+    val doubles = ints.select(col("cell"),
+      col("centroid").cast("array<double>").as("centroid"))
+    def cells(centroids: DataFrame) =
+      Similarity.assignCells(emb, "cid", "ce", centroids).collect()
+        .map(r => r.getLong(0) -> r.getLong(2)).toMap
+    // the literal path cannot hold int elements; the join path widens
+    // them to double, so both tables assign identically
+    assert(cells(ints) === cells(doubles))
+    assert(cells(ints) === Map(1L -> 0L, 2L -> 1L, 3L -> 0L))
+  }
+
   test("one ivfKMeans iteration is exactly the oracle-checked Lloyd step") {
     val emb = Tables.embeddings(spark, sfDir)
     val one = Similarity.ivfKMeans(emb, numCells = 16, iters = 1)

@@ -139,13 +139,15 @@ object Admission {
     */
   private[graft] def requireLayouts(semantic: Option[SemanticCfg],
                                     nearDup: Option[NearDupCfg]): Unit = {
-    semantic.foreach(g => Corpus.requireBenchSigLayout(g.benchState,
-      g.numPlanes, g.bandWidth, g.dim))
+    semantic.foreach(g => Stamp.require(g.benchState, "bench-signature state",
+      Corpus.benchSigLayout(g.numPlanes, g.bandWidth, g.dim)))
     nearDup.foreach { g =>
-      val layout = Seq("w" -> g.w, "num_hashes" -> g.numHashes,
-        "band_width" -> g.bandWidth)
-      Dedup.requireStateLayout(g.seenBands, "seen band table", layout)
-      g.bands.foreach(Dedup.requireStateLayout(_, "probe band table", layout))
+      val layout = Dedup.bandLayout(g.w, g.numHashes, g.bandWidth)
+      (("seen band table", g.seenBands) +: g.bands.map("probe band table" -> _).toSeq)
+        .foreach { case (what, b) =>
+          Dedup.requireLayoutCols(b, what, layout)
+          Stamp.require(b, what, layout)
+        }
     }
   }
 
@@ -308,7 +310,7 @@ object Admission {
     * ride in the SAME single aggregate as the overlap counts — no
     * second scan of the report — and an `assert_true` filter over the
     * one aggregated row turns any gap into a loud execution-time
-    * error, the requireStateLayout discipline applied to decision
+    * error, the [[Stamp]] discipline applied to decision
     * tables. Catches both a wholly-missing gate and a single doc's
     * dropped row.
     */

@@ -1,5 +1,6 @@
 package graft.ext
 
+import scala.collection.immutable.ListMap
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -118,13 +119,12 @@ object Classifier {
     * common stamp rides through to the output.
     */
   def nbCountsMerge(a: DataFrame, b: DataFrame): DataFrame = {
-    val stamp = Stamp.agreeing(Seq(a, b), "nbCountsMerge", "buckets")
+    val stamp = Stamp.agreeing(Seq(a, b), "nbCountsMerge", Seq("buckets"))
     val cols = Seq("label", "bucket", "c").map(col)
     Stamp.restamp(
       a.select(cols: _*).unionByName(b.select(cols: _*))
         .groupBy(col("label"), col("bucket"))
-        .agg(sum(col("c")).as("c")),
-      "buckets", stamp)
+        .agg(sum(col("c")).as("c")), stamp)
   }
 
   /** Right-to-be-forgotten for the classifier: subtract a removed
@@ -136,12 +136,11 @@ object Classifier {
     */
   def nbCountsSubtract(state: DataFrame, removed: DataFrame): DataFrame = {
     val stamp = Stamp.agreeing(Seq(state, removed), "nbCountsSubtract",
-      "buckets")
+      Seq("buckets"))
     Stamp.restamp(
       graft.operators.ScaleOps.subtractCounts(state, removed,
         keys = Seq("label", "bucket"), counts = Seq("c"),
-        what = "nbCountsSubtract"),
-      "buckets", stamp)
+        what = "nbCountsSubtract"), stamp)
   }
 
   /** DENSE fixed-point model from accumulated counts: one row per
@@ -159,7 +158,7 @@ object Classifier {
     require(Seq("label", "bucket", "c").forall(counts.columns.contains),
       "nbModelFromCounts: not an NB count state — need (label, bucket, c) " +
         "as built by nbCountsBuild")
-    Stamp.requireMatch(counts, "nbModelFromCounts", "buckets", buckets)
+    Stamp.require(counts, "nbModelFromCounts", Seq("buckets" -> buckets))
     val spark = counts.sparkSession
     // bounded by labels×(buckets+1): materialize ONCE so the totals,
     // the dense grid and the priors all read the same blocks
@@ -209,8 +208,9 @@ object Classifier {
         col("bucket").cast("int"), col("lp_fp").cast("long")) ++
         (if (stamped) Seq(col("buckets")) else Nil): _*)
       .collect()
-    if (stamped) Stamp.requireValue(rows.headOption.map(_.getInt(3)),
-      "nbScores", "buckets", buckets)
+    if (stamped) Stamp.require(
+      rows.headOption.map(r => ListMap[String, Any]("buckets" -> r.get(3))),
+      "nbScores", Seq("buckets" -> buckets))
     new NbScorer(model.sparkSession.sparkContext
       .broadcast(NbTable(rows, buckets)))
   }

@@ -116,12 +116,14 @@ object Corpus {
     // a caller-provided band table built under a DIFFERENT layout would
     // silently never collide with the state (every doc a singleton) —
     // validate its ridden-along layout columns like any state read
-    bands.foreach(b => Dedup.requireStateLayout(b, "split probe bands",
-      Seq("w" -> w, "num_hashes" -> numHashes, "band_width" -> bandWidth)))
+    val layout = Dedup.bandLayout(w, numHashes, bandWidth)
+    bands.foreach { b =>
+      Dedup.requireLayoutCols(b, "split probe bands", layout)
+      Stamp.require(b, "split probe bands", layout)
+    }
     try {
-      val state = Dedup.readBandState(spark, stateDir, probe)
-      Dedup.requireStateLayout(state, "compacted band state",
-        Seq("w" -> w, "num_hashes" -> numHashes, "band_width" -> bandWidth))
+      val state = Dedup.readBandState(
+        Dedup.openBandState(spark, stateDir, w, numHashes, bandWidth), probe)
       // only the ID-SIZED owner map materializes (the shingle cache can
       // then release); the returned frame stays a lazy docs ⋈ owner plan
       // — never a corpus-sized local materialization
@@ -475,29 +477,12 @@ object Corpus {
       .withColumn("band_width", lit(bandWidth))
       .withColumn("dim", lit(dim))
 
-  /** Cross-validate a persisted bench-signature table's layout stamp
-    * against the sweep's parameters — a mismatched banding would
-    * silently never collide and admit every paraphrase. Every stamp
-    * column the frame carries is read by ONE one-row probe; unstamped
-    * (in-flight) frames skip it, the family convention, and an empty
-    * state validates trivially.
+  /** The bench-signature state's stamp: a mismatched banding would
+    * silently never collide and admit every paraphrase.
     */
-  private[graft] def requireBenchSigLayout(benchState: DataFrame,
-                                           numPlanes: Int, bandWidth: Int,
-                                           dim: Int): Unit = {
-    val expected = Seq("num_planes" -> numPlanes, "band_width" -> bandWidth,
-      "dim" -> dim).filter { case (c, _) => benchState.columns.contains(c) }
-    if (expected.nonEmpty)
-      benchState.select(expected.map { case (c, _) => col(c) }: _*)
-        .limit(1).collect().headOption.foreach { r =>
-          expected.zipWithIndex.foreach { case ((c, v), i) =>
-            require(r.getInt(i) == v,
-              s"bench-signature state layout mismatch: $c=${r.getInt(i)} " +
-                s"in state but sweep called with $c=$v — bands would never " +
-                "collide and every paraphrase would be admitted")
-          }
-        }
-  }
+  private[graft] def benchSigLayout(numPlanes: Int, bandWidth: Int,
+                                    dim: Int): Seq[(String, Int)] =
+    Seq("num_planes" -> numPlanes, "band_width" -> bandWidth, "dim" -> dim)
 
   /** Doc ids of `cohort` that SEMANTICALLY near-match the persisted
     * bench-signature state: the cohort is banded with the same planes
@@ -514,13 +499,14 @@ object Corpus {
                                threshold: Double = 0.42,
                                numPlanes: Int = 16, bandWidth: Int = 4,
                                dim: Int = 64): DataFrame = {
-    requireBenchSigLayout(benchState, numPlanes, bandWidth, dim)
+    Stamp.require(benchState, "bench-signature state",
+      benchSigLayout(numPlanes, bandWidth, dim))
     sweepBenchSignatures(cohort, emb, benchState, threshold, numPlanes,
       bandWidth, dim)
   }
 
   /** [[embeddingContaminatedIds]] over a bench state whose layout the
-    * caller already validated ([[requireBenchSigLayout]]) — the form a
+    * caller already validated ([[benchSigLayout]]) — the form a
     * consumer that validated once at start (a streaming admission
     * pipeline) runs per micro-batch.
     */
@@ -859,13 +845,12 @@ object Corpus {
     * must agree on geometry; the common stamp rides to the output.
     */
   def importanceCountsMerge(a: DataFrame, b: DataFrame): DataFrame = {
-    val stamp = Stamp.agreeing(Seq(a, b), "importanceCountsMerge", "buckets")
+    val stamp = Stamp.agreeing(Seq(a, b), "importanceCountsMerge", Seq("buckets"))
     val cols = Seq("bucket", "ct", "cr").map(col)
     Stamp.restamp(
       a.select(cols: _*).unionByName(b.select(cols: _*))
         .groupBy(col("bucket"))
-        .agg(sum(col("ct")).as("ct"), sum(col("cr")).as("cr")),
-      "buckets", stamp)
+        .agg(sum(col("ct")).as("ct"), sum(col("cr")).as("cr")), stamp)
   }
 
   /** Right-to-be-forgotten for the importance estimator: subtract a
@@ -879,12 +864,11 @@ object Corpus {
   def importanceCountsSubtract(state: DataFrame,
                                removed: DataFrame): DataFrame = {
     val stamp = Stamp.agreeing(Seq(state, removed),
-      "importanceCountsSubtract", "buckets")
+      "importanceCountsSubtract", Seq("buckets"))
     Stamp.restamp(
       graft.operators.ScaleOps.subtractCounts(state, removed,
         keys = Seq("bucket"), counts = Seq("ct", "cr"),
-        what = "importanceCountsSubtract"),
-      "buckets", stamp)
+        what = "importanceCountsSubtract"), stamp)
   }
 
   /** The smoothed fixed-point ratio table from accumulated
@@ -897,8 +881,7 @@ object Corpus {
     require(Seq("bucket", "ct", "cr").forall(counts.columns.contains),
       "importanceRatiosFromCounts: not a DSIR count state — need " +
         "(bucket, ct, cr) as built by importanceCountsBuild")
-    Stamp.requireMatch(counts, "importanceRatiosFromCounts", "buckets",
-      buckets)
+    Stamp.require(counts, "importanceRatiosFromCounts", Seq("buckets" -> buckets))
     ratiosFromCounts(counts.select(col("bucket"), col("ct"), col("cr")),
       buckets)
   }
@@ -954,7 +937,7 @@ object Corpus {
     require(Seq("bucket", "lr_fp").forall(ratios.columns.contains),
       "importanceWeights: not a ratio table — need (bucket, lr_fp) as " +
         "built by importanceLogRatios")
-    Stamp.requireMatch(ratios, "importanceWeights", "buckets", buckets)
+    Stamp.require(ratios, "importanceWeights", Seq("buckets" -> buckets))
     val per = hashedNgramFeatures(docs, buckets)
       .join(broadcast(ratios.select(col("bucket"), col("lr_fp"))),
         Seq("bucket"))

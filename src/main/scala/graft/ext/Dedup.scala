@@ -337,16 +337,11 @@ object Dedup {
     val meta = Seq("w", "num_hashes")
     require(meta.forall(sigs.columns.contains),
       "signature table lacks layout columns — build it with Dedup.signatureTable")
-    // one-row probe: a projected sig table with STALE num_hashes metadata
-    // would otherwise yield bands built from a different hash count than
-    // the layout columns claim — the silent-admission failure mode
-    // requireStateLayout exists to prevent.
-    sigs.select(col("num_hashes")).limit(1).collect().headOption.foreach { r =>
-      require(!r.isNullAt(0) && r.getInt(0) == numHashes,
-        s"signature table metadata num_hashes=${r.get(0)} but $numHashes mh " +
-          "columns are present — the table was projected or its metadata is " +
-          "stale; rebuild it with Dedup.signatureTable")
-    }
+    // a projected sig table with STALE num_hashes metadata would
+    // otherwise yield bands built from a different hash count than the
+    // layout columns claim
+    Stamp.require(sigs, s"signature table with $numHashes mh columns",
+      Seq("num_hashes" -> numHashes))
     bandsFromSigs(sigs, numHashes, bandWidth)
       .crossJoin(broadcast(sigs.select(col("w"), col("num_hashes")).limit(1)))
       .withColumn("band_width", lit(bandWidth))
@@ -404,10 +399,14 @@ object Dedup {
   def appendBandState(spark: org.apache.spark.sql.SparkSession,
                       stateDir: String, admitted: DataFrame, w: Int = 3,
                       numHashes: Int = 8, bandWidth: Int = 2): Unit = {
-    requireStateLayout(spark.read.parquet(stateDir), "seen band table",
-      Seq("w" -> w, "num_hashes" -> numHashes, "band_width" -> bandWidth))
-    appendBandsLayoutMatched(spark, stateDir,
-      bandTable(admitted, w, numHashes, bandWidth))
+    val h = openBandState(spark, stateDir, w, numHashes, bandWidth)
+    val bands = bandTable(admitted, w, numHashes, bandWidth)
+    // append IN THE STATE'S OWN LAYOUT: mixing layouts in one directory
+    // would break partition discovery for every later reader
+    if (h.state.columns.contains("state_prefixes"))
+      writeBandState(bands, stateDir, "append",
+        h.stamp.fold(defaultStatePrefixes)(Stamp.int(_, "state_prefixes")))
+    else bands.write.mode("append").parquet(stateDir)
   }
 
   /** Default band-state partition fan-out: nBands × this many bucket-key
@@ -424,8 +423,8 @@ object Dedup {
     * `band=<b>/bpfx=<hash(bkey) mod P>/`, with the fan-out P stamped in
     * the rows (`state_prefixes`) so readers prune with the same modulus
     * the writer used — a mismatched modulus would prune away colliding
-    * rows, the silent-admission failure mode [[requireStateLayout]]
-    * guards the hash layout against.
+    * rows, the silent-admission failure mode the band state's layout
+    * stamp ([[Stamp]]) guards the hash layout against.
     */
   def writeBandState(bands: DataFrame, stateDir: String,
                      mode: String = "append",
@@ -442,28 +441,62 @@ object Dedup {
   }
 
   /** Pre-resolved handle on persisted band state: the relation plus
-    * its stamped prefix fan-out (None for flat legacy layouts and
-    * empty states — nothing to prune). Band state is IMMUTABLE for a
-    * reader's lifetime (writers append new files; a frozen gate never
-    * sees them), so a long-lived consumer — a streaming pipeline
-    * probing per micro-batch — resolves the directory listing and the
-    * one-row layout probe ONCE here instead of paying a
-    * `spark.read.parquet` + `limit(1).collect()` per batch for values
-    * that cannot change (round 16: the per-batch re-resolution was
-    * the dominant fixed cost in the streamed-admission restart bench).
+    * its stamp — the layout and the prefix fan-out, read together.
+    * Band state is IMMUTABLE for a reader's lifetime (writers append
+    * new files; a frozen gate never sees them), so a long-lived
+    * consumer — a streaming pipeline probing per micro-batch —
+    * resolves the directory listing and the stamp ONCE here instead of
+    * per batch for values that cannot change (round 16: the per-batch
+    * re-resolution was the dominant fixed cost in the streamed-admission
+    * restart bench).
     */
   final case class BandStateHandle private[ext] (
-      state: DataFrame, prefixes: Option[Int])
+      state: DataFrame, stamp: Option[scala.collection.immutable.ListMap[String, Any]]) {
 
+    /** The stamped prefix fan-out; None for flat legacy layouts and
+      * empty states — nothing to prune.
+      */
+    def prefixes: Option[Int] =
+      if (!state.columns.contains("bpfx")) None
+      else stamp.filter(_.contains("state_prefixes"))
+        .map(Stamp.int(_, "state_prefixes"))
+  }
+
+  /** The band state's stamp: the layout its bucket keys were built
+    * under. Mismatched (w, numHashes, bandWidth) produce bucket keys
+    * that can never collide, so every incoming document would be
+    * silently admitted — the worst failure mode a dedup gate has.
+    */
+  private[graft] def bandLayout(w: Int, numHashes: Int,
+                                bandWidth: Int): Seq[(String, Int)] =
+    Seq("w" -> w, "num_hashes" -> numHashes, "band_width" -> bandWidth)
+
+  /** Dedup state must carry its layout columns: a frame without them
+    * (hand-built, pre-upgrade) cannot be checked, and silent admission
+    * is never an acceptable default.
+    */
+  private[graft] def requireLayoutCols(state: DataFrame, what: String,
+                                       layout: Seq[(String, Int)]): Unit =
+    require(layout.forall { case (c, _) => state.columns.contains(c) },
+      s"$what lacks layout columns ${layout.map(_._1).mkString("(", ", ", ")")} — " +
+        s"rebuild it with Dedup.${if (what.contains("band")) "bandTable" else "signatureTable"}")
+
+  /** Open persisted band state for a reader computing under the given
+    * layout: ONE probe reads the layout stamp and the prefix fan-out
+    * together, and a state stamped with a different layout refuses
+    * loudly (an empty state validates trivially — admitting everything
+    * against an empty corpus is correct).
+    */
   def openBandState(spark: org.apache.spark.sql.SparkSession,
-                    stateDir: String): BandStateHandle = {
+                    stateDir: String, w: Int, numHashes: Int,
+                    bandWidth: Int): BandStateHandle = {
     val st = spark.read.parquet(stateDir)
-    val p =
-      if (!st.columns.contains("bpfx") ||
-        !st.columns.contains("state_prefixes")) None
-      else st.select(col("state_prefixes")).limit(1).collect()
-        .headOption.map(_.getInt(0))
-    BandStateHandle(st, p)
+    val layout = bandLayout(w, numHashes, bandWidth)
+    val what = s"band state $stateDir"
+    requireLayoutCols(st, what, layout)
+    val stamp = Stamp.read(st, layout.map(_._1) :+ "state_prefixes")
+    Stamp.require(stamp, what, layout)
+    BandStateHandle(st, stamp)
   }
 
   /** Read persisted band state restricted to the cells `probe` (a band
@@ -472,15 +505,9 @@ object Dedup {
     * distinct cell list is collected driver-side, bounded by
     * nBands × state_prefixes (the probe is cached by every caller, so
     * the collect reuses, not recomputes, the shingle work). Flat legacy
-    * layouts return the full state — same semantics, no pruning.
-    */
-  def readBandState(spark: org.apache.spark.sql.SparkSession,
-                    stateDir: String, probe: DataFrame): DataFrame =
-    readBandState(openBandState(spark, stateDir), probe)
-
-  /** [[readBandState]] over a pre-resolved [[BandStateHandle]] — the
-    * per-micro-batch form: only the probe's cell collect runs per
-    * call; listing and layout probing were paid once at open.
+    * layouts return the full state — same semantics, no pruning. Only
+    * the probe's cell collect runs per call; listing and the stamp were
+    * read once at open — the per-micro-batch form.
     */
   def readBandState(handle: BandStateHandle, probe: DataFrame): DataFrame =
     handle.prefixes match {
@@ -492,47 +519,6 @@ object Dedup {
         handle.state
           .filter((col("band") * p + col("bpfx")).cast("int").isin(cells: _*))
     }
-
-  /** Append band rows to existing state IN ITS OWN layout: partitioned
-    * states get a partitioned append with the stamped fan-out, flat
-    * legacy states get a flat append — mixing layouts in one directory
-    * would break partition discovery for every later reader.
-    */
-  private[graft] def appendBandsLayoutMatched(
-      spark: org.apache.spark.sql.SparkSession,
-      stateDir: String, bands: DataFrame): Unit = {
-    val st = spark.read.parquet(stateDir)
-    if (st.columns.contains("state_prefixes")) {
-      val p = st.select(col("state_prefixes")).limit(1).collect()
-        .headOption.fold(defaultStatePrefixes)(_.getInt(0))
-      writeBandState(bands, stateDir, "append", p)
-    } else bands.write.mode("append").parquet(stateDir)
-  }
-
-  /** Fail LOUDLY when persisted dedup state was built with a different
-    * layout than the admission call: mismatched (w, numHashes, bandWidth)
-    * produce bucket keys that can never collide, so every incoming
-    * document would be silently admitted — the worst failure mode a
-    * dedup gate has. A one-row probe reads the constant layout columns;
-    * an EMPTY state table validates trivially (admitting everything
-    * against an empty corpus is correct).
-    */
-  private[ext] def requireStateLayout(state: DataFrame, what: String,
-                                 expected: Seq[(String, Int)]): Unit = {
-    val cols = expected.map(_._1)
-    require(cols.forall(state.columns.contains),
-      s"$what lacks layout columns ${cols.mkString("(", ", ", ")")} — " +
-        s"rebuild it with Dedup.${if (what.contains("band")) "bandTable" else "signatureTable"}")
-    state.select(cols.map(col): _*).limit(1).collect().headOption.foreach { r =>
-      val actual = cols.indices.map(r.getInt)
-      require(actual == expected.map(_._2),
-        s"$what layout mismatch: state built with " +
-          cols.zip(actual).map { case (c, v) => s"$c=$v" }.mkString("(", ", ", ")") +
-          " but admission called with " +
-          expected.map { case (c, v) => s"$c=$v" }.mkString("(", ", ", ")") +
-          " — buckets would never collide and every document would be admitted")
-    }
-  }
 
   /** Incremental near-dup admission — the batch-over-batch form of
     * [[minhashLsh]]: an incoming document is REJECTED when any of its
@@ -552,8 +538,9 @@ object Dedup {
   def incrementalNearDup(incoming: DataFrame, seenBands: DataFrame,
                          w: Int = 3, numHashes: Int = 8,
                          bandWidth: Int = 2): DataFrame = {
-    requireStateLayout(seenBands, "seen band table",
-      Seq("w" -> w, "num_hashes" -> numHashes, "band_width" -> bandWidth))
+    val layout = bandLayout(w, numHashes, bandWidth)
+    requireLayoutCols(seenBands, "seen band table", layout)
+    Stamp.require(seenBands, "seen band table", layout)
     val bands = bandTable(incoming, w, numHashes, bandWidth).persist()
     try admitCore(incoming, bands, seenBands)
     finally bands.unpersist(blocking = false)
@@ -612,11 +599,10 @@ object Dedup {
                                   w: Int = 3, numHashes: Int = 8,
                                   bandWidth: Int = 2,
                                   excludeIds: Option[DataFrame] = None): DataFrame = {
+    val h = openBandState(spark, stateDir, w, numHashes, bandWidth)
     val bands = bandTable(incoming, w, numHashes, bandWidth).persist()
     try {
-      val seen0 = readBandState(spark, stateDir, bands)
-      requireStateLayout(seen0, "seen band table",
-        Seq("w" -> w, "num_hashes" -> numHashes, "band_width" -> bandWidth))
+      val seen0 = readBandState(h, bands)
       val seen = excludeIds.fold(seen0)(ids =>
         seen0.join(ids.select(col("doc_id")), Seq("doc_id"), "left_anti"))
       admitCore(incoming, bands, seen)
@@ -660,47 +646,21 @@ object Dedup {
                             numHashes: Int = 8, bandWidth: Int = 2,
                             excludeIds: Option[DataFrame] = None,
                             admittedTs: Option[Long] = None): DataFrame = {
-    val expected = Seq("w" -> w, "num_hashes" -> numHashes, "band_width" -> bandWidth)
     val bands = bandTable(batch, w, numHashes, bandWidth).persist()
     try {
       val stateExists =
         java.nio.file.Files.exists(java.nio.file.Paths.get(stateDir))
-      val st =
-        if (stateExists) spark.read.parquet(stateDir)
-        else bandTable(batch.limit(0), w, numHashes, bandWidth)
-      require(expected.map(_._1).forall(st.columns.contains),
-        "seen band table lacks layout columns — build it with Dedup.bandTable")
-      val partitioned =
-        st.columns.contains("state_prefixes") && st.columns.contains("bpfx")
-      val probeCols = expected.map(_._1) ++
-        (if (partitioned) Seq("state_prefixes") else Nil)
-      val probe = st.select(probeCols.map(col): _*).limit(1).collect().headOption
-      probe.foreach { r =>
-        val actual = expected.indices.map(r.getInt)
-        require(actual == expected.map(_._2),
-          s"seen band table layout mismatch: state built with " +
-            expected.map(_._1).zip(actual).map { case (c, v) => s"$c=$v" }
-              .mkString("(", ", ", ")") +
-            " but admission called with " +
-            expected.map { case (c, v) => s"$c=$v" }.mkString("(", ", ", ")") +
-            " — buckets would never collide and every document would be admitted")
-      }
-      val pOpt = if (partitioned) probe.map(_.getInt(expected.length)) else None
-      val seen0 = (pOpt match {
-        case Some(p) =>
-          val cells = bands
-            .select((col("band") * p + bpfxOf(p)).cast("int").as("_cell"))
-            .distinct().collect().map(_.getInt(0)).toSeq
-          st.filter((col("band") * p + col("bpfx")).cast("int").isin(cells: _*))
-        case None => st
-      }).persist()
+      val h =
+        if (stateExists) openBandState(spark, stateDir, w, numHashes, bandWidth)
+        else BandStateHandle(bandTable(batch.limit(0), w, numHashes, bandWidth), None)
+      val seen0 = readBandState(h, bands).persist()
       try {
         val seen = excludeIds.fold(seen0: DataFrame)(ids =>
           seen0.join(ids.select(col("doc_id")), Seq("doc_id"), "left_anti"))
         val admitted = admitCore(batch, bands, seen)
         // all-or-nothing stamping per state dir (see scaladoc)
         if (stateExists) {
-          val stateStamped = st.columns.contains("admitted_ts")
+          val stateStamped = h.state.columns.contains("admitted_ts")
           require(stateStamped == admittedTs.isDefined,
             if (stateStamped)
               s"state $stateDir is admitted_ts-stamped but this append " +
@@ -718,7 +678,7 @@ object Dedup {
         val delta = admittedTs.fold(delta0)(ts =>
           delta0.withColumn("admitted_ts", lit(ts)))
         if (!stateExists) writeBandState(delta, stateDir, "append")
-        else pOpt match {
+        else h.prefixes match {
           case Some(p) => writeBandState(delta, stateDir, "append", p)
           case None    => delta.write.mode("append").parquet(stateDir)
         }
@@ -776,9 +736,8 @@ object Dedup {
                           qualityCol: String = "n_chars", w: Int = 3,
                           numHashes: Int = 8, bandWidth: Int = 2,
                           expireBefore: Option[Long] = None): DataFrame = {
-    val state0 = spark.read.parquet(stateDir)
-    requireStateLayout(state0, "band state",
-      Seq("w" -> w, "num_hashes" -> numHashes, "band_width" -> bandWidth))
+    val h = openBandState(spark, stateDir, w, numHashes, bandWidth)
+    val state0 = h.state
     val state = expireBefore.fold(state0) { wm =>
       require(state0.columns.contains("admitted_ts"),
         s"age expiry: band state $stateDir carries no admitted_ts stamp — " +
@@ -813,11 +772,8 @@ object Dedup {
     val keptBands = state
       .select(keptCols.map(col): _*)
       .join(kept.select(col("keeper").as("doc_id")), Seq("doc_id"), "left_semi")
-    val p =
-      if (state.columns.contains("state_prefixes"))
-        state.select(col("state_prefixes")).limit(1).collect()
-          .headOption.fold(defaultStatePrefixes)(_.getInt(0))
-      else defaultStatePrefixes
+    val p = h.stamp.filter(_.contains("state_prefixes"))
+      .fold(defaultStatePrefixes)(Stamp.int(_, "state_prefixes"))
     val staging = stateDir + ".compacting"
     // overwrite: a staging dir orphaned by a crashed previous compaction
     // is replaced, never merged into
@@ -874,10 +830,11 @@ object Dedup {
     require(numHashes % bandWidth == 0, "bands must tile the signature")
     require(numHashes <= 8, "8 32-bit hashes per two md5 digests")
     require(maxPartners >= 1, "phase 1 needs at least one partner per bucket")
-    requireStateLayout(seenBands, "seen band table",
-      Seq("w" -> w, "num_hashes" -> numHashes, "band_width" -> bandWidth))
-    requireStateLayout(seenSigs, "seen signature table",
-      Seq("w" -> w, "num_hashes" -> numHashes))
+    val layout = bandLayout(w, numHashes, bandWidth)
+    requireLayoutCols(seenBands, "seen band table", layout)
+    Stamp.require(seenBands, "seen band table", layout)
+    requireLayoutCols(seenSigs, "seen signature table", layout.take(2))
+    Stamp.require(seenSigs, "seen signature table", layout.take(2))
     // incoming signatures computed ONCE; bands derived from them (the
     // same derivation a warehouse runs when it persists both tables).
     val sigs = minhashesOf(shingles(incoming, w), numHashes).persist()

@@ -121,20 +121,10 @@ object Quality {
   def histWrite(hist: DataFrame, dir: String, binWidth: Double): Unit = {
     require(Seq("bin", "n").forall(hist.columns.contains),
       "histWrite: not a histogram — need the (bin, n) columns histBuild emits")
-    requireWidth(hist, "histWrite input", binWidth)
+    Stamp.require(hist, "histWrite input", Seq("bin_width" -> binWidth))
     hist.select(col("bin"), col("n")).withColumn("bin_width", lit(binWidth))
       .write.mode("overwrite").parquet(dir)
   }
-
-  private def requireWidth(df: DataFrame, what: String, binWidth: Double): Unit =
-    if (df.columns.contains("bin_width"))
-      df.select(col("bin_width")).limit(1).collect().headOption.foreach { r =>
-        require(r.getDouble(0) == binWidth,
-          s"$what bin-width mismatch: state stamped with " +
-            s"bin_width=${r.getDouble(0)} but the operation was called with " +
-            s"bin_width=$binWidth — drift over mismatched bins is silently " +
-            "meaningless")
-      }
 
   /** Additive histogram merge: sum counts per bin — exactly the
     * single-pass histogram of the union stream. Stamped (persisted)
@@ -144,7 +134,7 @@ object Quality {
     require(parts.nonEmpty, "histMerge: at least one histogram")
     parts.foreach(p => require(Seq("bin", "n").forall(p.columns.contains),
       "histMerge: not a histogram — need the (bin, n) columns histBuild emits"))
-    parts.foreach(requireWidth(_, "histMerge input", binWidth))
+    parts.foreach(Stamp.require(_, "histMerge input", Seq("bin_width" -> binWidth)))
     parts.map(_.select(col("bin"), col("n"))).reduce(_ unionByName _)
       .groupBy(col("bin")).agg(sum(col("n")).as("n"))
   }
@@ -176,7 +166,7 @@ object Quality {
       .foreach { case (p, what) =>
         require(Seq("bin", "n").forall(p.columns.contains),
           s"$what: not a histogram — need the (bin, n) columns histBuild emits")
-        requireWidth(p, what, binWidth)
+        Stamp.require(p, what, Seq("bin_width" -> binWidth))
       }
     // materialized ONCE (histograms are bins-bounded, not corpus-sized):
     // the negative-bin validation and the returned frame must read the
@@ -201,18 +191,16 @@ object Quality {
     * comparison a pipeline actually runs.
     */
   def driftStated(a: DataFrame, b: DataFrame): DataFrame = {
-    def width(df: DataFrame, side: String): Double = {
+    val Seq(wa, wb) = Seq(a -> "left", b -> "right").map { case (df, side) =>
       require(df.columns.contains("bin_width"),
         s"driftStated: $side histogram carries no bin_width stamp — " +
           "persist it with histWrite, or use drift() on raw slices")
-      val r = df.select(col("bin_width")).limit(1).collect()
-      require(r.nonEmpty, s"driftStated: $side histogram is empty — no stamp to read")
-      r(0).getDouble(0)
+      val w = Stamp.read(df, Seq("bin_width"))
+      require(w.nonEmpty, s"driftStated: $side histogram is empty — no stamp to read")
+      w
     }
-    val (wa, wb) = (width(a, "left"), width(b, "right"))
-    require(wa == wb,
-      s"driftStated: histograms stamped with different bin widths ($wa vs " +
-        s"$wb) — their bins do not line up")
+    Stamp.require(wb, "driftStated right histogram (against the left's)",
+      wa.get.toSeq)
     driftFromHists(a.select(col("bin"), col("n")), b.select(col("bin"), col("n")))
   }
 

@@ -181,15 +181,19 @@ object Similarity {
     * codegen limits, and at production cell counts (√N) the broadcast
     * join is the scalable plan anyway.
     */
-  private val LiteralAssignCap = 64
+  private[graft] val LiteralAssignCap = 64
 
-  /** Corpus-side nearest-cell assignment.
+  /** Corpus-side nearest-cell assignment. Precondition: `id` is unique
+    * in `df` — the small-K path emits one row per input row, so a
+    * duplicated id yields duplicate assignment rows (the large-K path
+    * would collapse them to one); callers dedup their input first.
     *
     * SMALL-K fast path (round 18, guide §2.4 — remove shuffles
     * outright): the centroid table is bounded (≤ [[LiteralAssignCap]]
-    * on every registered path: numCells = 16), so collect it once and
-    * compute the argmax as ONE PROJECTION — `greatest()` over K
-    * `struct(csim, -cell)` literals. The crossJoin+agg form expanded
+    * on every registered path: numCells = 16), so collect it (at most
+    * `LiteralAssignCap + 1` rows: a large table never reaches the
+    * driver) and compute the argmax as ONE PROJECTION — `greatest()`
+    * over K `struct(csim, -cell)` literals. The crossJoin+agg form expanded
     * every vector K×, carried a copy of its EMBEDDING in each expanded
     * row, and shuffled that through the arg-max exchange; the
     * projection form touches each vector once and shuffles NOTHING.
@@ -214,7 +218,8 @@ object Similarity {
       case ArrayType(t @ (FloatType | DoubleType), _) => Some(t)
       case _ => None
     }
-    val rows = centroids.select(col("cell"), col("centroid")).collect()
+    val rows = centroids.select(col("cell"), col("centroid"))
+      .limit(LiteralAssignCap + 1).collect()
     val literalOk = elem.isDefined && rows.nonEmpty &&
       rows.length <= LiteralAssignCap &&
       rows.forall(r => !r.isNullAt(0) && r.get(0).isInstanceOf[Long] &&

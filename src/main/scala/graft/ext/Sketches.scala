@@ -19,58 +19,13 @@ import org.apache.spark.sql.functions._
   */
 object Sketches {
 
-  // ===== persisted sketch state (layout-stamped, fail-loudly) =====
+  // ===== persisted sketch state =====
   //
-  // The deterministic sketch family (Count-Min / Bloom / KMV) is
-  // PIPELINE state: built per day/shard, persisted, merged with later
-  // batches, estimated/probed from the merged state. A sketch read back
-  // with the wrong geometry is the family's worst failure mode — CMS
-  // buckets that never line up, Bloom positions past the bitmap, a KMV
-  // estimator with the wrong (k−1) numerator — all SILENT skew. So
-  // persisted sketch tables carry their geometry as constant columns
-  // (they RLE-compress to nothing), exactly like the vector index's
-  // layout stamp and the dedup band state's (w, num_hashes, band_width)
-  // columns, and every merge/estimate/probe that sees a stamped frame
-  // cross-validates it before computing. Un-stamped (in-flight) frames
-  // skip the probe — zero cost on the query-local paths.
-
-  private def stamped(df: DataFrame, cols: Seq[String]): Boolean =
-    cols.forall(df.columns.contains)
-
-  /** One-row probe of a stamped frame's layout columns (a parquet
-    * footer read on persisted state). Empty state validates trivially —
-    * merging/probing an empty sketch is correct and yields no rows.
-    */
-  private def requireStamp(df: DataFrame, what: String,
-                           expected: Seq[(String, Int)]): Unit = {
-    val cols = expected.map(_._1)
-    if (stamped(df, cols))
-      df.select(cols.map(col): _*).limit(1).collect().headOption.foreach { r =>
-        val actual = cols.indices.map(r.getInt)
-        require(actual == expected.map(_._2),
-          s"$what layout mismatch: state stamped with " +
-            cols.zip(actual).map { case (c, v) => s"$c=$v" }.mkString("(", ", ", ")") +
-            " but the operation was called with " +
-            expected.map { case (c, v) => s"$c=$v" }.mkString("(", ", ", ")") +
-            " — estimates/probes from mismatched geometry are silently wrong")
-      }
-  }
-
-  /** All stamped inputs of one merge must agree pairwise — merging
-    * sketches of different geometry is meaningless (CMS cells don't
-    * line up, Bloom bit positions don't, KMV ks differ).
-    */
-  private def requireAgreeingStamps(parts: Seq[DataFrame], what: String,
-                                    cols: Seq[String]): Unit = {
-    val stamps = parts.filter(stamped(_, cols)).flatMap(p =>
-      p.select(cols.map(col): _*).limit(1).collect().headOption
-        .map(r => cols.indices.map(r.getInt)))
-    require(stamps.distinct.size <= 1,
-      s"$what: inputs stamped with different geometries " +
-        stamps.distinct.map(s => cols.zip(s).map { case (c, v) => s"$c=$v" }
-          .mkString("(", ", ", ")")).mkString(" vs ") +
-        " — sketches of different geometry cannot be merged")
-  }
+  // The deterministic sketch family (Count-Min / Bloom / KMV / quantile
+  // sample) is PIPELINE state: built per day/shard, persisted, merged
+  // with later batches, estimated/probed from the merged state. Persisted
+  // sketch tables carry their geometry as stamp columns, and every
+  // merge/estimate/probe checks it through [[Stamp]] before computing.
 
   /** Persist a Count-Min sketch with its geometry stamped. Validates
     * the sketch actually FITS the declared geometry first (a one-job
@@ -81,7 +36,7 @@ object Sketches {
                     depth: Int = 4, width: Int = 1024): Unit = {
     require(Seq("j", "bucket", "total").forall(cms.columns.contains),
       "countMinWrite: not a Count-Min sketch — need (j, bucket, total)")
-    requireStamp(cms, "countMinWrite input", Seq("depth" -> depth, "width" -> width))
+    Stamp.require(cms, "countMinWrite input", Seq("depth" -> depth, "width" -> width))
     val mx = cms.agg(max(col("j")), max(col("bucket"))).collect()(0)
     if (!mx.isNullAt(0))
       require(mx.getInt(0) < depth && mx.getLong(1) < width,
@@ -101,7 +56,7 @@ object Sketches {
                  numBits: Int = 8192, numHashes: Int = 4): Unit = {
     require(bloom.columns.contains("pos"),
       "bloomWrite: not a Bloom filter — need the pos column bloomBuild emits")
-    requireStamp(bloom, "bloomWrite input",
+    Stamp.require(bloom, "bloomWrite input",
       Seq("num_bits" -> numBits, "num_hashes" -> numHashes))
     val mx = bloom.agg(max(col("pos"))).collect()(0)
     if (!mx.isNullAt(0))
@@ -121,7 +76,7 @@ object Sketches {
   def kmvWrite(sketch: DataFrame, dir: String, k: Int = 256): Unit = {
     require(Seq("rank", "h").forall(sketch.columns.contains),
       "kmvWrite: not a KMV sketch — need (rank, h) as built by kmvBuild")
-    requireStamp(sketch, "kmvWrite input", Seq("k" -> k))
+    Stamp.require(sketch, "kmvWrite input", Seq("k" -> k))
     val mx = sketch.agg(max(col("rank"))).collect()(0)
     if (!mx.isNullAt(0))
       require(mx.getInt(0) <= k,
@@ -137,12 +92,12 @@ object Sketches {
     * parameter leaves open.
     */
   def kmvEstimateStated(sketch: DataFrame): DataFrame = {
-    require(stamped(sketch, Seq("k")),
+    require(sketch.columns.contains("k"),
       "kmvEstimateStated: sketch carries no k stamp — persist it with " +
         "kmvWrite, or pass k explicitly to kmvEstimate")
-    val r = sketch.select(col("k")).limit(1).collect()
-    require(r.nonEmpty, "kmvEstimateStated: sketch is empty — no layout to read")
-    kmvEstimate(sketch.select(col("rank"), col("h")), r(0).getInt(0))
+    val s = Stamp.read(sketch, Seq("k"))
+    require(s.nonEmpty, "kmvEstimateStated: sketch is empty — no layout to read")
+    kmvEstimate(sketch.select(col("rank"), col("h")), Stamp.int(s.get, "k"))
   }
 
   /** Per-event-type profile: approximate distinct users (2% target rsd)
@@ -251,7 +206,7 @@ object Sketches {
       require(Seq("j", "bucket", "total").forall(p.columns.contains),
         "countMinMerge: not a Count-Min sketch — need (j, bucket, total) " +
           "columns as built by countMinBuild"))
-    requireAgreeingStamps(parts, "countMinMerge", Seq("depth", "width"))
+    Stamp.agreeing(parts, "countMinMerge", Seq("depth", "width"))
     parts.map(_.select(col("j"), col("bucket"), col("total")))
       .reduce(_ unionByName _)
       .groupBy(col("j"), col("bucket"))
@@ -367,7 +322,7 @@ object Sketches {
     parts.foreach(p => require(Seq("key", "h").forall(p.columns.contains),
       "kmvMergeBy: not a grouped KMV sketch — need (key, h) as built " +
         "by kmvBuildBy"))
-    parts.foreach(requireStamp(_, "kmvMergeBy input", Seq("k" -> k)))
+    parts.foreach(Stamp.require(_, "kmvMergeBy input", Seq("k" -> k)))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("key")).orderBy(col("h"))
     parts.map(_.select(col("key"), col("h"))).reduce(_.unionByName(_))
@@ -392,7 +347,7 @@ object Sketches {
     require(Seq("key", "rank", "h").forall(sketches.columns.contains),
       "kmvOverlapMatrix: not a grouped KMV sketch frame — need " +
         "(key, rank, h) as built by kmvBuildBy")
-    requireStamp(sketches, "kmvOverlapMatrix input", Seq("k" -> k))
+    Stamp.require(sketches, "kmvOverlapMatrix input", Seq("k" -> k))
     // materialized ONCE (≤ keys×k rows — bounded by the scaladoc's
     // keys-are-sources contract): the matrix reads the sketch frame
     // THREE times (key list, left side, right side), and a live
@@ -444,7 +399,7 @@ object Sketches {
     require(parts.nonEmpty, "kmvMerge: at least one sketch")
     parts.foreach(p => require(p.columns.contains("h"),
       "kmvMerge: not a KMV sketch — need the h column kmvBuild emits"))
-    parts.foreach(requireStamp(_, "kmvMerge input", Seq("k" -> k)))
+    parts.foreach(Stamp.require(_, "kmvMerge input", Seq("k" -> k)))
     val w = org.apache.spark.sql.expressions.Window.orderBy(col("h"))
     parts.map(_.select(col("h"))).reduce(_ unionByName _)
       .distinct().orderBy(col("h")).limit(k)
@@ -458,7 +413,7 @@ object Sketches {
     * exact distinct hash set then). One row: (n_sketch, h_k, n_est).
     */
   def kmvEstimate(sketch: DataFrame, k: Int = 256): DataFrame = {
-    requireStamp(sketch, "kmvEstimate sketch", Seq("k" -> k))
+    Stamp.require(sketch, "kmvEstimate sketch", Seq("k" -> k))
     sketch.agg(count(lit(1)).as("n_sketch"), max(col("h")).as("h_k"))
       .select(col("n_sketch"), col("h_k"),
         when(col("n_sketch") < k, col("n_sketch").cast("double"))
@@ -482,7 +437,7 @@ object Sketches {
     * membership probes are sketch-sized joins (≤ k rows a side, ≤ 2k
     * state total) — the driver never sees the data, and the same row
     * works on day-30 persisted sketches ([[kmvWrite]] stamps validate
-    * here through [[kmvMerge]]'s requireStamp).
+    * here through [[kmvMerge]]'s [[Stamp]] check).
     *
     * When the union holds fewer than k distinct hashes the sketches ARE
     * the exact sets, so n_common/ρ/estimates all turn exact — the same
@@ -526,7 +481,7 @@ object Sketches {
     */
   def bloomGateColumn(bloom: DataFrame, item: Column, numBits: Int = 8192,
                       numHashes: Int = 4): Column = {
-    requireStamp(bloom, "bloomGateColumn filter",
+    Stamp.require(bloom, "bloomGateColumn filter",
       Seq("num_bits" -> numBits, "num_hashes" -> numHashes))
     val words = new Array[Long]((numBits + 63) / 64)
     bloom.select(col("pos")).collect().foreach { r =>
@@ -558,7 +513,7 @@ object Sketches {
     require(parts.nonEmpty, "bloomMerge: at least one filter")
     parts.foreach(p => require(p.columns.contains("pos"),
       "bloomMerge: not a Bloom filter — need the pos column bloomBuild emits"))
-    requireAgreeingStamps(parts, "bloomMerge", Seq("num_bits", "num_hashes"))
+    Stamp.agreeing(parts, "bloomMerge", Seq("num_bits", "num_hashes"))
     parts.map(_.select(col("pos"))).reduce(_ unionByName _).distinct()
   }
 
@@ -571,7 +526,7 @@ object Sketches {
     */
   def bloomMightContain(bloom: DataFrame, queries: DataFrame, itemCol: String,
                         numBits: Int = 8192, numHashes: Int = 4): DataFrame = {
-    requireStamp(bloom, "bloomMightContain filter",
+    Stamp.require(bloom, "bloomMightContain filter",
       Seq("num_bits" -> numBits, "num_hashes" -> numHashes))
     val positions = queries.select(col(itemCol),
         explode(array((0 until numHashes).map(j =>
@@ -649,8 +604,7 @@ object Sketches {
     parts.foreach(p => require(Seq("h", "v").forall(p.columns.contains),
       "quantileSampleMerge: not a quantile sample — need the (h, v) " +
         "columns quantileSampleBuild emits"))
-    parts.foreach(requireStamp(_, "quantileSampleMerge input", Seq("k" -> k)))
-    requireAgreeingStamps(parts, "quantileSampleMerge", Seq("k"))
+    parts.foreach(Stamp.require(_, "quantileSampleMerge input", Seq("k" -> k)))
     val w = org.apache.spark.sql.expressions.Window.orderBy(col("h"), col("v"))
     parts.map(_.select(col("h"), col("v"))).reduce(_ unionByName _)
       .distinct().orderBy(col("h"), col("v")).limit(k)
@@ -667,7 +621,7 @@ object Sketches {
     require(Seq("rank", "h", "v").forall(sketch.columns.contains),
       "quantileSampleWrite: not a quantile sample — need (rank, h, v) " +
         "as built by quantileSampleBuild")
-    requireStamp(sketch, "quantileSampleWrite input", Seq("k" -> k))
+    Stamp.require(sketch, "quantileSampleWrite input", Seq("k" -> k))
     val mx = sketch.agg(max(col("rank"))).collect()(0)
     if (!mx.isNullAt(0))
       require(mx.getInt(0) <= k,
@@ -690,7 +644,7 @@ object Sketches {
     require(qs.nonEmpty, "quantileEstimateStated: need at least one q")
     qs.foreach(q => require(q > 0 && q < 1,
       s"quantileEstimateStated: q=$q outside (0, 1)"))
-    require(stamped(sketch, Seq("k")),
+    require(sketch.columns.contains("k"),
       "quantileEstimateStated: sample carries no k stamp — persist it " +
         "with quantileSampleWrite")
     val spark = sketch.sparkSession
@@ -714,7 +668,7 @@ object Sketches {
     */
   def countMinEstimate(cms0: DataFrame, queries: DataFrame, itemCol: String,
                        depth: Int = 4, width: Int = 1024): DataFrame = {
-    requireStamp(cms0, "countMinEstimate sketch",
+    Stamp.require(cms0, "countMinEstimate sketch",
       Seq("depth" -> depth, "width" -> width))
     val cms = cms0.select(col("j"), col("bucket"), col("total"))
     // explode, not a per-depth union: a union would re-evaluate the

@@ -424,11 +424,7 @@ object TextAnalysis {
     */
   def bpeTokenizeWith(docs: DataFrame, merges: Seq[(String, String)],
                       vocab0: DataFrame): DataFrame = {
-    if (vocab0.columns.contains("n_merges"))
-      vocab0.select(col("n_merges")).limit(1).collect().headOption.foreach(r =>
-        require(r.getInt(0) == merges.length,
-          s"vocab stamped with n_merges=${r.getInt(0)} but tokenize called " +
-            s"with ${merges.length} merges — token ids would not correspond"))
+    Stamp.require(vocab0, "bpeTokenizeWith vocab", Seq("n_merges" -> merges.length))
     require(Seq("token", "id").forall(vocab0.columns.contains),
       "bpeTokenizeWith: not a BPE vocab — need (token, id) as built by bpeVocab")
     val vocab = vocab0.select(col("token"), col("id"))

@@ -23,13 +23,10 @@ import org.apache.spark.sql.functions._
   * `nprobe` of `numCells` cells prunes to that fraction of the files —
   * the IO shape that serves billion-vector indexes (codes are the
   * m-byte compressed form; raw vectors are touched only by the flat
-  * re-rank path). Every table carries the layout as constant columns
-  * (num_cells, m, num_codes, dim — they RLE-compress to nothing), and
-  * every lifecycle operation cross-validates them before touching the
-  * index, mirroring `Dedup.requireStateLayout`: an index built with a
-  * different layout fails LOUDLY instead of silently searching wrong
-  * buckets. The one-row layout probes here read PERSISTED parquet (a
-  * footer, not a pipeline) — the probe pattern's intended target.
+  * re-rank path). Every table carries the layout as its [[Stamp]]
+  * (num_cells, m, num_codes, dim), and every lifecycle operation checks
+  * it before touching the index: an index built with a different
+  * layout fails LOUDLY instead of silently searching wrong buckets.
   *
   * Append encodes the delta against the FROZEN centroids/codebooks —
   * one narrow pass over the delta plus a file append; no rewrite of
@@ -54,28 +51,31 @@ object VectorIndex {
       .withColumn("num_codes", lit(l.numCodes))
       .withColumn("dim", lit(l.dim))
 
-  /** One-row layout probe of a persisted index table (reads a parquet
-    * footer + one row — cheap by construction, unlike probing a live
-    * plan). Fails loudly on a table not written by [[build]]/[[append]]
-    * or written with a different geometry.
+  /** The stamp of a persisted index table. [[build]] and [[append]]
+    * write every table stamped and non-empty, so a table without the
+    * layout columns or without rows is refused.
     */
-  private def layoutOf(df: DataFrame, what: String): Layout = {
+  private def readStamp(df: DataFrame, what: String): Stamp.Values = {
     require(layoutCols.forall(df.columns.contains),
       s"$what lacks layout columns ${layoutCols.mkString("(", ", ", ")")} — " +
         "not a VectorIndex table; build the index with VectorIndex.build")
-    val r = df.select(layoutCols.map(col): _*).limit(1).collect()
-    require(r.nonEmpty, s"$what is empty — cannot read its layout")
-    Layout(r(0).getInt(0), r(0).getInt(1), r(0).getInt(2), r(0).getInt(3))
+    val s = Stamp.read(df, layoutCols)
+    require(s.nonEmpty, s"$what is empty — cannot read its layout")
+    s.get
   }
 
-  private def requireSameLayout(a: Layout, b: Layout, what: String): Unit =
-    require(a == b,
-      s"$what layout mismatch: $b vs the index's $a — the table was built " +
-        "with a different geometry; searching it would probe wrong buckets")
+  /** Fail loudly on an index table whose layout differs from the
+    * centroids': searching it would probe wrong buckets.
+    */
+  private def requireTable(df: DataFrame, what: String, l: Layout): Unit =
+    Stamp.require(Some(readStamp(df, what)), what,
+      layoutCols.zip(Seq(l.numCells, l.m, l.numCodes, l.dim)))
 
   private def centroidsOf(spark: SparkSession, dir: String): (DataFrame, Layout) = {
     val c = spark.read.parquet(s"$dir/centroids")
-    (c, layoutOf(c, "index centroid table"))
+    val s = readStamp(c, "index centroid table")
+    (c, Layout(Stamp.int(s, "num_cells"), Stamp.int(s, "m"),
+      Stamp.int(s, "num_codes"), Stamp.int(s, "dim")))
   }
 
   /** BUILD: freeze centroids (first `numCells` vectors by global id
@@ -142,8 +142,7 @@ object VectorIndex {
   def append(spark: SparkSession, dir: String, delta: DataFrame): Unit = {
     val (cent, l) = centroidsOf(spark, dir)
     val cw = spark.read.parquet(s"$dir/codebooks")
-    requireSameLayout(l, layoutOf(cw, "index codebook table"),
-      "index codebook table")
+    requireTable(cw, "index codebook table", l)
     Similarity.requireDim(delta, l.dim)
     val existing = spark.read.parquet(s"$dir/cells").select(col("vec_id"))
     val fresh = delta.join(existing, Seq("vec_id"), "left_anti")
@@ -329,7 +328,7 @@ object VectorIndex {
                              allowed: Option[DataFrame]): DataFrame = {
     val (cent, l) = centroidsOf(spark, dir)
     val cells = spark.read.parquet(s"$dir/cells")
-    requireSameLayout(l, layoutOf(cells, "index cell table"), "index cell table")
+    requireTable(cells, "index cell table", l)
     val probes = Similarity.probeCells(
       queries.select(col("vec_id").as("qid"), col("embedding").as("qe")),
       cent.select(col("cell"), col("centroid")), nprobe)
@@ -395,12 +394,11 @@ object VectorIndex {
                        allowed: Option[DataFrame] = None): AdcSetup = {
     val (cent, l) = centroidsOf(spark, dir)
     val cw = spark.read.parquet(s"$dir/codebooks")
-    requireSameLayout(l, layoutOf(cw, "index codebook table"),
-      "index codebook table")
+    requireTable(cw, "index codebook table", l)
     val codes = spark.read.parquet(s"$dir/codes")
-    requireSameLayout(l, layoutOf(codes, "index code table"), "index code table")
+    requireTable(codes, "index code table", l)
     val cells = spark.read.parquet(s"$dir/cells")
-    requireSameLayout(l, layoutOf(cells, "index cell table"), "index cell table")
+    requireTable(cells, "index cell table", l)
     val q = queries.select(col("vec_id").as("qid"), col("embedding"))
     val probes = Similarity.probeCells(
       q.select(col("qid"), col("embedding").as("qe")),

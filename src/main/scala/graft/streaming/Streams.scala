@@ -217,8 +217,8 @@ object Streams {
     * empty band keys match nothing, null cosine clears nothing).
     */
   def semanticGate(docs: DataFrame, g: SemanticGate): DataFrame = {
-    graft.ext.Corpus.requireBenchSigLayout(g.benchState, g.numPlanes,
-      g.bandWidth, g.dim)
+    graft.ext.Stamp.require(g.benchState, "bench-signature state",
+      graft.ext.Corpus.benchSigLayout(g.numPlanes, g.bandWidth, g.dim))
     val withEmb = docs.join(
       g.emb.select(col("vec_id").as("doc_id"), col("embedding").as("_emb")),
       Seq("doc_id"), "left")
@@ -877,13 +877,15 @@ object Streams {
     // that re-opened it per micro-batch paid ~3 extra driver jobs ×
     // batches × passes — the restart bench's 2.6× regression. The
     // layouts of every frozen state (bench signatures, the band state
-    // the batches actually probe) are validated here once for the same
-    // reason; the per-batch probe is built with the gate's own layout.
+    // the batches actually probe — checked by the open's one stamp
+    // read) are validated here once for the same reason; the per-batch
+    // probe is built with the gate's own layout, and the cfg's frames
+    // stand in only when there is no state directory.
     val ndFrozen = nearDup
-    val ndState = ndFrozen.flatMap(g =>
-      g.stateDir.map(graft.ext.Dedup.openBandState(spark, _)))
+    val ndState = ndFrozen.flatMap(g => g.stateDir.map(
+      graft.ext.Dedup.openBandState(spark, _, g.w, g.numHashes, g.bandWidth)))
     graft.ext.Admission.requireLayouts(semFrozen,
-      ndFrozen.map(g => ndState.fold(g)(h => g.copy(seenBands = h.state))))
+      ndFrozen.filter(_ => ndState.isEmpty))
     spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", maxFilesPerTrigger).parquet(srcDir)
       .writeStream

@@ -1,35 +1,17 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import graft.{SparkEntry, Tables}
+import graft.{Session, SparkEntry, Tables}
 
 /** Dev harness: stage-by-stage timing + formatted plans for one query.
-  * Usage: runMain graft.tools.Profile <queryName> [sfDir]
+  * Usage: runMain graft.tools.Profile <queryName>[,<queryName>...] [sfDir]
+  *   [--explain|--scaleops|--joinrestart|--vindex|--admission|--corpusetl]
   */
 object Profile {
   def main(args: Array[String]): Unit = {
     val name = args(0)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // A/B hooks for the stream-family state-store pricing (round 12):
-    // SPARK_GRAFT_STATESTORE=rocksdb swaps the state-store provider;
-    // SPARK_GRAFT_SHUFFLE=<n> overrides the shuffle/state partition
-    // count. Bench/Verify never read these — they are Profile-only.
-    val shuffle = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus)
-    val b0 = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shuffle)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-    val b1 =
-      if (sys.env.get("SPARK_GRAFT_STATESTORE").contains("rocksdb"))
-        b0.config("spark.sql.streaming.stateStore.providerClass",
-          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      else b0
-    val spark = b1.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
     def time[A](lbl: String)(f: => A): A = {
       val t0 = System.nanoTime(); val r = f
       println(f"[profile] $lbl%-28s ${(System.nanoTime() - t0) / 1e9}%8.2f s"); r
@@ -52,12 +34,6 @@ object Profile {
         .join(ScaleOps.readTable(spark, "o_b"), col("l_orderkey") === col("o_orderkey"))
       println("[profile] bucketed rows=" + j.count())
       j.explain("formatted")
-      spark.stop(); return
-    }
-    if (args.contains("--cachecold")) {
-      val tri = graft.ext.Dedup.shingles(Tables.documents(spark, sfDir), 3).persist()
-      time("cold persist+count")(tri.count())
-      time("cached count")(tri.count())
       spark.stop(); return
     }
     if (args.contains("--joinrestart")) {
@@ -191,47 +167,6 @@ object Profile {
     time(s"$name run2")(SparkEntry.queries(name)(spark, sfDir).count())
     if (args.contains("--explain"))
       SparkEntry.queries(name)(spark, sfDir).explain("formatted")
-    if (args.contains("--ngram")) {
-      import graft.ext.Dedup
-      import org.apache.spark.sql.expressions.Window
-      val docs = Tables.documents(spark, sfDir)
-      val tri = Dedup.shingles(docs, 3).persist()
-      time("tri persist+count")(tri.count())
-      val freq = tri.groupBy(col("sh")).agg(count(lit(1)).as("f"))
-      val sizes = tri.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
-      val w1 = Window.partitionBy(col("doc_id")).orderBy(col("f").asc, col("sh").asc)
-      val prefix = tri.join(freq, "sh").withColumn("rn", row_number().over(w1))
-        .join(sizes, "doc_id")
-        .filter(col("rn") <= col("n") - floor(lit(0.8) * col("n")) + 1)
-        .select(col("doc_id"), col("sh"))
-      time("prefix count")(println("prefix rows=" + prefix.count()))
-      val cands = prefix.as("a").join(prefix.as("b"),
-          col("a.sh") === col("b.sh") && col("a.doc_id") < col("b.doc_id"))
-        .select(col("a.doc_id").as("d1"), col("b.doc_id").as("d2")).distinct()
-      time("cands count")(println("cands=" + cands.count()))
-    }
-    if (args.contains("--md5bench")) {
-      // SignedMd5Long kernel: ThreadLocal digest vs per-call provider
-      // lookup (the round-1 implementation). Pure-JVM loop: isolates the
-      // expression cost from scan/shuffle noise.
-      import org.apache.spark.unsafe.types.UTF8String
-      val n = 5000000
-      val inputs = Array.tabulate(64)(i => UTF8String.fromString(s"key_$i|payload"))
-      def loop(f: UTF8String => Long): Long = {
-        var acc = 0L; var i = 0
-        while (i < n) { acc ^= f(inputs(i & 63)); i += 1 }
-        acc
-      }
-      def perCall(s: UTF8String): Long = {
-        val dig = java.security.MessageDigest.getInstance("MD5").digest(s.getBytes)
-        java.nio.ByteBuffer.wrap(dig, 0, 8).getLong
-      }
-      loop(graft.functions.KeyFunctions.signedMd5Long) // warm both paths
-      loop(perCall)
-      time(s"threadlocal x$n")(loop(graft.functions.KeyFunctions.signedMd5Long))
-      time(s"getInstance x$n")(loop(perCall))
-      spark.stop(); return
-    }
     if (args.contains("--corpusetl")) {
       // per-stage pricing of the corpus release chain (VERDICT r9 item
       // 5): the probe forces each persisted id-sized pivot at its
@@ -262,22 +197,6 @@ object Profile {
       }
       graft.plans.Pipeline.deleteRecursively(java.nio.file.Paths.get(wh))
       spark.stop(); return
-    }
-    if (args.contains("--stages")) {
-      import graft.ext.Dedup
-      val docs = Tables.documents(spark, sfDir)
-      val tri = time("shingles count")(Dedup.shingles(docs, 3))
-      time("shingles action")(tri.count())
-      val md = time("md5 pass build") {
-        tri.withColumn("m", concat(
-          md5(concat(lit("0|"), col("sh"))), md5(concat(lit("1|"), col("sh")))))
-      }
-      time("md5 pass action")(md.count())
-      val mh = md.groupBy(col("doc_id"))
-        .agg(min(conv(substring(col("m"), 1, 8), 16, 10).cast("long")).as("mh0"),
-          (1 until 8).map(s => min(conv(substring(col("m"), 8 * s + 1, 8), 16, 10)
-            .cast("long")).as(s"mh$s")): _*)
-      time("minhash agg action")(mh.count())
     }
     spark.stop()
   }

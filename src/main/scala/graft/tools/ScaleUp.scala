@@ -65,14 +65,8 @@ object ScaleUp {
     // in emb-only mode every non-embeddings table replicates at 1×
     def rOf(table: String): Int =
       if (embOnly && table != "embeddings") 1 else r
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"),
+      confs = Seq("spark.sql.shuffle.partitions" -> "32"))
 
     val docs = spark.read.parquet(s"$src/documents.parquet")
     replicate(spark, rOf("documents")) { i =>

@@ -191,7 +191,7 @@ class AdmissionSpec extends AnyFunSuite {
     // the silent-admission failure mode: state built with mismatched
     // (w, numHashes, bandWidth) produces bucket keys that can never
     // collide, so every document would pass the gate — report() must
-    // refuse loudly at construction, the requireStateLayout discipline.
+    // refuse loudly at construction, the Stamp discipline.
     val docs = Seq((1L, "the quick brown fox jumps over the lazy dog",
       "en", "src5", 44)).toDF("doc_id", "text", "lang", "source", "n_chars")
     val lm = TextAnalysis.bigramLmTrain(docs)

@@ -128,25 +128,29 @@ class ClassifierSpec extends AnyFunSuite {
     val e1 = intercept[IllegalArgumentException] {
       Classifier.nbModelFromCounts(counts, buckets = B / 2)
     }
-    assert(e1.getMessage.contains("geometry mismatch"))
+    assert(e1.getMessage.contains("layout mismatch") &&
+      e1.getMessage.contains("buckets"))
     // classifying with a different geometry hashes features into the
     // wrong space
     val model = Classifier.nbModelFromCounts(counts, B)
     val e2 = intercept[IllegalArgumentException] {
       Classifier.nbClassify(docs, model, buckets = B * 2)
     }
-    assert(e2.getMessage.contains("geometry mismatch"))
+    assert(e2.getMessage.contains("layout mismatch") &&
+      e2.getMessage.contains("buckets"))
     // merging/subtracting counts from two hash spaces is meaningless
     val e3 = intercept[IllegalArgumentException] {
       Classifier.nbCountsMerge(counts,
         Classifier.nbCountsBuild(docs, buckets = B * 2))
     }
-    assert(e3.getMessage.contains("different buckets geometries"))
+    assert(e3.getMessage.contains("different layouts") &&
+      e3.getMessage.contains("buckets"))
     val e4 = intercept[IllegalArgumentException] {
       Classifier.nbCountsSubtract(counts,
         Classifier.nbCountsBuild(docs, buckets = B * 2))
     }
-    assert(e4.getMessage.contains("different buckets geometries"))
+    assert(e4.getMessage.contains("different layouts") &&
+      e4.getMessage.contains("buckets"))
     // an unstamped (hand-assembled) frame still derives under any
     // geometry — the stamp gates persisted state, not ad-hoc frames
     val handRolled = counts.drop("buckets")
@@ -157,16 +161,19 @@ class ClassifierSpec extends AnyFunSuite {
     val e5 = intercept[IllegalArgumentException] {
       Corpus.importanceRatiosFromCounts(iCounts, buckets = B / 2)
     }
-    assert(e5.getMessage.contains("geometry mismatch"))
+    assert(e5.getMessage.contains("layout mismatch") &&
+      e5.getMessage.contains("buckets"))
     val e6 = intercept[IllegalArgumentException] {
       Corpus.importanceWeights(docs,
         Corpus.importanceRatiosFromCounts(iCounts, B), buckets = B * 2)
     }
-    assert(e6.getMessage.contains("geometry mismatch"))
+    assert(e6.getMessage.contains("layout mismatch") &&
+      e6.getMessage.contains("buckets"))
     val e7 = intercept[IllegalArgumentException] {
       Corpus.importanceCountsMerge(iCounts,
         Corpus.importanceCountsBuild(docs, pred, buckets = B * 2))
     }
-    assert(e7.getMessage.contains("different buckets geometries"))
+    assert(e7.getMessage.contains("different layouts") &&
+      e7.getMessage.contains("buckets"))
   }
 }

@@ -648,7 +648,8 @@ class DedupSpec extends AnyFunSuite {
     val totalFiles = spark.read.parquet(dir)
       .select(input_file_name()).distinct().count()
     val probe = Dedup.bandTable(incoming, w = 5, numHashes = 8, bandWidth = 2)
-    val readFiles = Dedup.readBandState(spark, dir, probe)
+    val readFiles = Dedup.readBandState(
+        Dedup.openBandState(spark, dir, w = 5, numHashes = 8, bandWidth = 2), probe)
       .select(input_file_name()).distinct().count()
     info(s"admission scan read $readFiles of $totalFiles state files")
     assert(readFiles < totalFiles,
@@ -684,7 +685,9 @@ class DedupSpec extends AnyFunSuite {
     val dir = java.nio.file.Files.createTempDirectory("graft-band-flat-").toString + "/bands"
     Dedup.bandTable(seen, w = 5, numHashes = 8, bandWidth = 2).write.parquet(dir)
     val probe = Dedup.bandTable(incoming, w = 5, numHashes = 8, bandWidth = 2)
-    assert(Dedup.readBandState(spark, dir, probe).count() ===
+    assert(Dedup.readBandState(
+        Dedup.openBandState(spark, dir, w = 5, numHashes = 8, bandWidth = 2), probe)
+      .count() ===
       spark.read.parquet(dir).count(),
       "flat legacy state must fall back to a full read")
     Dedup.appendBandState(spark, dir, incoming.limit(2),

@@ -46,6 +46,35 @@ class SimilaritySpec extends AnyFunSuite {
     assert(cells(ints) === Map(1L -> 0L, 2L -> 1L, 3L -> 0L))
   }
 
+  test("cell assignment above the literal cap takes the join path and equals a brute-force argmax") {
+    // LiteralAssignCap + 1 float centroids: the bounded collect sees one
+    // row too many, so assignment runs as the partial-agg argmax join.
+    // Duplicated centroids tie exactly; the tie goes to the lower cell.
+    val rnd = new scala.util.Random(17)
+    def vec(): Seq[Float] = Seq.fill(4)(rnd.nextInt(9) - 4 + 0.5f)
+    val k = Similarity.LiteralAssignCap + 1
+    val base = Seq.fill(k - 5)(vec())
+    val cents = (base ++ base.take(5)).zipWithIndex
+      .map { case (c, i) => ((i * 7 % k).toLong + 100L, c) }
+    val vecs = (Seq.fill(200)(vec()) ++ base.take(10)).zipWithIndex
+      .map { case (v, i) => (i.toLong, v) }
+    def cos(a: Seq[Float], b: Seq[Float]): Double = {
+      val (x, y) = (a.map(_.toDouble), b.map(_.toDouble))
+      x.zip(y).map { case (p, q) => p * q }.sum /
+        (math.sqrt(x.map(v => v * v).sum) * math.sqrt(y.map(v => v * v).sum))
+    }
+    val expected = vecs.map { case (id, v) =>
+      id -> cents.map { case (cell, c) => (-cos(v, c), cell) }.min._2
+    }.toMap
+    val assigned = Similarity.assignCells(
+        embDf(vecs).select(col("vec_id").as("cid"), col("embedding").as("ce")),
+        "cid", "ce", cents.toDF("cell", "centroid"))
+    val plan = assigned.queryExecution.executedPlan.toString
+    assert(plan.contains("Join") || plan.contains("CartesianProduct"),
+      s"above the cap the assignment must take the join path:\n$plan")
+    assert(assigned.collect().map(r => r.getLong(0) -> r.getLong(2)).toMap === expected)
+  }
+
   test("one ivfKMeans iteration is exactly the oracle-checked Lloyd step") {
     val emb = Tables.embeddings(spark, sfDir)
     val one = Similarity.ivfKMeans(emb, numCells = 16, iters = 1)

@@ -226,7 +226,7 @@ class SketchesSpec extends AnyFunSuite {
       Sketches.countMinMerge(spark.read.parquet(s"$tmp/cms"),
         spark.read.parquet(s"$tmp/cms_w2"))
     }
-    assert(e1.getMessage.contains("different geometries"))
+    assert(e1.getMessage.contains("different layouts"))
     // writing a sketch under a geometry it doesn't fit must refuse
     val e2 = intercept[IllegalArgumentException] {
       Sketches.countMinWrite(
@@ -383,7 +383,8 @@ class SketchesSpec extends AnyFunSuite {
       Q.histSubtract(50.0, spark.read.parquet(s"$tmp/full"),
         Q.histBuild(forgotten, "value", 50.0))
     }
-    assert(e2.getMessage.contains("bin-width mismatch"))
+    assert(e2.getMessage.contains("layout mismatch") &&
+      e2.getMessage.contains("bin_width"))
     graft.plans.Pipeline.deleteRecursively(java.nio.file.Paths.get(tmp))
   }
 
@@ -407,14 +408,16 @@ class SketchesSpec extends AnyFunSuite {
       Q.histMerge(50.0, spark.read.parquet(s"$tmp/base"),
         Q.histBuild(day2, "value", 50.0))
     }
-    assert(e1.getMessage.contains("bin-width mismatch"))
+    assert(e1.getMessage.contains("layout mismatch") &&
+      e1.getMessage.contains("bin_width"))
     // drift over two stamped states with DIFFERENT widths must refuse
     Q.histWrite(Q.histBuild(day2, "value", 50.0), s"$tmp/w50", binWidth = 50.0)
     val e2 = intercept[IllegalArgumentException] {
       Q.driftStated(spark.read.parquet(s"$tmp/base"),
         spark.read.parquet(s"$tmp/w50"))
     }
-    assert(e2.getMessage.contains("different bin widths"))
+    assert(e2.getMessage.contains("layout mismatch") &&
+      e2.getMessage.contains("bin_width"))
     // driftStated on an un-stamped frame must refuse (use drift() instead)
     val e3 = intercept[IllegalArgumentException] {
       Q.driftStated(Q.histBuild(day1, "value", 25.0),

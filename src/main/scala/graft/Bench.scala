@@ -21,16 +21,9 @@ object Bench {
     // timings, making identical plans differ 10× within one run).
     // Between timed runs: drop every cached/persisted RDD explicitly
     // (deterministic, not GC-dependent) and give the JVM one collection
-    // so the next query starts from the same heap state.
-    def release(): Unit = {
-      spark.catalog.clearCache()
-      // blocking: async removal lets the previous query's blocks drain
-      // INTO the next timed window, defeating isolation; the wait itself
-      // is outside the timed window, so it costs the measurement nothing.
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = true))
-      System.gc()
-    }
+    // so the next query starts from the same heap state
+    // ([[Session.release]]; its blocking wait is outside the timed
+    // window, so it costs the measurement nothing).
     // deterministic name order so per-query timings diff cleanly across
     // rounds (map hash order reshuffles whenever a query is added).
     // SPARK_GRAFT_BENCH_ONLY (csv of names): dev-iteration filter to
@@ -68,7 +61,7 @@ object Bench {
       val ok = try { fn(spark, sfDir).count(); true }
                catch { case _: Throwable => false }
       val dt = (System.nanoTime() - t0) / 1e9
-      release()
+      Session.release(spark)
       (dt, ok)
     }
     // two isolated runs per query, report the min — but INTERLEAVED

@@ -22,4 +22,15 @@ object Session {
     spark.sparkContext.setLogLevel(logLevel)
     spark
   }
+
+  /** Drops every cached or persisted RDD and runs one GC, so the next
+    * query starts from the same heap state. Blocking unpersist: async
+    * removal would let this query's blocks drain into the next one.
+    */
+  def release(spark: SparkSession): Unit = {
+    spark.catalog.clearCache()
+    spark.sparkContext.getPersistentRDDs.values
+      .foreach(_.unpersist(blocking = true))
+    System.gc()
+  }
 }

@@ -26,19 +26,12 @@ object Verify {
     // driver file is diagnosable from the verify log alone.
     val t0all = System.nanoTime()
     val timings = scala.collection.mutable.ArrayBuffer[(String, Double)]()
-    // Per-query state release (round 16, the Bench.release discipline):
+    // Per-query state release (Session.release, shared with Bench):
     // 215 queries in one JVM accumulate cached RDDs and localCheckpoint
     // blocks (detachAndClean checkpoints every bounded result; the
     // async ContextCleaner drains them on ITS schedule, not ours) —
     // without an explicit drop the tail queries run under mounting
-    // allocation pressure. Blocking unpersist so the drop lands before
-    // the next query starts, exactly as in Bench.
-    def release(): Unit = {
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = true))
-      System.gc()
-    }
+    // allocation pressure.
     SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (name, _) => only.forall(_.contains(name)) }
       .foreach { case (name, fn) =>
@@ -51,7 +44,7 @@ object Verify {
           System.err.println(f"[verify] $name ok in $dt%.1f s")
         } catch { case e: Throwable =>
           System.err.println(f"[verify] $name failed after ${(System.nanoTime() - t0) / 1e9}%.1f s: ${e.getMessage}")
-        } finally release()
+        } finally Session.release(spark)
       }
     System.err.println(f"[verify] dump total ${(System.nanoTime() - t0all) / 1e9}%.1f s over ${timings.size} queries; slowest:")
     timings.sortBy(-_._2).take(10).foreach { case (n, dt) =>

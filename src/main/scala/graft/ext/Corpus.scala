@@ -96,51 +96,44 @@ object Corpus {
     * only), one equi-join, one min-aggregation — no clustering loop, no
     * pair term. The leakage invariant is inherited: docs colliding with
     * the same keeper co-assign by construction.
+    *
+    * @param bands docs' band table ([[Dedup.bandTable]] under the given
+    *        layout), staged by the caller: a release pipeline computes
+    *        bands once and feeds the state write, the admission AND the
+    *        split from the same frame.
     */
   def splitAssignGroupedStable(spark: org.apache.spark.sql.SparkSession,
                                docs: DataFrame, stateDir: String,
+                               bands: DataFrame,
                                w: Int = 3, numHashes: Int = 8,
                                bandWidth: Int = 2,
                                trainPct: Int = 80, valPct: Int = 10,
-                               salt: String = "split",
-                               bands: Option[DataFrame] = None): DataFrame = {
+                               salt: String = "split"): DataFrame = {
     require(trainPct + valPct < 100, "test share must be positive")
-    // `bands`: the caller may pass docs' band table (same layout) when
-    // it is already staged/cached — a release pipeline computes bands
-    // once and feeds the state write, the admission AND the split from
-    // the same frame. Caller-provided frames are caller-managed; the
-    // internal one is cached for its two consumers and released here.
-    val managed = bands.isEmpty
-    val probe = bands.getOrElse(
-      Dedup.bandTable(docs, w, numHashes, bandWidth).persist())
-    // a caller-provided band table built under a DIFFERENT layout would
-    // silently never collide with the state (every doc a singleton) —
-    // validate its ridden-along layout columns like any state read
+    // a band table built under a DIFFERENT layout would silently never
+    // collide with the state (every doc a singleton) — validate its
+    // ridden-along layout columns like any state read
     val layout = Dedup.bandLayout(w, numHashes, bandWidth)
-    bands.foreach { b =>
-      Dedup.requireLayoutCols(b, "split probe bands", layout)
-      Stamp.require(b, "split probe bands", layout)
-    }
-    try {
-      val state = Dedup.readBandState(
-        Dedup.openBandState(spark, stateDir, w, numHashes, bandWidth), probe)
-      // only the ID-SIZED owner map materializes (the shingle cache can
-      // then release); the returned frame stays a lazy docs ⋈ owner plan
-      // — never a corpus-sized local materialization
-      val owner = probe
-        .join(state.select(col("band"), col("bkey"),
-            col("doc_id").as("keeper")),
-          Seq("band", "bkey"))
-        .groupBy(col("doc_id")).agg(min(col("keeper")).as("cluster_id"))
-        .localCheckpoint(eager = true)
-      docs.join(owner, Seq("doc_id"), "left")
-        .withColumn("cluster_id", coalesce(col("cluster_id"), col("doc_id")))
-        .withColumn("bucket", hashBucket(col("cluster_id"), salt, 100))
-        .withColumn("split",
-          when(col("bucket") < trainPct, lit("train"))
-            .when(col("bucket") < trainPct + valPct, lit("val"))
-            .otherwise(lit("test")))
-    } finally if (managed) probe.unpersist(blocking = false)
+    Dedup.requireLayoutCols(bands, "split probe bands", layout)
+    Stamp.require(bands, "split probe bands", layout)
+    val state = Dedup.readBandState(
+      Dedup.openBandState(spark, stateDir, w, numHashes, bandWidth), bands)
+    // only the ID-SIZED owner map materializes; the returned frame stays
+    // a lazy docs ⋈ owner plan — never a corpus-sized local
+    // materialization
+    val owner = bands
+      .join(state.select(col("band"), col("bkey"),
+          col("doc_id").as("keeper")),
+        Seq("band", "bkey"))
+      .groupBy(col("doc_id")).agg(min(col("keeper")).as("cluster_id"))
+      .localCheckpoint(eager = true)
+    docs.join(owner, Seq("doc_id"), "left")
+      .withColumn("cluster_id", coalesce(col("cluster_id"), col("doc_id")))
+      .withColumn("bucket", hashBucket(col("cluster_id"), salt, 100))
+      .withColumn("split",
+        when(col("bucket") < trainPct, lit("train"))
+          .when(col("bucket") < trainPct + valPct, lit("val"))
+          .otherwise(lit("test")))
   }
 
   /** Normalization + PII-style scrubbing: lowercase, mask email-shaped

@@ -23,18 +23,17 @@ import org.apache.spark.sql.functions._
   *
   * Materialization note: every near-dup pipeline that reuses a
   * corpus-scale intermediate (the shingle / positional-shingle table,
-  * reused 3-4× inside one job) takes a `stagingDir` option. With it —
-  * the WAREHOUSE form, and the form every registered query uses — the
-  * intermediate lands as a staged parquet table read back by each
-  * consumer: distributed storage, recomputable on executor loss, zero
-  * executor block memory. Without it (dev convenience on small
-  * corpora) the intermediate is `persist()`ed and released in a
-  * `finally`. Small RESULTS (pair lists, span tables) are eagerly
+  * reused 3-4× inside one job) stages it as parquet in a temp directory
+  * it creates and owns ([[staged]]), read back by each consumer:
+  * distributed storage, recomputable on executor loss, zero executor
+  * block memory. The staged table is deleted when the operator returns
+  * or throws. Small RESULTS (pair lists, span tables) are eagerly
   * materialized with a lineage-truncating local checkpoint; that
   * checkpoint is NOT resilient to executor loss, which is the priced
   * trade for a driver-consumed, result-sized frame only — anything
-  * corpus-sized on a registered path is staged parquet (see PLANS.md
-  * "localCheckpoint resilience" table).
+  * corpus-sized is staged parquet (see PLANS.md "localCheckpoint
+  * resilience" table). The rewrites' corpus-sized output is a parquet
+  * table too, kept for the returned frame until JVM exit.
   */
 object Dedup {
 
@@ -111,26 +110,13 @@ object Dedup {
     * the exhaustive join; only the join volume shrinks (at 100 TB this is
     * the difference between a runnable job and an Σf² blow-up).
     */
-  def ngramJaccard(docs: DataFrame, w: Int = 3, threshold: Double = 0.8,
-                   stagingDir: Option[String] = None): DataFrame =
-    stagingDir match {
-      case Some(dir) =>
-        // WAREHOUSE form: the corpus-sized shingle table lands as a
-        // staged parquet table that ranking, sizing and verification
-        // all read back — distributed storage, never executor block
-        // memory (the removeCrossDocSpans staging discipline). The
-        // pair result is tiny; eager materialization truncates lineage
-        // so later actions never re-run the pipeline.
-        shingles(docs, w).write.mode("overwrite").parquet(dir)
-        ngramJaccardOn(docs.sparkSession.read.parquet(dir), threshold)
-          .localCheckpoint(eager = true)
-      case None =>
-        // dev convenience: materialized once in executor block memory,
-        // reused by ranking, sizing and verification — pass a staging
-        // dir at corpus scale.
-        val tri = shingles(docs, w).persist()
-        try ngramJaccardOn(tri, threshold).localCheckpoint(eager = true)
-        finally tri.unpersist(blocking = false)
+  def ngramJaccard(docs: DataFrame, w: Int = 3,
+                   threshold: Double = 0.8): DataFrame =
+    // the staged shingle table is read back by ranking, sizing and
+    // verification; the pair result is tiny, and eager materialization
+    // truncates lineage before the staged files go
+    staged("graft-ngram-stage-", shingles(docs, w)) { (tri, _) =>
+      ngramJaccardOn(tri, threshold).localCheckpoint(eager = true)
     }
 
   /** Exact-Jaccard pair detection over an ALREADY-MATERIALIZED shingle
@@ -210,30 +196,15 @@ object Dedup {
     */
   def minhashLsh(docs: DataFrame, w: Int = 3, numHashes: Int = 8,
                  bandWidth: Int = 2, threshold: Double = 0.5,
-                 maxBucketSize: Int = Int.MaxValue,
-                 stagingDir: Option[String] = None): DataFrame = {
+                 maxBucketSize: Int = Int.MaxValue): DataFrame = {
     require(numHashes % bandWidth == 0, "bands must tile the signature")
     require(numHashes <= 8, "8 32-bit hashes per two md5 digests")
     require(maxBucketSize >= 2, "a cap below 2 suppresses every pair")
-    stagingDir match {
-      case Some(dir) =>
-        // WAREHOUSE form (the ngramJaccard staging discipline): the
-        // corpus-sized shingle table lands as a staged parquet table
-        // that banding, sizing and verification all read back —
-        // distributed storage that survives executor loss, never
-        // executor block memory. The pair result is tiny; eager
-        // materialization truncates lineage off the staged files.
-        shingles(docs, w).write.mode("overwrite").parquet(dir)
-        minhashLshOn(docs.sparkSession.read.parquet(dir), numHashes,
-            bandWidth, threshold, maxBucketSize)
-          .localCheckpoint(eager = true)
-      case None =>
-        // dev convenience: materialized once in executor block memory —
-        // pass a staging dir at corpus scale.
-        val tri = shingles(docs, w).persist()
-        try minhashLshOn(tri, numHashes, bandWidth, threshold, maxBucketSize)
-          .localCheckpoint(eager = true)
-        finally tri.unpersist(blocking = false)
+    // the ngramJaccard staging discipline: banding, sizing and
+    // verification read the staged shingle table back
+    staged("graft-lsh-stage-", shingles(docs, w)) { (tri, _) =>
+      minhashLshOn(tri, numHashes, bandWidth, threshold, maxBucketSize)
+        .localCheckpoint(eager = true)
     }
   }
 
@@ -1201,26 +1172,13 @@ object Dedup {
     * fixed-width shuffle payload; the DuckDB oracle groups by text and
     * matches bit-for-bit.
     */
-  def repeatedSpans(docs: DataFrame, w: Int = 8, minDocs: Int = 2,
-                    stagingDir: Option[String] = None): DataFrame =
-    stagingDir match {
-      case Some(dir) =>
-        // WAREHOUSE form: the corpus-token-scale positional-shingle
-        // table staged to parquet and read back by the duplicated-set
-        // groupBy and the join back — no executor block-memory cache,
-        // resilient to executor loss. The per-doc result is tiny next
-        // to the window table; eager materialization truncates lineage
-        // off the staged files.
-        positionalShingles(docs, w).write.mode("overwrite").parquet(dir)
-        repeatedSpansOn(docs, docs.sparkSession.read.parquet(dir), w, minDocs)
-          .localCheckpoint(eager = true)
-      case None =>
-        // dev convenience: materialized once in executor block memory,
-        // reused by the duplicated-set groupBy and the join back — pass
-        // a staging dir at corpus scale (the ngramJaccard discipline).
-        val pos = positionalShingles(docs, w).persist()
-        try repeatedSpansOn(docs, pos, w, minDocs).localCheckpoint(eager = true)
-        finally pos.unpersist(blocking = false)
+  def repeatedSpans(docs: DataFrame, w: Int = 8,
+                    minDocs: Int = 2): DataFrame =
+    // the corpus-token-scale positional-shingle table is read back by the
+    // duplicated-set groupBy and the join back; the per-doc result is
+    // tiny next to it
+    staged("graft-span-stage-", positionalShingles(docs, w)) { (pos, _) =>
+      repeatedSpansOn(docs, pos, w, minDocs).localCheckpoint(eager = true)
     }
 
   private[graft] def repeatedSpansOn(docs: DataFrame, pos: DataFrame, w: Int,
@@ -1281,39 +1239,18 @@ object Dedup {
     * warehouse form: the join/group key is the 128-bit window hash
     * ([[winKey]] — the shuffles carry fixed-width keys, never window
     * text; the DuckDB oracle groups by text and matches bit-for-bit),
-    * and with `stagingDir` set BOTH corpus-scale frames are staged
-    * parquet — the positional-shingle table at `<dir>.pos` (read back
-    * by the duplicated-set groupBy and the cut join) and the rewritten
-    * corpus at `<dir>` that the returned frame reads back — distributed
+    * and BOTH corpus-scale frames are parquet — the staged
+    * positional-shingle table (read back by the duplicated-set groupBy
+    * and the cut join, deleted once the output is written) and the
+    * rewritten corpus that the returned frame reads — distributed
     * storage, not executor block memory, every stage recomputable on
-    * executor loss. Without `stagingDir` the intermediates persist in
-    * block memory and the result is localCheckpoint-materialized (dev
-    * convenience; pass a staging dir at scale).
+    * executor loss.
     */
-  def removeCrossDocSpans(docs: DataFrame, w: Int = 8, minDocs: Int = 2,
-                          stagingDir: Option[String] = None): DataFrame =
-    stagingDir match {
-      case Some(dir) =>
-        // WAREHOUSE form end to end (round 14): BOTH corpus-scale
-        // frames are staged parquet — the positional-shingle table at
-        // `<dir>.pos` (read back by the duplicated-set groupBy and the
-        // cut join) and the rewritten corpus at `<dir>` — so no
-        // executor block-memory cache exists anywhere on the path and
-        // every stage recomputes from distributed storage on executor
-        // loss.
-        positionalShingles(docs, w).write.mode("overwrite")
-          .parquet(dir + ".pos")
-        val pos = docs.sparkSession.read.parquet(dir + ".pos")
-        removeCrossDocSpansOn(docs, pos, w, minDocs)
-          .write.mode("overwrite").parquet(dir)
-        docs.sparkSession.read.parquet(dir)
-      case None =>
-        val pos = positionalShingles(docs, w).persist()
-        // materialization must complete before the finally releases the
-        // shingle cache — the returned frame never recomputes
-        try removeCrossDocSpansOn(docs, pos, w, minDocs)
-          .localCheckpoint(eager = true)
-        finally pos.unpersist(blocking = false)
+  def removeCrossDocSpans(docs: DataFrame, w: Int = 8,
+                          minDocs: Int = 2): DataFrame =
+    staged("graft-span-rewrite-", positionalShingles(docs, w)) { (pos, out) =>
+      removeCrossDocSpansOn(docs, pos, w, minDocs).write.parquet(out)
+      docs.sparkSession.read.parquet(out)
     }
 
   private[graft] def removeCrossDocSpansOn(docs: DataFrame, pos: DataFrame,
@@ -1381,26 +1318,16 @@ object Dedup {
     * are individually bounded, so partitions are too).
     */
   def maximalRepeatedSpans(docs: DataFrame, w: Int = 8, minDocs: Int = 2,
-                           minLen: Int = 12,
-                           stagingDir: Option[String] = None): DataFrame = {
+                           minLen: Int = 12): DataFrame = {
     require(minLen >= w,
       s"maximalRepeatedSpans: minLen ($minLen) must be >= the window " +
         s"width ($w) — a shorter threshold cannot bind (every detected " +
         "span covers at least one full window)")
-    stagingDir match {
-      case Some(dir) =>
-        // WAREHOUSE form: positional shingles staged to parquet (see
-        // repeatedSpans) — the duplicated-set groupBy and the coverage
-        // join read distributed storage, not executor block memory.
-        positionalShingles(docs, w).write.mode("overwrite").parquet(dir)
-        maximalRepeatedSpansOn(docs.sparkSession.read.parquet(dir), w,
-            minDocs, minLen)
-          .localCheckpoint(eager = true)
-      case None =>
-        val pos = positionalShingles(docs, w).persist()
-        try maximalRepeatedSpansOn(pos, w, minDocs, minLen)
-          .localCheckpoint(eager = true)
-        finally pos.unpersist(blocking = false)
+    // staged as in repeatedSpans: the duplicated-set groupBy and the
+    // coverage join read the positional shingles back
+    staged("graft-maxspan-stage-", positionalShingles(docs, w)) { (pos, _) =>
+      maximalRepeatedSpansOn(pos, w, minDocs, minLen)
+        .localCheckpoint(eager = true)
     }
   }
 
@@ -1427,12 +1354,10 @@ object Dedup {
     * short shared phrases are language, long shared runs are
     * boilerplate. Same tokenizer/rebuild contract as the fixed-w form
     * ([[positionalTokens]] + [[rebuildWithoutPositions]]); same
-    * staging discipline (`stagingDir` for the warehouse path,
-    * localCheckpoint for dev).
+    * staging discipline (staged positional shingles, parquet output).
     */
   def removeMaximalSpans(docs: DataFrame, w: Int = 8, minDocs: Int = 2,
-                         minLen: Int = 12,
-                         stagingDir: Option[String] = None): DataFrame = {
+                         minLen: Int = 12): DataFrame = {
     require(minLen >= w,
       s"removeMaximalSpans: minLen ($minLen) must be >= the window " +
         s"width ($w)")
@@ -1453,21 +1378,35 @@ object Dedup {
           explode(sequence(col("span_start"), col("span_end"))).as("q"))
       rebuildWithoutPositions(positionalTokens(docs), cut)
     }
-    stagingDir match {
-      case Some(dir) =>
-        // WAREHOUSE form end to end (round 14): positional shingles
-        // staged at `<dir>.pos`, rewritten corpus at `<dir>` — no
-        // executor block-memory cache on the path (see
-        // removeCrossDocSpans).
-        positionalShingles(docs, w).write.mode("overwrite")
-          .parquet(dir + ".pos")
-        rewritten(docs.sparkSession.read.parquet(dir + ".pos"))
-          .write.mode("overwrite").parquet(dir)
-        docs.sparkSession.read.parquet(dir)
-      case None =>
-        val pos = positionalShingles(docs, w).persist()
-        try rewritten(pos).localCheckpoint(eager = true)
-        finally pos.unpersist(blocking = false)
+    staged("graft-maxspan-rewrite-", positionalShingles(docs, w)) { (pos, out) =>
+      rewritten(pos).write.parquet(out)
+      docs.sparkSession.read.parquet(out)
+    }
+  }
+
+  /** Stages `table` as parquet in a fresh temp directory and runs `use`
+    * over the read-back; the staged table is deleted when `use` returns.
+    * `use` also gets an unused path in that directory for an output
+    * that must outlive the call (a rewritten corpus its frame reads): if
+    * `use` wrote there, the directory stays with that output alone
+    * (until JVM exit), otherwise it goes. When `use` or the staging
+    * write throws, the whole directory goes.
+    */
+  private def staged[T](prefix: String, table: DataFrame)(
+      use: (DataFrame, String) => T): T = {
+    val dir = graft.TempDirs.create(prefix)
+    val (stage, out) = (dir.resolve("stage"), dir.resolve("out"))
+    try {
+      table.write.parquet(stage.toString)
+      val result = use(table.sparkSession.read.parquet(stage.toString),
+        out.toString)
+      graft.plans.Pipeline.deleteRecursively(
+        if (java.nio.file.Files.exists(out)) stage else dir)
+      result
+    } catch {
+      case e: Throwable =>
+        graft.plans.Pipeline.deleteRecursively(dir)
+        throw e
     }
   }
 

@@ -70,13 +70,6 @@ object Multimodal {
       .withColumn("n_sampled",
         ((col("n_frames") + stride - 1) / stride).cast("int"))
 
-  /** Resize stub: a real build calls an image library per partition; the
-    * deterministic stand-in re-chunks bytes to the target "dimensions"
-    * and records the transform in metadata.
-    */
-  def fakeResize(payload: Array[Byte], targetLen: Int): Array[Byte] =
-    java.util.Arrays.copyOf(payload, targetLen)
-
   /** Modality-bucketed FRAME-level near-dup — the multimodal JOIN/AGG
     * path (not a projection): payloads chunk into fixed-width frames
     * (the [[frameSample]] chunking), each frame fingerprints to

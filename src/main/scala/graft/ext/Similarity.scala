@@ -202,12 +202,17 @@ object Similarity {
     * neg_cell, e))` did — highest csim, ties to the lowest cell — and
     * greatest() uses the same NaN-greatest double ordering as max().
     *
-    * LARGE-K path: the original PARTIAL-AGG ARGMAX — `max(struct(csim,
-    * -cell, emb))` per vector — NOT a window: map-side combine
-    * collapses the K-expanded scored rows back to one row per vector
-    * BEFORE the exchange (no Sort of the K× expansion). Same tie-break
-    * (the idiom shared with `keepBestPerCluster` and `silver_nearest`).
+    * LARGE-K path: a broadcast crossJoin into the original PARTIAL-AGG
+    * ARGMAX — `max(struct(csim, -cell, emb))` per vector — NOT a
+    * window: map-side combine collapses the K-expanded scored rows back
+    * to one row per vector BEFORE the exchange (no Sort of the K×
+    * expansion). Same tie-break (the idiom shared with
+    * `keepBestPerCluster` and `silver_nearest`).
     * Output columns: (<id>, <embCol>, cell).
+    *
+    * Callers pass the centroid frame without a broadcast hint: the
+    * small-K path only collects it, and a hint that reaches no join is
+    * dropped with a HintErrorLogger warning.
     */
   private[graft] def assignCells(df: DataFrame, id: String, embCol: String,
                                  centroids: DataFrame): DataFrame = {
@@ -244,7 +249,7 @@ object Similarity {
       df.select(col(id), col(embCol),
         (-best.getField("neg_cell")).as("cell"))
     } else
-      df.crossJoin(centroids)
+      df.crossJoin(broadcast(centroids))
         .withColumn("csim", cosine(col(embCol),
           if (elem.isDefined) col("centroid")
           else col("centroid").cast("array<double>")))
@@ -299,13 +304,12 @@ object Similarity {
 
   private def ivfSearch(emb: DataFrame, queries: DataFrame, k: Int,
                         centroidSet: DataFrame, nprobe: Int): DataFrame = {
-    val centroids = broadcast(centroidSet)
     val cells = assignCells(
       emb.select(col("vec_id").as("cid"), col("embedding").as("ce")),
-      "cid", "ce", centroids)
+      "cid", "ce", centroidSet)
     val probes = probeCells(
       queries.select(col("vec_id").as("qid"), col("embedding").as("qe")),
-      centroids, nprobe)
+      centroidSet, nprobe)
     rankTopK(
       probes.join(cells, Seq("cell"))
         .filter(col("qid") =!= col("cid"))
@@ -333,7 +337,7 @@ object Similarity {
     val centroidSet = emb.orderBy(col("vec_id")).limit(numCells)
       .select(col("vec_id").as("cell"), col("embedding").as("centroid"))
     require(!centroidSet.isEmpty, "ivfRefineStep: corpus has no vectors")
-    ivfRefineWith(emb, broadcast(centroidSet))
+    ivfRefineWith(emb, centroidSet)
   }
 
   /** The Lloyd-step body against an EXPLICIT centroid table — shared by
@@ -427,7 +431,7 @@ object Similarity {
   private def reseedFarthest(emb: DataFrame, surviving: Map[Long, Array[Double]],
                              emptyCells: Seq[Long]): Map[Long, Array[Double]] = {
     val far = emb.select(col("vec_id"), col("embedding"))
-      .crossJoin(centroidTable(emb.sparkSession, surviving))
+      .crossJoin(broadcast(centroidTable(emb.sparkSession, surviving)))
       .withColumn("csim", cosine(col("embedding"), col("centroid")))
       .groupBy(col("vec_id"))
       .agg(max(col("csim")).as("maxsim"), first(col("embedding")).as("e"))
@@ -443,8 +447,8 @@ object Similarity {
   private def centroidTable(spark: org.apache.spark.sql.SparkSession,
                             cents: Map[Long, Array[Double]]): DataFrame = {
     import spark.implicits._
-    broadcast(cents.toSeq.sortBy(_._1).map { case (c, a) => (c, a.toSeq) }
-      .toDF("cell", "centroid"))
+    cents.toSeq.sortBy(_._1).map { case (c, a) => (c, a.toSeq) }
+      .toDF("cell", "centroid")
   }
 
   /** Collapse a refinement table (cell, pos, n_members, c_val) back into
@@ -710,8 +714,8 @@ object Similarity {
                 numCodes: Int = 16, dim: Int = 64): DataFrame = {
     // the IVF cell machinery inline: assignment by argmax partial agg,
     // query probes by the small-side window.
-    val centroids = broadcast(emb.orderBy(col("vec_id")).limit(numCells)
-      .select(col("vec_id").as("cell"), col("embedding").as("centroid")))
+    val centroids = emb.orderBy(col("vec_id")).limit(numCells)
+      .select(col("vec_id").as("cell"), col("embedding").as("centroid"))
     require(!centroids.isEmpty, "ivfPqTopK: corpus has no vectors")
     val cells = assignCells(
       emb.select(col("vec_id").as("cid"), col("embedding").as("ce")),

@@ -157,7 +157,7 @@ object VectorIndex {
     val mode = if (overwrite) "overwrite" else "append"
     val assigned = Similarity.assignCells(
       vecs.select(col("vec_id"), col("embedding")),
-      "vec_id", "embedding", broadcast(centroids)).persist()
+      "vec_id", "embedding", centroids).persist()
     try {
       // cluster by cell before the partitioned write: each write batch
       // lands ~one file per cell directory instead of one per (task ×

@@ -118,9 +118,6 @@ object KeyFunctions {
     dot
   }
 
-  def dotFloat(a: ArrayData, b: ArrayData): Double =
-    dotData(a, b, aD = false, bD = false)
-
   /** Double-precision cosine over two float/double arrays, index-ordered
     * accumulation (bit-compatible with the zip_with/aggregate formulation
     * in [[graft.ext.Similarity.cosine]]).
@@ -136,9 +133,6 @@ object KeyFunctions {
     }
     dot / (math.sqrt(na) * math.sqrt(nb))
   }
-
-  def cosineFloat(a: ArrayData, b: ArrayData): Double =
-    cosineData(a, b, aD = false, bD = false)
 }
 
 /** Native Catalyst expression for the reference's signed md5 key (F1).

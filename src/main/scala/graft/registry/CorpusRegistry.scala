@@ -402,9 +402,7 @@ private[graft] object CorpusRegistry {
       val docs = Tables.documents(s, d)
       val out = ext.Corpus.splitAssignGrouped(docs,
         Dedup.clusterPairs(Dedup.minhashLsh(docs, w = 5, numHashes = 8,
-          bandWidth = 2, threshold = 0.5,
-          stagingDir = Some(TempDirs.create("graft-splitgrp-stage-")
-            .toString + "/shingles"))))
+          bandWidth = 2, threshold = 0.5)))
         .select(col("doc_id"), col("cluster_id"), col("bucket"), col("split"))
       val straddlers = out.groupBy(col("cluster_id"))
         .agg(countDistinct(col("split")).as("ns"))
@@ -449,11 +447,11 @@ private[graft] object CorpusRegistry {
       val kept = Dedup.compactNearDupState(s, stateDir, t0,
         qualityCol = "n_chars", w = 5, numHashes = 8, bandWidth = 2)
       val splitT0 = ext.Corpus.splitAssignGroupedStable(s, t0, stateDir,
-        w = 5, numHashes = 8, bandWidth = 2, bands = Some(bandsT0))
+        w = 5, numHashes = 8, bandWidth = 2, bands = bandsT0)
       Dedup.admitAndMaintainState(s, delta, stateDir,
         w = 5, numHashes = 8, bandWidth = 2)
       val splitAll = ext.Corpus.splitAssignGroupedStable(s, docs, stateDir,
-        w = 5, numHashes = 8, bandWidth = 2, bands = Some(bands))
+        w = 5, numHashes = 8, bandWidth = 2, bands = bands)
       val stableSet = splitT0.filter(col("cluster_id") =!= col("doc_id"))
         .select(col("doc_id"))
         .unionByName(kept.select(col("keeper").as("doc_id")))

@@ -44,24 +44,14 @@ private[graft] object DedupRegistry {
       Dedup.exact(Tables.documents(s, d)).orderBy("keeper")),
 
     "dedup_ngram_jaccard" -> ((s, d) =>
-      // registered in the WAREHOUSE form (round 13): the corpus-sized
-      // shingle table staged to parquet and read back — no executor
-      // block-memory cache on the registered path.
-      Dedup.ngramJaccard(Tables.documents(s, d), w = 5, threshold = 0.8,
-          stagingDir = Some(TempDirs.create("graft-ngram-stage-").toString
-            + "/shingles"))
+      Dedup.ngramJaccard(Tables.documents(s, d), w = 5, threshold = 0.8)
         .orderBy("d1", "d2")),
 
     "dedup_repeated_spans" -> ((s, d) =>
       // exact-substring-style span dedup at 8-token granularity: which
       // tokens of each document are cross-corpus boilerplate. Localizes
       // shared spans that whole-doc similarity (jaccard/minhash) cannot.
-      // Registered in the WAREHOUSE form (round 14): the corpus-token-
-      // scale positional-shingle table staged to parquet, not persisted
-      // in executor block memory.
-      Dedup.repeatedSpans(Tables.documents(s, d), w = 8, minDocs = 2,
-          stagingDir = Some(TempDirs.create("graft-span-stage-").toString
-            + "/pos"))
+      Dedup.repeatedSpans(Tables.documents(s, d), w = 8, minDocs = 2)
         .orderBy("doc_id")),
 
     "dedup_recall_eval" -> ((s, d) => {
@@ -113,20 +103,23 @@ private[graft] object DedupRegistry {
       // to 1 at any scale.
       import s.implicits._
       val docs = Tables.documents(s, d)
-      val tmp = TempDirs.create("graft-sweep-").toString
-      Dedup.shingles(docs, w = 5).write.parquet(s"$tmp/shingles")
-      val tri = s.read.parquet(s"$tmp/shingles")
-      Dedup.signatureTableFromShingles(tri, w = 5, numHashes = 8)
-        .write.parquet(s"$tmp/sigs")
-      val sigs = s.read.parquet(s"$tmp/sigs")
-      val nExact = Dedup.ngramJaccardOnShingles(tri, threshold = 0.5).count()
-      Seq(1, 2, 4).map { bw =>
-        val found = Dedup.pairsFromBands(tri,
-          Dedup.bandTableFromSignatures(sigs, bandWidth = bw),
-          threshold = 0.5).count()
-        (bw, nExact, found, found.toDouble / nExact)
-      }.toDF("band_width", "n_exact", "n_found", "recall")
-        .orderBy("band_width")
+      // Every count is eager, so the staged tables go before return.
+      val tmp = TempDirs.create("graft-sweep-")
+      try {
+        Dedup.shingles(docs, w = 5).write.parquet(s"$tmp/shingles")
+        val tri = s.read.parquet(s"$tmp/shingles")
+        Dedup.signatureTableFromShingles(tri, w = 5, numHashes = 8)
+          .write.parquet(s"$tmp/sigs")
+        val sigs = s.read.parquet(s"$tmp/sigs")
+        val nExact = Dedup.ngramJaccardOnShingles(tri, threshold = 0.5).count()
+        Seq(1, 2, 4).map { bw =>
+          val found = Dedup.pairsFromBands(tri,
+            Dedup.bandTableFromSignatures(sigs, bandWidth = bw),
+            threshold = 0.5).count()
+          (bw, nExact, found, found.toDouble / nExact)
+        }.toDF("band_width", "n_exact", "n_found", "recall")
+          .orderBy("band_width")
+      } finally graft.plans.Pipeline.deleteRecursively(tmp)
     }),
 
     "dedup_maximal_spans" -> ((s, d) =>
@@ -137,23 +130,16 @@ private[graft] object DedupRegistry {
       // granularity. One row per qualifying span with its exact token
       // interval; the fixed-w family (dedup_repeated_spans) counts
       // coverage, this one LOCALIZES it at variable length.
-      // Registered in the WAREHOUSE form (round 14): staged positional
-      // shingles, no executor block-memory cache on the path.
       Dedup.maximalRepeatedSpans(Tables.documents(s, d), w = 8,
-          minDocs = 2, minLen = 12,
-          stagingDir = Some(TempDirs.create("graft-maxspan-stage-")
-            .toString + "/pos"))
+          minDocs = 2, minLen = 12)
         .orderBy("doc_id", "span_start")),
 
     "dedup_maximal_span_removal" -> ((s, d) =>
       // the REWRITE half at variable length: only non-canonical covered
       // runs of >= 12 tokens are cut — short shared phrases survive,
-      // long boilerplate is excised. Warehouse form: hash-keyed joins,
-      // staged output.
+      // long boilerplate is excised. Hash-keyed joins, parquet output.
       Dedup.removeMaximalSpans(Tables.documents(s, d), w = 8, minDocs = 2,
-          minLen = 12,
-          stagingDir = Some(TempDirs.create("graft-maxspan-rewrite-")
-            .toString + "/out"))
+          minLen = 12)
         .orderBy("doc_id")),
 
     "dedup_span_removal" -> ((s, d) =>
@@ -162,12 +148,10 @@ private[graft] object DedupRegistry {
       // (min-doc_id) occurrence and emit the rewritten corpus. The hash
       // pins the cleaned text itself, token for token — canonical docs
       // intact, non-canonical occurrences excised, whole-boilerplate
-      // docs reduced to ''. Registered in the WAREHOUSE form (round 12):
-      // 128-bit window-hash join keys, rewritten corpus staged to
-      // parquet and read back — no corpus-sized localCheckpoint.
-      Dedup.removeCrossDocSpans(Tables.documents(s, d), w = 8, minDocs = 2,
-          stagingDir = Some(TempDirs.create("graft-span-rewrite-").toString
-            + "/out"))
+      // docs reduced to ''. 128-bit window-hash join keys, rewritten
+      // corpus written to parquet and read back — no corpus-sized
+      // localCheckpoint.
+      Dedup.removeCrossDocSpans(Tables.documents(s, d), w = 8, minDocs = 2)
         .orderBy("doc_id")),
 
     "dedup_clusters" -> ((s, d) =>
@@ -176,23 +160,14 @@ private[graft] object DedupRegistry {
       // materialized by minhashLsh, so the CC loop never re-runs the pair
       // pipeline); at warehouse scale the pair list is a staged table and
       // this operator reads it back — the API takes any pairs frame.
-      // Warehouse form (round 15): the pair pipeline's shingle table is
-      // staged parquet, not an executor block-memory persist.
       Dedup.clusterPairs(
           Dedup.minhashLsh(Tables.documents(s, d), w = 5, numHashes = 8,
-            bandWidth = 2, threshold = 0.5,
-            stagingDir = Some(TempDirs.create("graft-clusters-stage-")
-              .toString + "/shingles")))
+            bandWidth = 2, threshold = 0.5))
         .orderBy("doc_id")),
 
     "dedup_minhash_lsh" -> ((s, d) =>
-      // Registered in the WAREHOUSE form (round 14): the corpus-sized
-      // shingle table staged to parquet and read back by banding,
-      // sizing and verification — no executor block-memory cache.
       Dedup.minhashLsh(Tables.documents(s, d), w = 5, numHashes = 8,
-          bandWidth = 2, threshold = 0.5,
-          stagingDir = Some(TempDirs.create("graft-lsh-stage-").toString
-            + "/shingles"))
+          bandWidth = 2, threshold = 0.5)
         .orderBy("d1", "d2")),
 
     "dedup_lsh_capped" -> ((s, d) =>
@@ -204,9 +179,7 @@ private[graft] object DedupRegistry {
       // BINDS on this corpus (size-3 buckets exist), so the oracle
       // checks the exclusion semantics, not a no-op.
       Dedup.minhashLsh(Tables.documents(s, d), w = 5, numHashes = 8,
-          bandWidth = 2, threshold = 0.5, maxBucketSize = 2,
-          stagingDir = Some(TempDirs.create("graft-capped-stage-")
-            .toString + "/shingles"))
+          bandWidth = 2, threshold = 0.5, maxBucketSize = 2)
         .orderBy("d1", "d2")),
 
     "dedup_keep_best" -> ((s, d) => {
@@ -217,9 +190,7 @@ private[graft] object DedupRegistry {
       val docs = Tables.documents(s, d)
       Dedup.keepBestPerCluster(
           Dedup.clusterPairs(Dedup.minhashLsh(docs, w = 5, numHashes = 8,
-            bandWidth = 2, threshold = 0.5,
-            stagingDir = Some(TempDirs.create("graft-keepbest-stage-")
-              .toString + "/shingles"))),
+            bandWidth = 2, threshold = 0.5)),
           docs.select(col("doc_id"), col("n_chars")), "n_chars")
         .orderBy("cluster_id")
     }),

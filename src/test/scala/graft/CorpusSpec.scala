@@ -139,20 +139,20 @@ class CorpusSpec extends AnyFunSuite {
     val delta = docs.filter(col("doc_id") > mid)
     val dir = java.nio.file.Files
       .createTempDirectory("graft-stable-split-").toString + "/bands"
-    Dedup.writeBandState(
-      Dedup.bandTable(t0, w = 5, numHashes = 8, bandWidth = 2),
-      dir, mode = "errorifexists")
+    def bands(df: org.apache.spark.sql.DataFrame) =
+      Dedup.bandTable(df, w = 5, numHashes = 8, bandWidth = 2)
+    Dedup.writeBandState(bands(t0), dir, mode = "errorifexists")
     val kept = Dedup.compactNearDupState(spark, dir, t0,
       qualityCol = "n_chars", w = 5, numHashes = 8, bandWidth = 2)
     def asMap(df: org.apache.spark.sql.DataFrame) =
       df.select("doc_id", "cluster_id", "split").collect()
         .map(r => r.getLong(0) -> ((r.getLong(1), r.getString(2)))).toMap
     val s0 = asMap(Corpus.splitAssignGroupedStable(spark, t0, dir,
-      w = 5, numHashes = 8, bandWidth = 2))
+      bands = bands(t0), w = 5, numHashes = 8, bandWidth = 2))
     Dedup.admitAndMaintainState(spark, delta, dir,
       w = 5, numHashes = 8, bandWidth = 2)
     val s1 = asMap(Corpus.splitAssignGroupedStable(spark, docs, dir,
-      w = 5, numHashes = 8, bandWidth = 2))
+      bands = bands(docs), w = 5, numHashes = 8, bandWidth = 2))
     val keepers = kept.select("keeper").collect().map(_.getLong(0)).toSet
     s0.foreach { case (id, (c0, sp0)) =>
       val (c1, sp1) = s1(id)

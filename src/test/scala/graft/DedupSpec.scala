@@ -16,6 +16,49 @@ class DedupSpec extends AnyFunSuite {
     (4L, "one two"), // shorter than the shingle width
   ).toDF("doc_id", "text")
 
+  /** Runs `op` and returns the entries it added under java.io.tmpdir
+    * whose names start with `prefix` (suites run one at a time in the
+    * test JVM, so the prefix isolates the operator under test).
+    */
+  private def newTmpEntries(prefix: String)(op: => Any): Set[java.nio.file.Path] = {
+    import scala.jdk.CollectionConverters._
+    val tmp = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"))
+    def entries = {
+      val ls = java.nio.file.Files.list(tmp)
+      try ls.iterator.asScala
+        .filter(_.getFileName.toString.startsWith(prefix)).toSet
+      finally ls.close()
+    }
+    val before = entries
+    op
+    entries -- before
+  }
+
+  private def cacheIsEmpty =
+    org.apache.spark.sql.graftbridge.Bridge.cacheIsEmpty(spark)
+
+  /** A rewrite leaves exactly one new directory: its output table, which
+    * the returned frame reads cold (the staged shingles are gone).
+    */
+  private def assertRewriteOutputOnly(prefix: String,
+                                      rewrite: => org.apache.spark.sql.DataFrame)
+      : Array[org.apache.spark.sql.Row] = {
+    var out: org.apache.spark.sql.DataFrame = null
+    val added = newTmpEntries(prefix) { out = rewrite }
+    assert(added.size === 1, s"$prefix: expected one output directory, got $added")
+    val dir = added.head
+    assert(dir.toFile.list().toSeq === Seq("out"),
+      s"$prefix: staged shingles must not outlive the rewrite")
+    assert(out.inputFiles.nonEmpty &&
+      out.inputFiles.forall(_.contains(dir.resolve("out").toString)),
+      s"$prefix: returned frame must read its output table")
+    assert(cacheIsEmpty, s"$prefix left a cache entry behind")
+    val rows = out.collect()
+    assert(spark.read.parquet(dir.resolve("out").toString).collect()
+      .sortBy(_.getLong(0)).toSeq === rows.sortBy(_.getLong(0)).toSeq)
+    rows
+  }
+
   test("exact dedup groups identical texts and keeps the min id") {
     val out = Dedup.exact(fixture).filter(col("n_copies") > 1).collect()
     assert(out.length === 1)
@@ -24,20 +67,16 @@ class DedupSpec extends AnyFunSuite {
   }
 
   test("ngram jaccard finds exact and near duplicates, skips short docs") {
-    val pairs = Dedup.ngramJaccard(fixture, w = 3, threshold = 0.5)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).sortBy(p => (p._1, p._2))
+    var pairs: Array[(Long, Long, Double)] = null
+    // the shingle table is staged to parquet, and gone once the call returns
+    assert(newTmpEntries("graft-ngram-stage-") {
+      pairs = Dedup.ngramJaccard(fixture, w = 3, threshold = 0.5)
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).sortBy(p => (p._1, p._2))
+    }.isEmpty, "ngramJaccard left its staging directory behind")
+    assert(cacheIsEmpty, "ngramJaccard left a cache entry behind")
     assert(pairs.exists(p => p._1 == 0 && p._2 == 1 && p._3 == 1.0)) // identical
     assert(pairs.exists(p => p._1 == 0 && p._2 == 2 && p._3 > 0.5))  // near
     assert(!pairs.exists(p => p._1 == 4 || p._2 == 4)) // too short to shingle
-    // warehouse form: shingle table staged to parquet instead of an
-    // executor block-memory cache — identical pairs
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-ngram-staged-").toString + "/sh"
-    val staged = Dedup.ngramJaccard(fixture, w = 3, threshold = 0.5,
-        stagingDir = Some(dir))
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).sortBy(p => (p._1, p._2))
-    assert(staged === pairs)
-    assert(new java.io.File(dir).exists, "staged shingle table must land")
   }
 
   test("minhash LSH detects identical documents with certainty") {
@@ -381,8 +420,8 @@ class DedupSpec extends AnyFunSuite {
       (20L, "p1 p2 p3 p4 p5 p6 p7 p8 tail20"),
       (21L, "head21 p1 p2 p3 p4 p5 p6 p7 p8")
     ).toDF("doc_id", "text")
-    val out = Dedup.removeMaximalSpans(docs, w = 8, minDocs = 2, minLen = 12)
-      .collect()
+    val out = assertRewriteOutputOnly("graft-maxspan-rewrite-",
+        Dedup.removeMaximalSpans(docs, w = 8, minDocs = 2, minLen = 12))
       .map(r => r.getLong(0) ->
         ((r.getLong(1), r.getLong(2), r.getString(3)))).toMap
     assert(out(10L) === ((16L, 0L,
@@ -393,14 +432,6 @@ class DedupSpec extends AnyFunSuite {
     assert(out(20L) === ((9L, 0L, "p1 p2 p3 p4 p5 p6 p7 p8 tail20")))
     assert(out(21L) === ((9L, 0L, "head21 p1 p2 p3 p4 p5 p6 p7 p8")),
       "8-token shared phrase is below the threshold — survives")
-    // staged-write form lands parquet and matches
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-maxspan-staged-").toString + "/out"
-    val staged = Dedup.removeMaximalSpans(docs, w = 8, minDocs = 2,
-        minLen = 12, stagingDir = Some(dir)).collect()
-      .map(r => r.getLong(0) ->
-        ((r.getLong(1), r.getLong(2), r.getString(3)))).toMap
-    assert(staged === out)
   }
 
   test("span removal: canonical doc keeps its text, others lose merged spans") {
@@ -473,57 +504,79 @@ class DedupSpec extends AnyFunSuite {
     } finally pos.unpersist(blocking = false)
   }
 
-  test("span removal: staged-write form lands parquet and matches localCheckpoint form") {
+  test("span removal: output reads cold from parquet, no staged shingles remain") {
     val docs = Seq(
       (10L, "a b c d e f g h i j u1 u2 u3"),
       (11L, "z1 a b c d e f g h i j z2"),
       (12L, "nothing shared here at all ok fine yes")
     ).toDF("doc_id", "text")
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-span-staged-").toString + "/out"
-    def rows(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
-        r.getString(3))).sortBy(_._1).toSeq
-    val staged = Dedup.removeCrossDocSpans(docs, w = 8,
-      stagingDir = Some(dir))
-    assert(rows(staged) === rows(Dedup.removeCrossDocSpans(docs, w = 8)))
-    // the registered path reads back a real parquet table, not block
-    // storage: the staged dir must exist and be re-readable cold
-    assert(rows(spark.read.parquet(dir)) === rows(staged))
+    val rows = assertRewriteOutputOnly("graft-span-rewrite-",
+        Dedup.removeCrossDocSpans(docs, w = 8))
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getString(3)))
+      .sortBy(_._1).toSeq
+    assert(rows === Seq(
+      (10L, 13L, 0L, "a b c d e f g h i j u1 u2 u3"),
+      (11L, 12L, 10L, "z1 z2"),
+      (12L, 8L, 0L, "nothing shared here at all ok fine yes")))
   }
 
-  test("staged detection paths match in-memory and leave no cache entries") {
-    // round 14: the three DETECTION operators take the same stagingDir
-    // discipline as the rewrites — staged parquet intermediates,
-    // identical results, and zero block-memory cache on the staged path.
+  test("detection paths leave no staging directory and no cache entry") {
+    // the detectors stage their shingle tables to parquet and return an
+    // eagerly materialized result: nothing staged outlives the call
     val docs = fixture
     def pairs(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
         .sortBy(p => (p._1, p._2)).toSeq
-    val tmp = java.nio.file.Files
-      .createTempDirectory("graft-detect-staged-").toString
-    val lshMem = pairs(Dedup.minhashLsh(docs, w = 3, numHashes = 8,
-      bandWidth = 2, threshold = 0.5))
-    val lshStaged = pairs(Dedup.minhashLsh(docs, w = 3, numHashes = 8,
-      bandWidth = 2, threshold = 0.5, stagingDir = Some(s"$tmp/sh")))
-    assert(lshStaged === lshMem)
-    assert(new java.io.File(s"$tmp/sh").exists, "staged shingles must land")
+    var lsh: Seq[(Long, Long, Double)] = null
+    assert(newTmpEntries("graft-lsh-stage-") {
+      lsh = pairs(Dedup.minhashLsh(docs, w = 3, numHashes = 8,
+        bandWidth = 2, threshold = 0.5))
+    }.isEmpty, "minhashLsh left its staging directory behind")
+    assert(lsh.contains((0L, 1L, 1.0)), "identical docs must pair")
 
     val spanDocs = Seq(
       (0L, "a b c d e f g h i j"), (1L, "a b c d e f g h i j k l m n")
     ).toDF("doc_id", "text")
     def spanRows(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(_.toSeq).toSeq
-    assert(spanRows(Dedup.repeatedSpans(spanDocs, w = 8, minDocs = 2,
-        stagingDir = Some(s"$tmp/pos1"))) ===
-      spanRows(Dedup.repeatedSpans(spanDocs, w = 8, minDocs = 2)))
-    assert(spanRows(Dedup.maximalRepeatedSpans(spanDocs, w = 8, minDocs = 2,
-        minLen = 8, stagingDir = Some(s"$tmp/pos2"))) ===
-      spanRows(Dedup.maximalRepeatedSpans(spanDocs, w = 8, minDocs = 2,
-        minLen = 8)))
-    assert(org.apache.spark.sql.graftbridge.Bridge.cacheIsEmpty(spark),
-      "staged detection paths must not persist anything")
-    graft.plans.Pipeline.deleteRecursively(java.nio.file.Paths.get(tmp))
+      df.collect().map(_.toSeq).toSeq.sortBy(_.head.asInstanceOf[Long])
+    var spans: Seq[Seq[Any]] = null
+    assert(newTmpEntries("graft-span-stage-") {
+      spans = spanRows(Dedup.repeatedSpans(spanDocs, w = 8, minDocs = 2))
+    }.isEmpty, "repeatedSpans left its staging directory behind")
+    // windows starting at 1..3 are shared: one 10-token span per doc
+    assert(spans === Seq(Seq(0L, 10L, 3L, 1L, 10L), Seq(1L, 14L, 3L, 1L, 10L)))
+    var maximal: Seq[Seq[Any]] = null
+    assert(newTmpEntries("graft-maxspan-stage-") {
+      maximal = spanRows(Dedup.maximalRepeatedSpans(spanDocs, w = 8,
+        minDocs = 2, minLen = 8))
+    }.isEmpty, "maximalRepeatedSpans left its staging directory behind")
+    assert(maximal === Seq(Seq(0L, 1L, 10L, 10L), Seq(1L, 1L, 10L, 10L)))
+    assert(cacheIsEmpty, "detection paths must not persist anything")
+  }
+
+  test("a failing input leaves no staging directory or cache entry behind") {
+    // the text column throws when the staging write evaluates it: every
+    // operator must remove the directory it created, output included
+    val boom = udf { (t: String) =>
+      if (t != null) throw new IllegalStateException("boom"); t
+    }
+    val docs = fixture.withColumn("text", boom(col("text")))
+    Seq[(String, () => Any)](
+      "graft-ngram-stage-" -> (() =>
+        Dedup.ngramJaccard(docs, w = 3, threshold = 0.5)),
+      "graft-lsh-stage-" -> (() =>
+        Dedup.minhashLsh(docs, w = 3, numHashes = 8, bandWidth = 2)),
+      "graft-span-stage-" -> (() => Dedup.repeatedSpans(docs, w = 8)),
+      "graft-maxspan-stage-" -> (() =>
+        Dedup.maximalRepeatedSpans(docs, w = 8, minLen = 8)),
+      "graft-span-rewrite-" -> (() => Dedup.removeCrossDocSpans(docs, w = 8)),
+      "graft-maxspan-rewrite-" -> (() =>
+        Dedup.removeMaximalSpans(docs, w = 8, minLen = 8))
+    ).foreach { case (prefix, op) =>
+      val added = newTmpEntries(prefix)(intercept[Exception](op()))
+      assert(added.isEmpty, s"$prefix left $added behind after a failure")
+      assert(cacheIsEmpty, s"$prefix left a cache entry behind after a failure")
+    }
   }
 
   test("single-signature sweep: staged shingles+signatures reproduce every band width, banding never re-shingles") {

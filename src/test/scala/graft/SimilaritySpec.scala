@@ -31,6 +31,49 @@ class SimilaritySpec extends AnyFunSuite {
       s"small-K cell assignment regressed to a join plan:\n$plan")
   }
 
+  test("IVF build and search attach every broadcast hint to a join") {
+    // a hint on a frame that is only collected (the small-K literal
+    // assignment path) never reaches a join and Spark warns through
+    // HintErrorLogger; capture that logger around build + search
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, Logger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    val warnings = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val appender = new AbstractAppender("hint-probe", null, null, true,
+        Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        warnings.add(e.getMessage.getFormattedMessage)
+    }
+    appender.start()
+    val logger = LogManager
+      .getLogger("org.apache.spark.sql.catalyst.analysis.HintErrorLogger")
+      .asInstanceOf[Logger]
+    val level = logger.getLevel
+    logger.addAppender(appender)
+    logger.setLevel(Level.WARN)
+    try {
+      val emb = Tables.embeddings(spark, sfDir)
+      val q = emb.filter(col("vec_id") < 5)
+      val dir = java.nio.file.Files.createTempDirectory("graft-hint-probe-")
+      try {
+        graft.ext.VectorIndex.build(emb, dir.resolve("index").toString)
+        graft.ext.VectorIndex.searchFlat(spark, dir.resolve("index").toString,
+          q, k = 5).collect()
+        graft.ext.VectorIndex.searchAdc(spark, dir.resolve("index").toString,
+          q, k = 5).collect()
+      } finally graft.plans.Pipeline.deleteRecursively(dir)
+      Similarity.ivfTopK(emb, q, k = 5).collect()
+      Similarity.ivfPqTopK(emb, q, k = 5).collect()
+      Similarity.ivfKMeans(emb, numCells = 16, iters = 1).collect()
+    } finally {
+      logger.removeAppender(appender)
+      logger.setLevel(level)
+      appender.stop()
+    }
+    assert(warnings.isEmpty, s"stray hints: ${warnings.toArray.mkString("; ")}")
+  }
+
   test("cell assignment over an array<int> centroid table takes the join path and matches the same centroids as doubles") {
     val emb = embDf(Seq((1L, Seq(1f, 0f)), (2L, Seq(0f, 1f)), (3L, Seq(0.9f, 0.2f))))
       .select(col("vec_id").as("cid"), col("embedding").as("ce"))

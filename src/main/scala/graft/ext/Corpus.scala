@@ -273,18 +273,18 @@ object Corpus {
   private def contaminationImpl(docs: DataFrame, benchSources: Seq[String],
                                 w: Int, maxShingleFreq: Long,
                                 threshold: Double,
-                                bloomGate: Option[(Int, Int)]): DataFrame = {
-    val bsh = Dedup.shingles(
-      docs.filter(col("source").isin(benchSources: _*)), w).persist()
-    val tsh = Dedup.shingles(
-      docs.filter(!col("source").isin(benchSources: _*)), w).persist()
-    try {
+                                bloomGate: Option[(Int, Int)]): DataFrame =
+    graft.Stage.scoped { st =>
+      val bsh = st.cache(Dedup.shingles(
+        docs.filter(col("source").isin(benchSources: _*)), w))
+      val tsh = st.cache(Dedup.shingles(
+        docs.filter(!col("source").isin(benchSources: _*)), w))
       val keep = bsh.unionAll(tsh)
         .groupBy(col("sh")).agg(count(lit(1)).as("f"))
         .filter(col("f") <= maxShingleFreq)
         .select(col("sh"))
-      val bkeep = bsh.join(keep, Seq("sh"), "left_semi")
-        .withColumnRenamed("doc_id", "bench_doc").persist()
+      val bkeep = st.cache(bsh.join(keep, Seq("sh"), "left_semi")
+        .withColumnRenamed("doc_id", "bench_doc"))
       val tkeepAll = tsh.join(keep, Seq("sh"), "left_semi")
         .withColumnRenamed("doc_id", "train_doc")
       val tkeep = bloomGate match {
@@ -297,24 +297,18 @@ object Corpus {
             Sketches.bloomGateColumn(bloom, col("sh"), bits, hashes))
         case None => tkeepAll
       }
-      try {
-        val bsize = bkeep.groupBy(col("bench_doc")).agg(count(lit(1)).as("n"))
-        bkeep.join(tkeep, Seq("sh"))
-          .groupBy(col("bench_doc"), col("train_doc"))
-          .agg(count(lit(1)).as("n_shared"))
-          .join(bsize, Seq("bench_doc"))
-          .withColumn("score",
-            col("n_shared").cast("double") / col("n").cast("double"))
-          .filter(col("score") >= threshold)
-          .select(col("bench_doc"), col("train_doc"), col("n_shared"),
-            col("score"))
-          .localCheckpoint(eager = true)
-      } finally bkeep.unpersist(blocking = false)
-    } finally {
-      bsh.unpersist(blocking = false)
-      tsh.unpersist(blocking = false)
+      val bsize = bkeep.groupBy(col("bench_doc")).agg(count(lit(1)).as("n"))
+      bkeep.join(tkeep, Seq("sh"))
+        .groupBy(col("bench_doc"), col("train_doc"))
+        .agg(count(lit(1)).as("n_shared"))
+        .join(bsize, Seq("bench_doc"))
+        .withColumn("score",
+          col("n_shared").cast("double") / col("n").cast("double"))
+        .filter(col("score") >= threshold)
+        .select(col("bench_doc"), col("train_doc"), col("n_shared"),
+          col("score"))
+        .localCheckpoint(eager = true)
     }
-  }
 
   /** APPLY a contamination sweep: drop every training document the
     * sweep flagged (overlap with any benchmark doc at or above the

@@ -2,6 +2,7 @@ package graft.ext
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.Stage
 
 /** Deduplication operators for a training-data pipeline: exact,
   * n-gram-Jaccard near-dup, MinHash+LSH, SimHash.
@@ -23,17 +24,19 @@ import org.apache.spark.sql.functions._
   *
   * Materialization note: every near-dup pipeline that reuses a
   * corpus-scale intermediate (the shingle / positional-shingle table,
-  * reused 3-4× inside one job) stages it as parquet in a temp directory
-  * it creates and owns ([[staged]]), read back by each consumer:
+  * reused 3-4× inside one job) stages it with [[graft.Stage.parquet]]:
   * distributed storage, recomputable on executor loss, zero executor
-  * block memory. The staged table is deleted when the operator returns
-  * or throws. Small RESULTS (pair lists, span tables) are eagerly
-  * materialized with a lineage-truncating local checkpoint; that
-  * checkpoint is NOT resilient to executor loss, which is the priced
-  * trade for a driver-consumed, result-sized frame only — anything
-  * corpus-sized is staged parquet (see PLANS.md "localCheckpoint
-  * resilience" table). The rewrites' corpus-sized output is a parquet
-  * table too, kept for the returned frame until JVM exit.
+  * block memory, deleted when the operator returns or throws.
+  * Batch-bounded intermediates (a batch's band or signature table,
+  * label snapshots) are cached in a [[graft.Stage.scoped]] scope and
+  * released the same way. Small RESULTS (pair lists, span tables) are
+  * eagerly materialized with a lineage-truncating local checkpoint;
+  * that checkpoint is NOT resilient to executor loss, which is the
+  * priced trade for a driver-consumed, result-sized frame only —
+  * anything corpus-sized is staged parquet (see PLANS.md
+  * "localCheckpoint resilience" table). The rewrites' corpus-sized
+  * output is a parquet table too, kept for the returned frame until
+  * JVM exit.
   */
 object Dedup {
 
@@ -115,7 +118,7 @@ object Dedup {
     // the staged shingle table is read back by ranking, sizing and
     // verification; the pair result is tiny, and eager materialization
     // truncates lineage before the staged files go
-    staged("graft-ngram-stage-", shingles(docs, w)) { (tri, _) =>
+    Stage.parquet("graft-ngram-stage-", shingles(docs, w)) { (tri, _) =>
       ngramJaccardOn(tri, threshold).localCheckpoint(eager = true)
     }
 
@@ -202,7 +205,7 @@ object Dedup {
     require(maxBucketSize >= 2, "a cap below 2 suppresses every pair")
     // the ngramJaccard staging discipline: banding, sizing and
     // verification read the staged shingle table back
-    staged("graft-lsh-stage-", shingles(docs, w)) { (tri, _) =>
+    Stage.parquet("graft-lsh-stage-", shingles(docs, w)) { (tri, _) =>
       minhashLshOn(tri, numHashes, bandWidth, threshold, maxBucketSize)
         .localCheckpoint(eager = true)
     }
@@ -512,15 +515,15 @@ object Dedup {
     val layout = bandLayout(w, numHashes, bandWidth)
     requireLayoutCols(seenBands, "seen band table", layout)
     Stamp.require(seenBands, "seen band table", layout)
-    val bands = bandTable(incoming, w, numHashes, bandWidth).persist()
-    try admitCore(incoming, bands, seenBands)
-    finally bands.unpersist(blocking = false)
+    Stage.scoped(st => admitCore(incoming,
+      st.cache(bandTable(incoming, w, numHashes, bandWidth)), seenBands))
   }
 
   /** The admission decision given precomputed incoming bands: reject on
     * any bucket collision with the seen state or with a smaller-id
-    * sibling of the batch. `bands` must be persisted by the caller (it
-    * is consumed three times).
+    * sibling of the batch. `bands` is consumed three times, so the
+    * caller caches it in a [[graft.Stage.scoped]] scope that outlives
+    * this call (the result is eagerly materialized).
     */
   private def admitCore(incoming: DataFrame, bands: DataFrame,
                         seenBands: DataFrame): DataFrame = {
@@ -571,13 +574,13 @@ object Dedup {
                                   bandWidth: Int = 2,
                                   excludeIds: Option[DataFrame] = None): DataFrame = {
     val h = openBandState(spark, stateDir, w, numHashes, bandWidth)
-    val bands = bandTable(incoming, w, numHashes, bandWidth).persist()
-    try {
+    Stage.scoped { st =>
+      val bands = st.cache(bandTable(incoming, w, numHashes, bandWidth))
       val seen0 = readBandState(h, bands)
       val seen = excludeIds.fold(seen0)(ids =>
         seen0.join(ids.select(col("doc_id")), Seq("doc_id"), "left_anti"))
       admitCore(incoming, bands, seen)
-    } finally bands.unpersist(blocking = false)
+    }
   }
 
   /** The per-micro-batch admission TRANSACTION for foreachBatch
@@ -617,45 +620,43 @@ object Dedup {
                             numHashes: Int = 8, bandWidth: Int = 2,
                             excludeIds: Option[DataFrame] = None,
                             admittedTs: Option[Long] = None): DataFrame = {
-    val bands = bandTable(batch, w, numHashes, bandWidth).persist()
-    try {
+    Stage.scoped { st =>
+      val bands = st.cache(bandTable(batch, w, numHashes, bandWidth))
       val stateExists =
         java.nio.file.Files.exists(java.nio.file.Paths.get(stateDir))
       val h =
         if (stateExists) openBandState(spark, stateDir, w, numHashes, bandWidth)
         else BandStateHandle(bandTable(batch.limit(0), w, numHashes, bandWidth), None)
-      val seen0 = readBandState(h, bands).persist()
-      try {
-        val seen = excludeIds.fold(seen0: DataFrame)(ids =>
-          seen0.join(ids.select(col("doc_id")), Seq("doc_id"), "left_anti"))
-        val admitted = admitCore(batch, bands, seen)
-        // all-or-nothing stamping per state dir (see scaladoc)
-        if (stateExists) {
-          val stateStamped = h.state.columns.contains("admitted_ts")
-          require(stateStamped == admittedTs.isDefined,
-            if (stateStamped)
-              s"state $stateDir is admitted_ts-stamped but this append " +
-                "carries no stamp — pass the batch's event time, or the " +
-                "appended rows silently fall out of every age expiry"
-            else
-              s"state $stateDir is unstamped but this append carries a " +
-                "stamp — mixed schemas would drop the stamp on read; " +
-                "rebuild the state stamped, or append unstamped")
-        }
-        val delta0 = bands
-          .join(admitted.select(col("doc_id")), Seq("doc_id"), "left_semi")
-          .join(seen0.select(col("doc_id"), col("band")),
-            Seq("doc_id", "band"), "left_anti")
-        val delta = admittedTs.fold(delta0)(ts =>
-          delta0.withColumn("admitted_ts", lit(ts)))
-        if (!stateExists) writeBandState(delta, stateDir, "append")
-        else h.prefixes match {
-          case Some(p) => writeBandState(delta, stateDir, "append", p)
-          case None    => delta.write.mode("append").parquet(stateDir)
-        }
-        admitted
-      } finally seen0.unpersist(blocking = false)
-    } finally bands.unpersist(blocking = false)
+      val seen0 = st.cache(readBandState(h, bands))
+      val seen = excludeIds.fold(seen0)(ids =>
+        seen0.join(ids.select(col("doc_id")), Seq("doc_id"), "left_anti"))
+      val admitted = admitCore(batch, bands, seen)
+      // all-or-nothing stamping per state dir (see scaladoc)
+      if (stateExists) {
+        val stateStamped = h.state.columns.contains("admitted_ts")
+        require(stateStamped == admittedTs.isDefined,
+          if (stateStamped)
+            s"state $stateDir is admitted_ts-stamped but this append " +
+              "carries no stamp — pass the batch's event time, or the " +
+              "appended rows silently fall out of every age expiry"
+          else
+            s"state $stateDir is unstamped but this append carries a " +
+              "stamp — mixed schemas would drop the stamp on read; " +
+              "rebuild the state stamped, or append unstamped")
+      }
+      val delta0 = bands
+        .join(admitted.select(col("doc_id")), Seq("doc_id"), "left_semi")
+        .join(seen0.select(col("doc_id"), col("band")),
+          Seq("doc_id", "band"), "left_anti")
+      val delta = admittedTs.fold(delta0)(ts =>
+        delta0.withColumn("admitted_ts", lit(ts)))
+      if (!stateExists) writeBandState(delta, stateDir, "append")
+      else h.prefixes match {
+        case Some(p) => writeBandState(delta, stateDir, "append", p)
+        case None    => delta.write.mode("append").parquet(stateDir)
+      }
+      admitted
+    }
   }
 
   /** GLOBAL near-dup compaction — the batch complement of streaming
@@ -808,9 +809,8 @@ object Dedup {
     Stamp.require(seenSigs, "seen signature table", layout.take(2))
     // incoming signatures computed ONCE; bands derived from them (the
     // same derivation a warehouse runs when it persists both tables).
-    val sigs = minhashesOf(shingles(incoming, w), numHashes).persist()
-    var cached: Seq[DataFrame] = Nil
-    try {
+    Stage.scoped { st =>
+      val sigs = st.cache(minhashesOf(shingles(incoming, w), numHashes))
       val bands = bandsFromSigs(sigs, numHashes, bandWidth)
       val mhCols = (0 until numHashes).map(k => s"mh$k")
       val incSig = sigs.select(col("doc_id") +:
@@ -834,13 +834,10 @@ object Dedup {
       // batch-fanout-bounded.
       val batchPart = bands
         .select(col("band"), col("bkey"), col("doc_id").as("partner_id"))
-      val seenProbed = seenBands
+      val seenProbed = st.cache(seenBands
         .join(batchPart.select(col("band"), col("bkey")).distinct(),
           Seq("band", "bkey"), "left_semi")
-        .select(col("band"), col("bkey"), col("doc_id").as("partner_id"))
-        .persist()
-      cached = Seq(seenProbed)
-      val docBands = bands
+        .select(col("band"), col("bkey"), col("doc_id").as("partner_id")))
       // candidates: per-(incoming, partner) pairs — NOT deduped to
       // buckets, the verification needs the partner id. Within-batch, a
       // doc is rejected only against a SMALLER-id sibling whose
@@ -869,22 +866,22 @@ object Dedup {
         .filter(col("_bsz") > maxPartners).limit(1).count() > 0
       val rejected =
         if (!anyHot)
-          verify(seenCands(docBands, seenProbed), seenSigs)
-            .unionAll(verify(batchCands(docBands, batchPart), sigs))
+          verify(seenCands(bands, seenProbed), seenSigs)
+            .unionAll(verify(batchCands(bands, batchPart), sigs))
             .distinct()
         else {
           val (seenP1, seenOvf) = splitPartners(seenProbed, maxPartners)
           val (batP1, batOvf) = splitPartners(batchPart, maxPartners)
           // phase 1: cap-smallest partners per bucket. Materialized —
           // the phase-2 expansion keys off who is still unrejected.
-          val rej1 = verify(seenCands(docBands, seenP1), seenSigs)
-            .unionAll(verify(batchCands(docBands, batP1), sigs))
+          val rej1 = verify(seenCands(bands, seenP1), seenSigs)
+            .unionAll(verify(batchCands(bands, batP1), sigs))
             .distinct()
             .localCheckpoint(eager = true)
           // phase 2: remaining partners of overflowed buckets, surviving
           // docs only — under a flood phase 1 already rejected the hot
           // bucket's members against its min ids, so this leg is empty.
-          val survivors = docBands.join(rej1, Seq("doc_id"), "left_anti")
+          val survivors = bands.join(rej1, Seq("doc_id"), "left_anti")
           val rej2 = verify(seenCands(survivors, seenOvf), seenSigs)
             .unionAll(verify(batchCands(survivors, batOvf), sigs))
             .distinct()
@@ -892,9 +889,6 @@ object Dedup {
         }
       incoming.join(rejected, Seq("doc_id"), "left_anti")
         .localCheckpoint(eager = true)
-    } finally {
-      sigs.unpersist(blocking = false)
-      cached.foreach(_.unpersist(blocking = false))
     }
   }
 
@@ -1018,54 +1012,47 @@ object Dedup {
     * adopts the smallest label among itself and its neighbors, and the
     * loop stops at fixpoint. Rounds needed = the component DIAMETER
     * (near-dup clusters are small and dense, so 2–3 in practice), each
-    * round one distributed join+aggregate; per-round localCheckpoint
-    * truncates the growing lineage — the standard iterative-algorithm
-    * shape on Spark. The result is iteration-order independent (a
+    * round one distributed join+aggregate whose label snapshot is
+    * cached, so a round never recomputes its predecessors — the
+    * standard iterative-algorithm shape on Spark. The result is iteration-order independent (a
     * fixpoint), so the DuckDB oracle can compute it with a recursive
     * reachability CTE instead.
     */
-  def clusterPairs(pairs: DataFrame): DataFrame = {
-    // persist (not checkpoint) each round's labels and RELEASE the
+  def clusterPairs(pairs: DataFrame): DataFrame = Stage.scoped { st =>
+    // cache (not checkpoint) each round's labels and RELEASE the
     // superseded round as soon as its successor is materialized — the
     // loop holds at most edges + two label snapshots at any moment.
     // Lineage grows one join per round, bounded by the component
     // diameter; the cached snapshot short-circuits recompute either way.
-    val edges = pairs.select(col("d1").as("a"), col("d2").as("b"))
-      .unionByName(pairs.select(col("d2").as("a"), col("d1").as("b")))
-      .persist()
-    var labels = edges.select(col("a").as("node")).distinct()
+    val edges = st.cache(pairs.select(col("d1").as("a"), col("d2").as("b"))
+      .unionByName(pairs.select(col("d2").as("a"), col("d1").as("b"))))
+    var labels = st.cache(edges.select(col("a").as("node")).distinct()
       .withColumn("label", col("node"))
       // schema symmetry with `next` only — the loop rebuilds chg each
       // round and never reads the seed's value.
-      .withColumn("chg", lit(false))
-      .persist()
+      .withColumn("chg", lit(false)))
     var changed = 1L
     while (changed > 0) {
       val neighborMin = edges
         .join(labels.select(col("node").as("b"), col("label").as("nl")), "b")
         .groupBy(col("a").as("node")).agg(min(col("nl")).as("nmin"))
       // carry a changed-this-round flag INSIDE the label snapshot: the
-      // convergence check is then a filter+count over the same persisted
+      // convergence check is then a filter+count over the same cached
       // frame — ONE job per round materializes next AND counts changes
       // (labels only ever decrease, so changed ⟺ nmin < label), instead
       // of a second join-against-previous action.
-      val next = labels.join(neighborMin, Seq("node"), "left")
+      val next = st.cache(labels.join(neighborMin, Seq("node"), "left")
         .select(col("node"),
           least(col("label"), coalesce(col("nmin"), col("label"))).as("label"),
-          (coalesce(col("nmin"), col("label")) < col("label")).as("chg"))
-        .persist()
+          (coalesce(col("nmin"), col("label")) < col("label")).as("chg")))
       changed = next.filter(col("chg")).count() // materializes next
-      labels.unpersist(blocking = false)
+      st.release(labels)
       labels = next
     }
-    // one eager result materialization, then drop every intermediate —
-    // the same release discipline as the pair pipelines above.
-    try labels.select(col("node").as("doc_id"), col("label").as("cluster_id"))
+    // one eager result materialization; the scope then drops every
+    // intermediate
+    labels.select(col("node").as("doc_id"), col("label").as("cluster_id"))
       .localCheckpoint(eager = true)
-    finally {
-      labels.unpersist(blocking = false)
-      edges.unpersist(blocking = false)
-    }
   }
 
   /** Canonical representative per dedup cluster chosen by QUALITY, not
@@ -1177,7 +1164,7 @@ object Dedup {
     // the corpus-token-scale positional-shingle table is read back by the
     // duplicated-set groupBy and the join back; the per-doc result is
     // tiny next to it
-    staged("graft-span-stage-", positionalShingles(docs, w)) { (pos, _) =>
+    Stage.parquet("graft-span-stage-", positionalShingles(docs, w)) { (pos, _) =>
       repeatedSpansOn(docs, pos, w, minDocs).localCheckpoint(eager = true)
     }
 
@@ -1248,7 +1235,7 @@ object Dedup {
     */
   def removeCrossDocSpans(docs: DataFrame, w: Int = 8,
                           minDocs: Int = 2): DataFrame =
-    staged("graft-span-rewrite-", positionalShingles(docs, w)) { (pos, out) =>
+    Stage.parquet("graft-span-rewrite-", positionalShingles(docs, w)) { (pos, out) =>
       removeCrossDocSpansOn(docs, pos, w, minDocs).write.parquet(out)
       docs.sparkSession.read.parquet(out)
     }
@@ -1325,7 +1312,7 @@ object Dedup {
         "span covers at least one full window)")
     // staged as in repeatedSpans: the duplicated-set groupBy and the
     // coverage join read the positional shingles back
-    staged("graft-maxspan-stage-", positionalShingles(docs, w)) { (pos, _) =>
+    Stage.parquet("graft-maxspan-stage-", positionalShingles(docs, w)) { (pos, _) =>
       maximalRepeatedSpansOn(pos, w, minDocs, minLen)
         .localCheckpoint(eager = true)
     }
@@ -1378,35 +1365,9 @@ object Dedup {
           explode(sequence(col("span_start"), col("span_end"))).as("q"))
       rebuildWithoutPositions(positionalTokens(docs), cut)
     }
-    staged("graft-maxspan-rewrite-", positionalShingles(docs, w)) { (pos, out) =>
+    Stage.parquet("graft-maxspan-rewrite-", positionalShingles(docs, w)) { (pos, out) =>
       rewritten(pos).write.parquet(out)
       docs.sparkSession.read.parquet(out)
-    }
-  }
-
-  /** Stages `table` as parquet in a fresh temp directory and runs `use`
-    * over the read-back; the staged table is deleted when `use` returns.
-    * `use` also gets an unused path in that directory for an output
-    * that must outlive the call (a rewritten corpus its frame reads): if
-    * `use` wrote there, the directory stays with that output alone
-    * (until JVM exit), otherwise it goes. When `use` or the staging
-    * write throws, the whole directory goes.
-    */
-  private def staged[T](prefix: String, table: DataFrame)(
-      use: (DataFrame, String) => T): T = {
-    val dir = graft.TempDirs.create(prefix)
-    val (stage, out) = (dir.resolve("stage"), dir.resolve("out"))
-    try {
-      table.write.parquet(stage.toString)
-      val result = use(table.sparkSession.read.parquet(stage.toString),
-        out.toString)
-      graft.plans.Pipeline.deleteRecursively(
-        if (java.nio.file.Files.exists(out)) stage else dir)
-      result
-    } catch {
-      case e: Throwable =>
-        graft.plans.Pipeline.deleteRecursively(dir)
-        throw e
     }
   }
 

@@ -556,44 +556,43 @@ object Similarity {
                          dim: Int = 64, iters: Int = 2): DataFrame = {
     require(iters >= 0, "pqCodebooksTrained: iters must be non-negative")
     // sv is referenced three times per iteration (assignment, then twice
-    // in the mean join's two lineages); persisted so the corpus explode
-    // runs once, not 3×iters times. Each iteration's jobs run eagerly
-    // (the codebook localCheckpoint below), so the cache is exercised
-    // inside this call and released before returning.
-    val sv = subvectors(emb.select(col("vec_id"), col("embedding")),
-      "vec_id", m, dim / m)
-    if (iters >= 1) sv.persist()
-    var cb = pqCodebooks(emb, m, numCodes, dim)
-      .select(col("sub"), col("code"),
-        transform(col("codeword"), x => x.cast("double")).as("codeword"))
-    try for (_ <- 1 to iters) {
-      val enc = sv.join(broadcast(cb), Seq("sub"))
-        .withColumn("d2", l2sq(col("sv"), col("codeword")))
-        .groupBy(col("vec_id"), col("sub"))
-        .agg(min(struct(col("d2"), col("code"))).as("b"))
-        .select(col("vec_id"), col("sub"), col("b.code").as("code"))
-      val means = enc.join(sv, Seq("vec_id", "sub"))
-        .select(col("sub"), col("code"), posexplode(col("sv")).as(Seq("p0", "x")))
-        .groupBy(col("sub"), col("code"), (col("p0") + 1).as("pos"))
-        .agg(count(lit(1)).as("n"),
-          sum(round(col("x").cast("double") * 1000000).cast("long")).as("fx"))
-        .select(col("sub"), col("code"), col("pos"),
-          (col("fx").cast("double") /
-            (col("n").cast("double") * lit(1000000.0))).as("c_val"))
-      val refreshed = means.groupBy(col("sub"), col("code"))
-        .agg(array_sort(collect_list(struct(col("pos"), col("c_val")))).as("pc"))
+    // in the mean join's two lineages); cached so the corpus explode
+    // runs once, not 3×iters times.
+    graft.Stage.scoped { st =>
+      val sv = st.cache(subvectors(emb.select(col("vec_id"), col("embedding")),
+        "vec_id", m, dim / m))
+      var cb = pqCodebooks(emb, m, numCodes, dim)
         .select(col("sub"), col("code"),
-          transform(col("pc"), x => x.getField("c_val")).as("codeword"))
-      // the codebook is m×k rows; checkpointing it each iteration keeps
-      // the chained plan linear (each cb is referenced 3× downstream —
-      // assignment broadcast, mean join, carry-forward anti-join — and
-      // without the cut the recompute tree doubles per iteration).
-      cb = refreshed.unionByName(
-        cb.join(refreshed.select(col("sub"), col("code")),
-          Seq("sub", "code"), "left_anti"))
-        .localCheckpoint(eager = true)
-    } finally if (iters >= 1) sv.unpersist(blocking = false)
-    cb
+          transform(col("codeword"), x => x.cast("double")).as("codeword"))
+      for (_ <- 1 to iters) {
+        val enc = sv.join(broadcast(cb), Seq("sub"))
+          .withColumn("d2", l2sq(col("sv"), col("codeword")))
+          .groupBy(col("vec_id"), col("sub"))
+          .agg(min(struct(col("d2"), col("code"))).as("b"))
+          .select(col("vec_id"), col("sub"), col("b.code").as("code"))
+        val means = enc.join(sv, Seq("vec_id", "sub"))
+          .select(col("sub"), col("code"), posexplode(col("sv")).as(Seq("p0", "x")))
+          .groupBy(col("sub"), col("code"), (col("p0") + 1).as("pos"))
+          .agg(count(lit(1)).as("n"),
+            sum(round(col("x").cast("double") * 1000000).cast("long")).as("fx"))
+          .select(col("sub"), col("code"), col("pos"),
+            (col("fx").cast("double") /
+              (col("n").cast("double") * lit(1000000.0))).as("c_val"))
+        val refreshed = means.groupBy(col("sub"), col("code"))
+          .agg(array_sort(collect_list(struct(col("pos"), col("c_val")))).as("pc"))
+          .select(col("sub"), col("code"),
+            transform(col("pc"), x => x.getField("c_val")).as("codeword"))
+        // the codebook is m×k rows; checkpointing it each iteration keeps
+        // the chained plan linear (each cb is referenced 3× downstream —
+        // assignment broadcast, mean join, carry-forward anti-join — and
+        // without the cut the recompute tree doubles per iteration).
+        cb = refreshed.unionByName(
+          cb.join(refreshed.select(col("sub"), col("code")),
+            Seq("sub", "code"), "left_anti"))
+          .localCheckpoint(eager = true)
+      }
+      cb
+    }
   }
 
   /** PQ encoding: each vector compresses to `m` small code ids — nearest

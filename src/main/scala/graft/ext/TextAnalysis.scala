@@ -250,17 +250,16 @@ object TextAnalysis {
     require(rounds >= 1, "bpeMerges: at least one merge round")
     val spark = docs.sparkSession
     import spark.implicits._
-    // word-frequency table: BPE's working set (distinct words, not the
-    // corpus). Empty tokens (double spaces) carry no symbols — dropped.
-    var words = docs.select(explode(toks).as("word"))
-      .filter(length(col("word")) > 0)
-      .groupBy(col("word")).agg(count(lit(1)).as("cnt"))
-      .select(concat(lit(" "),
-        array_join(split(col("word"), ""), " "), lit(" ")).as("seq"),
-        col("cnt"))
-      .persist()
-    val merges = Seq.newBuilder[(Int, String, String, Long)]
-    try {
+    graft.Stage.scoped { st =>
+      // word-frequency table: BPE's working set (distinct words, not the
+      // corpus). Empty tokens (double spaces) carry no symbols — dropped.
+      var words = st.cache(docs.select(explode(toks).as("word"))
+        .filter(length(col("word")) > 0)
+        .groupBy(col("word")).agg(count(lit(1)).as("cnt"))
+        .select(concat(lit(" "),
+          array_join(split(col("word"), ""), " "), lit(" ")).as("seq"),
+          col("cnt")))
+      val merges = Seq.newBuilder[(Int, String, String, Long)]
       for (r <- 1 to rounds) {
         // Typed flatMap (round 18): the pair projection ran as
         // explode(transform(sequence(...))) — interpreted per symbol,
@@ -295,15 +294,15 @@ object TextAnalysis {
         val (p1, p2, pc) = (best(0).getString(0), best(0).getString(1),
           best(0).getLong(2))
         merges += ((r, p1, p2, pc))
-        val next = words.withColumn("seq",
+        val next = st.cache(words.withColumn("seq",
           org.apache.spark.sql.functions.replace(col("seq"),
-            lit(s" $p1 $p2 "), lit(s" $p1$p2 "))).persist()
+            lit(s" $p1 $p2 "), lit(s" $p1$p2 "))))
         next.count() // materialize before releasing the predecessor
-        words.unpersist(blocking = false)
+        st.release(words)
         words = next
       }
       merged(spark, merges.result())
-    } finally words.unpersist(blocking = false)
+    }
   }
 
   private def merged(spark: SparkSession,

@@ -155,10 +155,10 @@ object VectorIndex {
                            codebooks: DataFrame, l: Layout,
                            overwrite: Boolean): Unit = {
     val mode = if (overwrite) "overwrite" else "append"
-    val assigned = Similarity.assignCells(
-      vecs.select(col("vec_id"), col("embedding")),
-      "vec_id", "embedding", centroids).persist()
-    try {
+    graft.Stage.scoped { st =>
+      val assigned = st.cache(Similarity.assignCells(
+        vecs.select(col("vec_id"), col("embedding")),
+        "vec_id", "embedding", centroids))
       // cluster by cell before the partitioned write: each write batch
       // lands ~one file per cell directory instead of one per (task ×
       // cell) — the small-file blowup a partitioned sink otherwise pays.
@@ -182,7 +182,7 @@ object VectorIndex {
       stamp(assigned.select(col("vec_id"), col("embedding"), col("cell")), l)
         .repartition(l.numCells, col("cell"))
         .write.mode(mode).partitionBy("cell").parquet(s"$dir/cells")
-    } finally assigned.unpersist(blocking = false)
+    }
   }
 
   /** RETENTION — the delete half of the lifecycle ([[append]]'s dual,

@@ -207,30 +207,27 @@ object Pipeline {
     // clean (deduplicating them INTO the corpus would silently do the
     // sweep's job on cross-side near-dups and leave it nothing to find)
     val train = docs.filter(!col("source").isin(benchSrc: _*))
-    // Each stage's DECISION (which ids survive) persists as an ID-SIZED
+    // Each stage's DECISION (which ids survive) is cached as an ID-SIZED
     // frame; the document frame is re-derived per use as one documents
     // scan ⋈ cached ids. Before this (round-10 audit), lazy lineage
     // recomputed nearKept twice and its MinHash/LSH/CC ancestry up to
     // four times through the downstream reuses. Ids are orders of
-    // magnitude below the corpus bytes at 100 TB (persist spills to
-    // disk if not); the TEXT is never persisted. `probe` observes each
+    // magnitude below the corpus bytes at 100 TB (the cache spills to
+    // disk if not); the TEXT is never cached. `probe` observes each
     // pivot for stage pricing (Profile --corpusetl); default no-op.
-    val gatedIds = TextAnalysis.qualityScore(train)
-      .filter(col("n_tokens") >= 5 && col("n_stopwords") >= 1 &&
-        col("n_distinct_tokens") * 4 >= col("n_tokens"))
-      .select(col("doc_id")).persist()
-    val pivots = scala.collection.mutable.ListBuffer[DataFrame](gatedIds)
-    try {
+    graft.Stage.scoped { st =>
+      val gatedIds = st.cache(TextAnalysis.qualityScore(train)
+        .filter(col("n_tokens") >= 5 && col("n_stopwords") >= 1 &&
+          col("n_distinct_tokens") * 4 >= col("n_tokens"))
+        .select(col("doc_id")))
       probe("quality_gate_ids", gatedIds)
       val gated = train.join(gatedIds, Seq("doc_id"), "left_semi")
-      val exactIds = Dedup.exact(gated).select(col("keeper").as("doc_id")).persist()
-      pivots += exactIds
+      val exactIds = st.cache(Dedup.exact(gated).select(col("keeper").as("doc_id")))
       probe("exact_dedup_ids", exactIds)
       val exactKept = train.join(exactIds, Seq("doc_id"), "left_semi")
-      val clusters = Dedup.clusterPairs(
+      val clusters = st.cache(Dedup.clusterPairs(
         Dedup.minhashLsh(exactKept, w = 5, numHashes = 8, bandWidth = 2,
-          threshold = 0.5)).persist()
-      pivots += clusters
+          threshold = 0.5)))
       probe("near_dup_clusters", clusters)
       val keepers = Dedup.keepBestPerCluster(clusters,
         exactKept.select(col("doc_id"), col("n_chars")), "n_chars")
@@ -238,17 +235,15 @@ object Pipeline {
         .join(keepers.select(col("cluster_id"), col("keeper")), Seq("cluster_id"))
         .filter(col("doc_id") =!= col("keeper"))
         .select(col("doc_id"))
-      val survivorIds = exactIds.join(losers, Seq("doc_id"), "left_anti").persist()
-      pivots += survivorIds
+      val survivorIds = st.cache(exactIds.join(losers, Seq("doc_id"), "left_anti"))
       probe("near_dedup_survivor_ids", survivorIds)
       val nearKept = train.join(survivorIds, Seq("doc_id"), "left_semi")
       // sweep = raw bench docs ∪ surviving train docs; the result is read
       // twice (apply + audit table) — keep the sweep result, not the
       // documents, in memory
-      val flags = Corpus.contaminationBloomGated(
+      val flags = st.cache(Corpus.contaminationBloomGated(
         docs.filter(col("source").isin(benchSrc: _*)).unionByName(nearKept),
-        benchSrc, w = 5, maxShingleFreq = 8, threshold = 0.3).persist()
-      pivots += flags
+        benchSrc, w = 5, maxShingleFreq = 8, threshold = 0.3))
       probe("contamination_flags", flags)
       val clean = Corpus.decontaminate(nearKept, flags, benchSrc)
       val released = Corpus.splitAssign(
@@ -267,7 +262,7 @@ object Pipeline {
         promoteStaged(warehouseDir, staging, tables)
         tables
       } finally deleteRecursively(staging)
-    } finally pivots.foreach(_.unpersist(blocking = false))
+    }
   }
 
   /** S8: recompute-and-overwrite mart refresh (`REFRESH MATERIALIZED

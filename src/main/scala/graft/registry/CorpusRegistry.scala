@@ -19,21 +19,6 @@ import Shared._
   */
 private[graft] object CorpusRegistry {
 
-  /** The registered admission configuration — ONE construction shared
-    * by the report and its calibration rollup: bench sources src0/src1,
-    * 2^18-bit 4-hash Bloom, 0.3 shingle-hit threshold, 0.42 semantic
-    * cosine, LM floor −3.40, NB allowed label 'en'. Models frozen ONCE
-    * (the admissionPipeline discipline): the report's gate branches
-    * each consume the model frames, and an unmaterialized model
-    * subtree would retrain per consumer branch.
-    */
-  /** The admission ensemble with CALLER-SUPPLIED model frames — shared
-    * by the frozen-frame form ([[admissionReportFor]]) and the
-    * persisted-state form (corpus_admission_report_state); everything
-    * except the two models (Bloom gate, bench signatures, near-dup
-    * band state) is built identically so the two registered queries
-    * differ ONLY in where the models come from.
-    */
   /** The Bloom shingle gate + banded semantic config, built ONCE from
     * the FULL corpus — the frozen gate artifacts every admission
     * variant (frozen-frame, persisted-state, compacted-state,
@@ -75,6 +60,16 @@ private[graft] object CorpusRegistry {
     s.read.parquet(dir)
   }
 
+  /** The registered admission ensemble with CALLER-SUPPLIED model
+    * frames: bench sources src0/src1, 2^18-bit 4-hash Bloom, 0.3
+    * shingle-hit threshold, 0.42 semantic cosine, LM floor −3.40, NB
+    * allowed label 'en'. Everything but the two models is built
+    * identically, so [[admissionReportFor]] and the persisted-state
+    * form (corpus_admission_report_state) differ ONLY in where the
+    * models come from. The report collects each model once (resolveLm /
+    * resolveNb) before its plan is built, so a model is passed
+    * unmaterialized.
+    */
   private def admissionReportWith(s: SparkSession, d: String,
                                   lmModel: DataFrame,
                                   nbModel: DataFrame,
@@ -116,10 +111,8 @@ private[graft] object CorpusRegistry {
   private[graft] def admissionReportFor(s: SparkSession, d: String): DataFrame = {
     val docs = Tables.documents(s, d)
     admissionReportWith(s, d,
-      lmModel = TextAnalysis.bigramLmTrain(docs)
-        .localCheckpoint(eager = true),
-      nbModel = graft.ext.Classifier.nbTrain(docs)
-        .localCheckpoint(eager = true))
+      lmModel = TextAnalysis.bigramLmTrain(docs),
+      nbModel = graft.ext.Classifier.nbTrain(docs))
   }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
@@ -502,15 +495,10 @@ private[graft] object CorpusRegistry {
       TextAnalysis.lmCountsBuild(docs.filter(col("doc_id") % 2 === 1))
         .write.parquet(s"$tmp/lm/batch_id=1")
       graft.ext.Classifier.nbCountsBuild(docs).write.parquet(s"$tmp/nb")
-      // derived models frozen ONCE before use — the admissionReportFor
-      // discipline (round 13: unmaterialized model frames let every
-      // consumer branch re-derive the model subtree)
       val lmModel = TextAnalysis.lmModelFromCounts(
-          graft.streaming.Streams.lmReadCounts(s, s"$tmp/lm"))
-        .localCheckpoint(eager = true)
+        graft.streaming.Streams.lmReadCounts(s, s"$tmp/lm"))
       val nbModel = graft.ext.Classifier.nbModelFromCounts(
-          s.read.parquet(s"$tmp/nb"))
-        .localCheckpoint(eager = true)
+        s.read.parquet(s"$tmp/nb"))
       detachAndClean(
         admissionReportWith(s, d, lmModel, nbModel)
           .orderBy("doc_id", "gate"),
@@ -748,10 +736,8 @@ private[graft] object CorpusRegistry {
           "twist would be a no-op; need a corpus where it binds")
       detachAndClean(
         admissionReportWith(s, d,
-            lmModel = TextAnalysis.bigramLmTrain(docs)
-              .localCheckpoint(eager = true),
-            nbModel = graft.ext.Classifier.nbTrain(docs)
-              .localCheckpoint(eager = true),
+            lmModel = TextAnalysis.bigramLmTrain(docs),
+            nbModel = graft.ext.Classifier.nbTrain(docs),
             seenBands = Some(s.read.parquet(stateDir)))
           .orderBy("doc_id", "gate"),
         tmp)
@@ -878,9 +864,7 @@ private[graft] object CorpusRegistry {
           "t1" -> docs.filter(col("doc_id") % 7 =!= 2)).foreach {
         case (name, rel) =>
           val lm = TextAnalysis.bigramLmTrain(rel)
-            .localCheckpoint(eager = true)
           val nb = graft.ext.Classifier.nbTrain(rel)
-            .localCheckpoint(eager = true)
           ext.Admission.report(shared, Seq("src0", "src1"), gate,
               contamThreshold = 0.3, semantic = sem, lmModel = lm,
               minAvgLp = -3.40, nbModel = nb, allowedLabels = Seq("en"),
@@ -950,9 +934,7 @@ private[graft] object CorpusRegistry {
           "t1" -> docs.filter(col("doc_id") % 7 =!= 2)).foreach {
         case (name, rel) =>
           val lm = TextAnalysis.bigramLmTrain(rel)
-            .localCheckpoint(eager = true)
           val nb = graft.ext.Classifier.nbTrain(rel)
-            .localCheckpoint(eager = true)
           ext.Admission.report(shared, Seq("src0", "src1"), gate,
               contamThreshold = 0.3, semantic = sem, lmModel = lm,
               minAvgLp = -3.40, nbModel = nb, allowedLabels = Seq("en"),

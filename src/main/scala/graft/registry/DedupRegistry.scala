@@ -251,21 +251,20 @@ private[graft] object DedupRegistry {
       val incoming = docs.filter(!col("source").isin(seenSrc: _*))
       // the seen-side shingle→minhash pipeline runs ONCE: signatures are
       // the state, bands a derived projection (what a warehouse persists
-      // vs recomputes); persist released after the eager checkpoint in
-      // the operator. MATERIALIZE the cache before anything reads it:
+      // vs recomputes). MATERIALIZE the cache before anything reads it:
       // bandTableFromSignatures and the operator's layout validation each
       // run one-row probe jobs, and against a lazily-cached frame every
       // probe re-ran a partial shingle→minhash pipeline (the r7 bench
       // doubling) — one count() up front turns them all into cache reads.
-      val sigs = Dedup.signatureTable(seen, w = 5, numHashes = 8).persist()
-      sigs.count()
-      try Dedup.incrementalNearDupVerified(incoming,
-          Dedup.bandTableFromSignatures(sigs, bandWidth = 2),
-          sigs,
-          w = 5, numHashes = 8, bandWidth = 2, minEstJaccard = 0.5)
-        .select(col("doc_id"), col("source"), col("n_chars"))
-        .orderBy("doc_id")
-      finally sigs.unpersist(blocking = false)
+      Stage.scoped { st =>
+        val sigs = st.cache(Dedup.signatureTable(seen, w = 5, numHashes = 8))
+        sigs.count()
+        Dedup.incrementalNearDupVerified(incoming,
+            Dedup.bandTableFromSignatures(sigs, bandWidth = 2), sigs,
+            w = 5, numHashes = 8, bandWidth = 2, minEstJaccard = 0.5)
+          .select(col("doc_id"), col("source"), col("n_chars"))
+          .orderBy("doc_id")
+      }
     }),
 
     "dedup_state_append" -> ((s, d) => {

@@ -278,14 +278,12 @@ private[graft] object ScaleStatsRegistry {
       // scan+split+explode of the corpus — staged once here, the
       // rebuild-forget shingle discipline applied to the token stream
       // (a warehouse would likewise stage the token table per release).
-      val tokens = docs.select(col("doc_id"),
-        explode(split(col("text"), " ")).as("token")).persist()
-      val day1 = tokens.filter(col("doc_id") % 2 === 0).select(col("token"))
-      val day2 = tokens.filter(col("doc_id") % 2 =!= 0).select(col("token"))
       val tmp = TempDirs.create("graft-sketchstate-").toString
-      // every build is persisted state afterwards — the staged token
-      // table is done then, or released on the way out of a failed build
-      try {
+      Stage.scoped { st =>
+        val tokens = st.cache(docs.select(col("doc_id"),
+          explode(split(col("text"), " ")).as("token")))
+        val day1 = tokens.filter(col("doc_id") % 2 === 0).select(col("token"))
+        val day2 = tokens.filter(col("doc_id") % 2 =!= 0).select(col("token"))
         ext.Sketches.countMinWrite(
           ext.Sketches.countMinBuild(day1, "token"), s"$tmp/cms1")
         ext.Sketches.bloomWrite(
@@ -301,7 +299,7 @@ private[graft] object ScaleStatsRegistry {
         ext.Sketches.kmvWrite(ext.Sketches.kmvMerge(256,
             s.read.parquet(s"$tmp/kmv1"),
             ext.Sketches.kmvBuild(day2, "token", k = 256)), s"$tmp/kmv2")
-      } finally tokens.unpersist(blocking = false)
+      }
       val top = ext.TextAnalysis.topTokens(docs, 10).select(col("token"))
       val absent = s.range(10)
         .select(concat(lit("__absent_"), col("id")).as("token"))
@@ -492,12 +490,12 @@ private[graft] object ScaleStatsRegistry {
       // ONE shingle pass feeds all six builds: the full-corpus and
       // survivor streams are projections of the same cached frame
       // (the warehouse would likewise stage shingles once per release)
-      val allSh = Dedup.shingles(docs, w = 3).persist()
-      allSh.count()
-      val sh = allSh.select(col("sh"))
-      val retained = allSh.filter(col("doc_id") % 10 =!= 3).select(col("sh"))
       val tmp = TempDirs.create("graft-rebuild-forget-").toString
-      try {
+      Stage.scoped { st =>
+        val allSh = st.cache(Dedup.shingles(docs, w = 3))
+        allSh.count()
+        val sh = allSh.select(col("sh"))
+        val retained = allSh.filter(col("doc_id") % 10 =!= 3).select(col("sh"))
         ext.Sketches.kmvWrite(ext.Sketches.kmvBuild(sh, "sh", 256),
           s"$tmp/kmv", 256)
         ext.Sketches.bloomWrite(ext.Sketches.bloomBuild(sh, "sh", 8192, 4),
@@ -511,7 +509,7 @@ private[graft] object ScaleStatsRegistry {
           s"$tmp/bloom", 8192, 4)
         ext.Sketches.countMinWrite(ext.Sketches.countMinBuild(retained, "sh", 4, 1024),
           s"$tmp/cms", 4, 1024)
-      } finally allSh.unpersist(blocking = false)
+      }
       val kmv = s.read.parquet(s"$tmp/kmv")
         .select(lit("kmv").as("family"), col("rank").cast("long").as("a"),
           lit(0L).as("b"), col("h").as("v"))

@@ -863,7 +863,7 @@ object Streams {
     // identically); passing a derived in-memory frame merely prices a
     // per-batch recompute unless the caller froze it themselves.
     // With `stateDir` set on the cfg the per-batch probe goes further:
-    // the batch's band table is built ONCE (persisted — the cell
+    // the batch's band table is built ONCE (cached — the cell
     // collect is its materializing action, and the report then reads
     // the cached blocks) and the state is re-read pruned to the cells
     // that batch can collide with ([[graft.ext.Dedup.readBandState]])
@@ -891,22 +891,22 @@ object Streams {
       .writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val (ndBatch, probe) = (ndFrozen, ndState) match {
-          case (Some(g), Some(h)) =>
-            val p = graft.ext.Dedup.bandTable(batch.toDF(), g.w,
-              g.numHashes, g.bandWidth).persist()
-            (Some(g.copy(
-              seenBands = graft.ext.Dedup.readBandState(h, p),
-              bands = Some(p))), Some(p))
-          case (other, _) => (other, None)
+        graft.Stage.scoped { st =>
+          val ndBatch = (ndFrozen, ndState) match {
+            case (Some(g), Some(h)) =>
+              val p = st.cache(graft.ext.Dedup.bandTable(batch.toDF(), g.w,
+                g.numHashes, g.bandWidth))
+              Some(g.copy(seenBands = graft.ext.Dedup.readBandState(h, p),
+                bands = Some(p)))
+            case (other, _) => other
+          }
+          val (lmB, nbB, verB) = modelsOf(batchId)
+          val rep = graft.ext.Admission.reportResolved(batch.toDF(),
+            benchSources, shingleGate, contamThreshold, semFrozen, lmB,
+            minAvgLp, nbB, allowedLabels, ndBatch)
+          verB.fold(rep)(v => rep.withColumn("model_version", lit(v)))
+            .write.mode("overwrite").parquet(s"$outDir/batch_id=$batchId")
         }
-        val (lmB, nbB, verB) = modelsOf(batchId)
-        val rep = graft.ext.Admission.reportResolved(batch.toDF(),
-          benchSources, shingleGate, contamThreshold, semFrozen, lmB,
-          minAvgLp, nbB, allowedLabels, ndBatch)
-        try verB.fold(rep)(v => rep.withColumn("model_version", lit(v)))
-          .write.mode("overwrite").parquet(s"$outDir/batch_id=$batchId")
-        finally probe.foreach(_.unpersist(blocking = false))
       }
       .trigger(Trigger.AvailableNow())
       .start()

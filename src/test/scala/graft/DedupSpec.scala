@@ -16,27 +16,6 @@ class DedupSpec extends AnyFunSuite {
     (4L, "one two"), // shorter than the shingle width
   ).toDF("doc_id", "text")
 
-  /** Runs `op` and returns the entries it added under java.io.tmpdir
-    * whose names start with `prefix` (suites run one at a time in the
-    * test JVM, so the prefix isolates the operator under test).
-    */
-  private def newTmpEntries(prefix: String)(op: => Any): Set[java.nio.file.Path] = {
-    import scala.jdk.CollectionConverters._
-    val tmp = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"))
-    def entries = {
-      val ls = java.nio.file.Files.list(tmp)
-      try ls.iterator.asScala
-        .filter(_.getFileName.toString.startsWith(prefix)).toSet
-      finally ls.close()
-    }
-    val before = entries
-    op
-    entries -- before
-  }
-
-  private def cacheIsEmpty =
-    org.apache.spark.sql.graftbridge.Bridge.cacheIsEmpty(spark)
-
   /** A rewrite leaves exactly one new directory: its output table, which
     * the returned frame reads cold (the staged shingles are gone).
     */

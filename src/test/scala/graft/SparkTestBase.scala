@@ -1,12 +1,47 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.scalatest.Assertions._
 
 /** One shared local session for the whole forked test JVM. */
 object SparkTestBase {
   lazy val spark: SparkSession =
     Session("4", confs = Seq("spark.app.name" -> "graft-tests"))
   val sfDir = "/root/testdata/sf0.001"
+
+  def cacheIsEmpty: Boolean =
+    org.apache.spark.sql.graftbridge.Bridge.cacheIsEmpty(spark)
+
+  /** Runs `op` from an empty cache and asserts it left no cache entry
+    * and no persistent RDD behind (local-checkpoint blocks aside).
+    */
+  def assertReleased(what: String)(op: => Any): Unit = {
+    spark.catalog.clearCache()
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    op
+    val left = spark.sparkContext.getPersistentRDDs
+      .filter { case (id, rdd) => !before(id) && !rdd.isCheckpointed }.keySet
+    assert(cacheIsEmpty, s"$what left a cache entry behind")
+    assert(left.isEmpty, s"$what left persistent RDDs $left behind")
+  }
+
+  /** Runs `op` and returns the entries it added under java.io.tmpdir
+    * whose names start with `prefix` (suites run one at a time in the
+    * test JVM, so the prefix isolates the operation under test).
+    */
+  def newTmpEntries(prefix: String)(op: => Any): Set[java.nio.file.Path] = {
+    import scala.jdk.CollectionConverters._
+    val tmp = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"))
+    def entries = {
+      val ls = java.nio.file.Files.list(tmp)
+      try ls.iterator.asScala
+        .filter(_.getFileName.toString.startsWith(prefix)).toSet
+      finally ls.close()
+    }
+    val before = entries
+    op
+    entries -- before
+  }
 
   /** Set session confs for the duration of `body`, then restore each to
     * its prior value (or unset it) — ONE definition so tests cannot

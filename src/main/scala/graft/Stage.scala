@@ -11,7 +11,10 @@ import org.apache.spark.sql.{DataFrame, Dataset}
   *    band table, a loop's label snapshots) at the default storage
   *    level, which spills to disk when memory is short;
   *  - [[parquet]] writes a corpus-scale table to a temp directory the
-  *    call owns: recomputable on executor loss, no block memory.
+  *    call owns: recomputable on executor loss, no block memory;
+  *  - [[scratch]] gives a query a temp directory for whatever it writes
+  *    on the way to its result, and returns that result detached from
+  *    the directory, which is gone by then.
   */
 object Stage {
 
@@ -68,5 +71,16 @@ object Stage {
         plans.Pipeline.deleteRecursively(dir)
         throw e
     }
+  }
+
+  /** Runs `body` in a fresh temp directory and returns its frame
+    * detached (`localCheckpoint(eager = true)`) from the files `body`
+    * wrote there. The directory is deleted when the call returns, and
+    * also when `body` or the detach throws.
+    */
+  def scratch(prefix: String)(body: String => DataFrame): DataFrame = {
+    val dir = TempDirs.create(prefix)
+    try body(dir.toString).localCheckpoint(eager = true)
+    finally plans.Pipeline.deleteRecursively(dir)
   }
 }

@@ -12,6 +12,8 @@ import java.nio.file.{Files, Path}
   * bench/verify runs would otherwise accumulate copies under /tmp until
   * the disk degrades (observed as a cross-run slowdown of unrelated
   * IO-bound queries). One shutdown hook deletes everything registered.
+  * `graft.Stage` opens its per-call directories here too and deletes
+  * them itself; the hook only sweeps what a dying JVM left behind.
   */
 object TempDirs {
 

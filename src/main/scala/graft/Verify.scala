@@ -28,7 +28,7 @@ object Verify {
     val timings = scala.collection.mutable.ArrayBuffer[(String, Double)]()
     // Per-query state release (Session.release, shared with Bench):
     // 215 queries in one JVM accumulate cached RDDs and localCheckpoint
-    // blocks (detachAndClean checkpoints every bounded result; the
+    // blocks (Stage.scratch checkpoints every scratch-dir result; the
     // async ContextCleaner drains them on ITS schedule, not ours) —
     // without an explicit drop the tail queries run under mounting
     // allocation pressure.

@@ -57,14 +57,24 @@ object Dedup {
     docs.select(col("doc_id").cast("long"), col("text"))
       .as[(Long, String)]
       .flatMap { case (id, text) =>
-        // limit -1 keeps trailing empty tokens — the semantics of Spark's
-        // split() and DuckDB's string_split (Scala's char-split drops
-        // them, which would diverge from the oracle on trailing spaces).
-        val t = text.split(" ", -1)
+        val t = tokens("Dedup.shingles", id, text)
         if (t.length < w) Iterator.empty
         else t.sliding(w).map(s => (id, s.mkString(" "))).toSet.iterator
       }
       .toDF("doc_id", "sh")
+  }
+
+  /** `text` split on single spaces. Limit -1 keeps trailing empty
+    * tokens — the semantics of Spark's split() and DuckDB's
+    * string_split (Scala's char-split drops them, which would diverge
+    * from the oracle on trailing spaces). A NULL text has no tokens to
+    * give, so the row is refused with an error naming the operator `op`
+    * and the document.
+    */
+  private def tokens(op: String, id: Long, text: String): Array[String] = {
+    if (text == null)
+      throw new IllegalArgumentException(s"$op: doc_id $id has a NULL text")
+    text.split(" ", -1)
   }
 
   /** Exact dedup: group by content hash; keeper = min doc_id. */
@@ -1106,7 +1116,7 @@ object Dedup {
     docs.select(col("doc_id").cast("long"), col("text"))
       .as[(Long, String)]
       .flatMap { case (id, text) =>
-        val t = text.split(" ", -1)
+        val t = tokens("Dedup.positionalShingles", id, text)
         if (t.length < w) Iterator.empty
         else t.sliding(w).zipWithIndex.map { case (s, i) =>
           (id, (i + 1).toLong, s.mkString(" "))

@@ -19,47 +19,6 @@ import Shared._
   */
 private[graft] object CorpusRegistry {
 
-  /** The Bloom shingle gate + banded semantic config, built ONCE from
-    * the FULL corpus — the frozen gate artifacts every admission
-    * variant (frozen-frame, persisted-state, compacted-state,
-    * per-release) probes. Split out of the report builder so the
-    * multi-report queries (lifecycle, release matrix) share one
-    * artifact build across report runs.
-    */
-  private def admissionGateCfg(s: SparkSession, d: String)
-      : (Column => Column, Option[ext.Admission.SemanticCfg]) = {
-    val docs = Tables.documents(s, d)
-    val emb = Tables.embeddings(s, d)
-    val bench = docs.filter(col("source").isin("src0", "src1"))
-    val bloom = ext.Sketches.bloomBuild(
-      Dedup.shingles(bench, w = 5).select(col("sh")), "sh",
-      numBits = 1 << 18, numHashes = 4)
-    val gate = (sh: Column) =>
-      ext.Sketches.bloomGateColumn(bloom, sh, numBits = 1 << 18,
-        numHashes = 4)
-    val sig = ext.Corpus.benchSignatureTable(docs, emb, Seq("src0", "src1"))
-    (gate, Some(ext.Admission.SemanticCfg(emb, sig, threshold = 0.42)))
-  }
-
-  /** The registered near-dup gate state (round 14): the
-    * already-admitted cohort's band table (doc_id % 7 = 3 over the
-    * FULL corpus plays the admitted corpus) PERSISTED through
-    * writeBandState's partitioned production layout and read back —
-    * band state is O(corpus docs) rows at scale, so the registered
-    * path takes distributed storage, not an executor block-memory
-    * freeze (gate parity over this layout is spec-pinned in
-    * AdmissionSpec). Returns the read-back frame.
-    */
-  private def admissionBandState(s: SparkSession, d: String,
-                                 dir: String): DataFrame = {
-    Dedup.writeBandState(
-      Dedup.bandTable(Tables.documents(s, d)
-          .filter(col("doc_id") % 7 === 3),
-        w = 5, numHashes = 8, bandWidth = 2),
-      dir, "overwrite")
-    s.read.parquet(dir)
-  }
-
   /** The registered admission ensemble with CALLER-SUPPLIED model
     * frames: bench sources src0/src1, 2^18-bit 4-hash Bloom, 0.3
     * shingle-hit threshold, 0.42 semantic cosine, LM floor −3.40, NB
@@ -73,12 +32,9 @@ private[graft] object CorpusRegistry {
   private def admissionReportWith(s: SparkSession, d: String,
                                   lmModel: DataFrame,
                                   nbModel: DataFrame,
-                                  seenBands: Option[DataFrame] = None,
-                                  docs: Option[DataFrame] = None): DataFrame = {
+                                  seenBands: DataFrame): DataFrame = {
     val (gate, sem) = admissionGateCfg(s, d)
-    val bands = seenBands.getOrElse(admissionBandState(s, d,
-      TempDirs.create("graft-adm-bands-").toString + "/state"))
-    ext.Admission.report(docs.getOrElse(Tables.documents(s, d)),
+    ext.Admission.report(Tables.documents(s, d),
       Seq("src0", "src1"), gate,
       contamThreshold = 0.3,
       semantic = sem,
@@ -86,7 +42,7 @@ private[graft] object CorpusRegistry {
       minAvgLp = -3.40,
       nbModel = nbModel,
       allowedLabels = Seq("en"),
-      nearDup = Some(ext.Admission.NearDupCfg(bands, w = 5,
+      nearDup = Some(ext.Admission.NearDupCfg(seenBands, w = 5,
         numHashes = 8, bandWidth = 2)))
   }
 
@@ -106,16 +62,74 @@ private[graft] object CorpusRegistry {
     when(gate === "6_nb", score.cast("bigint"))
       .otherwise(floor(score * lit(1099511627776L)).cast("bigint"))
 
+  /** The registered admission report with whole-corpus models. Its
+    * near-dup band state is written under `dir` (the caller's scratch
+    * dir), which the returned frame reads.
+    */
   // private[graft]: the plan-audit spec pins this subtree's structural
   // scan count (round 17, judge directive)
-  private[graft] def admissionReportFor(s: SparkSession, d: String): DataFrame = {
+  private[graft] def admissionReportFor(s: SparkSession, d: String,
+                                        dir: String): DataFrame = {
     val docs = Tables.documents(s, d)
     admissionReportWith(s, d,
       lmModel = TextAnalysis.bigramLmTrain(docs),
-      nbModel = graft.ext.Classifier.nbTrain(docs))
+      nbModel = graft.ext.Classifier.nbTrain(docs),
+      seenBands = admissionBandState(s, d, s"$dir/bands"))
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  /** The registered consumers of one whole-corpus report, each a
+    * bounded rollup over the live report plan. A query runs its
+    * consumer inside a scratch dir that holds the report's band state,
+    * so what it returns is detached; AdmissionPlanAuditSpec audits
+    * these builders: a rollup adds zero documents scans to its report.
+    */
+  private[graft] val reportConsumers: Seq[(String, DataFrame => DataFrame)] = Seq(
+    // the UNIFIED front door (round 13): every admission gate the
+    // corpus pipeline runs — source exclusion, quality heuristics,
+    // bench-Bloom shingle decontamination, banded semantic sweep, LM
+    // quality threshold, NB label gate — evaluated together into one
+    // per-document decision record plus the single keep/drop. Gate
+    // definitions are SHARED with the standalone operators
+    // (qualityPass, corpusCleanStream's shingle projection,
+    // embeddingContaminatedIds, lmScoreBigram, nbClassify), so this
+    // audit table can never drift from the gates it audits; the oracle
+    // unrolls all six decisions into the same long table.
+    "corpus_admission_report" -> (_.orderBy("doc_id", "gate")),
+    // the CALIBRATION rollup of the decision table (round 13 cont.):
+    // per gate, how many documents it fails and how many it ALONE keeps
+    // out — the numbers that say which gate is load-bearing and which
+    // is redundant overlap before anyone tunes a threshold. Six bounded
+    // rows off one pivot + one aggregate.
+    "corpus_admission_overlap" ->
+      (ext.Admission.gateOverlap(_).orderBy("gate")),
+    // the PAIRWISE completion of the calibration rollup (round 14):
+    // joint-failure counts per unordered gate pair (diagonal = the
+    // gate's own n_fail) — which gates guard the same documents and
+    // which fail disjoint populations; any overlap coefficient derives
+    // from this one bounded table. Same single-pass shape as the
+    // rollup: one pivot + ONE aggregate emitting all 28 counts.
+    "corpus_admission_overlap_matrix" ->
+      (ext.Admission.gateOverlapMatrix(_).orderBy("gate_a", "gate_b")),
+    // the gates as a PIPELINE (round 15): cumulative survival counts in
+    // decision order — where the corpus actually thins when the gates
+    // run as the ordered front door. n_in of 1_source is the corpus
+    // size; n_out of 7_neardup equals the 8_decision keep count
+    // (conjunction order-independence, spec-pinned). Same single-pass
+    // pivot+aggregate shape as the other calibration rollups; seven
+    // bounded rows.
+    "corpus_admission_funnel" ->
+      (ext.Admission.gateFunnel(_).orderBy("gate")),
+    // the LM threshold KNOB swept (round 15): n_fail / n_admit at five
+    // candidate cuts including the production -3.40 — whose n_admit
+    // must equal the decision keep count (in-oracle consistency). One
+    // pass over the decision table; zero model re-scoring at any
+    // candidate.
+    "corpus_admission_lm_sweep" -> (ext.Admission.lmThresholdSweep(_,
+      Seq(-3.60, -3.50, -3.40, -3.30, -3.20)).orderBy("threshold")),
+  )
+
+  val queries: Map[String, (SparkSession, String) => DataFrame] =
+    Map[String, (SparkSession, String) => DataFrame](
     "corpus_importance_weights" -> ((s, d) => {
       // DSIR-style data selection: hashed-ngram (uni+bi, 4096 buckets)
       // importance log-ratios of a target domain (the en/src7 slice)
@@ -243,7 +257,7 @@ private[graft] object CorpusRegistry {
       ext.Corpus.capPerSource(Tables.documents(s, d), cap = 15)
         .orderBy("source", "q_rank")),
 
-    "corpus_pipeline_e2e" -> ((s, d) => {
+    "corpus_pipeline_e2e" -> ((s, d) => Stage.scratch("graft-corpus-e2e-") { wh =>
       // the corpus-release CAPSTONE: quality gate → exact dedup → near
       // dedup (MinHash bands → connected components → keep best) →
       // Bloom-gated decontamination vs the RAW bench sources → packing
@@ -256,17 +270,14 @@ private[graft] object CorpusRegistry {
       // chain, so every stage's keep/drop decision, the pack boundaries
       // and the split labels are all hash-checked through the
       // write→promote→read path.
-      val wh = TempDirs.create("graft-corpus-e2e-").toString
       graft.plans.Pipeline.runCorpusEtl(s, d, wh)
-      detachAndClean(
-        s.read.parquet(s"$wh/corpus_release")
-          .select(col("doc_id"), col("source"), col("n_chars"),
-            col("n_tok"), col("pack_id"), col("split"))
-          .orderBy("doc_id"),
-        wh)
+      s.read.parquet(s"$wh/corpus_release")
+        .select(col("doc_id"), col("source"), col("n_chars"),
+          col("n_tok"), col("pack_id"), col("split"))
+        .orderBy("doc_id")
     }),
 
-    "corpus_release_incremental" -> ((s, d) => {
+    "corpus_release_incremental" -> ((s, d) => Stage.scratch("graft-increl-") { tmp =>
       // the reference's INCREMENTAL-LOAD protocol applied to the corpus
       // capstone (round 11): release t1 = release t0 ⊕ delta, with the
       // stateful legs carried by PERSISTED state instead of recompute.
@@ -292,7 +303,6 @@ private[graft] object CorpusRegistry {
       // the canonical gate — the SAME projection predicate the streaming
       // front door applies (one definition, no threshold drift)
       val gated = ext.TextAnalysis.qualityGateDocs(train)
-      val tmp = TempDirs.create("graft-increl-").toString
       val stateDir = s"$tmp/bands"
       val seenDir = s"$tmp/seen"
       // SEMANTIC sweep state (round 12): the bench embeddings banded
@@ -331,14 +341,12 @@ private[graft] object CorpusRegistry {
       require(ghosts == 0,
         s"$ghosts ghost docs in post-release band state — state must hold " +
           "exactly the released docs' bands")
-      detachAndClean(
-        releasedA.select(col("doc_id"), col("source"), col("n_chars"))
-          .withColumn("release", lit("t0"))
-          .unionByName(admittedB
-            .select(col("doc_id"), col("source"), col("n_chars"))
-            .withColumn("release", lit("delta")))
-          .orderBy("doc_id"),
-        tmp)
+      releasedA.select(col("doc_id"), col("source"), col("n_chars"))
+        .withColumn("release", lit("t0"))
+        .unionByName(admittedB
+          .select(col("doc_id"), col("source"), col("n_chars"))
+          .withColumn("release", lit("delta")))
+        .orderBy("doc_id")
     }),
 
     "corpus_release_diff" -> ((s, d) => {
@@ -358,7 +366,7 @@ private[graft] object CorpusRegistry {
       ext.Corpus.releaseDiff(t0, t1).orderBy("doc_id")
     }),
 
-    "corpus_score_incremental" -> ((s, d) => {
+    "corpus_score_incremental" -> ((s, d) => Stage.scratch("graft-increscore-") { tmp =>
       // INCREMENTAL metadata maintenance (round 12 cont.): release
       // t1's quality-score table = t0's PERSISTED scores with only the
       // added/changed docs re-scored (content-hash carry; removed rows
@@ -373,16 +381,13 @@ private[graft] object CorpusRegistry {
         .withColumn("text",
           when(col("doc_id") % 7 === 3, concat(col("text"), lit(" [rev2]")))
             .otherwise(col("text")))
-      val tmp = TempDirs.create("graft-increscore-").toString
       ext.TextAnalysis.qualityScore(t0)
         .join(t0.select(col("doc_id"), md5(col("text")).as("content_hash")),
           Seq("doc_id"))
         .write.parquet(s"$tmp/scores")
-      detachAndClean(
-        ext.Corpus.incrementalScores(s.read.parquet(s"$tmp/scores"), t1)(
-          ext.TextAnalysis.qualityScore)
-          .orderBy("doc_id"),
-        tmp)
+      ext.Corpus.incrementalScores(s.read.parquet(s"$tmp/scores"), t1)(
+        ext.TextAnalysis.qualityScore)
+        .orderBy("doc_id")
     }),
 
     "corpus_split_grouped" -> ((s, d) => {
@@ -406,7 +411,7 @@ private[graft] object CorpusRegistry {
       out.orderBy("doc_id")
     }),
 
-    "corpus_split_stable" -> ((s, d) => {
+    "corpus_split_stable" -> ((s, d) => Stage.scratch("graft-split-stable-") { tmp =>
       // RELEASE-STABLE grouped split (round 12): cluster identity from
       // the persisted COMPACTED band state instead of a per-call
       // clustering. Per-call clustering is unstable under a delta
@@ -423,7 +428,6 @@ private[graft] object CorpusRegistry {
       val mid = docs.agg(max(col("doc_id"))).head().getLong(0) / 2
       val t0 = docs.filter(col("doc_id") <= mid)
       val delta = docs.filter(col("doc_id") > mid)
-      val tmp = TempDirs.create("graft-split-stable-").toString
       val stateDir = s"$tmp/bands"
       // ONE shingle→minhash pass feeds the state write and both split
       // probes (the release-pipeline staging discipline); delta
@@ -457,28 +461,12 @@ private[graft] object CorpusRegistry {
       require(moved == 0,
         s"$moved t0 docs with a persisted cluster changed split after " +
           "the delta release — grouped split must be release-stable")
-      detachAndClean(
-        splitAll.select(col("doc_id"), col("cluster_id"), col("bucket"),
-            col("split"))
-          .orderBy("doc_id"),
-        tmp)
+      splitAll.select(col("doc_id"), col("cluster_id"), col("bucket"),
+          col("split"))
+        .orderBy("doc_id")
     }),
 
-    "corpus_admission_report" -> ((s, d) => {
-      // the UNIFIED front door (round 13): every admission gate the
-      // corpus pipeline runs — source exclusion, quality heuristics,
-      // bench-Bloom shingle decontamination, banded semantic sweep,
-      // LM quality threshold, NB label gate — evaluated together into
-      // one per-document decision record plus the single keep/drop.
-      // Gate definitions are SHARED with the standalone operators
-      // (qualityPass, corpusCleanStream's shingle projection,
-      // embeddingContaminatedIds, lmScoreBigram, nbClassify), so this
-      // audit table can never drift from the gates it audits; the
-      // oracle unrolls all six decisions into the same long table.
-      admissionReportFor(s, d).orderBy("doc_id", "gate")
-    }),
-
-    "corpus_admission_report_state" -> ((s, d) => {
+    "corpus_admission_report_state" -> ((s, d) => Stage.scratch("graft-adm-state-") { tmp =>
       // the PERSISTED-STATE form of the admission ensemble (round 14):
       // at 100 TB the LM and NB models are maintained TABLES — the
       // delta-log the stream appends (lmMaintainPipeline's batch_id=
@@ -489,7 +477,6 @@ private[graft] object CorpusRegistry {
       // bit-identical decisions to the frozen-frame form: additive
       // counts == whole-corpus train, so ONE oracle pins both paths.
       val docs = Tables.documents(s, d)
-      val tmp = TempDirs.create("graft-adm-state-").toString
       TextAnalysis.lmCountsBuild(docs.filter(col("doc_id") % 2 === 0))
         .write.parquet(s"$tmp/lm/batch_id=0")
       TextAnalysis.lmCountsBuild(docs.filter(col("doc_id") % 2 === 1))
@@ -499,53 +486,12 @@ private[graft] object CorpusRegistry {
         graft.streaming.Streams.lmReadCounts(s, s"$tmp/lm"))
       val nbModel = graft.ext.Classifier.nbModelFromCounts(
         s.read.parquet(s"$tmp/nb"))
-      detachAndClean(
-        admissionReportWith(s, d, lmModel, nbModel)
-          .orderBy("doc_id", "gate"),
-        tmp)
+      admissionReportWith(s, d, lmModel, nbModel,
+          admissionBandState(s, d, s"$tmp/bands"))
+        .orderBy("doc_id", "gate")
     }),
 
-    "corpus_admission_overlap" -> ((s, d) =>
-      // the CALIBRATION rollup of the decision table (round 13 cont.):
-      // per gate, how many documents it fails and how many it ALONE
-      // keeps out — the numbers that say which gate is load-bearing
-      // and which is redundant overlap before anyone tunes a
-      // threshold. Six bounded rows off one pivot + one aggregate.
-      ext.Admission.gateOverlap(admissionReportFor(s, d))
-        .orderBy("gate")),
-
-    "corpus_admission_overlap_matrix" -> ((s, d) =>
-      // the PAIRWISE completion of the calibration rollup (round 14):
-      // joint-failure counts per unordered gate pair (diagonal = the
-      // gate's own n_fail) — which gates guard the same documents and
-      // which fail disjoint populations; any overlap coefficient
-      // derives from this one bounded table. Same single-pass shape as
-      // the rollup: one pivot + ONE aggregate emitting all 28 counts.
-      ext.Admission.gateOverlapMatrix(admissionReportFor(s, d))
-        .orderBy("gate_a", "gate_b")),
-
-    "corpus_admission_funnel" -> ((s, d) =>
-      // the gates as a PIPELINE (round 15): cumulative survival counts
-      // in decision order — where the corpus actually thins when the
-      // gates run as the ordered front door. n_in of 1_source is the
-      // corpus size; n_out of 7_neardup equals the 8_decision keep
-      // count (conjunction order-independence, spec-pinned). Same
-      // single-pass pivot+aggregate shape as the other calibration
-      // rollups; seven bounded rows.
-      ext.Admission.gateFunnel(admissionReportFor(s, d))
-        .orderBy("gate")),
-
-    "corpus_admission_lm_sweep" -> ((s, d) =>
-      // the LM threshold KNOB swept (round 15): n_fail / n_admit at
-      // five candidate cuts including the production -3.40 — whose
-      // n_admit must equal the decision keep count (in-oracle
-      // consistency). One pass over the decision table; zero model
-      // re-scoring at any candidate.
-      ext.Admission.lmThresholdSweep(admissionReportFor(s, d),
-          Seq(-3.60, -3.50, -3.40, -3.30, -3.20))
-        .orderBy("threshold")),
-
-    "corpus_admission_lifecycle" -> ((s, d) => {
+    "corpus_admission_lifecycle" -> ((s, d) => Stage.scratch("graft-adm-life-") { tmp =>
       // SHARED-ARTIFACT admission lifecycle (round 15): the six
       // isolated admission queries each rebuild the full gate config
       // (bloom, bench signatures, LM/NB train, band state) for
@@ -559,7 +505,6 @@ private[graft] object CorpusRegistry {
       // stacked (kind = overlap | matrix), so one oracle pins the
       // whole amortized chain end-to-end.
       val docs = Tables.documents(s, d)
-      val tmp = TempDirs.create("graft-adm-life-").toString
       // models in their persisted production form: trained once,
       // staged to parquet, read back (the report_state discipline —
       // no driver-frozen frames)
@@ -569,7 +514,7 @@ private[graft] object CorpusRegistry {
       admissionReportWith(s, d,
           lmModel = s.read.parquet(s"$tmp/lm"),
           nbModel = s.read.parquet(s"$tmp/nb"),
-          seenBands = Some(seenBands))
+          seenBands = seenBands)
         .write.parquet(s"$tmp/report")
       val rep = s.read.parquet(s"$tmp/report")
       val ov = ext.Admission.gateOverlap(rep).select(
@@ -581,12 +526,10 @@ private[graft] object CorpusRegistry {
         lit("matrix").as("kind"), col("gate_a"), col("gate_b"),
         lit(null).cast("bigint").as("n_fail"),
         lit(null).cast("bigint").as("n_fail_alone"), col("n_both"))
-      detachAndClean(
-        ov.unionByName(mat).orderBy("kind", "gate_a", "gate_b"),
-        tmp)
+      ov.unionByName(mat).orderBy("kind", "gate_a", "gate_b")
     }),
 
-    "corpus_admission_lifecycle_full" -> ((s, d) => {
+    "corpus_admission_lifecycle_full" -> ((s, d) => Stage.scratch("graft-adm-lifefull-") { tmp =>
       // the lifecycle COMPLETED (round 15 close): all FOUR calibration
       // consumers — per-gate overlap, pairwise matrix, survival
       // funnel, LM threshold sweep — off ONE persisted decision
@@ -598,14 +541,13 @@ private[graft] object CorpusRegistry {
       // consumer is a bounded-output scan of the same staged report.
       // 47 rows (7 + 28 + 7 + 5) regardless of corpus size.
       val docs = Tables.documents(s, d)
-      val tmp = TempDirs.create("graft-adm-lifefull-").toString
       TextAnalysis.bigramLmTrain(docs).write.parquet(s"$tmp/lm")
       graft.ext.Classifier.nbTrain(docs).write.parquet(s"$tmp/nb")
       val seenBands = admissionBandState(s, d, s"$tmp/bands")
       admissionReportWith(s, d,
           lmModel = s.read.parquet(s"$tmp/lm"),
           nbModel = s.read.parquet(s"$tmp/nb"),
-          seenBands = Some(seenBands))
+          seenBands = seenBands)
         .write.parquet(s"$tmp/report")
       val rep = s.read.parquet(s"$tmp/report")
       val nl = lit(null).cast("bigint")
@@ -630,13 +572,11 @@ private[graft] object CorpusRegistry {
         lit("sweep").as("kind"), nlS.as("gate_a"), nlS.as("gate_b"),
         col("threshold"), col("n_fail"), nl.as("n_fail_alone"),
         nl.as("n_both"), nl.as("n_in"), nl.as("n_out"), col("n_admit"))
-      detachAndClean(
-        ov.unionByName(mat).unionByName(fun).unionByName(sw)
-          .orderBy("kind", "gate_a", "gate_b", "threshold"),
-        tmp)
+      ov.unionByName(mat).unionByName(fun).unionByName(sw)
+        .orderBy("kind", "gate_a", "gate_b", "threshold")
     }),
 
-    "corpus_admission_score_profile" -> ((s, d) => {
+    "corpus_admission_score_profile" -> ((s, d) => Stage.scratch("graft-adm-score-") { tmp =>
       // per-gate SCORE DISTRIBUTION (round 15, unblocking the PLANS
       // open thread): exact type-1 quantiles (q = 0, ¼, ½, ¾, 1 —
       // min/quartiles/median/max) of every scored gate's non-null
@@ -649,17 +589,14 @@ private[graft] object CorpusRegistry {
       // multi-key distributed selection (two jobs regardless of gate
       // count — round 15 cont.), never a corpus-sized per-gate
       // window task and never a per-gate job loop.
-      val tmp = TempDirs.create("graft-adm-score-").toString
-      admissionReportFor(s, d)
+      admissionReportFor(s, d, tmp)
         .write.partitionBy("gate").parquet(s"$tmp/report")
-      detachAndClean(
-        ext.Admission.gateScoreProfile(s.read.parquet(s"$tmp/report"),
-            Seq(0.0, 0.25, 0.5, 0.75, 1.0))
-          .orderBy("gate", "q"),
-        tmp)
+      ext.Admission.gateScoreProfile(s.read.parquet(s"$tmp/report"),
+          Seq(0.0, 0.25, 0.5, 0.75, 1.0))
+        .orderBy("gate", "q")
     }),
 
-    "corpus_admission_gate_auc" -> ((s, d) => {
+    "corpus_admission_gate_auc" -> ((s, d) => Stage.scratch("graft-adm-gauc-") { tmp =>
       // which scored gate CARRIES the decision (round 16, closing the
       // builder's gate-AUC thread): exact Mann-Whitney AUC of each
       // scored gate's score against the final keep/drop verdict — a
@@ -683,8 +620,7 @@ private[graft] object CorpusRegistry {
       // tie-groups robust to engine-specific low-bit float drift
       // instead of relying on every score staying hash-pinned
       // bit-identical forever.
-      val tmp = TempDirs.create("graft-adm-gauc-").toString
-      admissionReportFor(s, d).write.parquet(s"$tmp/report")
+      admissionReportFor(s, d, tmp).write.parquet(s"$tmp/report")
       val rep = s.read.parquet(s"$tmp/report")
       val kept = rep.filter(col("gate") === "8_decision")
         .select(col("doc_id"), col("pass").as("is_kept"))
@@ -693,13 +629,11 @@ private[graft] object CorpusRegistry {
         .select(col("doc_id"), col("gate"),
           admissionScoreFp(col("gate"), col("score")).as("score_fp40"))
         .join(kept, Seq("doc_id"))
-      detachAndClean(
-        graft.ext.Eval.aucByKey(scored, "gate", "score_fp40", "is_kept")
-          .orderBy("gate"),
-        tmp)
+      graft.ext.Eval.aucByKey(scored, "gate", "score_fp40", "is_kept")
+        .orderBy("gate")
     }),
 
-    "corpus_admission_report_compacted" -> ((s, d) => {
+    "corpus_admission_report_compacted" -> ((s, d) => Stage.scratch("graft-adm-compact-") { tmp =>
       // POST-COMPACTION gate parity (round 15): the 7_neardup gate
       // reads persisted band state, and compactNearDupState rewrites
       // that state to keeper-only bands — so the front door and the
@@ -722,7 +656,6 @@ private[graft] object CorpusRegistry {
       val cohort = cohort0.unionByName(
         cohort0.filter(col("doc_id") % 3 === 0)
           .withColumn("doc_id", col("doc_id") + 10000000L))
-      val tmp = TempDirs.create("graft-adm-compact-").toString
       val stateDir = s"$tmp/bands"
       Dedup.writeBandState(
         Dedup.bandTable(cohort, w = 5, numHashes = 8, bandWidth = 2),
@@ -734,16 +667,14 @@ private[graft] object CorpusRegistry {
       require(nKept < nCohort,
         s"compaction kept all $nCohort cohort members — the parity " +
           "twist would be a no-op; need a corpus where it binds")
-      detachAndClean(
-        admissionReportWith(s, d,
-            lmModel = TextAnalysis.bigramLmTrain(docs),
-            nbModel = graft.ext.Classifier.nbTrain(docs),
-            seenBands = Some(s.read.parquet(stateDir)))
-          .orderBy("doc_id", "gate"),
-        tmp)
+      admissionReportWith(s, d,
+          lmModel = TextAnalysis.bigramLmTrain(docs),
+          nbModel = graft.ext.Classifier.nbTrain(docs),
+          seenBands = s.read.parquet(stateDir))
+        .orderBy("doc_id", "gate")
     }),
 
-    "corpus_admission_matrix_releases" -> ((s, d) => {
+    "corpus_admission_matrix_releases" -> ((s, d) => Stage.scratch("graft-adm-rel-") { tmp =>
       // the overlap matrix on a TIME AXIS (round 15): joint-failure
       // counts keyed by RELEASE over the release chain's per-release
       // decision tables, so calibration drift across releases is a
@@ -759,7 +690,6 @@ private[graft] object CorpusRegistry {
       val docs = Tables.documents(s, d)
       val t0 = docs.filter(col("doc_id") % 7 =!= 1)
       val t1 = docs.filter(col("doc_id") % 7 =!= 2)
-      val tmp = TempDirs.create("graft-adm-rel-").toString
       val (gate, sem) = admissionGateCfg(s, d) // built ONCE for both releases
       val seenBands = admissionBandState(s, d, s"$tmp/bands")
       val lm = TextAnalysis.bigramLmTrain(docs).localCheckpoint(eager = true)
@@ -785,10 +715,8 @@ private[graft] object CorpusRegistry {
       val rep = s.read.parquet(s"$tmp/rep_t0").withColumn("release", lit("t0"))
         .unionByName(
           s.read.parquet(s"$tmp/rep_t1").withColumn("release", lit("t1")))
-      detachAndClean(
-        ext.Admission.gateOverlapMatrixBy(rep, "release")
-          .orderBy("release", "gate_a", "gate_b"),
-        tmp)
+      ext.Admission.gateOverlapMatrixBy(rep, "release")
+        .orderBy("release", "gate_a", "gate_b")
     }),
 
     "corpus_admission_funnel_releases" -> ((s, d) => {
@@ -807,27 +735,25 @@ private[graft] object CorpusRegistry {
       val docs = Tables.documents(s, d)
       val t0 = docs.filter(col("doc_id") % 7 =!= 1)
       val t1 = docs.filter(col("doc_id") % 7 =!= 2)
-      val tmp = TempDirs.create("graft-adm-fnl-rel-").toString
-      val (gate, sem) = admissionGateCfg(s, d)
-      val seenBands = admissionBandState(s, d, s"$tmp/bands")
-      val lm = TextAnalysis.bigramLmTrain(docs).localCheckpoint(eager = true)
-      val nb = graft.ext.Classifier.nbTrain(docs).localCheckpoint(eager = true)
-      def reportOf(rel: DataFrame) =
-        ext.Admission.report(rel, Seq("src0", "src1"), gate,
-          contamThreshold = 0.3, semantic = sem, lmModel = lm,
-          minAvgLp = -3.40, nbModel = nb, allowedLabels = Seq("en"),
-          nearDup = Some(ext.Admission.NearDupCfg(seenBands, w = 5,
-            numHashes = 8, bandWidth = 2)))
-      Seq("t0" -> t0, "t1" -> t1).foreach { case (name, rel) =>
-        reportOf(rel).write.mode("overwrite").parquet(s"$tmp/rep_$name")
+      val fun = Stage.scratch("graft-adm-fnl-rel-") { tmp =>
+        val (gate, sem) = admissionGateCfg(s, d)
+        val seenBands = admissionBandState(s, d, s"$tmp/bands")
+        val lm = TextAnalysis.bigramLmTrain(docs).localCheckpoint(eager = true)
+        val nb = graft.ext.Classifier.nbTrain(docs).localCheckpoint(eager = true)
+        def reportOf(rel: DataFrame) =
+          ext.Admission.report(rel, Seq("src0", "src1"), gate,
+            contamThreshold = 0.3, semantic = sem, lmModel = lm,
+            minAvgLp = -3.40, nbModel = nb, allowedLabels = Seq("en"),
+            nearDup = Some(ext.Admission.NearDupCfg(seenBands, w = 5,
+              numHashes = 8, bandWidth = 2)))
+        Seq("t0" -> t0, "t1" -> t1).foreach { case (name, rel) =>
+          reportOf(rel).write.mode("overwrite").parquet(s"$tmp/rep_$name")
+        }
+        val rep = s.read.parquet(s"$tmp/rep_t0").withColumn("release", lit("t0"))
+          .unionByName(
+            s.read.parquet(s"$tmp/rep_t1").withColumn("release", lit("t1")))
+        ext.Admission.gateFunnelBy(rep, "release").orderBy("release", "gate")
       }
-      val rep = s.read.parquet(s"$tmp/rep_t0").withColumn("release", lit("t0"))
-        .unionByName(
-          s.read.parquet(s"$tmp/rep_t1").withColumn("release", lit("t1")))
-      val fun = detachAndClean(
-        ext.Admission.gateFunnelBy(rep, "release")
-          .orderBy("release", "gate"),
-        tmp)
       // 14 bounded rows off the checkpoint — the chain check costs nothing
       fun.collect().groupBy(_.getString(0)).foreach { case (rel, rs) =>
         rs.sortBy(_.getString(1)).sliding(2).foreach { w =>
@@ -838,7 +764,7 @@ private[graft] object CorpusRegistry {
       fun
     }),
 
-    "corpus_admission_model_churn" -> ((s, d) => {
+    "corpus_admission_model_churn" -> ((s, d) => Stage.scratch("graft-adm-churn-") { tmp =>
       // MODEL-RETRAIN churn (round 15): the release queries freeze
       // every artifact, so a shared doc's verdict can never change —
       // which leaves the drift that production actually experiences
@@ -857,7 +783,6 @@ private[graft] object CorpusRegistry {
       val docs = Tables.documents(s, d)
       val shared = docs.filter(col("doc_id") % 7 =!= 1 &&
         col("doc_id") % 7 =!= 2)
-      val tmp = TempDirs.create("graft-adm-churn-").toString
       val (gate, sem) = admissionGateCfg(s, d)
       val seenBands = admissionBandState(s, d, s"$tmp/bands")
       Seq("t0" -> docs.filter(col("doc_id") % 7 =!= 1),
@@ -876,12 +801,10 @@ private[graft] object CorpusRegistry {
         col("gate"), col("pass").as("pass_t0"), col("score").as("score_t0"))
       val r1 = s.read.parquet(s"$tmp/rep_t1").select(col("doc_id"),
         col("gate"), col("pass").as("pass_t1"), col("score").as("score_t1"))
-      detachAndClean(
-        r0.join(r1, Seq("doc_id", "gate"))
-          .filter(col("gate").isin("5_lm", "6_nb", "8_decision"))
-          .withColumn("flipped", col("pass_t0") =!= col("pass_t1"))
-          .orderBy("doc_id", "gate"),
-        tmp)
+      r0.join(r1, Seq("doc_id", "gate"))
+        .filter(col("gate").isin("5_lm", "6_nb", "8_decision"))
+        .withColumn("flipped", col("pass_t0") =!= col("pass_t1"))
+        .orderBy("doc_id", "gate")
     }),
 
     "corpus_admission_retrain_lifecycle" -> ((s, d) => {
@@ -927,130 +850,129 @@ private[graft] object CorpusRegistry {
       val docs = Tables.documents(s, d)
       val shared = docs.filter(col("doc_id") % 7 =!= 1 &&
         col("doc_id") % 7 =!= 2)
-      val tmp = TempDirs.create("graft-adm-rlc-").toString
-      val (gate, sem) = admissionGateCfg(s, d)
-      val seenBands = admissionBandState(s, d, s"$tmp/bands")
-      Seq("t0" -> docs.filter(col("doc_id") % 7 =!= 1),
-          "t1" -> docs.filter(col("doc_id") % 7 =!= 2)).foreach {
-        case (name, rel) =>
-          val lm = TextAnalysis.bigramLmTrain(rel)
-          val nb = graft.ext.Classifier.nbTrain(rel)
-          ext.Admission.report(shared, Seq("src0", "src1"), gate,
-              contamThreshold = 0.3, semantic = sem, lmModel = lm,
-              minAvgLp = -3.40, nbModel = nb, allowedLabels = Seq("en"),
-              nearDup = Some(ext.Admission.NearDupCfg(seenBands, w = 5,
-                numHashes = 8, bandWidth = 2)))
-            .write.partitionBy("gate").parquet(s"$tmp/rep_$name")
-          // the margin table for the bins leg, staged beside its
-          // release's report: one nbScores fan-out + the bounded
-          // per-doc margin windows — the only artifact the report
-          // itself does not carry (its 6_nb score is the argmax
-          // score_fp, which keeps the document-length term; the
-          // margin cancels it, which is what makes it calibratable)
-          ext.Classifier.nbMargins(ext.Classifier.nbScores(shared, nb))
-            .filter(col("label") === "en")
-            .join(shared.select(col("doc_id"), col("lang")), Seq("doc_id"))
-            .select(col("doc_id"), col("margin_fp"),
-              (col("lang") === "en").as("is_pos"))
-            .write.parquet(s"$tmp/mg_$name")
-      }
-      val rep0 = s.read.parquet(s"$tmp/rep_t0")
-      val rep1 = s.read.parquet(s"$tmp/rep_t1")
-      val nl = lit(null).cast("bigint")
-      val nlS = lit(null).cast("string")
-      val nlD = lit(null).cast("double")
-      val churn = rep0.select(col("doc_id"), col("gate"),
-          col("pass").as("pass_t0"))
-        .join(rep1.select(col("doc_id"), col("gate"),
-          col("pass").as("pass_t1")), Seq("doc_id", "gate"))
-        .filter(col("gate").isin("5_lm", "6_nb", "8_decision"))
-        .groupBy("gate").agg(
-          count(lit(1)).as("n_shared"),
-          count(when(col("pass_t0") =!= col("pass_t1"), lit(1)))
-            .as("n_flipped"),
-          count(when(!col("pass_t0") && col("pass_t1"), lit(1)))
-            .as("n_gain"),
-          count(when(col("pass_t0") && !col("pass_t1"), lit(1)))
-            .as("n_loss"))
-        .select(lit("churn").as("kind"), col("gate"), nlS.as("release"),
-          nlD.as("threshold"), nlD.as("q"), nl.as("n_scored"),
-          nlD.as("score"), col("n_shared"), col("n_flipped"),
-          col("n_gain"), col("n_loss"), nl.as("n_fail_t0"),
-          nl.as("n_admit_t0"), nl.as("n_fail_t1"), nl.as("n_admit_t1"),
-          nl.as("bin"), nl.as("bin_lo"), nl.as("n"), nl.as("n_pos"),
-          nlD.as("pos_rate"))
-      val ts = Seq(-3.60, -3.50, -3.40, -3.30, -3.20)
-      val sweep = ext.Admission.lmThresholdSweep(rep0, ts)
-        .select(col("threshold"), col("n_fail").as("n_fail_t0"),
-          col("n_admit").as("n_admit_t0"))
-        .join(ext.Admission.lmThresholdSweep(rep1, ts)
-          .select(col("threshold"), col("n_fail").as("n_fail_t1"),
-            col("n_admit").as("n_admit_t1")), Seq("threshold"))
-        .select(lit("sweep").as("kind"), nlS.as("gate"),
-          nlS.as("release"), col("threshold"), nlD.as("q"),
-          nl.as("n_scored"), nlD.as("score"), nl.as("n_shared"),
-          nl.as("n_flipped"), nl.as("n_gain"), nl.as("n_loss"),
-          col("n_fail_t0"), col("n_admit_t0"), col("n_fail_t1"),
-          col("n_admit_t1"), nl.as("bin"), nl.as("bin_lo"), nl.as("n"),
-          nl.as("n_pos"), nlD.as("pos_rate"))
-      val qs = Seq(0.0, 0.25, 0.5, 0.75, 1.0)
-      val prof = Seq("t0", "t1").map { name =>
-        ext.Admission.gateScoreProfile(s.read.parquet(s"$tmp/rep_$name"),
-            qs)
-          .select(lit("profile").as("kind"), col("gate"),
-            lit(name).as("release"), nlD.as("threshold"), col("q"),
-            col("n_scored"), col("score"), nl.as("n_shared"),
-            nl.as("n_flipped"), nl.as("n_gain"), nl.as("n_loss"),
-            nl.as("n_fail_t0"), nl.as("n_admit_t0"), nl.as("n_fail_t1"),
-            nl.as("n_admit_t1"), nl.as("bin"), nl.as("bin_lo"),
-            nl.as("n"), nl.as("n_pos"), nlD.as("pos_rate"))
-      }.reduce(_ unionByName _)
-      val bins = Seq("t0", "t1").map { name =>
-        graft.ext.Eval.calibrationBins(
-            s.read.parquet(s"$tmp/mg_$name")
-              .withColumn("release", lit(name)),
-            "release", "margin_fp", "is_pos", binWidth = 4000L)
-          .select(lit("bins").as("kind"), lit("nb_margin_en").as("gate"),
-            col("release"), nlD.as("threshold"), nlD.as("q"),
+      val out = Stage.scratch("graft-adm-rlc-") { tmp =>
+        val (gate, sem) = admissionGateCfg(s, d)
+        val seenBands = admissionBandState(s, d, s"$tmp/bands")
+        Seq("t0" -> docs.filter(col("doc_id") % 7 =!= 1),
+            "t1" -> docs.filter(col("doc_id") % 7 =!= 2)).foreach {
+          case (name, rel) =>
+            val lm = TextAnalysis.bigramLmTrain(rel)
+            val nb = graft.ext.Classifier.nbTrain(rel)
+            ext.Admission.report(shared, Seq("src0", "src1"), gate,
+                contamThreshold = 0.3, semantic = sem, lmModel = lm,
+                minAvgLp = -3.40, nbModel = nb, allowedLabels = Seq("en"),
+                nearDup = Some(ext.Admission.NearDupCfg(seenBands, w = 5,
+                  numHashes = 8, bandWidth = 2)))
+              .write.partitionBy("gate").parquet(s"$tmp/rep_$name")
+            // the margin table for the bins leg, staged beside its
+            // release's report: one nbScores fan-out + the bounded
+            // per-doc margin windows — the only artifact the report
+            // itself does not carry (its 6_nb score is the argmax
+            // score_fp, which keeps the document-length term; the
+            // margin cancels it, which is what makes it calibratable)
+            ext.Classifier.nbMargins(ext.Classifier.nbScores(shared, nb))
+              .filter(col("label") === "en")
+              .join(shared.select(col("doc_id"), col("lang")), Seq("doc_id"))
+              .select(col("doc_id"), col("margin_fp"),
+                (col("lang") === "en").as("is_pos"))
+              .write.parquet(s"$tmp/mg_$name")
+        }
+        val rep0 = s.read.parquet(s"$tmp/rep_t0")
+        val rep1 = s.read.parquet(s"$tmp/rep_t1")
+        val nl = lit(null).cast("bigint")
+        val nlS = lit(null).cast("string")
+        val nlD = lit(null).cast("double")
+        val churn = rep0.select(col("doc_id"), col("gate"),
+            col("pass").as("pass_t0"))
+          .join(rep1.select(col("doc_id"), col("gate"),
+            col("pass").as("pass_t1")), Seq("doc_id", "gate"))
+          .filter(col("gate").isin("5_lm", "6_nb", "8_decision"))
+          .groupBy("gate").agg(
+            count(lit(1)).as("n_shared"),
+            count(when(col("pass_t0") =!= col("pass_t1"), lit(1)))
+              .as("n_flipped"),
+            count(when(!col("pass_t0") && col("pass_t1"), lit(1)))
+              .as("n_gain"),
+            count(when(col("pass_t0") && !col("pass_t1"), lit(1)))
+              .as("n_loss"))
+          .select(lit("churn").as("kind"), col("gate"), nlS.as("release"),
+            nlD.as("threshold"), nlD.as("q"), nl.as("n_scored"),
+            nlD.as("score"), col("n_shared"), col("n_flipped"),
+            col("n_gain"), col("n_loss"), nl.as("n_fail_t0"),
+            nl.as("n_admit_t0"), nl.as("n_fail_t1"), nl.as("n_admit_t1"),
+            nl.as("bin"), nl.as("bin_lo"), nl.as("n"), nl.as("n_pos"),
+            nlD.as("pos_rate"))
+        val ts = Seq(-3.60, -3.50, -3.40, -3.30, -3.20)
+        val sweep = ext.Admission.lmThresholdSweep(rep0, ts)
+          .select(col("threshold"), col("n_fail").as("n_fail_t0"),
+            col("n_admit").as("n_admit_t0"))
+          .join(ext.Admission.lmThresholdSweep(rep1, ts)
+            .select(col("threshold"), col("n_fail").as("n_fail_t1"),
+              col("n_admit").as("n_admit_t1")), Seq("threshold"))
+          .select(lit("sweep").as("kind"), nlS.as("gate"),
+            nlS.as("release"), col("threshold"), nlD.as("q"),
             nl.as("n_scored"), nlD.as("score"), nl.as("n_shared"),
             nl.as("n_flipped"), nl.as("n_gain"), nl.as("n_loss"),
-            nl.as("n_fail_t0"), nl.as("n_admit_t0"), nl.as("n_fail_t1"),
-            nl.as("n_admit_t1"), col("bin"), col("bin_lo"), col("n"),
-            col("n_pos"), col("pos_rate"))
-      }.reduce(_ unionByName _)
-      // the AUC slice: both releases' staged reports give each gate's
-      // scores AND that release's own decision label — ten
-      // (release, gate) rankings in ONE keyed two-pass prefix sum on
-      // the composite key (no per-gate, no per-release job loop).
-      val aucScored = Seq("t0", "t1").map { name =>
-        val r = s.read.parquet(s"$tmp/rep_$name")
-        val kept = r.filter(col("gate") === "8_decision")
-          .select(col("doc_id"), col("pass").as("is_kept"))
-        r.filter(col("gate") =!= "8_decision" && col("score").isNotNull)
-          .select(col("doc_id"),
-            concat(lit(name), lit("|"), col("gate")).as("rk"),
-            admissionScoreFp(col("gate"), col("score")).as("score_fp40"))
-          .join(kept, Seq("doc_id"))
-      }.reduce(_ unionByName _)
-      val aucSlice = graft.ext.Eval.aucByKey(aucScored, "rk",
-          "score_fp40", "is_kept")
-        .select(lit("auc").as("kind"),
-          substring_index(col("rk"), "|", -1).as("gate"),
-          substring_index(col("rk"), "|", 1).as("release"),
-          nlD.as("threshold"), nlD.as("q"),
-          (col("n_pos") + col("n_neg")).as("n_scored"), nlD.as("score"),
-          nl.as("n_shared"), nl.as("n_flipped"), nl.as("n_gain"),
-          nl.as("n_loss"), nl.as("n_fail_t0"), nl.as("n_admit_t0"),
-          nl.as("n_fail_t1"), nl.as("n_admit_t1"), nl.as("bin"),
-          nl.as("bin_lo"), nl.as("n"), col("n_pos"), nlD.as("pos_rate"),
-          col("n_neg"), col("u2"), col("auc"))
-      val out = detachAndClean(
+            col("n_fail_t0"), col("n_admit_t0"), col("n_fail_t1"),
+            col("n_admit_t1"), nl.as("bin"), nl.as("bin_lo"), nl.as("n"),
+            nl.as("n_pos"), nlD.as("pos_rate"))
+        val qs = Seq(0.0, 0.25, 0.5, 0.75, 1.0)
+        val prof = Seq("t0", "t1").map { name =>
+          ext.Admission.gateScoreProfile(s.read.parquet(s"$tmp/rep_$name"),
+              qs)
+            .select(lit("profile").as("kind"), col("gate"),
+              lit(name).as("release"), nlD.as("threshold"), col("q"),
+              col("n_scored"), col("score"), nl.as("n_shared"),
+              nl.as("n_flipped"), nl.as("n_gain"), nl.as("n_loss"),
+              nl.as("n_fail_t0"), nl.as("n_admit_t0"), nl.as("n_fail_t1"),
+              nl.as("n_admit_t1"), nl.as("bin"), nl.as("bin_lo"),
+              nl.as("n"), nl.as("n_pos"), nlD.as("pos_rate"))
+        }.reduce(_ unionByName _)
+        val bins = Seq("t0", "t1").map { name =>
+          graft.ext.Eval.calibrationBins(
+              s.read.parquet(s"$tmp/mg_$name")
+                .withColumn("release", lit(name)),
+              "release", "margin_fp", "is_pos", binWidth = 4000L)
+            .select(lit("bins").as("kind"), lit("nb_margin_en").as("gate"),
+              col("release"), nlD.as("threshold"), nlD.as("q"),
+              nl.as("n_scored"), nlD.as("score"), nl.as("n_shared"),
+              nl.as("n_flipped"), nl.as("n_gain"), nl.as("n_loss"),
+              nl.as("n_fail_t0"), nl.as("n_admit_t0"), nl.as("n_fail_t1"),
+              nl.as("n_admit_t1"), col("bin"), col("bin_lo"), col("n"),
+              col("n_pos"), col("pos_rate"))
+        }.reduce(_ unionByName _)
+        // the AUC slice: both releases' staged reports give each gate's
+        // scores AND that release's own decision label — ten
+        // (release, gate) rankings in ONE keyed two-pass prefix sum on
+        // the composite key (no per-gate, no per-release job loop).
+        val aucScored = Seq("t0", "t1").map { name =>
+          val r = s.read.parquet(s"$tmp/rep_$name")
+          val kept = r.filter(col("gate") === "8_decision")
+            .select(col("doc_id"), col("pass").as("is_kept"))
+          r.filter(col("gate") =!= "8_decision" && col("score").isNotNull)
+            .select(col("doc_id"),
+              concat(lit(name), lit("|"), col("gate")).as("rk"),
+              admissionScoreFp(col("gate"), col("score")).as("score_fp40"))
+            .join(kept, Seq("doc_id"))
+        }.reduce(_ unionByName _)
+        val aucSlice = graft.ext.Eval.aucByKey(aucScored, "rk",
+            "score_fp40", "is_kept")
+          .select(lit("auc").as("kind"),
+            substring_index(col("rk"), "|", -1).as("gate"),
+            substring_index(col("rk"), "|", 1).as("release"),
+            nlD.as("threshold"), nlD.as("q"),
+            (col("n_pos") + col("n_neg")).as("n_scored"), nlD.as("score"),
+            nl.as("n_shared"), nl.as("n_flipped"), nl.as("n_gain"),
+            nl.as("n_loss"), nl.as("n_fail_t0"), nl.as("n_admit_t0"),
+            nl.as("n_fail_t1"), nl.as("n_admit_t1"), nl.as("bin"),
+            nl.as("bin_lo"), nl.as("n"), col("n_pos"), nlD.as("pos_rate"),
+            col("n_neg"), col("u2"), col("auc"))
         churn.unionByName(sweep).unionByName(prof).unionByName(bins)
           .withColumn("n_neg", nl).withColumn("u2", nl)
           .withColumn("auc", nlD)
           .unionByName(aucSlice)
-          .orderBy("kind", "gate", "release", "threshold", "q", "bin"),
-        tmp)
+          .orderBy("kind", "gate", "release", "threshold", "q", "bin")
+      }
       // laws off the bounded checkpoint (~90 rows):
       val rows = out.collect()
       val dec = rows.find(r => r.getAs[String]("kind") == "churn" &&
@@ -1259,7 +1181,10 @@ private[graft] object CorpusRegistry {
         .select(col("doc_id"), col("source"), col("n_chars"))
         .orderBy("doc_id")
     }),
-  )
+  ) ++ reportConsumers.map { case (name, consume) =>
+    name -> ((s: SparkSession, d: String) =>
+      Stage.scratch(s"graft-$name-")(tmp => consume(admissionReportFor(s, d, tmp))))
+  }
 
   val oracleSql: Map[String, String] = Map(
     "corpus_importance_weights" ->

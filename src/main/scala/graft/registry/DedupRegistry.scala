@@ -54,7 +54,7 @@ private[graft] object DedupRegistry {
       Dedup.repeatedSpans(Tables.documents(s, d), w = 8, minDocs = 2)
         .orderBy("doc_id")),
 
-    "dedup_recall_eval" -> ((s, d) => {
+    "dedup_recall_eval" -> ((s, d) => Stage.scratch("graft-recall-ngram-") { tmp =>
       // "measure, don't guess" for the near-dup family (round 13 —
       // the dedup-side sibling of sim_recall_eval): every EXACT
       // Jaccard >= 0.5 pair flagged with whether the banded MinHash
@@ -67,23 +67,20 @@ private[graft] object DedupRegistry {
       // storage, and the exact and banded pipelines read it back —
       // previously the LSH leg re-shingled into executor block memory.
       val docs = Tables.documents(s, d)
-      val tmp = TempDirs.create("graft-recall-ngram-").toString
       Dedup.shingles(docs, w = 5).write.parquet(s"$tmp/shingles")
       val tri = s.read.parquet(s"$tmp/shingles")
       val exact = Dedup.ngramJaccardOnShingles(tri, threshold = 0.5)
       val lsh = Dedup.minhashLshOnShingles(tri, numHashes = 8,
           bandWidth = 2, threshold = 0.5)
         .select(col("d1").as("l1"), col("d2").as("l2"))
-      detachAndClean(
-        exact.join(lsh,
-            col("d1") === col("l1") && col("d2") === col("l2"), "left")
-          .select(col("d1"), col("d2"), col("jaccard"),
-            col("l1").isNotNull.as("found"))
-          .orderBy("d1", "d2"),
-        tmp)
+      exact.join(lsh,
+          col("d1") === col("l1") && col("d2") === col("l2"), "left")
+        .select(col("d1"), col("d2"), col("jaccard"),
+          col("l1").isNotNull.as("found"))
+        .orderBy("d1", "d2")
     }),
 
-    "dedup_banding_sweep" -> ((s, d) => {
+    "dedup_banding_sweep" -> ((s, d) => Stage.scratch("graft-sweep-") { tmp =>
       // the LSH s-curve as a TUNING TABLE (the dedup analog of
       // sim_ivf_nprobe_sweep): recall of the banded path vs exact
       // >= 0.5 pairs across band widths 1/2/4 over the 8-hash family —
@@ -103,23 +100,19 @@ private[graft] object DedupRegistry {
       // to 1 at any scale.
       import s.implicits._
       val docs = Tables.documents(s, d)
-      // Every count is eager, so the staged tables go before return.
-      val tmp = TempDirs.create("graft-sweep-")
-      try {
-        Dedup.shingles(docs, w = 5).write.parquet(s"$tmp/shingles")
-        val tri = s.read.parquet(s"$tmp/shingles")
-        Dedup.signatureTableFromShingles(tri, w = 5, numHashes = 8)
-          .write.parquet(s"$tmp/sigs")
-        val sigs = s.read.parquet(s"$tmp/sigs")
-        val nExact = Dedup.ngramJaccardOnShingles(tri, threshold = 0.5).count()
-        Seq(1, 2, 4).map { bw =>
-          val found = Dedup.pairsFromBands(tri,
-            Dedup.bandTableFromSignatures(sigs, bandWidth = bw),
-            threshold = 0.5).count()
-          (bw, nExact, found, found.toDouble / nExact)
-        }.toDF("band_width", "n_exact", "n_found", "recall")
-          .orderBy("band_width")
-      } finally graft.plans.Pipeline.deleteRecursively(tmp)
+      Dedup.shingles(docs, w = 5).write.parquet(s"$tmp/shingles")
+      val tri = s.read.parquet(s"$tmp/shingles")
+      Dedup.signatureTableFromShingles(tri, w = 5, numHashes = 8)
+        .write.parquet(s"$tmp/sigs")
+      val sigs = s.read.parquet(s"$tmp/sigs")
+      val nExact = Dedup.ngramJaccardOnShingles(tri, threshold = 0.5).count()
+      Seq(1, 2, 4).map { bw =>
+        val found = Dedup.pairsFromBands(tri,
+          Dedup.bandTableFromSignatures(sigs, bandWidth = bw),
+          threshold = 0.5).count()
+        (bw, nExact, found, found.toDouble / nExact)
+      }.toDF("band_width", "n_exact", "n_found", "recall")
+        .orderBy("band_width")
     }),
 
     "dedup_maximal_spans" -> ((s, d) =>
@@ -195,7 +188,7 @@ private[graft] object DedupRegistry {
         .orderBy("cluster_id")
     }),
 
-    "dedup_compact_global" -> ((s, d) => {
+    "dedup_compact_global" -> ((s, d) => Stage.scratch("graft-compact-") { tmp =>
       // GLOBAL near-dup compaction (round 11): the batch complement of
       // streaming admission. Build the full corpus's persisted band
       // state, re-cluster it from the STATE alone (bucket-star edges →
@@ -207,7 +200,6 @@ private[graft] object DedupRegistry {
       // band would re-reject content whose representative was dropped);
       // the hash pins the keeper table.
       val docs = Tables.documents(s, d)
-      val tmp = TempDirs.create("graft-compact-").toString
       val stateDir = s"$tmp/bands"
       Dedup.writeBandState(
         Dedup.bandTable(docs, w = 5, numHashes = 8, bandWidth = 2),
@@ -219,7 +211,7 @@ private[graft] object DedupRegistry {
         .count()
       require(ghost == 0,
         s"$ghost non-keeper docs left bands in the compacted state")
-      detachAndClean(kept.orderBy("cluster_id"), tmp)
+      kept.orderBy("cluster_id")
     }),
 
     "dedup_incremental_near" -> ((s, d) => {
@@ -267,7 +259,7 @@ private[graft] object DedupRegistry {
       }
     }),
 
-    "dedup_state_append" -> ((s, d) => {
+    "dedup_state_append" -> ((s, d) => Stage.scratch("graft-state-append-") { tmp =>
       // the WRITE half of incremental admission, two batches deep: build
       // and persist the seen corpus's band state, admit batch 1 against
       // it, APPEND the admitted docs' bands to the state, then admit
@@ -281,7 +273,6 @@ private[graft] object DedupRegistry {
       val seen = docs.filter(col("source").isin(seenSrc: _*))
       val batch1 = docs.filter(col("source").isin(b1Src: _*))
       val batch2 = docs.filter(!col("source").isin((seenSrc ++ b1Src): _*))
-      val tmp = TempDirs.create("graft-state-append-").toString
       val stateDir = s"$tmp/bands"
       // PARTITIONED state (band/bpfx cells): both admissions below read
       // the state pruned to the cells their batch probes — the
@@ -297,14 +288,12 @@ private[graft] object DedupRegistry {
         w = 5, numHashes = 8, bandWidth = 2)
       val adm2 = Dedup.incrementalNearDupFromState(s, batch2, stateDir,
         w = 5, numHashes = 8, bandWidth = 2)
-      detachAndClean(
-        adm1.unionByName(adm2)
-          .select(col("doc_id"), col("source"), col("n_chars"))
-          .orderBy("doc_id"),
-        tmp)
+      adm1.unionByName(adm2)
+        .select(col("doc_id"), col("source"), col("n_chars"))
+        .orderBy("doc_id")
     }),
 
-    "dedup_state_retention" -> ((s, d) => {
+    "dedup_state_retention" -> ((s, d) => Stage.scratch("graft-dedup-state-") { tmp =>
       // dedup-STATE lifecycle round-trip: build and PERSIST the band-table
       // state for the accumulated corpus, remove a third of its documents
       // (deleted / re-licensed out), run key-based retention over the
@@ -319,7 +308,6 @@ private[graft] object DedupRegistry {
       val seenSrc = (0 to 9).map(i => s"src$i")
       val seen = docs.filter(col("source").isin(seenSrc: _*))
       val incoming = docs.filter(!col("source").isin(seenSrc: _*))
-      val tmp = TempDirs.create("graft-dedup-state-").toString
       val stateDir = s"$tmp/bands"
       Dedup.bandTable(seen, w = 5, numHashes = 8, bandWidth = 2)
         .repartition(8) // small state files — retention compacts them too
@@ -336,19 +324,17 @@ private[graft] object DedupRegistry {
       require(files < stagedFiles,
         s"retention rewrite should compact the $stagedFiles staged state " +
           s"files, found $files")
-      detachAndClean(
-        Dedup.incrementalNearDup(incoming, retained,
-            w = 5, numHashes = 8, bandWidth = 2)
-          .select(col("doc_id"), col("source"), col("n_chars"))
-          .orderBy("doc_id"),
-        tmp)
+      Dedup.incrementalNearDup(incoming, retained,
+          w = 5, numHashes = 8, bandWidth = 2)
+        .select(col("doc_id"), col("source"), col("n_chars"))
+        .orderBy("doc_id")
     }),
 
     "dedup_embedding_cosine" -> ((s, d) =>
       Dedup.embeddingCosinePairs(Tables.embeddings(s, d), threshold = 0.42)
         .orderBy("i", "j")),
 
-    "dedup_state_expire" -> ((s, d) => {
+    "dedup_state_expire" -> ((s, d) => Stage.scratch("graft-state-expire-") { tmp =>
       // AGE/TTL retention for persisted dedup state (round 12): band
       // rows carry an `admitted_ts` EVENT-time stamp written by the
       // append path (never wall clock — deterministic, oracle-checkable);
@@ -365,7 +351,6 @@ private[graft] object DedupRegistry {
       val cohortA = docs.filter(col("source").isin(srcA: _*))
       val cohortB = docs.filter(col("source").isin(srcB: _*))
       val incoming = docs.filter(!col("source").isin((srcA ++ srcB): _*))
-      val tmp = TempDirs.create("graft-state-expire-").toString
       val stateDir = s"$tmp/bands"
       Dedup.writeBandState(
         Dedup.bandTable(cohortA, w = 5, numHashes = 8, bandWidth = 2)
@@ -380,12 +365,10 @@ private[graft] object DedupRegistry {
         promotion = graft.operators.ScaleOps.PointerSwap)
       val retained = graft.operators.ScaleOps.readMaintained(s, stateDir,
         graft.operators.ScaleOps.PointerSwap)
-      detachAndClean(
-        Dedup.incrementalNearDup(incoming, retained,
-            w = 5, numHashes = 8, bandWidth = 2)
-          .select(col("doc_id"), col("source"), col("n_chars"))
-          .orderBy("doc_id"),
-        tmp)
+      Dedup.incrementalNearDup(incoming, retained,
+          w = 5, numHashes = 8, bandWidth = 2)
+        .select(col("doc_id"), col("source"), col("n_chars"))
+        .orderBy("doc_id")
     }),
   )
 

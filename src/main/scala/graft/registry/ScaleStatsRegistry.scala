@@ -157,7 +157,7 @@ private[graft] object ScaleStatsRegistry {
         .orderBy("s1", "s2")
     }),
 
-    "stats_overlap_incremental" -> ((s, d) => {
+    "stats_overlap_incremental" -> ((s, d) => Stage.scratch("graft-ovinc-") { tmp =>
       // the source-overlap audit maintained INCREMENTALLY (round 12
       // cont.): per-source sketches built on the prior corpus half and
       // PERSISTED; the delta's sketches fold in by the per-key KMV
@@ -170,15 +170,12 @@ private[graft] object ScaleStatsRegistry {
           .join(cohort.select(col("doc_id"), col("source")), Seq("doc_id"))
         ext.Sketches.kmvBuildBy(sh, "source", "sh", k = 256)
       }
-      val tmp = TempDirs.create("graft-ovinc-").toString
       sketchOf(docs.filter(col("doc_id") % 2 === 0))
         .write.parquet(s"$tmp/sketches")
       val merged = ext.Sketches.kmvMergeBy(256,
         s.read.parquet(s"$tmp/sketches"),
         sketchOf(docs.filter(col("doc_id") % 2 =!= 0)))
-      detachAndClean(
-        ext.Sketches.kmvOverlapMatrix(merged, k = 256).orderBy("s1", "s2"),
-        tmp)
+      ext.Sketches.kmvOverlapMatrix(merged, k = 256).orderBy("s1", "s2")
     }),
 
     "stats_kmv_setops" -> ((s, d) => {
@@ -260,7 +257,7 @@ private[graft] object ScaleStatsRegistry {
         .orderBy("j", "bucket")
     }),
 
-    "stats_sketch_state" -> ((s, d) => {
+    "stats_sketch_state" -> ((s, d) => Stage.scratch("graft-sketchstate-") { tmp =>
       // the PERSISTED sketch-state lifecycle, all three deterministic
       // families in one run: day-1 sketches written with their geometry
       // STAMPED (countMinWrite / bloomWrite / kmvWrite), the day-2 batch
@@ -278,7 +275,6 @@ private[graft] object ScaleStatsRegistry {
       // scan+split+explode of the corpus — staged once here, the
       // rebuild-forget shingle discipline applied to the token stream
       // (a warehouse would likewise stage the token table per release).
-      val tmp = TempDirs.create("graft-sketchstate-").toString
       Stage.scoped { st =>
         val tokens = st.cache(docs.select(col("doc_id"),
           explode(split(col("text"), " ")).as("token")))
@@ -315,13 +311,11 @@ private[graft] object ScaleStatsRegistry {
           s.read.parquet(s"$tmp/bloom2"), top.unionByName(absent), "token")
         .select(lit("bloom").as("family"), col("token").as("item"),
           lit(null).cast("double").as("est"), col("might_contain").as("flag"))
-      detachAndClean(
-        cmsEst.unionByName(kmvEst).unionByName(bloomRes)
-          .orderBy("family", "item"),
-        tmp)
+      cmsEst.unionByName(kmvEst).unionByName(bloomRes)
+        .orderBy("family", "item")
     }),
 
-    "stats_quantile_sketch" -> ((s, d) => {
+    "stats_quantile_sketch" -> ((s, d) => Stage.scratch("graft-qsample-") { tmp =>
       // the QUANTILE leg of the persisted sketch family, full lifecycle:
       // day-1 hash-ranked bottom-k sample written with k STAMPED, the
       // day-2 batch merged against the LOADED state (bottom-k of the
@@ -337,7 +331,6 @@ private[graft] object ScaleStatsRegistry {
       val ev = Tables.events(s, d).filter(col("value").isNotNull)
       val day1 = ev.filter(col("event_id") % 2 === 0)
       val day2 = ev.filter(col("event_id") % 2 =!= 0)
-      val tmp = TempDirs.create("graft-qsample-").toString
       ext.Sketches.quantileSampleWrite(
         ext.Sketches.quantileSampleBuild(day1, "event_id", "value", k = 512),
         s"$tmp/day1", k = 512)
@@ -360,13 +353,11 @@ private[graft] object ScaleStatsRegistry {
         .agg(count(when(col("value") <= col("v_est"), 1)).as("n_le"))
         .select(col("q"),
           (col("n_le").cast("double") / lit(n.toDouble)).as("cdf_at_est"))
-      detachAndClean(
-        est.join(exact, Seq("q")).join(cdf, Seq("q"))
-          .withColumn("err_ok", abs(col("cdf_at_est") - col("q")) <= lit(0.1))
-          .select(col("q"), col("n_s"), col("rank_s"), col("v_est"),
-            col("v_exact"), col("cdf_at_est"), col("err_ok"))
-          .orderBy("q"),
-        tmp)
+      est.join(exact, Seq("q")).join(cdf, Seq("q"))
+        .withColumn("err_ok", abs(col("cdf_at_est") - col("q")) <= lit(0.1))
+        .select(col("q"), col("n_s"), col("rank_s"), col("v_est"),
+          col("v_exact"), col("cdf_at_est"), col("err_ok"))
+        .orderBy("q")
     }),
 
     "stats_drift" -> ((s, d) => {
@@ -387,7 +378,7 @@ private[graft] object ScaleStatsRegistry {
         .orderBy(col("section"), col("bin").asc_nulls_last)
     }),
 
-    "stats_drift_state" -> ((s, d) => {
+    "stats_drift_state" -> ((s, d) => Stage.scratch("graft-driftstate-") { tmp =>
       // the drift monitor as PIPELINE state: the day-1 click histogram
       // persisted with its bin width STAMPED, the day-2 click batch
       // additively merged into the LOADED baseline (build(A) ⊕ build(B)
@@ -399,7 +390,6 @@ private[graft] object ScaleStatsRegistry {
       // indistinguishable from never having split the stream.
       val ev = Tables.events(s, d)
       val click = ev.filter(col("event_type") === "click")
-      val tmp = TempDirs.create("graft-driftstate-").toString
       ext.Quality.histWrite(
         ext.Quality.histBuild(click.filter(col("event_id") % 2 === 0),
           "value", 25.0), s"$tmp/base", binWidth = 25.0)
@@ -411,14 +401,12 @@ private[graft] object ScaleStatsRegistry {
       ext.Quality.histWrite(
         ext.Quality.histBuild(ev.filter(col("event_type") === "view"),
           "value", 25.0), s"$tmp/cur", binWidth = 25.0)
-      detachAndClean(
-        ext.Quality.driftStated(
-            s.read.parquet(s"$tmp/base2"), s.read.parquet(s"$tmp/cur"))
-          .orderBy(col("section"), col("bin").asc_nulls_last),
-        tmp)
+      ext.Quality.driftStated(
+          s.read.parquet(s"$tmp/base2"), s.read.parquet(s"$tmp/cur"))
+        .orderBy(col("section"), col("bin").asc_nulls_last)
     }),
 
-    "stats_hist_forget" -> ((s, d) => {
+    "stats_hist_forget" -> ((s, d) => Stage.scratch("graft-hist-forget-") { tmp =>
       // EXACT deletion from persisted histogram state (round 11): the
       // right-to-be-forgotten path for the one sketch family whose
       // algebra is invertible. Full-corpus n_chars histogram persisted
@@ -429,19 +417,16 @@ private[graft] object ScaleStatsRegistry {
       // DROPPED (a retained-bin rebuild never emits them).
       val docs = Tables.documents(s, d)
       val width = 64.0
-      val tmp = TempDirs.create("graft-hist-forget-").toString
       ext.Quality.histWrite(
         ext.Quality.histBuild(docs, "n_chars", width), s"$tmp/hist", width)
       val forgotten = docs.filter(col("doc_id") % 10 === 3)
-      detachAndClean(
-        ext.Quality.histSubtract(width,
-            s.read.parquet(s"$tmp/hist"),
-            ext.Quality.histBuild(forgotten, "n_chars", width))
-          .orderBy("bin"),
-        tmp)
+      ext.Quality.histSubtract(width,
+          s.read.parquet(s"$tmp/hist"),
+          ext.Quality.histBuild(forgotten, "n_chars", width))
+        .orderBy("bin")
     }),
 
-    "stats_expire_windows" -> ((s, d) => {
+    "stats_expire_windows" -> ((s, d) => Stage.scratch("graft-sketch-windows-") { tmp =>
       // AGE/TTL retention for the NON-invertible sketch families
       // (round 12): a merged KMV cannot subtract an expired cohort, so
       // the lifecycle persists one PARTIAL per event-time window
@@ -453,7 +438,6 @@ private[graft] object ScaleStatsRegistry {
       // dropping the partial removed exactly that window's contribution
       // (the merge law, made driver-checkable).
       val docs = Tables.documents(s, d)
-      val tmp = TempDirs.create("graft-sketch-windows-").toString
       val dir = s"$tmp/kmv_windows"
       (0 to 2).foreach { wts =>
         ext.Sketches.writeWindowPartial(
@@ -465,15 +449,13 @@ private[graft] object ScaleStatsRegistry {
       val expired = ext.Sketches.expireWindows(s, dir, watermark = 1L)
       require(expired == Seq(0L), s"expected window 0 expired, got $expired")
       val parts = ext.Sketches.readWindowPartials(s, dir)
-      detachAndClean(
-        ext.Sketches.kmvMerge(256,
-            parts.filter(col("window_ts") === 1).select(col("rank"), col("h")),
-            parts.filter(col("window_ts") === 2).select(col("rank"), col("h")))
-          .orderBy("rank"),
-        tmp)
+      ext.Sketches.kmvMerge(256,
+          parts.filter(col("window_ts") === 1).select(col("rank"), col("h")),
+          parts.filter(col("window_ts") === 2).select(col("rank"), col("h")))
+        .orderBy("rank")
     }),
 
-    "stats_rebuild_forget" -> ((s, d) => {
+    "stats_rebuild_forget" -> ((s, d) => Stage.scratch("graft-rebuild-forget-") { tmp =>
       // deletion-by-REBUILD for the non-invertible families (round 12):
       // KMV (bottom-k of a union), Bloom (saturating bitmap) and CMS
       // (never-undercount counters) cannot subtract a forgotten cohort
@@ -490,7 +472,6 @@ private[graft] object ScaleStatsRegistry {
       // ONE shingle pass feeds all six builds: the full-corpus and
       // survivor streams are projections of the same cached frame
       // (the warehouse would likewise stage shingles once per release)
-      val tmp = TempDirs.create("graft-rebuild-forget-").toString
       Stage.scoped { st =>
         val allSh = st.cache(Dedup.shingles(docs, w = 3))
         allSh.count()
@@ -519,10 +500,8 @@ private[graft] object ScaleStatsRegistry {
       val cms = s.read.parquet(s"$tmp/cms")
         .select(lit("cms").as("family"), col("j").cast("long").as("a"),
           col("bucket").as("b"), col("total").as("v"))
-      detachAndClean(
-        kmv.unionByName(bloom).unionByName(cms)
-          .orderBy("family", "a", "b"),
-        tmp)
+      kmv.unionByName(bloom).unionByName(cms)
+        .orderBy("family", "a", "b")
     }),
 
     "scale_salted_join" -> ((s, d) =>
@@ -540,7 +519,7 @@ private[graft] object ScaleStatsRegistry {
             lit(100.0)).as("total_price"))
         .orderBy("c_mktsegment")),
 
-    "scale_compact_roundtrip" -> ((s, d) => {
+    "scale_compact_roundtrip" -> ((s, d) => Stage.scratch("graft-compact-") { tmp =>
       // sink-MAINTENANCE end-to-end (reference MV-refresh analog,
       // gold_ddl.sql:201-244), hash-checked like gold_pipeline_e2e:
       // stage the events feed as a per-batch append sink (batch_id=N/
@@ -551,7 +530,6 @@ private[graft] object ScaleStatsRegistry {
       // surviving content straight from the source, so retention picked
       // the right batches AND the rewrite preserved every row — the
       // write paths the spec tests covered are now driver-visible.
-      val tmp = TempDirs.create("graft-compact-").toString
       val dataDir = s"$tmp/data"
       Tables.events(s, d)
         .withColumn("batch_id", (col("event_id") % 6).cast("int"))
@@ -580,17 +558,15 @@ private[graft] object ScaleStatsRegistry {
       require(files >= 4 && files < stagedFiles,
         s"compaction should leave >=1 file per dir and strictly fewer than " +
           s"the $stagedFiles staged small files, found $files")
-      detachAndClean(
-        back.groupBy(col("batch_id").cast("int").as("batch_id"),
-            col("event_type"))
-          .agg(count(lit(1)).as("n_events"),
-            sum(col("event_id")).as("id_sum"),
-            centsSum(col("value")).as("value_cents"))
-          .orderBy("batch_id", "event_type"),
-        tmp)
+      back.groupBy(col("batch_id").cast("int").as("batch_id"),
+          col("event_type"))
+        .agg(count(lit(1)).as("n_events"),
+          sum(col("event_id")).as("id_sum"),
+          centsSum(col("value")).as("value_cents"))
+        .orderBy("batch_id", "event_type")
     }),
 
-    "scale_backfill_partition" -> ((s, d) => {
+    "scale_backfill_partition" -> ((s, d) => Stage.scratch("graft-backfill-") { tmp =>
       // partition backfill (INSERT OVERWRITE PARTITION analog): the
       // initial load lands a CORRUPTED first day (values doubled — the
       // bad-load event backfill exists to repair); the backfill rewrites
@@ -599,7 +575,6 @@ private[graft] object ScaleStatsRegistry {
       // physical contract is asserted: an untouched day's file set is
       // bit-identical before and after (cost ∝ backfilled partitions,
       // never the table).
-      val tmp = TempDirs.create("graft-backfill-").toString
       val dir = s"$tmp/events_bydate"
       val ev = Tables.events(s, d).select(col("event_id"), col("event_type"),
         col("user_id"), col("value"), unix_millis(col("ts")).as("ts_ms"),
@@ -624,15 +599,13 @@ private[graft] object ScaleStatsRegistry {
         dir, Seq("event_date"))
       require(filesOf(untouched) == before,
         s"backfill must not rewrite untouched partition $untouched")
-      detachAndClean(
-        s.read.parquet(dir)
-          .select(col("event_id"), col("event_type"), col("user_id"),
-            col("value"), col("ts_ms"))
-          .orderBy("event_id"),
-        tmp)
+      s.read.parquet(dir)
+        .select(col("event_id"), col("event_type"), col("user_id"),
+          col("value"), col("ts_ms"))
+        .orderBy("event_id")
     }),
 
-    "scale_schema_evolution" -> ((s, d) => {
+    "scale_schema_evolution" -> ((s, d) => Stage.scratch("graft-schemaevo-") { tmp =>
       // ADDITIVE SCHEMA EVOLUTION across ingest batches — the warehouse
       // half of this round's drift story (the loader hardening handles a
       // SOURCE changing type under the engine; this handles the engine's
@@ -645,7 +618,6 @@ private[graft] object ScaleStatsRegistry {
       // mergeSchema pays one parquet-footer read per file at PLAN time,
       // no data pass — production pins the merged schema in a catalog
       // and the scan itself is identical.
-      val tmp = TempDirs.create("graft-schemaevo-").toString
       val dir = s"$tmp/orders_evolved"
       val o = Tables.orders(s, d)
       o.filter(col("o_orderkey") % 2 === 0)
@@ -658,18 +630,16 @@ private[graft] object ScaleStatsRegistry {
       val merged = s.read.option("mergeSchema", "true").parquet(dir)
       require(merged.schema.fieldNames.contains("o_priority_bucket"),
         "mergeSchema read lost the evolved column")
-      detachAndClean(
-        merged
-          .withColumn("o_priority_bucket",
-            coalesce(col("o_priority_bucket"), lit(-1)))
-          .groupBy(col("o_priority_bucket"))
-          .agg(count(lit(1)).as("n_orders"),
-            centsSum(col("o_totalprice")).as("price_cents"))
-          .orderBy("o_priority_bucket"),
-        tmp)
+      merged
+        .withColumn("o_priority_bucket",
+          coalesce(col("o_priority_bucket"), lit(-1)))
+        .groupBy(col("o_priority_bucket"))
+        .agg(count(lit(1)).as("n_orders"),
+          centsSum(col("o_totalprice")).as("price_cents"))
+        .orderBy("o_priority_bucket")
     }),
 
-    "scale_incremental_refresh" -> ((s, d) => {
+    "scale_incremental_refresh" -> ((s, d) => Stage.scratch("graft-increfresh-") { tmp =>
       // incremental MV maintenance — the partition-overwrite refresh
       // loop of a warehouse mart: a daily aggregate built from the
       // initial fact load, then a delta batch (two NEW days + LATE
@@ -681,7 +651,6 @@ private[graft] object ScaleStatsRegistry {
       // incremental path must land on exactly the one-shot answer,
       // count-distinct included (recompute-pruning keeps non-additive
       // measures exact where aggregate-merge algebra could not).
-      val tmp = TempDirs.create("graft-increfresh-").toString
       val factDir = s"$tmp/fact"; val martDir = s"$tmp/mart"
       val ev = Tables.events(s, d).select(col("event_id"), col("event_type"),
         col("user_id"), col("value"), to_date(col("ts")).as("event_date"))
@@ -713,15 +682,13 @@ private[graft] object ScaleStatsRegistry {
       require(filesOf(probe) == before,
         s"untouched mart partition $probe was rewritten — refresh cost " +
           "must be proportional to affected partitions only")
-      detachAndClean(
-        s.read.parquet(martDir)
-          .select(col("event_date"), col("event_type"), col("n_events"),
-            col("value_cents"), col("unique_users"))
-          .orderBy("event_date", "event_type"),
-        tmp)
+      s.read.parquet(martDir)
+        .select(col("event_date"), col("event_type"), col("n_events"),
+          col("value_cents"), col("unique_users"))
+        .orderBy("event_date", "event_type")
     }),
 
-    "scale_zorder_roundtrip" -> ((s, d) => {
+    "scale_zorder_roundtrip" -> ((s, d) => Stage.scratch("graft-zorder-") { tmp =>
       // the WRITE half of multi-dimensional data skipping, content-
       // checked: Z-order-cluster the events feed on bucketed
       // (user_id, event_id) into 8 range-partitioned files, then return
@@ -730,7 +697,6 @@ private[graft] object ScaleStatsRegistry {
       // property (each file covers a small (x, y) rectangle whose
       // min/max stats prune filters on either dimension) stays asserted
       // in ScaleOpsSpec.
-      val tmp = TempDirs.create("graft-zorder-").toString
       val path = s"$tmp/events_z"
       graft.operators.ScaleOps.writeZOrdered(
         Tables.events(s, d)
@@ -739,8 +705,7 @@ private[graft] object ScaleStatsRegistry {
           .withColumn("zx", pmod(col("user_id"), lit(256)).cast("int"))
           .withColumn("zy", pmod(col("event_id"), lit(256)).cast("int")),
         "zx", "zy", path, numFiles = 8)
-      detachAndClean(
-        s.read.parquet(path).drop("zx", "zy").orderBy("event_id"), tmp)
+      s.read.parquet(path).drop("zx", "zy").orderBy("event_id")
     }),
 
     "stats_histogram" -> ((s, d) => histogram20(Tables.events(s, d))),

@@ -190,7 +190,7 @@ private[graft] object SimilarityRegistry {
         .orderBy("qid", "rnk")
     }),
 
-    "sim_index_roundtrip" -> ((s, d) => {
+    "sim_index_roundtrip" -> ((s, d) => Stage.scratch("graft-vindex-") { tmp =>
       // the PERSISTED ANN index lifecycle, end to end on disk: build an
       // IVF-PQ index over ¾ of the corpus (centroids + codebooks frozen,
       // cells + codes bucketed by cell), search the PERSISTED index both
@@ -205,7 +205,6 @@ private[graft] object SimilarityRegistry {
       val initial = emb.filter(col("vec_id") % 4 =!= 3)
       val delta = emb.filter(col("vec_id") % 4 === 3)
       val queries = emb.filter(col("vec_id") < 5)
-      val tmp = TempDirs.create("graft-vindex-").toString
       val dir = s"$tmp/index"
       ext.VectorIndex.build(initial, dir)
       def phase(name: String, df: DataFrame): DataFrame =
@@ -229,13 +228,11 @@ private[graft] object SimilarityRegistry {
         ext.VectorIndex.searchFlat(s, dir, queries, k = 5))
       val postA = phase("4_post_adc",
         ext.VectorIndex.searchAdc(s, dir, queries, k = 5))
-      detachAndClean(
-        preF.unionByName(preA).unionByName(postF).unionByName(postA)
-          .orderBy("phase", "qid", "rnk"),
-        tmp)
+      preF.unionByName(preA).unionByName(postF).unionByName(postA)
+        .orderBy("phase", "qid", "rnk")
     }),
 
-    "sim_index_retain" -> ((s, d) => {
+    "sim_index_retain" -> ((s, d) => Stage.scratch("graft-vretain-") { tmp =>
       // the DELETE half of the index lifecycle: build over the full
       // corpus, RETAIN ¾ of it (vec_id % 4 == 3 removed — deleted or
       // re-licensed out), search the retained index both ways. The
@@ -248,7 +245,6 @@ private[graft] object SimilarityRegistry {
       val emb = Tables.embeddings(s, d)
       val keep = emb.filter(col("vec_id") % 4 =!= 3)
       val queries = emb.filter(col("vec_id") < 5)
-      val tmp = TempDirs.create("graft-vretain-").toString
       val dir = s"$tmp/index"
       ext.VectorIndex.build(emb, dir)
       ext.VectorIndex.retain(s, dir, keep)
@@ -261,12 +257,10 @@ private[graft] object SimilarityRegistry {
       def phase(name: String, df: DataFrame): DataFrame =
         df.select(lit(name).as("phase"), col("qid"),
           col("rank").cast("int").as("rnk"), col("cid"))
-      detachAndClean(
-        phase("1_flat", ext.VectorIndex.searchFlat(s, dir, queries, k = 5))
-          .unionByName(
-            phase("2_adc", ext.VectorIndex.searchAdc(s, dir, queries, k = 5)))
-          .orderBy("phase", "qid", "rnk"),
-        tmp)
+      phase("1_flat", ext.VectorIndex.searchFlat(s, dir, queries, k = 5))
+        .unionByName(
+          phase("2_adc", ext.VectorIndex.searchAdc(s, dir, queries, k = 5)))
+        .orderBy("phase", "qid", "rnk")
     }),
 
     "sim_index_search_refined" -> ((s, d) => {
@@ -282,13 +276,13 @@ private[graft] object SimilarityRegistry {
       val emb = Tables.embeddings(s, d)
       val queries = emb.filter(col("vec_id") < 5)
       // read-only search over the SHARED frozen index (see
-      // sharedFullIndex) — no tmp dir to clean; the localCheckpoint
-      // detach alone keeps per-query state release intact
+      // sharedFullIndex) — no scratch dir; the localCheckpoint detach
+      // alone keeps per-query state release intact
       val dir = sharedFullIndex(s, d)
-      detachAndClean(
-        ext.VectorIndex.searchRefined(s, dir, queries, k = 5, shortlist = 10)
-          .select(col("qid"), col("rank").cast("int").as("rnk"), col("cid"))
-          .orderBy("qid", "rnk"))
+      ext.VectorIndex.searchRefined(s, dir, queries, k = 5, shortlist = 10)
+        .select(col("qid"), col("rank").cast("int").as("rnk"), col("cid"))
+        .orderBy("qid", "rnk")
+        .localCheckpoint(eager = true)
     }),
 
     "sim_index_search_filtered" -> ((s, d) => {
@@ -304,11 +298,11 @@ private[graft] object SimilarityRegistry {
       val allowed = Tables.documents(s, d)
         .filter(col("lang") === "en").select(col("doc_id"))
       val dir = sharedFullIndex(s, d)
-      detachAndClean(
-        ext.VectorIndex.searchFlatFiltered(s, dir, queries, allowed,
-            k = 5, nprobe = 4)
-          .select(col("qid"), col("rank").cast("int").as("rnk"), col("cid"))
-          .orderBy("qid", "rnk"))
+      ext.VectorIndex.searchFlatFiltered(s, dir, queries, allowed,
+          k = 5, nprobe = 4)
+        .select(col("qid"), col("rank").cast("int").as("rnk"), col("cid"))
+        .orderBy("qid", "rnk")
+        .localCheckpoint(eager = true)
     }),
 
     "sim_index_refined_filtered" -> ((s, d) => {
@@ -324,11 +318,11 @@ private[graft] object SimilarityRegistry {
       val allowed = Tables.documents(s, d)
         .filter(col("lang") === "en").select(col("doc_id"))
       val dir = sharedFullIndex(s, d)
-      detachAndClean(
-        ext.VectorIndex.searchRefinedFiltered(s, dir, queries, allowed,
-            k = 5, shortlist = 10)
-          .select(col("qid"), col("rank").cast("int").as("rnk"), col("cid"))
-          .orderBy("qid", "rnk"))
+      ext.VectorIndex.searchRefinedFiltered(s, dir, queries, allowed,
+          k = 5, shortlist = 10)
+        .select(col("qid"), col("rank").cast("int").as("rnk"), col("cid"))
+        .orderBy("qid", "rnk")
+        .localCheckpoint(eager = true)
     }),
 
     "multimodal_meta" -> ((s, d) =>
@@ -385,7 +379,7 @@ private[graft] object SimilarityRegistry {
         .orderBy("qid", "rnk")
     }),
 
-    "sim_index_recenter" -> ((s, d) => {
+    "sim_index_recenter" -> ((s, d) => Stage.scratch("graft-idx-recenter-") { tmp =>
       // quantizer MAINTENANCE (round 13): build over ¾ of the corpus,
       // append the drifted ¼ against the frozen quantizers, then
       // RE-CENTER — retrain centroids and codebooks over the indexed
@@ -396,7 +390,6 @@ private[graft] object SimilarityRegistry {
       // so the pre-recenter index provably differs — the in-query
       // require pins that the centroid set actually changed.
       val emb = Tables.embeddings(s, d)
-      val tmp = TempDirs.create("graft-idx-recenter-").toString
       val dir = s"$tmp/index"
       ext.VectorIndex.build(emb.filter(col("vec_id") % 4 =!= 3), dir)
       ext.VectorIndex.append(s, dir, emb.filter(col("vec_id") % 4 === 3))
@@ -410,15 +403,13 @@ private[graft] object SimilarityRegistry {
       require(!new java.io.File(dir + ".recentering").exists &&
           !new java.io.File(dir + ".previous").exists,
         "recenter must clean up its staging and swap directories")
-      detachAndClean(
-        ext.VectorIndex.searchFlat(s, dir, emb.filter(col("vec_id") < 5),
-            k = 5)
-          .select(col("qid"), col("rank").cast("int").as("rnk"), col("cid"))
-          .orderBy("qid", "rnk"),
-        tmp)
+      ext.VectorIndex.searchFlat(s, dir, emb.filter(col("vec_id") < 5),
+          k = 5)
+        .select(col("qid"), col("rank").cast("int").as("rnk"), col("cid"))
+        .orderBy("qid", "rnk")
     }),
 
-    "sim_recall_drift" -> ((s, d) => {
+    "sim_recall_drift" -> ((s, d) => Stage.scratch("graft-recall-drift-") { tmp =>
       // the NUMBER that says when to re-center: recall@5 against exact
       // brute force, measured on the SAME index before and after
       // re-centering a drifted append (the monitoring pair a vector
@@ -427,7 +418,6 @@ private[graft] object SimilarityRegistry {
       // reproducible, oracle-checked values, not vibes.
       val emb = Tables.embeddings(s, d)
       val q = emb.filter(col("vec_id") < 5)
-      val tmp = TempDirs.create("graft-recall-drift-").toString
       val dir = s"$tmp/index"
       ext.VectorIndex.build(emb.filter(col("vec_id") % 4 =!= 3), dir)
       ext.VectorIndex.append(s, dir, emb.filter(col("vec_id") % 4 === 3))
@@ -447,12 +437,10 @@ private[graft] object SimilarityRegistry {
       }
       val stale = recallLeg("1_stale")
       ext.VectorIndex.recenter(s, dir)
-      detachAndClean(
-        stale.unionByName(recallLeg("2_recentered")).orderBy("leg", "qid"),
-        tmp)
+      stale.unionByName(recallLeg("2_recentered")).orderBy("leg", "qid")
     }),
 
-    "sim_index_compact" -> ((s, d) => {
+    "sim_index_compact" -> ((s, d) => Stage.scratch("graft-idx-compact-") { tmp =>
       // index COMPACTION: two appends fragment the per-cell file layout
       // (one file per touched cell per batch); the staged compaction
       // pass restores ~one file per cell without changing a byte of
@@ -460,7 +448,6 @@ private[graft] object SimilarityRegistry {
       // compacted index must still reproduce brute-force top-k exactly.
       // The physical contract is asserted in-query: strictly fewer
       // cell-table files after compaction.
-      val tmp = TempDirs.create("graft-idx-compact-").toString
       val dir = s"$tmp/index"
       val emb = Tables.embeddings(s, d)
       ext.VectorIndex.build(emb.filter(col("vec_id") % 4 < 2), dir)
@@ -474,12 +461,10 @@ private[graft] object SimilarityRegistry {
       val after = nFiles("cells")
       require(after < before,
         s"compaction must shrink the cells file count ($before -> $after)")
-      detachAndClean(
-        ext.VectorIndex.searchFlat(s, dir, emb.filter(col("vec_id") < 5),
-            k = 10, nprobe = 16)
-          .select(col("qid"), col("rank").cast("int").as("rnk"), col("cid"))
-          .orderBy("qid", "rnk"),
-        tmp)
+      ext.VectorIndex.searchFlat(s, dir, emb.filter(col("vec_id") < 5),
+          k = 10, nprobe = 16)
+        .select(col("qid"), col("rank").cast("int").as("rnk"), col("cid"))
+        .orderBy("qid", "rnk")
     }),
   )
 

@@ -1,7 +1,7 @@
 package graft
 package registry
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.silver.Silver
 import graft.gold.Gold
@@ -88,22 +88,22 @@ private[graft] object StreamRegistry {
         .orderBy("event_id")
     }),
 
-    "stream_pipeline" -> ((s, d) => {
+    "stream_pipeline" -> ((s, d) => Stage.scratch("graft-stream-") { tmp =>
       // the LIVE streaming path (not the batch twin): AvailableNow
       // file-stream over the events source → watermarked hourly windows →
       // parquet sink, then the sink contents read back. Append mode only
       // emits windows FINALIZED by the watermark (end ≤ max event time −
       // 1 h); both sides filter strictly below that line so the edge
       // window's emit-or-hold never decides the comparison.
-      val (tmp, src) = stageEventsStreamDir(d)
+      val src = streamSource(tmp, d, "events.parquet")
       val sch = s.read.parquet(src).schema
       graft.streaming.Streams.incrementalPipeline(
           stateSized(s), sch, src, s"$tmp/out", s"$tmp/ck", prepare = rebuildStreamTs)
         .awaitTermination()
-      detachAndClean(sinkBelowHorizon(s, d, s"$tmp/out", "event_type"), tmp)
+      sinkBelowHorizon(s, d, s"$tmp/out", "event_type")
     }),
 
-    "stream_pipeline_restart" -> ((s, d) => {
+    "stream_pipeline_restart" -> ((s, d) => Stage.scratch("graft-stream-restart-") { tmp =>
       // windowed-aggregation state survives a restart: the feed split at
       // its midpoint into two AvailableNow passes on ONE checkpoint. The
       // boundary hour has events on both sides of the restart, and its
@@ -114,7 +114,6 @@ private[graft] object StreamRegistry {
       // emit in pass 1 and are never re-emitted (append-mode finalize-
       // once). Oracle = the batch aggregation below the final horizon,
       // exactly as stream_pipeline.
-      val tmp = TempDirs.create("graft-stream-restart-").toString
       val src = s"$tmp/src"
       java.nio.file.Files.createDirectories(java.nio.file.Paths.get(src))
       val feed = eventsFeedNanos(s, d)
@@ -131,10 +130,10 @@ private[graft] object StreamRegistry {
       feed.filter(col("ts") >= lit(mid)).coalesce(1)
         .write.mode("append").parquet(src)
       runPass()
-      detachAndClean(sinkBelowHorizon(s, d, s"$tmp/out", "event_type"), tmp)
+      sinkBelowHorizon(s, d, s"$tmp/out", "event_type")
     }),
 
-    "stream_session_restart" -> ((s, d) => {
+    "stream_session_restart" -> ((s, d) => Stage.scratch("graft-session-restart-") { tmp =>
       // SESSION-WINDOW state survives a restart — the FOURTH stateful
       // class, completing the restart quad (dedup ids / window aggs /
       // join buffers / session windows): two AvailableNow passes of the
@@ -151,7 +150,6 @@ private[graft] object StreamRegistry {
       // restricted to sessions finalized strictly below the final
       // watermark horizon so the edge session's emit-or-hold never
       // decides the comparison.
-      val tmp = TempDirs.create("graft-session-restart-").toString
       val src = s"$tmp/src"
       java.nio.file.Files.createDirectories(java.nio.file.Paths.get(src))
       val feed = eventsFeedNanos(s, d)
@@ -195,17 +193,15 @@ private[graft] object StreamRegistry {
           col("end_ms") >= lit(nextNs / 1000000L)).count() == 1,
         "restart failed to merge the session split across the checkpoint")
       val mx = Tables.events(s, d).agg(max(unix_millis(col("ts"))).as("mx_ms"))
-      detachAndClean(
-        sink
-          .crossJoin(mx) // 1-row broadcast
-          .filter(col("end_ms") + lit(gapMs + 1) < col("mx_ms") - lit(3600000L))
-          .select(col("user_id"), col("start_ms"), col("end_ms"),
-            col("n_events"))
-          .orderBy("user_id", "start_ms"),
-        tmp)
+      sink
+        .crossJoin(mx) // 1-row broadcast
+        .filter(col("end_ms") + lit(gapMs + 1) < col("mx_ms") - lit(3600000L))
+        .select(col("user_id"), col("start_ms"), col("end_ms"),
+          col("n_events"))
+        .orderBy("user_id", "start_ms")
     }),
 
-    "stream_join_restart" -> ((s, d) => {
+    "stream_join_restart" -> ((s, d) => Stage.scratch("graft-join-restart-") { tmp =>
       // the JOIN-BUFFER leg of crash recovery — with stream_dedup_restart
       // (dedup state) and stream_pipeline_restart (window state) this
       // completes the stateful-operator restart triple: feed split at
@@ -217,7 +213,6 @@ private[graft] object StreamRegistry {
       // fresh-state restart would silently drop those pairs and
       // hash-mismatch. Oracle = the batch join over the whole feed: the
       // restart must be invisible.
-      val tmp = TempDirs.create("graft-join-restart-").toString
       val src = s"$tmp/src"
       java.nio.file.Files.createDirectories(java.nio.file.Paths.get(src))
       // cost note (PLANS.md round 8): this query's ~16 s at sf0.1 is
@@ -238,20 +233,18 @@ private[graft] object StreamRegistry {
       feed.filter(col("ts") >= lit(mid)).coalesce(1)
         .write.mode("append").parquet(src)
       runPass()
-      detachAndClean(
-        s.read.parquet(s"$tmp/out")
-          .select(col("event_id"), col("user_id"), col("pid"), col("value_cents"))
-          .orderBy("event_id", "pid"),
-        tmp)
+      s.read.parquet(s"$tmp/out")
+        .select(col("event_id"), col("user_id"), col("pid"), col("value_cents"))
+        .orderBy("event_id", "pid")
     }),
 
-    "stream_enrich" -> ((s, d) => {
+    "stream_enrich" -> ((s, d) => Stage.scratch("graft-stream-") { tmp =>
       // LIVE stream-static enrichment: each micro-batch joins the
       // broadcast category dim statelessly (the join adds nothing to the
       // state store), then the watermarked window agg finalizes — the
       // streaming form of the dim-join enrichment every feed needs.
       import s.implicits._
-      val (tmp, src) = stageEventsStreamDir(d)
+      val src = streamSource(tmp, d, "events.parquet")
       val sch = s.read.parquet(src).schema
       val dim = Seq(
         "click" -> "engagement", "view" -> "engagement",
@@ -262,10 +255,10 @@ private[graft] object StreamRegistry {
           dimKey = "event_type", categoryCol = "category",
           fallbackCategory = "ops", prepare = rebuildStreamTs)
         .awaitTermination()
-      detachAndClean(sinkBelowHorizon(s, d, s"$tmp/out", "category"), tmp)
+      sinkBelowHorizon(s, d, s"$tmp/out", "category")
     }),
 
-    "stream_dedup" -> ((s, d) => {
+    "stream_dedup" -> ((s, d) => Stage.scratch("graft-stream-") { tmp =>
       // LIVE at-least-once ingest dedup on the oracle path: the staged
       // source holds the events feed PLUS a replayed copy of 1/7 of its
       // rows (the duplicate delivery every at-least-once transport
@@ -273,7 +266,7 @@ private[graft] object StreamRegistry {
       // sink. The read-back must equal the ORIGINAL feed exactly: every
       // replayed id dropped, no original lost. First occurrences emit
       // immediately (dedup holds no rows back), so no horizon filter.
-      val (tmp, src) = stageEventsStreamDir(d)
+      val src = streamSource(tmp, d, "events.parquet")
       // replay rows read from the ORIGINAL feed path (never read-write
       // the same directory), appended as one extra source file — the
       // whole source stays below the file-source batch cap, so originals
@@ -287,15 +280,13 @@ private[graft] object StreamRegistry {
           stateSized(s), sch, src, s"$tmp/out", s"$tmp/ck", "event_id",
           prepare = rebuildStreamTs)
         .awaitTermination()
-      detachAndClean(
-        s.read.parquet(s"$tmp/out")
-          .select(col("event_id"), col("event_type"), col("user_id"),
-            col("value"), unix_millis(col("ts")).as("ts_ms"))
-          .orderBy("event_id"),
-        tmp)
+      s.read.parquet(s"$tmp/out")
+        .select(col("event_id"), col("event_type"), col("user_id"),
+          col("value"), unix_millis(col("ts")).as("ts_ms"))
+        .orderBy("event_id")
     }),
 
-    "stream_dedup_restart" -> ((s, d) => {
+    "stream_dedup_restart" -> ((s, d) => Stage.scratch("graft-stream-") { tmp =>
       // dedup state SURVIVES a restart — the crash-recovery half of the
       // ingest-dedup contract: two AvailableNow passes against the SAME
       // checkpoint. Pass 1 ingests the feed; the source then grows by
@@ -305,7 +296,7 @@ private[graft] object StreamRegistry {
       // the old max event time. Pass 2 must drop every replay (state
       // restored from the checkpoint, not rebuilt from scratch) and
       // emit every new row — the sink equals feed ∪ new, exactly.
-      val (tmp, src) = stageEventsStreamDir(d)
+      val src = streamSource(tmp, d, "events.parquet")
       val sch = s.read.parquet(src).schema
       def runPass(): Unit =
         graft.streaming.Streams.dedupPipeline(
@@ -333,15 +324,13 @@ private[graft] object StreamRegistry {
             lit(maxNs) + (col("event_id") % 1000 + 1) * lit(1000000000L)))
       replays.unionByName(fresh).coalesce(1).write.mode("append").parquet(src)
       runPass()
-      detachAndClean(
-        s.read.parquet(s"$tmp/out")
-          .select(col("event_id"), col("event_type"), col("user_id"),
-            col("value"), unix_millis(col("ts")).as("ts_ms"))
-          .orderBy("event_id"),
-        tmp)
+      s.read.parquet(s"$tmp/out")
+        .select(col("event_id"), col("event_type"), col("user_id"),
+          col("value"), unix_millis(col("ts")).as("ts_ms"))
+        .orderBy("event_id")
     }),
 
-    "stream_corpus_clean" -> ((s, d) => {
+    "stream_corpus_clean" -> ((s, d) => Stage.scratch("graft-stream-") { tmp =>
       // the corpus release pipeline's LIVE front door: a document feed
       // carrying at-least-once replays (1/7 of the docs re-delivered)
       // streams through quality gate → bench-Bloom decontamination gate
@@ -352,28 +341,20 @@ private[graft] object StreamRegistry {
       // corpus_pipeline_e2e's batch chain. The oracle unrolls the same
       // three decisions (bloom positions are md5-exact), so every
       // admit/drop is hash-checked through the sink.
-      val (tmp, src) = stageDocsStreamDir(d)
+      val src = streamSource(tmp, d, "documents.parquet")
       s.read.parquet(s"$d/documents.parquet")
         .filter(col("doc_id") % 7 === 0)
         .coalesce(1).write.mode("append").parquet(src)
-      val bench = Tables.documents(s, d)
-        .filter(col("source").isin("src0", "src1"))
-      val bloom = ext.Sketches.bloomBuild(
-        Dedup.shingles(bench, w = 5).select(col("sh")), "sh",
-        numBits = 1 << 18, numHashes = 4)
-      val gate = (sh: Column) =>
-        ext.Sketches.bloomGateColumn(bloom, sh, numBits = 1 << 18,
-          numHashes = 4)
+      val gate = benchBloomGate(s, d)
       val sch = s.read.parquet(src).schema
       graft.streaming.Streams.corpusCleanPipeline(
           stateSized(s), sch, src, s"$tmp/out", s"$tmp/ck", gate,
           benchSources = Seq("src0", "src1"), threshold = 0.3)
         .awaitTermination()
-      detachAndClean(
-        s.read.parquet(s"$tmp/out").orderBy("doc_id"), tmp)
+      s.read.parquet(s"$tmp/out").orderBy("doc_id")
     }),
 
-    "stream_corpus_semantic" -> ((s, d) => {
+    "stream_corpus_semantic" -> ((s, d) => Stage.scratch("graft-stream-") { tmp =>
       // the release chain's LIVE front door grown to FOUR gates
       // (round 12): quality → bench-Bloom shingle gate → SEMANTIC sweep
       // against the PERSISTED bench-signature state (one stateless
@@ -383,18 +364,11 @@ private[graft] object StreamRegistry {
       // delivery dedup. Everything the stream consults is static or
       // persisted state; the oracle unrolls all four decisions.
       val ss = stateSized(s)
-      val (tmp, src) = stageDocsStreamDir(d)
+      val src = streamSource(tmp, d, "documents.parquet")
       s.read.parquet(s"$d/documents.parquet")
         .filter(col("doc_id") % 7 === 0)
         .coalesce(1).write.mode("append").parquet(src)
-      val bench = Tables.documents(ss, d)
-        .filter(col("source").isin("src0", "src1"))
-      val bloom = ext.Sketches.bloomBuild(
-        Dedup.shingles(bench, w = 5).select(col("sh")), "sh",
-        numBits = 1 << 18, numHashes = 4)
-      val gate = (sh: Column) =>
-        ext.Sketches.bloomGateColumn(bloom, sh, numBits = 1 << 18,
-          numHashes = 4)
+      val gate = benchBloomGate(ss, d)
       // bench-signature state persisted ONCE pre-stream (the release
       // chain's table; the stream only ever reads it back)
       val sigDir = s"$tmp/benchsig"
@@ -410,11 +384,10 @@ private[graft] object StreamRegistry {
           benchSources = Seq("src0", "src1"), threshold = 0.3,
           semantic = Some(sem))
         .awaitTermination()
-      detachAndClean(
-        s.read.parquet(s"$tmp/out").orderBy("doc_id"), tmp)
+      s.read.parquet(s"$tmp/out").orderBy("doc_id")
     }),
 
-    "stream_corpus_clean_restart" -> ((s, d) => {
+    "stream_corpus_clean_restart" -> ((s, d) => Stage.scratch("graft-stream-") { tmp =>
       // the admission front door is CRASH-SAFE end to end: two
       // AvailableNow passes on one checkpoint. Pass 2's source grows by
       // (a) REPLAYS of feed docs from inside the watermark horizon —
@@ -425,15 +398,8 @@ private[graft] object StreamRegistry {
       // times extend the timeline without making the replays late).
       // Sink == the batch chain over feed ∪ new, exactly: a fresh-state
       // restart double-emits replayed admits and hash-mismatches.
-      val (tmp, src) = stageDocsStreamDir(d)
-      val bench = Tables.documents(s, d)
-        .filter(col("source").isin("src0", "src1"))
-      val bloom = ext.Sketches.bloomBuild(
-        Dedup.shingles(bench, w = 5).select(col("sh")), "sh",
-        numBits = 1 << 18, numHashes = 4)
-      val gate = (sh: Column) =>
-        ext.Sketches.bloomGateColumn(bloom, sh, numBits = 1 << 18,
-          numHashes = 4)
+      val src = streamSource(tmp, d, "documents.parquet")
+      val gate = benchBloomGate(s, d)
       val sch = s.read.parquet(src).schema
       def runPass(): Unit =
         graft.streaming.Streams.corpusCleanPipeline(
@@ -454,11 +420,10 @@ private[graft] object StreamRegistry {
         .withColumn("doc_id", col("doc_id") + lit(maxId + 1))
       replays.unionByName(fresh).coalesce(1).write.mode("append").parquet(src)
       runPass()
-      detachAndClean(
-        s.read.parquet(s"$tmp/out").orderBy("doc_id"), tmp)
+      s.read.parquet(s"$tmp/out").orderBy("doc_id")
     }),
 
-    "stream_near_dedup" -> ((s, d) => {
+    "stream_near_dedup" -> ((s, d) => Stage.scratch("graft-near-dedup-") { tmp =>
       // STREAMING NEAR-DUP admission — content-level dedup joins the
       // live front door (stream_corpus_clean's delivery dedup is
       // id-level; this rejects on MinHash band collision with the
@@ -474,21 +439,10 @@ private[graft] object StreamRegistry {
       // threaded through; the in-query requires pin that >= 2 batches
       // actually folded and that the state holds exactly the admitted
       // documents' bands.
-      val tmp = TempDirs.create("graft-near-dedup-").toString
       val src = s"$tmp/src"
       val docs = Tables.documents(s, d)
-      val staged = scala.collection.mutable.Set[String]()
-      (0 until 3).foreach { i =>
-        docs.filter(col("doc_id") % 3 === i).coalesce(1)
-          .write.mode("append").parquet(src)
-        new java.io.File(src).listFiles()
-          .filter(f => f.getName.endsWith(".parquet") && !staged.contains(f.getName))
-          .foreach { f =>
-            require(f.setLastModified(1700000000000L + i * 60000L),
-              s"could not pin mtime for $f — staged batch order would be undefined")
-            staged += f.getName
-          }
-      }
+      (0 until 3).foreach(i =>
+        stagePinnedBatch(src, i, docs.filter(col("doc_id") % 3 === i)))
       val sch = s.read.parquet(src).schema
       val q = graft.streaming.Streams.nearDedupPipeline(
         stateSized(s), sch, src, s"$tmp/state", s"$tmp/out", s"$tmp/ck",
@@ -508,13 +462,11 @@ private[graft] object StreamRegistry {
         .count()
       require(leaked == 0,
         s"$leaked rejected documents leaked their bands into the state")
-      detachAndClean(
-        sink.select(col("doc_id"), col("source"), col("n_chars"))
-          .orderBy("doc_id"),
-        tmp)
+      sink.select(col("doc_id"), col("source"), col("n_chars"))
+        .orderBy("doc_id")
     }),
 
-    "stream_near_dedup_restart" -> ((s, d) => {
+    "stream_near_dedup_restart" -> ((s, d) => Stage.scratch("graft-near-dedup-restart-") { tmp =>
       // the persisted band state survives a RESTART — the fifth
       // stateful class joins the restart family (dedup ids / window
       // aggs / join buffers / session windows / near-dup band state):
@@ -525,21 +477,10 @@ private[graft] object StreamRegistry {
       // fresh-state restart would re-admit every cross-pass near-dup
       // and hash-mismatch. Oracle = stream_near_dedup's three unrolled
       // rounds verbatim: the restart must be invisible.
-      val tmp = TempDirs.create("graft-near-dedup-restart-").toString
       val src = s"$tmp/src"
       val docs = Tables.documents(s, d)
-      val staged = scala.collection.mutable.Set[String]()
-      def stage(i: Int): Unit = {
-        docs.filter(col("doc_id") % 3 === i).coalesce(1)
-          .write.mode("append").parquet(src)
-        new java.io.File(src).listFiles()
-          .filter(f => f.getName.endsWith(".parquet") && !staged.contains(f.getName))
-          .foreach { f =>
-            require(f.setLastModified(1700000000000L + i * 60000L),
-              s"could not pin mtime for $f — staged batch order would be undefined")
-            staged += f.getName
-          }
-      }
+      def stage(i: Int): Unit =
+        stagePinnedBatch(src, i, docs.filter(col("doc_id") % 3 === i))
       stage(0); stage(1)
       val sch = s.read.parquet(src).schema
       def runPass(): org.apache.spark.sql.streaming.StreamingQuery = {
@@ -554,14 +495,12 @@ private[graft] object StreamRegistry {
       require(q2.recentProgress.count(p => p.numInputRows > 0) == 1,
         "pass 2 must process exactly the one new file — a checkpoint " +
           "replay of pass-1 files would void the restart argument")
-      detachAndClean(
-        s.read.parquet(s"$tmp/out")
-          .select(col("doc_id"), col("source"), col("n_chars"))
-          .orderBy("doc_id"),
-        tmp)
+      s.read.parquet(s"$tmp/out")
+        .select(col("doc_id"), col("source"), col("n_chars"))
+        .orderBy("doc_id")
     }),
 
-    "stream_corpus_lm_gate" -> ((s, d) => {
+    "stream_corpus_lm_gate" -> ((s, d) => Stage.scratch("graft-lm-gate-") { tmp =>
       // the MODEL-BASED front door (round 12): phase A maintains the
       // LM delta-log from the REFERENCE domain (the en slice, two
       // micro-batches) and compacts it; phase B gates the full
@@ -571,7 +510,6 @@ private[graft] object StreamRegistry {
       // train on the en slice, score everything, cut at the
       // threshold; a drifted model, a lost fold, or a gate that waves
       // unscorable docs through all break the hash.
-      val tmp = TempDirs.create("graft-lm-gate-").toString
       val docs = Tables.documents(s, d)
       val ref = docs.filter(col("lang") === "en")
       (0 until 2).foreach(i =>
@@ -593,21 +531,18 @@ private[graft] object StreamRegistry {
       require(nBatches >= 2,
         s"LM gate processed $nBatches micro-batches — need >= 2 to " +
           "prove per-batch admission, not one bulk score")
-      detachAndClean(
-        s.read.parquet(s"$tmp/out")
-          .select(col("doc_id"), col("lang"), col("n_pairs"), col("avg_lp"))
-          .orderBy("doc_id"),
-        tmp)
+      s.read.parquet(s"$tmp/out")
+        .select(col("doc_id"), col("lang"), col("n_pairs"), col("avg_lp"))
+        .orderBy("doc_id")
     }),
 
-    "stream_dsir_maintain" -> ((s, d) => {
+    "stream_dsir_maintain" -> ((s, d) => Stage.scratch("graft-dsir-maint-") { tmp =>
       // LIVE incremental DSIR (round 12): the documents feed staged as
       // three files, each batch's target/raw bucket counts folded into
       // ≤4096-row PointerSwap state under the shared additive-fold
       // discipline. Weighting the corpus with the ratio table derived
       // from the STREAMED counts must reproduce
       // corpus_importance_weights' batch oracle exactly.
-      val tmp = TempDirs.create("graft-dsir-maint-").toString
       val src = s"$tmp/src"
       val docs = Tables.documents(s, d)
       (0 until 3).foreach(i =>
@@ -625,12 +560,10 @@ private[graft] object StreamRegistry {
       val ratios = ext.Corpus.importanceRatiosFromCounts(
         graft.operators.ScaleOps.readMaintained(s, s"$tmp/state",
           graft.operators.ScaleOps.PointerSwap))
-      detachAndClean(
-        ext.Corpus.importanceWeights(docs, ratios).orderBy("doc_id"),
-        tmp)
+      ext.Corpus.importanceWeights(docs, ratios).orderBy("doc_id")
     }),
 
-    "stream_nb_maintain" -> ((s, d) => {
+    "stream_nb_maintain" -> ((s, d) => Stage.scratch("graft-nb-maint-") { tmp =>
       // LIVE incremental Naive Bayes training (round 12 cont.): the
       // labeled documents feed staged as three files, each batch's
       // class-conditional counts (plus the per-label doc-count
@@ -640,7 +573,6 @@ private[graft] object StreamRegistry {
       // reproduce text_nb_classify's batch oracle exactly — a
       // double-counted fold, a dropped label or a lost sentinel row
       // all break the hash.
-      val tmp = TempDirs.create("graft-nb-maint-").toString
       val src = s"$tmp/src"
       val docs = Tables.documents(s, d)
       (0 until 3).foreach(i =>
@@ -657,14 +589,12 @@ private[graft] object StreamRegistry {
       val model = ext.Classifier.nbModelFromCounts(
         graft.operators.ScaleOps.readMaintained(s, s"$tmp/state",
           graft.operators.ScaleOps.PointerSwap))
-      detachAndClean(
-        docs.select(col("doc_id"), col("lang"))
-          .join(ext.Classifier.nbClassify(docs, model), Seq("doc_id"))
-          .orderBy("doc_id"),
-        tmp)
+      docs.select(col("doc_id"), col("lang"))
+        .join(ext.Classifier.nbClassify(docs, model), Seq("doc_id"))
+        .orderBy("doc_id")
     }),
 
-    "stream_nb_forget" -> ((s, d) => {
+    "stream_nb_forget" -> ((s, d) => Stage.scratch("graft-nb-forget-") { tmp =>
       // GDPR-delete against the LIVE classifier state (round 12
       // cont.): fold the labeled feed as three micro-batches, then
       // FORGET a cohort by subtracting its counts from the maintained
@@ -674,7 +604,6 @@ private[graft] object StreamRegistry {
       // the forgotten state must equal a classifier trained on the
       // survivors directly (text_nb_forget's law, now THROUGH the
       // streamed lifecycle).
-      val tmp = TempDirs.create("graft-nb-forget-").toString
       val src = s"$tmp/src"
       val docs = Tables.documents(s, d)
       (0 until 3).foreach(i =>
@@ -696,14 +625,12 @@ private[graft] object StreamRegistry {
         graft.operators.ScaleOps.readMaintained(s, s"$tmp/state",
           graft.operators.ScaleOps.PointerSwap))
       val surv = docs.filter(col("doc_id") % 10 =!= 3)
-      detachAndClean(
-        surv.select(col("doc_id"), col("lang"))
-          .join(ext.Classifier.nbClassify(surv, model), Seq("doc_id"))
-          .orderBy("doc_id"),
-        tmp)
+      surv.select(col("doc_id"), col("lang"))
+        .join(ext.Classifier.nbClassify(surv, model), Seq("doc_id"))
+        .orderBy("doc_id")
     }),
 
-    "stream_lm_expire" -> ((s, d) => {
+    "stream_lm_expire" -> ((s, d) => Stage.scratch("graft-lm-expire-") { tmp =>
       // SLIDING-WINDOW LM (round 12 cont.): the delta-log's batch
       // partitions ARE the retention unit — expire the oldest batch
       // and the model forgets that slice bit-exactly, no rescan.
@@ -711,21 +638,10 @@ private[graft] object StreamRegistry {
       // harnesses' discipline), so the oracle can name the retained
       // cohort statically: scoring the retained slices against the
       // expired log == training on those slices alone.
-      val tmp = TempDirs.create("graft-lm-expire-").toString
       val src = s"$tmp/src"
       val docs = Tables.documents(s, d)
-      val staged = scala.collection.mutable.Set[String]()
-      (0 until 3).foreach { i =>
-        docs.filter(col("doc_id") % 3 === i).coalesce(1)
-          .write.mode("append").parquet(src)
-        new java.io.File(src).listFiles()
-          .filter(f => f.getName.endsWith(".parquet") && !staged.contains(f.getName))
-          .foreach { f =>
-            require(f.setLastModified(1700000000000L + i * 60000L),
-              s"could not pin mtime for $f — staged batch order would be undefined")
-            staged += f.getName
-          }
-      }
+      (0 until 3).foreach(i =>
+        stagePinnedBatch(src, i, docs.filter(col("doc_id") % 3 === i)))
       val sch = s.read.parquet(src).schema
       val q = graft.streaming.Streams.lmMaintainPipeline(
         stateSized(s), sch, src, s"$tmp/state", s"$tmp/ck")
@@ -734,13 +650,11 @@ private[graft] object StreamRegistry {
         minKeepId = 1)
       val model = TextAnalysis.lmModelFromCounts(
         graft.streaming.Streams.lmReadCounts(s, s"$tmp/state"))
-      detachAndClean(
-        TextAnalysis.lmScoreBigram(docs.filter(col("doc_id") % 3 =!= 0),
-          model).orderBy("doc_id"),
-        tmp)
+      TextAnalysis.lmScoreBigram(docs.filter(col("doc_id") % 3 =!= 0),
+        model).orderBy("doc_id")
     }),
 
-    "stream_admission_overlap" -> ((s, d) => {
+    "stream_admission_overlap" -> ((s, d) => Stage.scratch("graft-adm-ovl-") { tmp =>
       // the calibration rollup's "works on any report" claim made
       // checkable (round 14): gateOverlap over the UNION of a streamed
       // run's per-batch decision tables. Because every verdict is a
@@ -752,10 +666,8 @@ private[graft] object StreamRegistry {
       // batch directory would NOT (the rollup's per-doc pivot
       // collapses duplicate rows), so that failure mode gets its own
       // explicit duplicate check below before the rollup runs.
-      val tmp = TempDirs.create("graft-adm-ovl-").toString
       val src = s"$tmp/src"
       val docs = Tables.documents(s, d)
-      val emb = Tables.embeddings(s, d)
       // two half-slices (round 17): the cross-batch-union claim needs
       // >= 2 micro-batches (the require below), not three — the third
       // slice re-paid a full gate-ensemble micro-batch for no extra
@@ -764,29 +676,18 @@ private[graft] object StreamRegistry {
       (0 until 2).foreach(i =>
         docs.filter(col("doc_id") % 2 === i).coalesce(1)
           .write.mode("append").parquet(src))
-      val bench = docs.filter(col("source").isin("src0", "src1"))
-      val bloom = ext.Sketches.bloomBuild(
-        Dedup.shingles(bench, w = 5).select(col("sh")), "sh",
-        numBits = 1 << 18, numHashes = 4)
-      val gate = (sh: Column) =>
-        ext.Sketches.bloomGateColumn(bloom, sh, numBits = 1 << 18,
-          numHashes = 4)
-      val sig = ext.Corpus.benchSignatureTable(docs, emb, Seq("src0", "src1"))
+      val (gate, sem) = admissionGateCfg(s, d)
       val lm = TextAnalysis.bigramLmTrain(docs)
       val nb = ext.Classifier.nbTrain(docs)
       // near-dup state in the production form: persisted partitioned
       // band state read back (stable across micro-batches by file
       // immutability — the pipeline does not block-memory-copy it)
-      Dedup.writeBandState(
-        Dedup.bandTable(docs.filter(col("doc_id") % 7 === 3),
-          w = 5, numHashes = 8, bandWidth = 2),
-        s"$tmp/bands", "overwrite")
-      val seenBands = s.read.parquet(s"$tmp/bands")
+      val seenBands = admissionBandState(s, d, s"$tmp/bands")
       val sch = s.read.parquet(src).schema
       val q = graft.streaming.Streams.admissionPipeline(
         stateSized(s), sch, src, s"$tmp/out", s"$tmp/ck",
         Seq("src0", "src1"), gate, 0.3,
-        Some(ext.Admission.SemanticCfg(emb, sig, threshold = 0.42)),
+        sem,
         lm, -3.40, nb, Seq("en"),
         nearDup = Some(ext.Admission.NearDupCfg(seenBands, w = 5,
           numHashes = 8, bandWidth = 2,
@@ -809,12 +710,10 @@ private[graft] object StreamRegistry {
       require(dups == 0,
         s"$dups (doc_id, gate) rows appear in more than one batch " +
           "directory — a double-emitted batch the rollup would mask")
-      detachAndClean(
-        ext.Admission.gateOverlap(streamed).orderBy("gate"),
-        tmp)
+      ext.Admission.gateOverlap(streamed).orderBy("gate")
     }),
 
-    "stream_admission_model_swap" -> ((s, d) => {
+    "stream_admission_model_swap" -> ((s, d) => Stage.scratch("graft-adm-swap-") { tmp =>
       // MODEL ROLLOUT mid-stream (round 15): the retrain axis pushed
       // into the streaming front door. The feed is the shared t0∩t1
       // doc set in THREE pinned-order batches (doc_id % 3, ascending
@@ -827,42 +726,19 @@ private[graft] object StreamRegistry {
       // arrived before the swap, the t1 columns after — batch==stream
       // extended to model versioning, and a batch scored by the wrong
       // model version breaks the hash on every model-gate row.
-      val tmp = TempDirs.create("graft-adm-swap-").toString
       val src = s"$tmp/src"
       val docs = Tables.documents(s, d)
       val shared = docs.filter(col("doc_id") % 7 =!= 1 &&
         col("doc_id") % 7 =!= 2)
-      val emb = Tables.embeddings(s, d)
-      val staged = scala.collection.mutable.Set[String]()
-      (0 until 3).foreach { i =>
-        shared.filter(col("doc_id") % 3 === i).coalesce(1)
-          .write.mode("append").parquet(src)
-        new java.io.File(src).listFiles()
-          .filter(f => f.getName.endsWith(".parquet") && !staged.contains(f.getName))
-          .foreach { f =>
-            require(f.setLastModified(1700000000000L + i * 60000L),
-              s"could not pin mtime for $f — batch→model mapping would be undefined")
-            staged += f.getName
-          }
-      }
-      val bench = docs.filter(col("source").isin("src0", "src1"))
-      val bloom = ext.Sketches.bloomBuild(
-        Dedup.shingles(bench, w = 5).select(col("sh")), "sh",
-        numBits = 1 << 18, numHashes = 4)
-      val gate = (sh: Column) =>
-        ext.Sketches.bloomGateColumn(bloom, sh, numBits = 1 << 18,
-          numHashes = 4)
-      val sig = ext.Corpus.benchSignatureTable(docs, emb, Seq("src0", "src1"))
-      Dedup.writeBandState(
-        Dedup.bandTable(docs.filter(col("doc_id") % 7 === 3),
-          w = 5, numHashes = 8, bandWidth = 2),
-        s"$tmp/bands", "overwrite")
-      val seenBands = s.read.parquet(s"$tmp/bands")
+      (0 until 3).foreach(i =>
+        stagePinnedBatch(src, i, shared.filter(col("doc_id") % 3 === i)))
+      val (gate, sem) = admissionGateCfg(s, d)
+      val seenBands = admissionBandState(s, d, s"$tmp/bands")
       val sch = s.read.parquet(src).schema
       val q = graft.streaming.Streams.admissionModelSwapPipeline(
         stateSized(s), sch, src, s"$tmp/out", s"$tmp/ck",
         Seq("src0", "src1"), gate, 0.3,
-        Some(ext.Admission.SemanticCfg(emb, sig, threshold = 0.42)),
+        sem,
         lmV0 = TextAnalysis.bigramLmTrain(
           docs.filter(col("doc_id") % 7 =!= 1)),
         nbV0 = ext.Classifier.nbTrain(
@@ -879,15 +755,13 @@ private[graft] object StreamRegistry {
       require(q.recentProgress.count(_.numInputRows > 0) >= 3,
         "the rollout needs >= 3 micro-batches — fewer would leave one " +
           "model version unexercised or unswapped")
-      detachAndClean(
-        s.read.parquet(s"$tmp/out")
-          .select(col("doc_id"), col("gate"), col("pass"), col("score"),
-            col("model_version"), col("batch_id").cast("bigint"))
-          .orderBy("doc_id", "gate"),
-        tmp)
+      s.read.parquet(s"$tmp/out")
+        .select(col("doc_id"), col("gate"), col("pass"), col("score"),
+          col("model_version"), col("batch_id").cast("bigint"))
+        .orderBy("doc_id", "gate")
     }),
 
-    "stream_admission_restart" -> ((s, d) => {
+    "stream_admission_restart" -> ((s, d) => Stage.scratch("graft-adm-restart-") { tmp =>
       // the unified admission front door is CRASH-SAFE: two
       // AvailableNow passes on one checkpoint, the source growing by
       // the second half-slice between them. Pass 2 must fold ONLY the
@@ -904,37 +778,24 @@ private[graft] object StreamRegistry {
       // ensemble for zero additional law coverage (decisions are
       // stateless, so batch composition cannot change any verdict and
       // the whole-corpus oracle is slicing-invariant).
-      val tmp = TempDirs.create("graft-adm-restart-").toString
       val src = s"$tmp/src"
       val docs = Tables.documents(s, d)
-      val emb = Tables.embeddings(s, d)
       docs.filter(col("doc_id") % 2 === 0).coalesce(1)
         .write.mode("append").parquet(src)
-      val bench = docs.filter(col("source").isin("src0", "src1"))
-      val bloom = ext.Sketches.bloomBuild(
-        Dedup.shingles(bench, w = 5).select(col("sh")), "sh",
-        numBits = 1 << 18, numHashes = 4)
-      val gate = (sh: Column) =>
-        ext.Sketches.bloomGateColumn(bloom, sh, numBits = 1 << 18,
-          numHashes = 4)
-      val sig = ext.Corpus.benchSignatureTable(docs, emb, Seq("src0", "src1"))
+      val (gate, sem) = admissionGateCfg(s, d)
       val lm = TextAnalysis.bigramLmTrain(docs)
       val nb = ext.Classifier.nbTrain(docs)
       // near-dup gate state: the same admitted-cohort band state the
       // batch report uses (doc_id % 7 = 3), in the production form —
       // persisted partitioned state written ONCE before both passes,
       // so the restart reads bit-identical state by file immutability
-      Dedup.writeBandState(
-        Dedup.bandTable(docs.filter(col("doc_id") % 7 === 3),
-          w = 5, numHashes = 8, bandWidth = 2),
-        s"$tmp/bands", "overwrite")
-      val seenBands = s.read.parquet(s"$tmp/bands")
+      val seenBands = admissionBandState(s, d, s"$tmp/bands")
       val sch = s.read.parquet(src).schema
       def runPass() = {
         val q = graft.streaming.Streams.admissionPipeline(
           stateSized(s), sch, src, s"$tmp/out", s"$tmp/ck",
           Seq("src0", "src1"), gate, 0.3,
-          Some(ext.Admission.SemanticCfg(emb, sig, threshold = 0.42)),
+          sem,
           lm, -3.40, nb, Seq("en"),
           nearDup = Some(ext.Admission.NearDupCfg(seenBands, w = 5,
             numHashes = 8, bandWidth = 2,
@@ -948,14 +809,12 @@ private[graft] object StreamRegistry {
       require(p2.recentProgress.count(_.numInputRows > 0) == 1,
         "pass 2 must fold ONLY the new file — a fresh-state restart " +
           "reprocesses committed batches")
-      detachAndClean(
-        s.read.parquet(s"$tmp/out")
-          .select(col("doc_id"), col("gate"), col("pass"), col("score"))
-          .orderBy("doc_id", "gate"),
-        tmp)
+      s.read.parquet(s"$tmp/out")
+        .select(col("doc_id"), col("gate"), col("pass"), col("score"))
+        .orderBy("doc_id", "gate")
     }),
 
-    "stream_lm_bootstrap" -> ((s, d) => {
+    "stream_lm_bootstrap" -> ((s, d) => Stage.scratch("graft-lm-boot-") { tmp =>
       // DAY-0 HANDOFF for the delta-log LM (round 13): a third of the
       // corpus trained by the BATCH API and persisted as a flat counts
       // table, then ADOPTED by a new stream (files move into the
@@ -964,7 +823,6 @@ private[graft] object StreamRegistry {
       // corpus with the maintained model must reproduce text_lm_score's
       // whole-corpus oracle exactly — a dropped baseline, a double
       // adoption or a replay overwriting batch_id=-1 all break the hash.
-      val tmp = TempDirs.create("graft-lm-boot-").toString
       val src = s"$tmp/src"
       val docs = Tables.documents(s, d)
       TextAnalysis.lmCountsBuild(docs.filter(col("doc_id") % 3 === 0))
@@ -984,12 +842,10 @@ private[graft] object StreamRegistry {
         "adoption must land the baseline as the batch_id=-1 partition")
       val model = TextAnalysis.lmModelFromCounts(
         graft.streaming.Streams.lmReadCounts(s, s"$tmp/state"))
-      detachAndClean(
-        TextAnalysis.lmScoreBigram(docs, model).orderBy("doc_id"),
-        tmp)
+      TextAnalysis.lmScoreBigram(docs, model).orderBy("doc_id")
     }),
 
-    "stream_lm_maintain" -> ((s, d) => {
+    "stream_lm_maintain" -> ((s, d) => Stage.scratch("graft-lm-maint-") { tmp =>
       // LIVE incremental LM training (round 12): the documents feed
       // staged as three files, one per micro-batch, each batch's
       // unigram+bigram counts APPENDED as an immutable batch_id=
@@ -1001,7 +857,6 @@ private[graft] object StreamRegistry {
       // STREAMED+COMPACTED model must reproduce text_lm_score's oracle
       // exactly — a double-counted fold, a dropped partition, or a
       // compaction that loses counts all break the hash.
-      val tmp = TempDirs.create("graft-lm-maint-").toString
       val src = s"$tmp/src"
       val docs = Tables.documents(s, d)
       (0 until 3).foreach(i =>
@@ -1018,12 +873,10 @@ private[graft] object StreamRegistry {
       graft.streaming.Streams.lmCompactState(s, s"$tmp/state")
       val model = TextAnalysis.lmModelFromCounts(
         graft.streaming.Streams.lmReadCounts(s, s"$tmp/state"))
-      detachAndClean(
-        TextAnalysis.lmScoreBigram(docs, model).orderBy("doc_id"),
-        tmp)
+      TextAnalysis.lmScoreBigram(docs, model).orderBy("doc_id")
     }),
 
-    "stream_hist_maintain" -> ((s, d) => {
+    "stream_hist_maintain" -> ((s, d) => Stage.scratch("graft-hist-maint-") { tmp =>
       // LIVE histogram-state lifecycle (round 11): the drift baseline
       // maintained BY A STREAM — the events feed staged as three files,
       // one per micro-batch, each batch's fixed-width histogram folded
@@ -1034,7 +887,6 @@ private[graft] object StreamRegistry {
       // dropped fold anywhere breaks the hash. Replay safety is the
       // batch-id stamp (additive merge is NOT idempotent — the KMV
       // argument does not transfer; StreamingSpec proves the no-op).
-      val tmp = TempDirs.create("graft-hist-maint-").toString
       val src = s"$tmp/src"
       val feed = Tables.loadEvents(s, d)
       (0 until 3).foreach(i =>
@@ -1048,14 +900,12 @@ private[graft] object StreamRegistry {
       require(nBatches >= 2,
         s"histogram maintenance folded $nBatches micro-batches — need >= 2 " +
           "to prove incrementality, not a single-batch rebuild")
-      detachAndClean(
-        graft.operators.ScaleOps.readMaintained(s, s"$tmp/state",
-            graft.operators.ScaleOps.PointerSwap)
-          .select(col("bin"), col("n")).orderBy("bin"),
-        tmp)
+      graft.operators.ScaleOps.readMaintained(s, s"$tmp/state",
+          graft.operators.ScaleOps.PointerSwap)
+        .select(col("bin"), col("n")).orderBy("bin")
     }),
 
-    "stream_sketch_maintain" -> ((s, d) => {
+    "stream_sketch_maintain" -> ((s, d) => Stage.scratch("graft-sketch-maint-") { tmp =>
       // LIVE sketch-state lifecycle: the events feed staged as THREE
       // source files, streamed one file per micro-batch, each batch's
       // KMV folded into layout-stamped persisted state (merge
@@ -1065,7 +915,6 @@ private[graft] object StreamRegistry {
       // final state BIT-IDENTICAL to a single pass over the whole
       // feed, so the estimate row hash-checks exactly; the in-query
       // require pins that multiple batches actually folded.
-      val tmp = TempDirs.create("graft-sketch-maint-").toString
       val src = s"$tmp/src"
       val feed = Tables.loadEvents(s, d)
       (0 until 3).foreach(i =>
@@ -1087,15 +936,13 @@ private[graft] object StreamRegistry {
           graft.operators.ScaleOps.PointerSwap))
       val exact = feed.select(item.as("item")).filter(col("item").isNotNull)
         .agg(countDistinct(col("item")).as("n_exact"))
-      detachAndClean(
-        est.crossJoin(exact)
-          .select(col("n_sketch"), col("h_k"), col("n_est"), col("n_exact"),
-            (abs(col("n_est") - col("n_exact").cast("double")) /
-              col("n_exact").cast("double") < 0.15).as("err_ok")),
-        tmp)
+      est.crossJoin(exact)
+        .select(col("n_sketch"), col("h_k"), col("n_est"), col("n_exact"),
+          (abs(col("n_est") - col("n_exact").cast("double")) /
+            col("n_exact").cast("double") < 0.15).as("err_ok"))
     }),
 
-    "stream_index_maintain" -> ((s, d) => {
+    "stream_index_maintain" -> ((s, d) => Stage.scratch("graft-idx-maint-") { tmp =>
       // LIVE ANN-index lifecycle: the embedding corpus staged as three
       // source files, streamed one file per micro-batch; the first
       // batch BUILDS the persisted index (quantizer trained, then
@@ -1108,7 +955,6 @@ private[graft] object StreamRegistry {
       // hash. The in-query requires pin that >= 2 batches actually
       // folded (append path exercised, not one big build) and that the
       // index holds every corpus vector exactly once.
-      val tmp = TempDirs.create("graft-idx-maint-").toString
       val src = s"$tmp/src"
       val emb = Tables.embeddings(s, d)
       (0 until 3).foreach(i =>
@@ -1128,22 +974,20 @@ private[graft] object StreamRegistry {
       require(nIndexed == nCorpus,
         s"index holds $nIndexed distinct vectors, corpus has $nCorpus — " +
           "streamed maintenance lost or doubled vectors")
-      detachAndClean(
-        ext.VectorIndex.searchFlat(s, s"$tmp/index",
-            emb.filter(col("vec_id") < 5), k = 10, nprobe = 16)
-          .select(col("qid"), col("rank").cast("int").as("rnk"), col("cid"))
-          .orderBy("qid", "rnk"),
-        tmp)
+      ext.VectorIndex.searchFlat(s, s"$tmp/index",
+          emb.filter(col("vec_id") < 5), k = 10, nprobe = 16)
+        .select(col("qid"), col("rank").cast("int").as("rnk"), col("cid"))
+        .orderBy("qid", "rnk")
     }),
 
-    "stream_exactly_once" -> ((s, d) => {
+    "stream_exactly_once" -> ((s, d) => Stage.scratch("graft-stream-") { tmp =>
       // the foreachBatch transactional-sink pattern LIVE on the oracle
       // path: AvailableNow stream → per-batch-directory overwrite sink
       // (batch_id=N/), read back and hash-checked against the source —
       // every record lands exactly once, no loss, no duplication.
       // (Replay idempotency — same batch id overwrites, never appends —
       // is the StreamingSpec half of the contract.)
-      val (tmp, src) = stageEventsStreamDir(d)
+      val src = streamSource(tmp, d, "events.parquet")
       val sch = s.read.parquet(src).schema
       graft.streaming.Streams.exactlyOnceSink(
           rebuildStreamTs(s.readStream.schema(sch).parquet(src))
@@ -1151,9 +995,7 @@ private[graft] object StreamRegistry {
               col("value"), unix_millis(col("ts")).as("ts_ms")),
           s"$tmp/out", s"$tmp/ck")
         .awaitTermination()
-      detachAndClean(
-        s.read.parquet(s"$tmp/out/data").drop("batch_id").orderBy("event_id"),
-        tmp)
+      s.read.parquet(s"$tmp/out/data").drop("batch_id").orderBy("event_id")
     }),
   )
 

@@ -113,7 +113,7 @@ private[graft] object TextRegistry {
       TextAnalysis.bpeEncode(Tables.documents(s, d), rounds = 4)
         .orderBy("doc_id")),
 
-    "text_bpe_tokenize" -> ((s, d) => {
+    "text_bpe_tokenize" -> ((s, d) => Stage.scratch("graft-bpevocab-") { tmp =>
       // the full deployed-tokenizer lifecycle: train 4 merges, build the
       // deterministic vocab (lexicographic stable ids), PERSIST it with
       // the merge count stamped, then tokenize every document into its
@@ -125,17 +125,14 @@ private[graft] object TextRegistry {
       // token, or an out-of-order sequence all hash-mismatch.
       val docs = Tables.documents(s, d)
       val merges = TextAnalysis.bpeMergeList(docs, rounds = 4)
-      val tmp = TempDirs.create("graft-bpevocab-").toString
       TextAnalysis.bpeVocabWrite(
         TextAnalysis.bpeVocab(docs, merges), s"$tmp/vocab", merges.length)
-      detachAndClean(
-        TextAnalysis.bpeTokenizeWith(docs, merges, s.read.parquet(s"$tmp/vocab"))
-          .select(col("doc_id"),
-            size(col("token_ids")).as("n_tokens"),
-            array_join(transform(col("token_ids"), _.cast("string")), " ")
-              .as("token_ids"))
-          .orderBy("doc_id"),
-        tmp)
+      TextAnalysis.bpeTokenizeWith(docs, merges, s.read.parquet(s"$tmp/vocab"))
+        .select(col("doc_id"),
+          size(col("token_ids")).as("n_tokens"),
+          array_join(transform(col("token_ids"), _.cast("string")), " ")
+            .as("token_ids"))
+        .orderBy("doc_id")
     }),
 
     "text_nb_train" -> ((s, d) =>

@@ -295,17 +295,15 @@ private[graft] object WarehouseRegistry {
         .orderBy("prev_type", "event_type")
     }),
 
-    "gold_pipeline_e2e" -> ((s, d) => {
+    "gold_pipeline_e2e" -> ((s, d) => Stage.scratch("graft-e2e-") { wh =>
       // S5/S8 end-to-end: the FULL ETL (all silver + gold tables written
       // to staging, then atomically promoted — reference
       // silver_load.sql:285-308 + gold_dag.py) into a throwaway
       // warehouse, returning a mart read back FROM DISK. Oracle = the
       // same mart SQL, so the write→promote→read path itself is
       // hash-checked, not just the in-memory plan.
-      val wh = TempDirs.create("graft-e2e-").toString
       graft.plans.Pipeline.runFullEtl(s, d, wh)
-      detachAndClean(
-        s.read.parquet(s"$wh/dm_daily_trip_summary").orderBy("cal_date"), wh)
+      s.read.parquet(s"$wh/dm_daily_trip_summary").orderBy("cal_date")
     }),
 
     "gold_popular_routes_warehouse" -> ((s, d) => {

@@ -51,13 +51,23 @@ class AdmissionPlanAuditSpec extends AnyFunSuite {
   // blows this budget.
   private val ReportScanBudget = 4
 
+  /** The registered report over whole-corpus models, its band state
+    * written to a temp dir that is deleted after `audit`.
+    */
+  private def withReport(audit: DataFrame => Unit): Unit = {
+    val dir = java.nio.file.Files.createTempDirectory("graft-planaudit-bands-")
+    try audit(CorpusRegistry.admissionReportFor(spark, sfDir, dir.toString))
+    finally graft.plans.Pipeline.deleteRecursively(dir)
+  }
+
   test("live report: documents-scan count stays at the fixed gate constant") {
-    val rep = CorpusRegistry.admissionReportFor(spark, sfDir)
-    val n = docScans(rep)
-    assert(n >= 1 && n <= ReportScanBudget,
-      s"admission report reads documents $n times (budget $ReportScanBudget) — " +
-        "a gate leg re-derives an artifact it should share:\n" +
-        rep.queryExecution.optimizedPlan.toString.take(4000))
+    withReport { rep =>
+      val n = docScans(rep)
+      assert(n >= 1 && n <= ReportScanBudget,
+        s"admission report reads documents $n times (budget $ReportScanBudget) — " +
+          "a gate leg re-derives an artifact it should share:\n" +
+          rep.queryExecution.optimizedPlan.toString.take(4000))
+    }
   }
 
   test("report plan: no Aggregate or Join is fed by the LM or NB model") {
@@ -101,21 +111,25 @@ class AdmissionPlanAuditSpec extends AnyFunSuite {
   }
 
   test("every live standalone consumer adds zero documents scans beyond its report") {
-    // the registered consumers that return a LIVE plan over the report
-    // subtree (the staged family detaches through parquet + local
-    // checkpoint, so its returned plan is a leaf — audited below via
-    // the staged-rollup shape instead)
+    // the registered consumers of one live report subtree, audited
+    // through the builders their queries run (a query detaches its
+    // result before its scratch dir goes, so its returned plan is a
+    // leaf; the staged family is audited below via the staged-rollup
+    // shape instead)
     val live = Seq("corpus_admission_report", "corpus_admission_overlap",
       "corpus_admission_overlap_matrix", "corpus_admission_funnel",
       "corpus_admission_lm_sweep")
-    val base = docScans(CorpusRegistry.admissionReportFor(spark, sfDir))
-    live.foreach { name =>
-      val df = CorpusRegistry.queries(name)(spark, sfDir)
-      val n = docScans(df)
-      assert(n == base,
-        s"$name reads documents $n times but its report subtree reads " +
-          s"$base — the rollup re-derives part of the chain instead of " +
-          "aggregating the decision table")
+    assert(CorpusRegistry.reportConsumers.map(_._1) === live)
+    withReport { rep =>
+      val base = docScans(rep)
+      CorpusRegistry.reportConsumers.foreach { case (name, consume) =>
+        assert(CorpusRegistry.queries.contains(name), s"$name is not registered")
+        val n = docScans(consume(rep))
+        assert(n == base,
+          s"$name reads documents $n times but its report subtree reads " +
+            s"$base — the rollup re-derives part of the chain instead of " +
+            "aggregating the decision table")
+      }
     }
   }
 
@@ -127,7 +141,7 @@ class AdmissionPlanAuditSpec extends AnyFunSuite {
     val tmp = java.nio.file.Files
       .createTempDirectory("graft-planaudit-").toString
     try {
-      CorpusRegistry.admissionReportFor(spark, sfDir)
+      CorpusRegistry.admissionReportFor(spark, sfDir, tmp)
         .write.parquet(s"$tmp/report")
       val rep = spark.read.parquet(s"$tmp/report")
       val consumers = Seq[(String, DataFrame)](

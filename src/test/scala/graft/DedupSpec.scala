@@ -533,6 +533,23 @@ class DedupSpec extends AnyFunSuite {
     assert(cacheIsEmpty, "detection paths must not persist anything")
   }
 
+  test("a NULL text is refused with an error naming the operator and the doc") {
+    val docs = fixture.union(Seq((42L, null: String)).toDF("doc_id", "text"))
+    Seq[(String, () => Any)](
+      "Dedup.shingles" -> (() => Dedup.shingles(docs, w = 3).collect()),
+      "Dedup.positionalShingles" -> (() =>
+        Dedup.positionalShingles(docs, w = 3).collect())
+    ).foreach { case (op, run) =>
+      val e = intercept[Exception](run())
+      val refusal = Iterator.iterate[Throwable](e)(_.getCause)
+        .takeWhile(_ != null).collectFirst {
+          case iae: IllegalArgumentException => iae.getMessage
+        }
+      assert(refusal.exists(m => m.contains(op) && m.contains("doc_id 42")),
+        s"$op: expected an IllegalArgumentException naming doc_id 42, got $e")
+    }
+  }
+
   test("a failing input leaves no staging directory or cache entry behind") {
     // the text column throws when the staging write evaluates it: every
     // operator must remove the directory it created, output included

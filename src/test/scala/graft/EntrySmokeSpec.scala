@@ -6,14 +6,24 @@ import org.scalatest.funsuite.AnyFunSuite
 class EntrySmokeSpec extends AnyFunSuite {
   import SparkTestBase._
 
+  /** The temp entries a registered query may leave behind: the per-JVM
+    * memoized layouts (deleted at JVM exit) and the rewrite outputs a
+    * `Stage.parquet` call keeps for the frame it returns.
+    */
+  private val keptTmpPrefixes = Seq("graft_events_bydate_", "graft_evolve_",
+    "graft-vshared-", "graft-span-rewrite-", "graft-maxspan-rewrite-")
+
   test("entry returns rows on sf0.001") {
     assert(SparkEntry.entry(spark).count() > 0)
   }
 
   test("every declared query executes at sf0.001") {
     SparkEntry.queries.foreach { case (name, fn) =>
-      val n = fn(spark, sfDir).count()
+      var n = -1L
+      val added = newTmpEntries("graft") { n = fn(spark, sfDir).count() }
+        .filterNot(p => keptTmpPrefixes.exists(p.getFileName.toString.startsWith))
       assert(n >= 0, s"$name failed")
+      assert(added.isEmpty, s"$name left temp entries behind: $added")
       info(s"$name -> $n rows")
     }
   }

@@ -8,7 +8,9 @@ import org.scalatest.funsuite.AnyFunSuite
 /** The one staging lifecycle: a [[Stage.scoped]] scope releases every
   * frame it cached on a return, a throw and a non-local `return`;
   * [[Stage.Scope.release]] drops one early; [[Stage.parquet]] keeps
-  * only the `out` table a call wrote and deletes everything else.
+  * only the `out` table a call wrote and deletes everything else;
+  * [[Stage.scratch]] deletes its directory on every path and returns a
+  * frame that outlives it.
   */
 class StageSpec extends AnyFunSuite {
   import SparkTestBase._
@@ -100,5 +102,41 @@ class StageSpec extends AnyFunSuite {
             frame(10).select(boom(col("x")).as("x"))) { (t, _) => t.count() })
     }
     assert(added.isEmpty, s"a failed call left $added behind")
+  }
+
+  test("scratch: the directory goes on return; the returned frame outlives it") {
+    var seen: String = null
+    var out: org.apache.spark.sql.DataFrame = null
+    val added = newTmpEntries("graft-stagespec-scratch-") {
+      out = Stage.scratch("graft-stagespec-scratch-") { tmp =>
+        seen = tmp
+        frame(10).write.parquet(s"$tmp/t")
+        spark.read.parquet(s"$tmp/t").filter(col("x") > 10)
+      }
+    }
+    assert(seen != null && !Files.exists(Paths.get(seen)),
+      "the scratch directory outlived the call")
+    assert(added.isEmpty, s"scratch left $added behind")
+    assert(out.count() === 4L)
+    assert(out.collect().map(_.getLong(0)).sorted.toSeq === Seq(12L, 14L, 16L, 18L))
+  }
+
+  test("scratch: a throw in the body or in the detach deletes the directory") {
+    val boom = udf { (x: Long) => if (x >= 0) throw new IllegalStateException("boom"); x }
+    val added = newTmpEntries("graft-stagespec-scratchfail-") {
+      val e = intercept[IllegalStateException](
+        Stage.scratch("graft-stagespec-scratchfail-") { tmp =>
+          frame(10).write.parquet(s"$tmp/t")
+          throw new IllegalStateException("boom")
+        })
+      assert(e.getMessage === "boom")
+      // the body returns a lazy frame; only the detach runs the UDF
+      intercept[Exception](
+        Stage.scratch("graft-stagespec-scratchfail-") { tmp =>
+          frame(10).write.parquet(s"$tmp/t")
+          spark.read.parquet(s"$tmp/t").select(boom(col("x")).as("x"))
+        })
+    }
+    assert(added.isEmpty, s"a failed scratch call left $added behind")
   }
 }

@@ -123,6 +123,18 @@ class StagedReleaseSpec extends AnyFunSuite {
     }
   }
 
+  // ---- query scratch directories: deleted on a throw too ----
+
+  Seq("stats_rebuild_forget", "corpus_admission_report_state",
+    "dedup_state_append", "stream_corpus_clean").foreach { q =>
+    test(s"registered query $q leaves no temp entry behind when it throws") {
+      val dir = nullTextDir
+      val added = newTmpEntries("graft")(
+        intercept[Exception](SparkEntry.queries(q)(spark, dir).count()))
+      assert(added.isEmpty, s"$q left $added behind")
+    }
+  }
+
   // ---- every other migrated call site ----
 
   test("registered query stats_sketch_state releases its token table") {

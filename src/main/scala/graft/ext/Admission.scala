@@ -39,17 +39,23 @@ import graft.operators.ScaleOps
   * (source, quality, contamination — the Bloom probe is a bitmap
   * column, no join — and the LM and NB scores, each a lookup in a model
   * broadcast once), one banded broadcast-join sweep (bench state is
-  * eval-corpus-sized), and one band-state equi-join keyed on
-  * (band, bkey) with a per-doc rollup — the whole report is a constant
-  * number of corpus scans with broadcast-bounded or band-keyed
-  * equi-joins, no doc-by-doc term anywhere.
+  * eval-corpus-sized; cosine verifies every candidate row and the ids
+  * are deduplicated once, so no exchange carries the embedding pairs),
+  * and one band-state equi-join keyed on (band, bkey) — against the
+  * state reduced to one (min, max) doc_id pair per bucket — with ONE
+  * per-doc rollup. The whole report is a constant number of corpus
+  * scans with broadcast-bounded or band-keyed equi-joins, no
+  * doc-by-doc term anywhere.
   *
   * Frozen artifacts are resolved ONCE per consumer: [[report]] collects
-  * and broadcasts both models and validates the bench-signature and
-  * band-state layouts itself; a streaming pipeline does the same at
-  * start ([[requireLayouts]], [[TextAnalysis.resolveLm]],
-  * [[Classifier.resolveNb]]) and runs [[reportResolved]] per
-  * micro-batch, so no batch pays a probe.
+  * and broadcasts both models, applies the Bloom gate once
+  * ([[shingleHits]]: the bitmap collect), and validates the
+  * bench-signature and band-state layouts and the embeddings' length
+  * itself; a streaming pipeline does the same at start
+  * ([[requireLayouts]], [[shingleHits]], [[TextAnalysis.resolveLm]],
+  * [[Classifier.resolveNb]]) and runs [[reportResolved]] — which
+  * builds its plan without running a job — per micro-batch, so no
+  * batch pays a probe or re-reads frozen state.
   */
 object Admission {
 
@@ -126,21 +132,36 @@ object Admission {
              nbBuckets: Int = 1024,
              nearDup: Option[NearDupCfg] = None): DataFrame = {
     requireLayouts(semantic, nearDup)
-    reportResolved(docs, benchSources, shingleGate, contamThreshold,
-      semantic, TextAnalysis.resolveLm(lmModel), minAvgLp,
+    reportResolved(docs, benchSources, shingleHits(shingleGate),
+      contamThreshold, semantic, TextAnalysis.resolveLm(lmModel), minAvgLp,
       Classifier.resolveNb(nbModel, nbBuckets), allowedLabels, nearDup)
   }
 
+  /** The contamination gate's per-document Bloom hit count — how many
+    * of the document's distinct 5-shingles (`_sh`, the column
+    * [[reportResolved]] projects) the gate says the bench set might
+    * contain. Applying `shingleGate` is where the gate's artifact gets
+    * resolved ([[Sketches.bloomGateColumn]] collects its bitmap), so a
+    * consumer builds this column ONCE and hands it to every
+    * [[reportResolved]] call.
+    */
+  private[graft] def shingleHits(shingleGate: Column => Column): Column =
+    size(filter(col("_sh"), shingleGate))
+
   /** Fail loudly when a gate's persisted state was built under a
     * different layout than the gate is called with: the bench-signature
-    * state's banding, the near-dup band state's and a caller-supplied
-    * probe's (w, num_hashes, band_width). One one-row probe each; a
-    * consumer validates once per frozen state, not per evaluation.
+    * state's banding, the embeddings' length against the planes, the
+    * near-dup band state's and a caller-supplied probe's (w,
+    * num_hashes, band_width). One one-row probe each; a consumer
+    * validates once per frozen state, not per evaluation.
     */
   private[graft] def requireLayouts(semantic: Option[SemanticCfg],
                                     nearDup: Option[NearDupCfg]): Unit = {
-    semantic.foreach(g => Stamp.require(g.benchState, "bench-signature state",
-      Corpus.benchSigLayout(g.numPlanes, g.bandWidth, g.dim)))
+    semantic.foreach { g =>
+      Stamp.require(g.benchState, "bench-signature state",
+        Corpus.benchSigLayout(g.numPlanes, g.bandWidth, g.dim))
+      Similarity.requireDim(g.emb, g.dim)
+    }
     nearDup.foreach { g =>
       val layout = Dedup.bandLayout(g.w, g.numHashes, g.bandWidth)
       (("seen band table", g.seenBands) +: g.bands.map("probe band table" -> _).toSeq)
@@ -151,12 +172,13 @@ object Admission {
     }
   }
 
-  /** [[report]] over resolved models and layouts its caller validated
+  /** [[report]] over resolved models, a resolved Bloom hit count
+    * ([[shingleHits]]) and layouts its caller validated
     * ([[requireLayouts]]): builds the plan without running a job.
     */
   private[graft] def reportResolved(docs: DataFrame,
                                     benchSources: Seq[String],
-                                    shingleGate: Column => Column,
+                                    shingleHits: Column,
                                     contamThreshold: Double,
                                     semantic: Option[SemanticCfg],
                                     lm: LmScorer, minAvgLp: Double,
@@ -185,7 +207,7 @@ object Admission {
           nTok.cast("double"))
       .withColumn("_sh", shArr)
       .withColumn("_n_sh", size(col("_sh")))
-      .withColumn("_n_hit", size(filter(col("_sh"), shingleGate)))
+      .withColumn("_n_hit", shingleHits)
       .withColumn("_c_pass", col("_n_sh") === 0 ||
         col("_n_hit").cast("double") <
           lit(contamThreshold) * col("_n_sh").cast("double"))
@@ -226,29 +248,29 @@ object Admission {
         val bands = g.bands
           .getOrElse(Dedup.bandTable(docs, g.w, g.numHashes, g.bandWidth))
           .select(col("doc_id"), col("band"), col("bkey"))
-        // ONE pass over the doc bands: a LEFT join against the state
-        // marks each (doc, band) hit-or-not (collapsing the k state
-        // rows a bucket may hold via the per-band max, with the doc's
-        // own state rows not counting as hits — the excludeIds
-        // discipline), then one per-doc rollup yields band count and
-        // hit count together. Building the band table once matters:
-        // it is a full corpus shingle→minhash pipeline, and the
-        // two-subtree form (separate count and hit aggregations)
-        // would run it twice — the exact double-model-subtree plan
-        // bug class the report family already fixed once.
+        // ONE rollup: the state is reduced to one (min, max) doc_id
+        // pair per bucket, the doc bands LEFT-join it, and one per-doc
+        // aggregate yields band count and hit count together. A band
+        // hits iff its bucket holds a non-null doc_id other than the
+        // doc's own — the excludeIds discipline: the bucket's ids are
+        // all the doc's own exactly when min = max = doc_id, and
+        // min/max skip null state ids, so a bucket of null ids never
+        // hits. bandTable emits one row per (doc_id, band), so per-doc
+        // row counts are band counts. Building the band table once
+        // matters: it is a full corpus shingle→minhash pipeline, and
+        // the two-subtree form (separate count and hit aggregations)
+        // would run it twice — the exact double-model-subtree plan bug
+        // class the report family already fixed once.
         val seen = g.seenBands
-          .select(col("doc_id").as("_sid"), col("band"), col("bkey"))
-          .dropDuplicates("_sid", "band", "bkey")
+          .groupBy(col("band"), col("bkey"))
+          .agg(min(col("doc_id")).as("_smin"), max(col("doc_id")).as("_smax"))
         val probe = bands
           .join(seen, Seq("band", "bkey"), "left")
-          .withColumn("_hit",
-            col("_sid").isNotNull && col("_sid") =!= col("doc_id"))
-          .groupBy(col("doc_id"), col("band"))
-          .agg(max(col("_hit")).as("_band_hit"))
           .groupBy(col("doc_id"))
           .agg(count(lit(1)).as("_nd_n"),
-            sum(when(col("_band_hit"), lit(1L)).otherwise(lit(0L)))
-              .as("_nd_hits"))
+            sum(when(col("_smin").isNotNull &&
+                !(col("_smin") === col("doc_id") && col("_smax") === col("doc_id")),
+              lit(1L)).otherwise(lit(0L))).as("_nd_hits"))
         withSem
           .join(probe, Seq("doc_id"), "left")
           .withColumn("_nd_pass", coalesce(col("_nd_hits"), lit(0L)) === 0)

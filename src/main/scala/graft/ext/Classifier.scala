@@ -158,12 +158,16 @@ object Classifier {
     require(Seq("label", "bucket", "c").forall(counts.columns.contains),
       "nbModelFromCounts: not an NB count state — need (label, bucket, c) " +
         "as built by nbCountsBuild")
-    Stamp.require(counts, "nbModelFromCounts", Seq("buckets" -> buckets))
     val spark = counts.sparkSession
-    // bounded by labels×(buckets+1): materialize ONCE so the totals,
-    // the dense grid and the priors all read the same blocks
-    val c = counts.select(col("label"), col("bucket"), col("c"))
+    // bounded by labels×(buckets+1): materialize ONCE so the stamp
+    // probe, the totals, the dense grid and the priors all read the same
+    // blocks — probing the lazy counts first would run their whole
+    // aggregation twice
+    val stamped = counts.select(Seq(col("label"), col("bucket"), col("c")) ++
+        (if (counts.columns.contains("buckets")) Seq(col("buckets")) else Nil): _*)
       .localCheckpoint(eager = true)
+    Stamp.require(stamped, "nbModelFromCounts", Seq("buckets" -> buckets))
+    val c = stamped.select(col("label"), col("bucket"), col("c"))
     val feat = c.filter(col("bucket") =!= DocCountBucket)
     val docs = c.filter(col("bucket") === DocCountBucket)
       .select(col("label"), col("c").as("n_docs"))

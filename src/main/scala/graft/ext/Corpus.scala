@@ -436,10 +436,14 @@ object Corpus {
       .join(emb.select(col("vec_id"), col("embedding")),
         col("doc_id") === col("vec_id"))
 
+  /** Band a (doc_id, embedding) side without probing its dimension:
+    * each caller probes the embeddings it bands once
+    * ([[Similarity.requireDim]]).
+    */
   private def bandedSide(side: DataFrame, idAs: String, embAs: String,
                          numPlanes: Int, bandWidth: Int,
                          dim: Int): DataFrame =
-    Similarity.withBandKeys(
+    Similarity.bandRowsUnchecked(
         side.select(col("doc_id").as("vec_id"), col("embedding")),
         idAs, numPlanes, bandWidth, dim)
       .withColumnRenamed("embedding", embAs)
@@ -456,13 +460,15 @@ object Corpus {
   def benchSignatureTable(docs: DataFrame, emb: DataFrame,
                           benchSources: Seq[String],
                           numPlanes: Int = 16, bandWidth: Int = 4,
-                          dim: Int = 64): DataFrame =
-    bandedSide(
-        pairedWithEmb(docs, emb).filter(col("source").isin(benchSources: _*)),
-        "bid", "be", numPlanes, bandWidth, dim)
+                          dim: Int = 64): DataFrame = {
+    val bench =
+      pairedWithEmb(docs, emb).filter(col("source").isin(benchSources: _*))
+    Similarity.requireDim(bench, dim)
+    bandedSide(bench, "bid", "be", numPlanes, bandWidth, dim)
       .withColumn("num_planes", lit(numPlanes))
       .withColumn("band_width", lit(bandWidth))
       .withColumn("dim", lit(dim))
+  }
 
   /** The bench-signature state's stamp: a mismatched banding would
     * silently never collide and admit every paraphrase.
@@ -488,14 +494,21 @@ object Corpus {
                                dim: Int = 64): DataFrame = {
     Stamp.require(benchState, "bench-signature state",
       benchSigLayout(numPlanes, bandWidth, dim))
+    Similarity.requireDim(emb, dim)
     sweepBenchSignatures(cohort, emb, benchState, threshold, numPlanes,
       bandWidth, dim)
   }
 
-  /** [[embeddingContaminatedIds]] over a bench state whose layout the
-    * caller already validated ([[benchSigLayout]]) — the form a
-    * consumer that validated once at start (a streaming admission
-    * pipeline) runs per micro-batch.
+  /** [[embeddingContaminatedIds]] over a bench state whose layout and
+    * embeddings whose length the caller already validated
+    * ([[benchSigLayout]], [[Similarity.requireDim]] on `emb`) — the
+    * form a consumer that validated once at start (a streaming
+    * admission pipeline) runs per micro-batch; building it runs no job.
+    * Cosine is verified on every candidate row and the flagged ids are
+    * deduplicated once at the end: a (tid, bid) pair colliding in
+    * several bands is verified once per band, with the same cosine
+    * each time, so the id set equals the dedup-then-verify form's
+    * without shuffling both embedding arrays through a pair dedup.
     */
   private[graft] def sweepBenchSignatures(cohort: DataFrame, emb: DataFrame,
                                           benchState: DataFrame,
@@ -509,7 +522,6 @@ object Corpus {
     cohortB.join(benchState.select(col("band"), col("bkey"),
           col("bid"), col("be")),
         Seq("band", "bkey"))
-      .dropDuplicates("tid", "bid")
       .withColumn("sim",
         graft.functions.KeyColumns.cosine_native(col("te"), col("be")))
       .filter(col("sim") >= lit(threshold))

@@ -75,9 +75,11 @@ object Similarity {
   def planeMatrix(numPlanes: Int, dim: Int): Array[Array[Double]] = {
     val md = java.security.MessageDigest.getInstance("MD5")
     Array.tabulate(numPlanes, dim) { (p, d) =>
-      val hex = md.digest(s"${p}_$d".getBytes("UTF-8"))
-        .map("%02x".format(_)).mkString
-      if ("02468ace".contains(hex.last)) 1.0 else -1.0
+      // the last hex digit is the low nibble of the last digest byte, and
+      // it is even iff that byte's low bit is clear — read without
+      // hex-formatting 16 bytes per component on every plan build
+      val dg = md.digest(s"${p}_$d".getBytes("UTF-8"))
+      if ((dg(dg.length - 1) & 1) == 0) 1.0 else -1.0
     }
   }
 
@@ -89,7 +91,9 @@ object Similarity {
     */
   private def signBits(ce: Column, planes: Array[Array[Double]]): Seq[Column] =
     planes.toSeq.map { row =>
-      val w = array(row.toSeq.map(v => lit(v.toFloat)): _*)
+      // one array literal per plane, not dim literal nodes the analyzer
+      // walks and the optimizer folds on every plan build
+      val w = typedLit(row.map(_.toFloat))
       val dotp = graft.functions.KeyColumns.dot_native(ce, w)
       when(dotp >= 0, lit(1)).otherwise(lit(0))
     }
@@ -126,6 +130,17 @@ object Similarity {
   def withBandKeys(df: DataFrame, idCol: String, numPlanes: Int,
                    bandWidth: Int, dim: Int): DataFrame = {
     requireDim(df, dim)
+    bandRowsUnchecked(df, idCol, numPlanes, bandWidth, dim)
+  }
+
+  /** [[withBandKeys]] without its dimension probe, for a caller that
+    * probed the embeddings it bands once up front
+    * ([[Corpus.sweepBenchSignatures]]: its consumers check `emb`, so a
+    * per-evaluation probe would re-read frozen state every time).
+    */
+  private[ext] def bandRowsUnchecked(df: DataFrame, idCol: String,
+                                     numPlanes: Int, bandWidth: Int,
+                                     dim: Int): DataFrame = {
     val bandStructs = bandKeyExprs(col("embedding"), numPlanes, bandWidth, dim)
       .zipWithIndex.map { case (key, b) =>
         struct(lit(b).as("band"), key.as("bkey"))

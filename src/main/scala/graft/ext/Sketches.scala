@@ -1,5 +1,6 @@
 package graft.ext
 
+import scala.collection.immutable.ListMap
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -478,13 +479,20 @@ object Sketches {
     * its verdict TABLE; as an inline prefilter that would cost the same
     * order as the exact join it gates, which defeats the point — this
     * column is the shape a 100 TB prefilter actually ships.)
+    * ONE job reads the filter: the stamp columns it carries ride along
+    * with `pos` and are checked on the collected rows, so a lazy filter
+    * frame is evaluated once, not once for the stamp and again for the
+    * bits.
     */
   def bloomGateColumn(bloom: DataFrame, item: Column, numBits: Int = 8192,
                       numHashes: Int = 4): Column = {
-    Stamp.require(bloom, "bloomGateColumn filter",
-      Seq("num_bits" -> numBits, "num_hashes" -> numHashes))
+    val expected = Seq("num_bits" -> numBits, "num_hashes" -> numHashes)
+    val carried = expected.map(_._1).filter(bloom.columns.contains)
+    val rows = bloom.select((col("pos") +: carried.map(col)): _*).collect()
+    Stamp.require(rows.headOption.map(r => ListMap(carried.zip(r.toSeq.tail): _*)),
+      "bloomGateColumn filter", expected)
     val words = new Array[Long]((numBits + 63) / 64)
-    bloom.select(col("pos")).collect().foreach { r =>
+    rows.foreach { r =>
       val p = r.getLong(0)
       // an un-stamped filter built with a larger geometry would
       // otherwise surface as an opaque ArrayIndexOutOfBounds here

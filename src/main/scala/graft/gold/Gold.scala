@@ -136,12 +136,14 @@ object Gold {
         col("trip_count"), col("avg_duration_days"))
   }
 
-  /** dm_popular_routes computed OFF THE PERSISTED STAR instead of the raw
-    * sources: the fact is already joined and persisted bucketed on
-    * `start_station_key`, so the aggregation below — whose grouping keys
+  /** dm_popular_routes computed OFF THE STAR instead of the raw sources:
+    * the fact is already joined, so the only joins left are two
+    * broadcasts of the tiny station dim for display names. Over the
+    * warehouse's fact ([[graft.plans.Warehouse]] persists it bucketed on
+    * `start_station_key`) the aggregation below — whose grouping keys
     * include the bucket column — runs with ZERO exchange before the
-    * partial agg, and the only joins left are two broadcasts of the tiny
-    * station dim for display names. The raw-source form
+    * partial agg; over the unbucketed fact `Pipeline.runFullEtl` stages
+    * it pays one exchange on the grouping keys. The raw-source form
     * ([[popularRoutes]]) re-pays lineitem⋈orders plus two fact-side dim
     * joins on every refresh; at 100 TB this form moves nothing but the
     * ≤|stations|² aggregate.
@@ -158,7 +160,8 @@ object Gold {
     val s2 = dimStation.select(col("station_key").as("end_station_key"),
       col("station_name").as("end_station"))
     factTrips
-      // grouping keys ⊇ bucket column ⇒ no shuffle before this aggregate.
+      // over a fact bucketed on start_station_key (the warehouse's), the
+      // grouping keys ⊇ the bucket column ⇒ no shuffle before this aggregate
       .groupBy(col("start_station_key"), col("end_station_key"))
       .agg(count(lit(1)).as("trip_count"),
         sum(col("duration_days")).as("sum_duration"))

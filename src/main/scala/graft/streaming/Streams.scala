@@ -760,10 +760,13 @@ object Streams {
     * ([[graft.ext.Admission.report]]) run live: every micro-batch is
     * evaluated against artifacts FROZEN at gate start (Bloom gate
     * column, persisted bench-signature state, LM and NB models — the
-    * models resolved to broadcast tables and every state layout
-    * validated once here, the [[lmGatePipeline]] discipline, so a
-    * micro-batch runs no layout or stamp probe), and the batch's full
-    * per-document decision table
+    * models resolved to broadcast tables, the Bloom bitmap collected
+    * into the gate column by ONE application of `shingleGate`, every
+    * state layout and the embeddings' length validated once here, the
+    * [[lmGatePipeline]] discipline, so a micro-batch runs no layout,
+    * stamp, dimension or Bloom probe — only its own work: the band
+    * table, its state-cell collect, and the report write), and the
+    * batch's full per-document decision table
     * lands in a per-batch sink directory. Because every verdict is a
     * function of the document and the frozen artifacts alone, the
     * union of the per-batch tables is BIT-IDENTICAL to one batch
@@ -886,6 +889,9 @@ object Streams {
       graft.ext.Dedup.openBandState(spark, _, g.w, g.numHashes, g.bandWidth)))
     graft.ext.Admission.requireLayouts(semFrozen,
       ndFrozen.filter(_ => ndState.isEmpty))
+    // the Bloom gate is applied once too: its bitmap collect (and, for a
+    // lazy filter frame, the filter build) is frozen state, not batch work
+    val shHits = graft.ext.Admission.shingleHits(shingleGate)
     spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", maxFilesPerTrigger).parquet(srcDir)
       .writeStream
@@ -902,7 +908,7 @@ object Streams {
           }
           val (lmB, nbB, verB) = modelsOf(batchId)
           val rep = graft.ext.Admission.reportResolved(batch.toDF(),
-            benchSources, shingleGate, contamThreshold, semFrozen, lmB,
+            benchSources, shHits, contamThreshold, semFrozen, lmB,
             minAvgLp, nbB, allowedLabels, ndBatch)
           verB.fold(rep)(v => rep.withColumn("model_version", lit(v)))
             .write.mode("overwrite").parquet(s"$outDir/batch_id=$batchId")

@@ -55,7 +55,7 @@ class AdmissionPlanAuditSpec extends AnyFunSuite {
     * written to a temp dir that is deleted after `audit`.
     */
   private def withReport(audit: DataFrame => Unit): Unit = {
-    val dir = java.nio.file.Files.createTempDirectory("graft-planaudit-bands-")
+    val dir = tmpDir("graft-planaudit-bands-")
     try audit(CorpusRegistry.admissionReportFor(spark, sfDir, dir.toString))
     finally graft.plans.Pipeline.deleteRecursively(dir)
   }
@@ -76,8 +76,7 @@ class AdmissionPlanAuditSpec extends AnyFunSuite {
     // documents scan: a regression to the join form re-enters the model
     // relation under a Join and the per-doc rollup Aggregate
     val docs = Tables.documents(spark, sfDir)
-    val tmp = java.nio.file.Files
-      .createTempDirectory("graft-planaudit-models-").toString
+    val tmp = tmpDir("graft-planaudit-models-").toString
     try {
       graft.ext.TextAnalysis.bigramLmTrain(docs).write.parquet(s"$tmp/lm")
       graft.ext.Classifier.nbTrain(docs).write.parquet(s"$tmp/nb")
@@ -138,8 +137,7 @@ class AdmissionPlanAuditSpec extends AnyFunSuite {
     // retrain lifecycle): gate artifacts staged once, every consumer a
     // bounded scan of the persisted decision table. Structurally that
     // means the consumer plans touch NO raw-corpus file at all.
-    val tmp = java.nio.file.Files
-      .createTempDirectory("graft-planaudit-").toString
+    val tmp = tmpDir("graft-planaudit-").toString
     try {
       CorpusRegistry.admissionReportFor(spark, sfDir, tmp)
         .write.parquet(s"$tmp/report")

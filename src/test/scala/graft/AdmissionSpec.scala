@@ -216,8 +216,7 @@ class AdmissionSpec extends AnyFunSuite {
     val (gate, _, lm, nb) = cfg(docs)
     val cohort = Dedup.bandTable(docs.filter(col("doc_id") % 7 === 3),
       w = 5, numHashes = 8, bandWidth = 2)
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-adm-bandstate-").toString + "/state"
+    val dir = tmpDir("graft-adm-bandstate-").toString + "/state"
     Dedup.writeBandState(cohort, dir, "overwrite")
     def rep(seen: org.apache.spark.sql.DataFrame) =
       rows(Admission.report(docs, Seq("src0", "src1"), gate, 0.3, None,
@@ -231,7 +230,7 @@ class AdmissionSpec extends AnyFunSuite {
   test("batch == stream: per-micro-batch reports union to the one-shot batch report bit-for-bit") {
     val docs = Tables.documents(spark, sfDir)
     val (gate, sem, lm, nb) = cfg(docs)
-    val base = java.nio.file.Files.createTempDirectory("graft_adm").toString
+    val base = tmpDir("graft_adm").toString
     val src = s"$base/src"
     // three files → three micro-batches under maxFilesPerTrigger = 1
     (0 until 3).foreach(i =>
@@ -269,7 +268,7 @@ class AdmissionSpec extends AnyFunSuite {
   test("admissionPipeline refuses a mismatched band-state or bench-signature layout when it starts") {
     val docs = Tables.documents(spark, sfDir)
     val (gate, sem, lm, nb) = cfg(docs)
-    val base = java.nio.file.Files.createTempDirectory("graft_adm_layout").toString
+    val base = tmpDir("graft_adm_layout").toString
     try {
       val src = s"$base/src"
       docs.coalesce(1).write.parquet(src)
@@ -294,19 +293,24 @@ class AdmissionSpec extends AnyFunSuite {
     } finally graft.plans.Pipeline.deleteRecursively(java.nio.file.Paths.get(base))
   }
 
-  test("a streamed micro-batch runs no layout, stamp or model-resolution probe") {
-    // every frozen artifact is resolved when the pipeline starts; a
-    // micro-batch's jobs are its own work only (band-state cell collect,
-    // probe, report write)
+  /** Streams the corpus in three files — one micro-batch each —
+    * through [[Streams.admissionPipeline]] against the persisted
+    * near-dup band state, and returns the call sites of the jobs each
+    * micro-batch ran, keyed by batch id.
+    */
+  private def streamedBatchJobs(gate: Column => Column,
+                                sem: Option[Admission.SemanticCfg],
+                                lm: DataFrame, nb: DataFrame): Map[String, Seq[String]] = {
     val docs = Tables.documents(spark, sfDir)
-    val (gate, sem, lm, nb) = cfg(docs)
-    val base = java.nio.file.Files.createTempDirectory("graft_adm_probes").toString
-    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()
+    val base = tmpDir("graft_adm_probes").toString
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(String, String, String)]()
     val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.add((Option(e.properties).flatMap(p =>
-            Option(p.getProperty("sql.streaming.queryId"))).getOrElse(""),
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        def prop(k: String) =
+          Option(e.properties).flatMap(p => Option(p.getProperty(k))).getOrElse("")
+        jobs.add((prop("sql.streaming.queryId"), prop("streaming.sql.batchId"),
           e.stageInfos.map(_.details).mkString("\n")))
+      }
     }
     spark.sparkContext.addSparkListener(listener)
     try {
@@ -327,17 +331,118 @@ class AdmissionSpec extends AnyFunSuite {
       val bus = spark.sparkContext.getClass.getMethod("listenerBus")
         .invoke(spark.sparkContext)
       bus.getClass.getMethod("waitUntilEmpty").invoke(bus)
-      val batchJobs = jobs.toArray(Array.empty[(String, String)])
-        .filter(_._1 == q.id.toString).map(_._2)
-      assert(batchJobs.nonEmpty, "no micro-batch job was observed")
-      val probes = Seq("requireStateLayout", "requireBenchSigLayout",
-        "Stamp$", "resolveLm", "resolveNb", "openBandState")
-      batchJobs.foreach(site => probes.foreach(p =>
-        assert(!site.contains(p), s"micro-batch ran a $p probe:\n$site")))
+      jobs.toArray(Array.empty[(String, String, String)]).toSeq
+        .filter(_._1 == q.id.toString)
+        .groupBy(_._2).map { case (b, js) => b -> js.map(_._3) }
     } finally {
       spark.sparkContext.removeSparkListener(listener)
       graft.plans.Pipeline.deleteRecursively(java.nio.file.Paths.get(base))
     }
+  }
+
+  test("a streamed micro-batch runs no layout, stamp or model-resolution probe") {
+    // every frozen artifact is resolved when the pipeline starts; a
+    // micro-batch's jobs are its own work only (band-state cell collect,
+    // probe, report write)
+    val (gate, sem, lm, nb) = cfg(Tables.documents(spark, sfDir))
+    val batchJobs = streamedBatchJobs(gate, sem, lm, nb).values.flatten
+    assert(batchJobs.nonEmpty, "no micro-batch job was observed")
+    val probes = Seq("requireStateLayout", "requireBenchSigLayout",
+      "Stamp$", "resolveLm", "resolveNb", "openBandState")
+    batchJobs.foreach(site => probes.foreach(p =>
+      assert(!site.contains(p), s"micro-batch ran a $p probe:\n$site")))
+  }
+
+  test("admissionPipeline applies the Bloom gate function once per pipeline, not per micro-batch") {
+    val (gate, sem, lm, nb) = cfg(Tables.documents(spark, sfDir))
+    val calls = new java.util.concurrent.atomic.AtomicInteger()
+    val counted = (sh: Column) => { calls.incrementAndGet(); gate(sh) }
+    val batches = streamedBatchJobs(counted, sem, lm, nb).keySet
+    assert(batches.size === 3, s"expected three micro-batches: $batches")
+    assert(calls.get === 1,
+      s"the gate ran ${calls.get} times over three micro-batches — each " +
+        "application re-collects the Bloom bitmap")
+  }
+
+  test("streamed admission stays within its jobs-per-micro-batch budget") {
+    // what a micro-batch runs is its own work only: the band table and
+    // its state-cell collect, then the report write, whose shuffle and
+    // broadcast stages adaptive execution submits as jobs of their own.
+    // Measured at 14–15 on this fixture (three micro-batches of the
+    // sf0.001 corpus; the count moves with the adaptive plan); a
+    // frozen-state probe creeping back into the batch, or an exchange
+    // added to the report, raises it.
+    val JobsPerMicroBatch = 15
+    val (gate, sem, lm, nb) = cfg(Tables.documents(spark, sfDir))
+    val perBatch = streamedBatchJobs(gate, sem, lm, nb).map { case (b, js) => b -> js.size }
+    assert(perBatch.size === 3, s"expected three micro-batches: $perBatch")
+    assert(perBatch.values.forall(_ <= JobsPerMicroBatch),
+      s"jobs per micro-batch $perBatch exceed the budget $JobsPerMicroBatch")
+  }
+
+  test("reportResolved builds its report frame without running a Spark job") {
+    // every frozen artifact — models, Bloom bitmap, layouts, the
+    // embeddings' length — is resolved by the caller, so building the
+    // plan must not touch data
+    val docs = Tables.documents(spark, sfDir)
+    val (gate, sem, lm, nb) = cfg(docs)
+    val nd = ndCfg(docs)
+    Admission.requireLayouts(sem, nd)
+    val hits = Admission.shingleHits(gate)
+    val lmS = TextAnalysis.resolveLm(lm)
+    val nbS = Classifier.resolveNb(nb)
+    val sc = spark.sparkContext
+    sc.setJobGroup("report-resolved", "reportResolved construction")
+    try Admission.reportResolved(docs, Seq("src0", "src1"), hits, 0.3, sem,
+      lmS, -3.40, nbS, Seq("en"), nd)
+    finally sc.clearJobGroup()
+    val jobs = sc.statusTracker.getJobIdsForGroup("report-resolved")
+    assert(jobs.isEmpty, s"building the report ran ${jobs.length} jobs")
+  }
+
+  test("near-dup probe: one rollup over (min, max) state ids equals the per-band two-level form") {
+    // adversarial state: repeated (id, bucket) rows, buckets holding only
+    // the doc's own id, foreign ids beside the doc's own, buckets of
+    // NULL ids only and NULL ids beside the doc's own
+    val docs = Tables.documents(spark, sfDir)
+    val (gate, _, lm, nb) = cfg(docs)
+    val bands = Dedup.bandTable(docs, w = 5, numHashes = 8, bandWidth = 2)
+      .localCheckpoint(eager = true)
+    val admitted = bands.filter(col("doc_id") % 7 === 3)
+    val nullId = lit(null).cast("long")
+    val state = admitted.unionByName(admitted)
+      .unionByName(admitted.filter(col("doc_id") % 2 === 0)
+        .withColumn("doc_id", col("doc_id") + 1000000L))
+      .unionByName(bands.filter(col("doc_id") % 7 === 4).withColumn("doc_id", nullId))
+      .unionByName(admitted.filter(col("doc_id") % 3 === 0).withColumn("doc_id", nullId))
+      .unionByName(bands.filter(col("doc_id") % 7 === 5 && col("band") === 0)
+        .withColumn("doc_id", col("doc_id") - 1))
+    // the two-level form: dedup (id, bucket), mark each (doc, band) hit
+    // by its max, then roll bands up per doc
+    val seen = state.select(col("doc_id").as("_sid"), col("band"), col("bkey"))
+      .dropDuplicates("_sid", "band", "bkey")
+    val expected = bands.join(seen, Seq("band", "bkey"), "left")
+      .withColumn("_hit", col("_sid").isNotNull && col("_sid") =!= col("doc_id"))
+      .groupBy(col("doc_id"), col("band")).agg(max(col("_hit")).as("_band_hit"))
+      .groupBy(col("doc_id"))
+      .agg(count(lit(1)).as("n"),
+        sum(when(col("_band_hit"), lit(1L)).otherwise(lit(0L))).as("hits"))
+      .collect().map(r => r.getLong(0) ->
+        ((r.getLong(2) == 0L, Some(r.getLong(2).toDouble / r.getLong(1).toDouble))))
+      .toMap
+    assert(expected.values.exists(!_._1) && expected.values.exists(_._1),
+      "the fixture must produce both hits and misses")
+    val got = Admission.report(docs, Seq("src0", "src1"), gate, 0.3, None,
+        lm, -3.40, nb, Seq("en"),
+        nearDup = Some(Admission.NearDupCfg(state, w = 5, numHashes = 8,
+          bandWidth = 2)))
+      .filter(col("gate") === "7_neardup")
+      .collect().map(r => r.getLong(0) ->
+        ((r.getBoolean(2), if (r.isNullAt(3)) None else Some(r.getDouble(3)))))
+      .toMap
+    val ids = docs.select(col("doc_id")).collect().map(_.getLong(0))
+    ids.foreach(id => assert(got(id) === expected.getOrElse(id, (true, None)),
+      s"doc $id: near-dup verdict diverged from the two-level form"))
   }
 
   test("model-swap rollout: each batch's report equals the batch report under that batch's model version") {
@@ -351,8 +456,7 @@ class AdmissionSpec extends AnyFunSuite {
     val v1docs = docs.filter(col("doc_id") % 2 === 0)
     val lm1 = TextAnalysis.bigramLmTrain(v1docs).localCheckpoint(eager = true)
     val nb1 = Classifier.nbTrain(v1docs).localCheckpoint(eager = true)
-    val base = java.nio.file.Files
-      .createTempDirectory("graft_adm_swap_spec").toString
+    val base = tmpDir("graft_adm_swap_spec").toString
     val src = s"$base/src"
     (0 until 3).foreach { i =>
       docs.filter(col("doc_id") % 3 === i).coalesce(1)
@@ -406,8 +510,7 @@ class AdmissionSpec extends AnyFunSuite {
     val v1docs = docs.filter(col("doc_id") % 2 === 0)
     val lm1 = TextAnalysis.bigramLmTrain(v1docs).localCheckpoint(eager = true)
     val nb1 = Classifier.nbTrain(v1docs).localCheckpoint(eager = true)
-    val base = java.nio.file.Files
-      .createTempDirectory("graft_adm_swap_restart").toString
+    val base = tmpDir("graft_adm_swap_restart").toString
     val src = s"$base/src"
     def stage(i: Int): Unit = {
       docs.filter(col("doc_id") % 3 === i).coalesce(1)
@@ -467,8 +570,7 @@ class AdmissionSpec extends AnyFunSuite {
     val cohort = cohort0.unionByName(
       cohort0.filter(col("doc_id") % 3 === 0)
         .withColumn("doc_id", col("doc_id") + 10000000L))
-    val base = java.nio.file.Files
-      .createTempDirectory("graft-adm-compact-spec-").toString
+    val base = tmpDir("graft-adm-compact-spec-").toString
     val stateDir = s"$base/bands"
     Dedup.writeBandState(
       Dedup.bandTable(cohort, w = 5, numHashes = 8, bandWidth = 2),
@@ -683,8 +785,7 @@ class AdmissionSpec extends AnyFunSuite {
     val (gate, sem, lm, nb) = cfg(docs)
     val rep = Admission.report(docs, Seq("src0", "src1"), gate, 0.3, sem,
       lm, -3.40, nb, Seq("en"), nearDup = ndCfg(docs))
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-adm-scoreprof-").toString
+    val dir = tmpDir("graft-adm-scoreprof-").toString
     rep.write.parquet(s"$dir/report")
     val staged = spark.read.parquet(s"$dir/report")
     val qs = Seq(0.0, 0.5, 1.0)

@@ -137,8 +137,7 @@ class CorpusSpec extends AnyFunSuite {
     val mid = docs.agg(max(col("doc_id"))).head().getLong(0) / 2
     val t0 = docs.filter(col("doc_id") <= mid)
     val delta = docs.filter(col("doc_id") > mid)
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-stable-split-").toString + "/bands"
+    val dir = tmpDir("graft-stable-split-").toString + "/bands"
     def bands(df: org.apache.spark.sql.DataFrame) =
       Dedup.bandTable(df, w = 5, numHashes = 8, bandWidth = 2)
     Dedup.writeBandState(bands(t0), dir, mode = "errorifexists")
@@ -319,8 +318,7 @@ class CorpusSpec extends AnyFunSuite {
     val docs = Tables.documents(spark, sfDir)
     val emb = Tables.embeddings(spark, sfDir)
     val bench = Seq("src0", "src1")
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-benchsig-").toString + "/sig"
+    val dir = tmpDir("graft-benchsig-").toString + "/sig"
     Corpus.benchSignatureTable(docs, emb, bench).write.parquet(dir)
     val state = spark.read.parquet(dir)
     val train = docs.filter(!col("source").isin(bench: _*))
@@ -342,6 +340,53 @@ class CorpusSpec extends AnyFunSuite {
         bandWidth = 4)
     }
     assert(e.getMessage.contains("layout mismatch"))
+  }
+
+  test("semantic sweep: verify-then-dedup equals dedup-then-verify when a pair collides in several bands") {
+    // bench docs 0 and 1 share one embedding, so train doc 10 (the same
+    // vector) meets each of them in every band; 11 flips a few
+    // components, 12 is orthogonal, 13 opposite
+    val v = Array.tabulate(64)(i => if (i < 32) 1.0f else 0.0f)
+    val near = v.zipWithIndex.map { case (x, i) => if (i % 9 == 0) -x else x }
+    val docs = Seq(0L -> "src0", 1L -> "src1", 10L -> "src2", 11L -> "src2",
+        12L -> "src2", 13L -> "src2")
+      .map { case (id, src) => (id, "text", "en", src, 4) }
+      .toDF("doc_id", "text", "lang", "source", "n_chars")
+    val emb = Seq(0L -> v, 1L -> v, 10L -> v, 11L -> near,
+        12L -> Array.tabulate(64)(i => if (i >= 32) 1.0f else 0.0f),
+        13L -> v.map(-_))
+      .toDF("vec_id", "embedding")
+    def check(docs: DataFrame, emb: DataFrame): Unit = {
+      val bench = Seq("src0", "src1")
+      val state = Corpus.benchSignatureTable(docs, emb, bench).localCheckpoint(eager = true)
+      val train = docs.filter(!col("source").isin(bench: _*))
+      val cands = graft.ext.Similarity.withBandKeys(
+          train.join(emb, col("doc_id") === col("vec_id"))
+            .select(col("doc_id").as("vec_id"), col("embedding")),
+          "tid", 16, 4, 64)
+        .withColumnRenamed("embedding", "te")
+        .join(state.select(col("band"), col("bkey"), col("bid"), col("be")),
+          Seq("band", "bkey"))
+      for (t <- Seq(0.0, 0.42, 0.95)) {
+        val deduped = cands.dropDuplicates("tid", "bid")
+          .filter(graft.ext.Similarity.cosine(col("te"), col("be")) >= lit(t))
+          .select(col("tid")).distinct()
+          .collect().map(_.getLong(0)).sorted.toSeq
+        val swept = Corpus.embeddingContaminatedIds(train, emb, state, threshold = t)
+          .collect().map(_.getLong(0)).sorted.toSeq
+        assert(swept === deduped, s"threshold $t")
+      }
+    }
+    check(docs, emb)
+    // the fixture binds: one (tid, bid) pair collides in several bands
+    val state = Corpus.benchSignatureTable(docs, emb, Seq("src0", "src1"))
+    val perPair = graft.ext.Similarity.withBandKeys(
+        emb.filter(col("vec_id") === 10L), "tid", 16, 4, 64)
+      .join(state, Seq("band", "bkey")).groupBy("tid", "bid").count()
+      .collect().map(_.getLong(2))
+    assert(perPair.nonEmpty && perPair.forall(_ > 1), perPair.toSeq)
+    // and on the real corpus
+    check(Tables.documents(spark, sfDir), Tables.embeddings(spark, sfDir))
   }
 
   test("source mixing keeps only listed sources, at their rates") {

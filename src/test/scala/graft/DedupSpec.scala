@@ -588,8 +588,7 @@ class DedupSpec extends AnyFunSuite {
     def pairs(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
         .sortBy(p => (p._1, p._2)).toSeq
-    val tmp = java.nio.file.Files
-      .createTempDirectory("graft-sweep-staged-").toString
+    val tmp = tmpDir("graft-sweep-staged-").toString
     Dedup.shingles(docs, w = 3).write.parquet(s"$tmp/shingles")
     val tri = spark.read.parquet(s"$tmp/shingles")
     Dedup.signatureTableFromShingles(tri, w = 3, numHashes = 8)
@@ -690,7 +689,7 @@ class DedupSpec extends AnyFunSuite {
     val docs = Tables.documents(spark, sfDir)
     val seen = docs.filter(col("doc_id") % 4 =!= 0)
     val incoming = docs.filter(col("doc_id") % 4 === 0 && col("doc_id") < 20)
-    val dir = java.nio.file.Files.createTempDirectory("graft-band-state-").toString + "/bands"
+    val dir = tmpDir("graft-band-state-").toString + "/bands"
     Dedup.writeBandState(
       Dedup.bandTable(seen, w = 5, numHashes = 8, bandWidth = 2),
       dir, mode = "errorifexists")
@@ -731,7 +730,7 @@ class DedupSpec extends AnyFunSuite {
     val docs = Tables.documents(spark, sfDir)
     val seen = docs.filter(col("doc_id") % 4 =!= 0)
     val incoming = docs.filter(col("doc_id") % 4 === 0)
-    val dir = java.nio.file.Files.createTempDirectory("graft-band-flat-").toString + "/bands"
+    val dir = tmpDir("graft-band-flat-").toString + "/bands"
     Dedup.bandTable(seen, w = 5, numHashes = 8, bandWidth = 2).write.parquet(dir)
     val probe = Dedup.bandTable(incoming, w = 5, numHashes = 8, bandWidth = 2)
     assert(Dedup.readBandState(
@@ -747,7 +746,7 @@ class DedupSpec extends AnyFunSuite {
 
   test("global compaction: state shrinks to keepers, stays rejecting, migrates layout") {
     val docs = Tables.documents(spark, sfDir)
-    val dir = java.nio.file.Files.createTempDirectory("graft-compact-").toString + "/bands"
+    val dir = tmpDir("graft-compact-").toString + "/bands"
     // start from a LEGACY FLAT state: compaction must both compact and
     // migrate it to the partitioned layout.
     Dedup.bandTable(docs, w = 5, numHashes = 8, bandWidth = 2).write.parquet(dir)
@@ -795,8 +794,7 @@ class DedupSpec extends AnyFunSuite {
     val b0 = docs.filter(col("doc_id") % 3 === 0)  // admitted_ts=0, expires
     val b1 = docs.filter(col("doc_id") % 3 === 1)  // admitted_ts=1, survives
     val probeBatch = docs.filter(col("doc_id") % 3 === 2)
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-stamped-admit-").toString + "/bands"
+    val dir = tmpDir("graft-stamped-admit-").toString + "/bands"
     val adm0 = Dedup.admitAndMaintainState(spark, b0, dir,
       w = 5, numHashes = 8, bandWidth = 2, admittedTs = Some(0L))
     val adm1 = Dedup.admitAndMaintainState(spark, b1, dir,
@@ -835,10 +833,10 @@ class DedupSpec extends AnyFunSuite {
     def stamped(cohort: org.apache.spark.sql.DataFrame, ts: Long) =
       Dedup.bandTable(cohort, w = 5, numHashes = 8, bandWidth = 2)
         .withColumn("admitted_ts", lit(ts))
-    val aged = java.nio.file.Files.createTempDirectory("graft-age-a-").toString + "/bands"
+    val aged = tmpDir("graft-age-a-").toString + "/bands"
     Dedup.writeBandState(stamped(old, 0L), aged, mode = "errorifexists")
     Dedup.writeBandState(stamped(young, 1L), aged, mode = "append")
-    val fresh = java.nio.file.Files.createTempDirectory("graft-age-b-").toString + "/bands"
+    val fresh = tmpDir("graft-age-b-").toString + "/bands"
     Dedup.writeBandState(stamped(young, 1L), fresh, mode = "errorifexists")
     def keepers(dir: String, corpus: org.apache.spark.sql.DataFrame,
                 wm: Option[Long]) =
@@ -861,7 +859,7 @@ class DedupSpec extends AnyFunSuite {
     assert(spark.read.parquet(aged).columns.contains("admitted_ts"),
       "compaction dropped the admitted_ts stamp")
     // unstamped state refuses the watermark leg loudly
-    val bare = java.nio.file.Files.createTempDirectory("graft-age-c-").toString + "/bands"
+    val bare = tmpDir("graft-age-c-").toString + "/bands"
     Dedup.writeBandState(
       Dedup.bandTable(young, w = 5, numHashes = 8, bandWidth = 2),
       bare, mode = "errorifexists")

@@ -68,7 +68,7 @@ class IncrementalUpsertSpec extends AnyFunSuite {
   }
 
   test("append sink accumulates batches with an ingest audit column") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_sink").toString + "/bronze"
+    val dir = tmpDir("graft_sink").toString + "/bronze"
     val batch = events.limit(100)
     Bronze.appendSink(batch, dir)
     Bronze.appendSink(batch, dir)
@@ -78,7 +78,7 @@ class IncrementalUpsertSpec extends AnyFunSuite {
   }
 
   test("partitioned sink enables partition pruning on read") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_part").toString + "/bronze"
+    val dir = tmpDir("graft_part").toString + "/bronze"
     Bronze.appendSink(events.select("event_id", "event_type", "value"), dir,
       partitionCols = Seq("event_type"))
     val pruned = spark.read.parquet(dir).filter(col("event_type") === "purchase")
@@ -94,7 +94,7 @@ class IncrementalUpsertSpec extends AnyFunSuite {
   }
 
   test("csv scan derives the period column from the file name") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_csv").toFile
+    val dir = tmpDir("graft_csv").toFile
     val f = new java.io.File(dir, "201801-trips.csv")
     val pw = new java.io.PrintWriter(f)
     pw.println("id,name"); pw.println("1,a"); pw.println("2,b"); pw.close()

@@ -7,7 +7,7 @@ class PipelineSpec extends AnyFunSuite {
   import SparkTestBase._
 
   test("full ETL stages then promotes all silver+gold tables atomically") {
-    val wh = java.nio.file.Files.createTempDirectory("graft_wh").toString
+    val wh = tmpDir("graft_wh").toString
     val written = Pipeline.runFullEtl(spark, sfDir, wh)
     assert(written.size === 8)
     written.foreach { t =>
@@ -25,7 +25,7 @@ class PipelineSpec extends AnyFunSuite {
 
   test("corpus ETL: every stage binds, release is self-consistent, re-release replaces atomically") {
     import org.apache.spark.sql.functions._
-    val wh = java.nio.file.Files.createTempDirectory("graft_corpus_wh").toString
+    val wh = tmpDir("graft_corpus_wh").toString
     val written = Pipeline.runCorpusEtl(spark, sfDir, wh)
     assert(written === Seq("corpus_release", "corpus_flags"))
     val docs = Tables.documents(spark, sfDir)
@@ -54,7 +54,7 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   test("a failed table write surfaces ITS error, leaves the live warehouse intact") {
-    val wh = java.nio.file.Files.createTempDirectory("graft_wh_fail").toString
+    val wh = tmpDir("graft_wh_fail").toString
     Pipeline.runFullEtl(spark, sfDir, wh)
     val before = spark.read.parquet(s"$wh/dm_daily_trip_summary").count()
     val boom = new RuntimeException("injected: dim_user write failed")
@@ -73,7 +73,7 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   test("single-mart refresh matches the pipeline's version") {
-    val wh = java.nio.file.Files.createTempDirectory("graft_wh2").toString
+    val wh = tmpDir("graft_wh2").toString
     Pipeline.refreshMart(spark, sfDir, wh, "dm_station_popularity")
     val refreshed = spark.read.parquet(s"$wh/dm_station_popularity")
     val direct = graft.gold.Gold.stationPopularity(
@@ -88,7 +88,7 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   test("fact-grain refresh reads the warehouse star and reproduces the ETL mart") {
-    val wh = java.nio.file.Files.createTempDirectory("graft_wh3").toString
+    val wh = tmpDir("graft_wh3").toString
     Pipeline.runFullEtl(spark, sfDir, wh)
     Seq("dm_daily_trip_summary", "dm_popular_routes").foreach { m =>
       val etl = spark.read.parquet(s"$wh/$m").collect().toSet

@@ -213,7 +213,7 @@ class ScaleOpsSpec extends AnyFunSuite {
   }
 
   test("z-ordered write shrinks the per-file key-space rectangles vs a plain write") {
-    val base = java.nio.file.Files.createTempDirectory("graft_zorder").toString
+    val base = tmpDir("graft_zorder").toString
     // low vs mid bits of a dense id: both dims span the full 0..63 range
     // and are decorrelated — the shape a single-column sort cannot serve.
     val ev = Tables.events(spark, sfDir)
@@ -246,7 +246,7 @@ class ScaleOpsSpec extends AnyFunSuite {
   }
 
   test("compaction rewrites many small files into few without changing content") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_compact").toString + "/t"
+    val dir = tmpDir("graft_compact").toString + "/t"
     val df = Tables.orders(spark, sfDir).repartition(20)
     df.write.parquet(dir)
     def parquetFiles = new java.io.File(dir).listFiles()
@@ -262,7 +262,7 @@ class ScaleOpsSpec extends AnyFunSuite {
   }
 
   test("pointer promotion: compact migrates a plain dir, resolves through `current`, prunes old versions") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_compact_ptr").toString + "/t"
+    val dir = tmpDir("graft_compact_ptr").toString + "/t"
     val df = Tables.orders(spark, sfDir).repartition(12)
     df.write.parquet(dir)
     val rows = spark.read.parquet(dir).count()
@@ -298,7 +298,7 @@ class ScaleOpsSpec extends AnyFunSuite {
 
   test("pointer promotion: a crashed pointerless first promotion recovers, never nests versions") {
     import org.apache.hadoop.fs.Path
-    val dir = java.nio.file.Files.createTempDirectory("graft_ptr_crash").toString + "/t"
+    val dir = tmpDir("graft_ptr_crash").toString + "/t"
     val root = new Path(dir)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     // simulate a FIRST promotion that crashed after landing its version
@@ -328,7 +328,7 @@ class ScaleOpsSpec extends AnyFunSuite {
 
   test("pointer promotion: recovery spares the TRUE predecessor, not the orphan; partial migration refuses") {
     import org.apache.hadoop.fs.Path
-    val dir = java.nio.file.Files.createTempDirectory("graft_ptr_orphan").toString + "/t"
+    val dir = tmpDir("graft_ptr_orphan").toString + "/t"
     val root = new Path(dir)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val df = Tables.region(spark, sfDir)
@@ -351,7 +351,7 @@ class ScaleOpsSpec extends AnyFunSuite {
     // a crashed MID-MIGRATION root (plain data AND a partial v-0, no
     // pointer) must refuse to serve the partial version — and a promote
     // RESUMES the migration instead of nesting versions
-    val dir2 = java.nio.file.Files.createTempDirectory("graft_ptr_mixed").toString + "/t"
+    val dir2 = tmpDir("graft_ptr_mixed").toString + "/t"
     val root2 = new Path(dir2)
     df.write.parquet(dir2) // plain layout
     df.limit(1).write.parquet(s"$dir2/v-0") // partial migration residue
@@ -372,7 +372,7 @@ class ScaleOpsSpec extends AnyFunSuite {
   }
 
   test("maintenance passes chain through the pointer: retention reads/writes the live version") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_compact_ptr_q").toString + "/t"
+    val dir = tmpDir("graft_compact_ptr_q").toString + "/t"
     Tables.orders(spark, sfDir).repartition(4).write.parquet(dir)
     ScaleOps.compact(spark, dir, promotion = ScaleOps.PointerSwap)
     assert(new java.io.File(dir, "v-1").isDirectory)
@@ -414,7 +414,7 @@ class ScaleOpsSpec extends AnyFunSuite {
   }
 
   test("retainRows deletes state rows for removed keys and compacts the files") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_retain").toString + "/t"
+    val dir = tmpDir("graft_retain").toString + "/t"
     val docs = Tables.documents(spark, sfDir)
     graft.ext.Dedup.bandTable(docs, w = 5, numHashes = 8, bandWidth = 2)
       .repartition(8).write.parquet(dir)
@@ -435,7 +435,7 @@ class ScaleOpsSpec extends AnyFunSuite {
   }
 
   test("compaction preserves hive partition layout and its pruning") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_compact_p").toString + "/t"
+    val dir = tmpDir("graft_compact_p").toString + "/t"
     val ev = Tables.events(spark, sfDir).select("event_id", "event_type", "value")
     // many small files per partition, as an incremental sink produces
     (1 to 3).foreach(_ => graft.bronze.Bronze.appendSink(ev, dir, Seq("event_type")))
@@ -646,7 +646,7 @@ class ScaleOpsSpec extends AnyFunSuite {
   }
 
   test("batch retention keeps the newest batches and deletes the rest") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_expire").toString + "/data"
+    val dir = tmpDir("graft_expire").toString + "/data"
     val ev = Tables.events(spark, sfDir).select("event_id", "value").limit(10)
     (0L to 4L).foreach(b => ev.write.parquet(s"$dir/batch_id=$b"))
     val expired = ScaleOps.expireBatches(spark, dir, keepLast = 2)
@@ -709,7 +709,7 @@ class ScaleOpsSpec extends AnyFunSuite {
 
   test("incremental refresh recomputes only touched partitions, late rows fold in exactly") {
     import spark.implicits._
-    val base = java.nio.file.Files.createTempDirectory("graft_incref").toString
+    val base = tmpDir("graft_incref").toString
     val fact = s"$base/fact"; val mart = s"$base/mart"
     def agg(df: org.apache.spark.sql.DataFrame) =
       df.groupBy(col("day")).agg(
@@ -785,7 +785,7 @@ class ScaleOpsSpec extends AnyFunSuite {
 
   test("mergeSchema read unions evolved batch schemas by name with null-fill") {
     import org.apache.spark.sql.functions._
-    val dir = java.nio.file.Files.createTempDirectory("scaleops-evo-").toString
+    val dir = tmpDir("scaleops-evo-").toString
     try {
       // v1 era: two columns; v2 era: adds a third. The merged scan must
       // resolve BY NAME (v1 rows null in the new column) — positional

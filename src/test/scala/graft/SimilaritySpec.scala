@@ -15,6 +15,16 @@ class SimilaritySpec extends AnyFunSuite {
   private def embDf(rows: Seq[(Long, Seq[Float])]): DataFrame =
     rows.toDF("vec_id", "embedding")
 
+  test("planeMatrix: +1 exactly where the last hex digit of md5(\"p_d\") is even") {
+    // the definition the DuckDB oracle embeds, spelled out on hex strings
+    val md = java.security.MessageDigest.getInstance("MD5")
+    val byHex = Array.tabulate(16, 64) { (p, d) =>
+      val hex = md.digest(s"${p}_$d".getBytes("UTF-8")).map("%02x".format(_)).mkString
+      if ("02468ace".contains(hex.last)) 1.0 else -1.0
+    }
+    assert(Similarity.planeMatrix(16, 64).map(_.toSeq).toSeq === byHex.map(_.toSeq).toSeq)
+  }
+
   test("IVF assignment is a pure projection at small K: no window, no join, no K-expansion") {
     val emb = Tables.embeddings(spark, sfDir)
     val refined = Similarity.ivfRefineStep(emb, numCells = 16)
@@ -55,7 +65,7 @@ class SimilaritySpec extends AnyFunSuite {
     try {
       val emb = Tables.embeddings(spark, sfDir)
       val q = emb.filter(col("vec_id") < 5)
-      val dir = java.nio.file.Files.createTempDirectory("graft-hint-probe-")
+      val dir = tmpDir("graft-hint-probe-")
       try {
         graft.ext.VectorIndex.build(emb, dir.resolve("index").toString)
         graft.ext.VectorIndex.searchFlat(spark, dir.resolve("index").toString,

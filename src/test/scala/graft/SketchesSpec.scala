@@ -207,7 +207,7 @@ class SketchesSpec extends AnyFunSuite {
       explode(split(col("text"), " ")).as("token"))
     val day1 = tokens.filter(col("doc_id") % 2 === 0).select(col("token"))
     val day2 = tokens.filter(col("doc_id") % 2 =!= 0).select(col("token"))
-    val tmp = java.nio.file.Files.createTempDirectory("graft_sketch_state").toString
+    val tmp = tmpDir("graft_sketch_state").toString
 
     // CMS: persist day-1, merge loaded state with day-2, compare with
     // the single-pass sketch — persistence must be invisible
@@ -301,7 +301,7 @@ class SketchesSpec extends AnyFunSuite {
     assert(whole.count() === 128)
     // under-full sample IS the data: every quantile read turns exact
     val tiny = ev.limit(40)
-    val tmp = java.nio.file.Files.createTempDirectory("graft_qsample").toString
+    val tmp = tmpDir("graft_qsample").toString
     Sketches.quantileSampleWrite(
       Sketches.quantileSampleBuild(tiny, "event_id", "value", k = 512),
       s"$tmp/tiny", k = 512)
@@ -357,7 +357,7 @@ class SketchesSpec extends AnyFunSuite {
     val ev = Tables.events(spark, sfDir).filter(col("value").isNotNull)
     val forgotten = ev.filter(col("event_id") % 5 === 0)
     val retained = ev.filter(col("event_id") % 5 =!= 0)
-    val tmp = java.nio.file.Files.createTempDirectory("graft_hist_forget").toString
+    val tmp = tmpDir("graft_hist_forget").toString
     Q.histWrite(Q.histBuild(ev, "value", 25.0), s"$tmp/full", binWidth = 25.0)
     // subtract == fresh rebuild over retained rows, bin for bin —
     // including bins that reach zero being DROPPED, not kept at 0
@@ -393,7 +393,7 @@ class SketchesSpec extends AnyFunSuite {
     val ev = Tables.events(spark, sfDir).filter(col("value").isNotNull)
     val day1 = ev.filter(col("event_id") % 2 === 0)
     val day2 = ev.filter(col("event_id") % 2 =!= 0)
-    val tmp = java.nio.file.Files.createTempDirectory("graft_hist_state").toString
+    val tmp = tmpDir("graft_hist_state").toString
     // persist day-1, merge loaded state with day-2 — additivity makes
     // the persisted lifecycle invisible vs the one-pass histogram
     Q.histWrite(Q.histBuild(day1, "value", 25.0), s"$tmp/base", binWidth = 25.0)
@@ -430,7 +430,7 @@ class SketchesSpec extends AnyFunSuite {
   test("windowed sketch state: partition-dir expiry == fresh build over surviving windows") {
     import graft.ext.{Dedup, Sketches}
     val docs = Tables.documents(spark, sfDir)
-    val tmp = java.nio.file.Files.createTempDirectory("graft-windowed-").toString
+    val tmp = tmpDir("graft-windowed-").toString
     val dir = s"$tmp/kmv"
     def cohortSh(wts: Int) =
       Dedup.shingles(docs.filter(col("doc_id") % 3 === wts), w = 3)

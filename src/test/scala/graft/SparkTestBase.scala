@@ -9,6 +9,12 @@ object SparkTestBase {
     Session("4", confs = Seq("spark.app.name" -> "graft-tests"))
   val sfDir = "/root/testdata/sf0.001"
 
+  /** A fixture directory under java.io.tmpdir named `prefix…`, deleted
+    * when the test JVM exits ([[graft.TempDirs.create]]); a test that
+    * deletes it earlier keeps its own `finally`.
+    */
+  def tmpDir(prefix: String): java.nio.file.Path = TempDirs.create(prefix)
+
   def cacheIsEmpty: Boolean =
     org.apache.spark.sql.graftbridge.Bridge.cacheIsEmpty(spark)
 

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -30,7 +29,7 @@ class StagedReleaseSpec extends AnyFunSuite {
 
   private def docs = Tables.documents(spark, sfDir)
   private def failing(df: DataFrame) = df.withColumn("text", boomText(col("text")))
-  private def tmp(prefix: String) = Files.createTempDirectory(prefix).toString
+  private def tmp(prefix: String) = tmpDir(prefix).toString
 
   /** A copy of the sf0.001 corpus whose every fifth document has a NULL
     * text: any shingle pass over it throws.

@@ -9,7 +9,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * `cache`, `unpersist` or `TempDirs.create` itself. `Session` keeps its
   * between-query `release`, which drops every cached RDD; the three
   * per-JVM memoized layouts keep their own `TempDirs` directory, named
-  * here by its prefix literal.
+  * here by its prefix literal. Test fixtures open their directories
+  * through `SparkTestBase.tmpDir`, which deletes them at JVM exit.
   */
 class StagingLintSpec extends AnyFunSuite {
 
@@ -48,5 +49,13 @@ class StagingLintSpec extends AnyFunSuite {
     val handDetach = hits("src", Set("StagingLintSpec.scala"), "detachAndClean".r)
     assert(handDetach.isEmpty,
       s"the hand-paired detach helper is gone:\n${handDetach.mkString("\n")}")
+  }
+
+  test("no test source outside SparkTestBase opens a raw temp dir") {
+    val found = hits("src/test", Set("SparkTestBase.scala", "StagingLintSpec.scala"),
+      "createTempDirectory".r)
+    assert(found.isEmpty,
+      "open a test fixture directory with SparkTestBase.tmpDir, which " +
+        s"deletes it at JVM exit:\n${found.mkString("\n")}")
   }
 }

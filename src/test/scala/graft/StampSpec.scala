@@ -107,7 +107,7 @@ class StampSpec extends AnyFunSuite {
   }
 
   test("quantileSampleMerge over N stamped parts runs N stamp probes") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_stamp_q").toString
+    val tmp = tmpDir("graft_stamp_q").toString
     try {
       val parts = (0 until 3).map { i =>
         Sketches.quantileSampleWrite(Sketches.quantileSampleBuild(
@@ -125,7 +125,7 @@ class StampSpec extends AnyFunSuite {
     val docs = Seq((1L, "the quick brown fox jumps over the lazy dog"),
       (2L, "a stitch in time saves nine said the old tailor"))
       .toDF("doc_id", "text")
-    val dir = java.nio.file.Files.createTempDirectory("graft_stamp_append")
+    val dir = tmpDir("graft_stamp_append")
       .toString + "/bands"
     try {
       Dedup.writeBandState(Dedup.bandTable(docs.filter(col("doc_id") === 1L)),

@@ -10,7 +10,7 @@ class StreamingSpec extends AnyFunSuite {
   import spark.implicits._
 
   test("AvailableNow incremental pipeline processes only new files across runs") {
-    val base = java.nio.file.Files.createTempDirectory("graft_stream").toString
+    val base = tmpDir("graft_stream").toString
     val src = s"$base/src"; val out = s"$base/out"; val ckpt = s"$base/ckpt"
     val ev = Tables.events(spark, sfDir)
       .select("ts", "event_type", "value").cache()
@@ -134,7 +134,7 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("dedup state survives a restart: replays across checkpoints still drop") {
-    val base = java.nio.file.Files.createTempDirectory("graft_restart").toString
+    val base = tmpDir("graft_restart").toString
     val src = s"$base/src"; val out = s"$base/out"; val ckpt = s"$base/ckpt"
     val t0 = java.sql.Timestamp.valueOf("2024-01-01 12:00:00")
     def ts(minOff: Int) = new java.sql.Timestamp(t0.getTime + minOff * 60000L)
@@ -159,7 +159,7 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("streaming corpus admission: quality gate, bloom decontamination, replay dedup") {
-    val base = java.nio.file.Files.createTempDirectory("graft_scc").toString
+    val base = tmpDir("graft_scc").toString
     val src = s"$base/src"; val out = s"$base/out"; val ckpt = s"$base/ckpt"
     def doc(id: Long, srcName: String, text: String) =
       (id, text, "en", srcName, text.length)
@@ -194,7 +194,7 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("hist-maintain: additive state survives restart; replayed folds are batch-id no-ops") {
-    val base = java.nio.file.Files.createTempDirectory("graft_hm").toString
+    val base = tmpDir("graft_hm").toString
     val src = s"$base/src"; val state = s"$base/state"; val ckpt = s"$base/ckpt"
     def write(vals: Double*) =
       vals.toDF("v").coalesce(1).write.mode("append").parquet(src)
@@ -239,7 +239,7 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("lm-maintain: delta-log folds reconstruct the batch model; compaction preserves counts; foreign lineage refuses") {
-    val base = java.nio.file.Files.createTempDirectory("graft_lm").toString
+    val base = tmpDir("graft_lm").toString
     val src = s"$base/src"; val state = s"$base/state"; val ckpt = s"$base/ckpt"
     def write(rows: (Long, String)*) =
       rows.toDF("doc_id", "text").coalesce(1).write.mode("append").parquet(src)
@@ -294,7 +294,7 @@ class StreamingSpec extends AnyFunSuite {
 
   test("lm-gate: frozen-model admission — scorer-equivalent threshold cut; unscorable docs always reject") {
     import graft.ext.TextAnalysis
-    val base = java.nio.file.Files.createTempDirectory("graft_lmg").toString
+    val base = tmpDir("graft_lmg").toString
     // reference state: a delta-log trained on an a/b vocabulary
     TextAnalysis.lmCountsBuild(
         Seq((1L, "a b a b a"), (2L, "b a b")).toDF("doc_id", "text"))
@@ -334,7 +334,7 @@ class StreamingSpec extends AnyFunSuite {
     // max id), and (b) NOT delete batch 2 (its counts are in no
     // aggregate and the checkpoint will never redeliver them).
     import graft.ext.TextAnalysis
-    val base = java.nio.file.Files.createTempDirectory("graft_lmc").toString
+    val base = tmpDir("graft_lmc").toString
     val state = s"$base/state"
     def counts(rows: (Long, String)*) =
       TextAnalysis.lmCountsBuild(rows.toDF("doc_id", "text"))
@@ -364,7 +364,7 @@ class StreamingSpec extends AnyFunSuite {
   test("dsir-maintain: streamed bucket counts equal the batch build; ratio table tracks a grown source") {
     // refusal legs covered by the hist-maintain suite (shared
     // additiveFold harness); this pins the DSIR-specific additivity.
-    val base = java.nio.file.Files.createTempDirectory("graft_dm").toString
+    val base = tmpDir("graft_dm").toString
     val src = s"$base/src"; val state = s"$base/state"; val ckpt = s"$base/ckpt"
     def write(rows: (Long, String, String)*) =
       rows.toDF("doc_id", "lang", "text").coalesce(1)
@@ -406,7 +406,7 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("hist-maintain: a batch-written baseline attaches and the stream folds onto it") {
-    val base = java.nio.file.Files.createTempDirectory("graft_hmb").toString
+    val base = tmpDir("graft_hmb").toString
     val src = s"$base/src"; val state = s"$base/state"; val ckpt = s"$base/ckpt"
     // day-0 handoff: the baseline persisted by the BATCH drift API
     // (bin/n/bin_width only — no stamp, no lineage)
@@ -427,7 +427,7 @@ class StreamingSpec extends AnyFunSuite {
 
   test("lm-maintain day-0 bootstrap: a flat batch-written counts table adopts as the baseline partition") {
     import graft.ext.TextAnalysis
-    val base = java.nio.file.Files.createTempDirectory("graft_lmb").toString
+    val base = tmpDir("graft_lmb").toString
     val src = s"$base/src"; val state = s"$base/state"; val ckpt = s"$base/ckpt"
     // day-0 handoff: the baseline persisted by the BATCH API — a flat
     // counts table, no lineage marker, no batch_id partitions
@@ -474,7 +474,7 @@ class StreamingSpec extends AnyFunSuite {
 
   test("nb/dsir-maintain day-0 bootstrap: batch-built count states adopt and the stream folds onto them") {
     import graft.ext.{Classifier, Corpus}
-    val base = java.nio.file.Files.createTempDirectory("graft_nbb").toString
+    val base = tmpDir("graft_nbb").toString
     // NB: baseline = batch nbCountsBuild persisted plain (stamped with
     // buckets, but no last_batch_id/lineage)
     val nbState = s"$base/nbstate"; val nbSrc = s"$base/nbsrc"
@@ -511,7 +511,7 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("sketch-maintain: state survives restart and batch replay is a merge no-op") {
-    val base = java.nio.file.Files.createTempDirectory("graft_skm").toString
+    val base = tmpDir("graft_skm").toString
     val src = s"$base/src"; val state = s"$base/state"; val ckpt = s"$base/ckpt"
     def write(items: String*) =
       items.toDF("item").coalesce(1).write.mode("append").parquet(src)
@@ -569,7 +569,7 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("index-maintain: streamed build+appends reproduce brute-force search, restart folds only new files") {
-    val base = java.nio.file.Files.createTempDirectory("graft_idxm").toString
+    val base = tmpDir("graft_idxm").toString
     val src = s"$base/src"; val idx = s"$base/index"; val ckpt = s"$base/ckpt"
     // deterministic tiny corpus: 30 vectors, dim 4
     def vec(i: Int) = Array.tabulate(4)(j => ((i * 7 + j * 3) % 11 - 5).toFloat)
@@ -612,7 +612,7 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("interval-join buffers survive a restart: cross-pass pairs still match") {
-    val base = java.nio.file.Files.createTempDirectory("graft_jrestart").toString
+    val base = tmpDir("graft_jrestart").toString
     val src = s"$base/src"; val out = s"$base/out"; val ckpt = s"$base/ckpt"
     val t0 = java.sql.Timestamp.valueOf("2024-01-01 12:00:00")
     def ts(minOff: Int) = new java.sql.Timestamp(t0.getTime + minOff * 60000L)
@@ -643,7 +643,7 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("session-window state survives a restart: the split session merges into one") {
-    val base = java.nio.file.Files.createTempDirectory("graft_srestart").toString
+    val base = tmpDir("graft_srestart").toString
     val src = s"$base/src"; val out = s"$base/out"; val ckpt = s"$base/ckpt"
     val t0 = java.sql.Timestamp.valueOf("2024-01-01 10:00:00")
     def ts(minOff: Int) = new java.sql.Timestamp(t0.getTime + minOff * 60000L)
@@ -672,7 +672,7 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("exactly-once sink: a replayed micro-batch idempotently overwrites its own batch directory") {
-    val base = java.nio.file.Files.createTempDirectory("graft_eos").toString
+    val base = tmpDir("graft_eos").toString
     val src = s"$base/src"; val out = s"$base/out"; val ckpt = s"$base/ckpt"
     val ev = Tables.events(spark, sfDir).select("event_id", "ts", "value")
     ev.limit(100).write.parquet(src)
@@ -754,7 +754,7 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("near-dedup stream: admission matches the sequential batch simulation; replay legs are no-ops") {
-    val base = java.nio.file.Files.createTempDirectory("graft_neardedup").toString
+    val base = tmpDir("graft_neardedup").toString
     val src = s"$base/src"; val state = s"$base/state"
     val out = s"$base/out"; val ckpt = s"$base/ckpt"
     val docs = Tables.documents(spark, sfDir)
@@ -843,7 +843,7 @@ class StreamingSpec extends AnyFunSuite {
 
   test("nb-forget from maintained state: stamps ride through and the stream keeps folding") {
     import graft.ext.Classifier
-    val base = java.nio.file.Files.createTempDirectory("graft_nbf").toString
+    val base = tmpDir("graft_nbf").toString
     val src = s"$base/src"; val state = s"$base/state"; val ckpt = s"$base/ckpt"
     def write(rows: (Long, String, String)*) =
       rows.toDF("doc_id", "text", "lang").coalesce(1)
@@ -890,7 +890,7 @@ class StreamingSpec extends AnyFunSuite {
 
   test("lm-expire: dropping the oldest delta-log batch == training on the retained batches; idempotent; refuses emptying") {
     import graft.ext.TextAnalysis
-    val base = java.nio.file.Files.createTempDirectory("graft_lmx").toString
+    val base = tmpDir("graft_lmx").toString
     val state = s"$base/state"
     def logWrite(id: Long, rows: (Long, String)*) =
       TextAnalysis.lmCountsBuild(rows.toDF("doc_id", "text"))
@@ -930,7 +930,7 @@ class StreamingSpec extends AnyFunSuite {
 
   test("lm-expire after lm-compact: boundary inside the folded range refuses; at or past its edges stays exact") {
     import graft.ext.TextAnalysis
-    val base = java.nio.file.Files.createTempDirectory("graft_lmxc").toString
+    val base = tmpDir("graft_lmxc").toString
     val state = s"$base/state"
     def logWrite(id: Long, rows: (Long, String)*) =
       TextAnalysis.lmCountsBuild(rows.toDF("doc_id", "text"))

@@ -13,7 +13,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * downstream.
   */
 class TablesSpec extends AnyFunSuite {
-  import SparkTestBase.{sfDir, spark}
+  import SparkTestBase.{sfDir, spark, tmpDir}
 
   /** What the query surface actually RELIES on, not exact widths: join
     * keys must stay integral (int vs bigint both join/arithmetic fine),
@@ -130,7 +130,7 @@ class TablesSpec extends AnyFunSuite {
 
   private def reencode(table: String)(recast: org.apache.spark.sql.DataFrame
       => org.apache.spark.sql.DataFrame): String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft-drift-").toString
+    val dir = tmpDir("graft-drift-").toString
     recast(spark.read.parquet(s"$sfDir/$table.parquet"))
       .coalesce(1).write.parquet(s"$dir/$table.parquet")
     dir

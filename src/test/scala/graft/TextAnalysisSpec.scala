@@ -94,7 +94,7 @@ class TextAnalysisSpec extends AnyFunSuite {
     val vs = vocab.orderBy("id").collect().map(r => (r.getString(0), r.getInt(1)))
     assert(vs.map(_._2).toSeq === vs.indices.toSeq)
     assert(vs.map(_._1).toSeq === vs.map(_._1).sorted.toSeq)
-    val tmp = java.nio.file.Files.createTempDirectory("graft_bpe_vocab").toString
+    val tmp = tmpDir("graft_bpe_vocab").toString
     TextAnalysis.bpeVocabWrite(vocab, s"$tmp/vocab", merges.length)
     val loaded = spark.read.parquet(s"$tmp/vocab")
     // per-doc sequence length == bpeEncode's per-doc token count (two

@@ -8,7 +8,7 @@ class VectorIndexSpec extends AnyFunSuite {
   import SparkTestBase._
 
   private def freshDir(): String =
-    java.nio.file.Files.createTempDirectory("graft_vidx").toString + "/index"
+    tmpDir("graft_vidx").toString + "/index"
 
   private def rows(df: org.apache.spark.sql.DataFrame): Seq[(Long, Int, Long)] =
     df.collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2)))

@@ -11,7 +11,7 @@ class WarehouseSpec extends AnyFunSuite {
     * mutate (the shared testdata is read-only by contract).
     */
   private def stageSources(): String = {
-    val dst = java.nio.file.Files.createTempDirectory("graft_wh_src").toString
+    val dst = tmpDir("graft_wh_src").toString
     Seq("lineitem", "orders", "customer", "supplier", "nation", "region")
       .foreach { t =>
         spark.read.parquet(s"$sfDir/$t.parquet")

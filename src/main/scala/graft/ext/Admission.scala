@@ -309,21 +309,6 @@ object Admission {
         col("r.pass").as("pass"), col("r.score").as("score"))
   }
 
-  /** CALIBRATION rollup of a [[report]] decision table: per gate, how
-    * many documents it fails (`n_fail`) and how many it ALONE keeps
-    * out (`n_fail_alone` — the doc passes every other gate). The
-    * numbers that say which gate is load-bearing and which is
-    * redundant overlap — tuning one threshold without this table is
-    * guessing at the ensemble's joint behavior. Works on any report
-    * output (batch, or the union of a streamed run's per-batch
-    * tables). Six bounded rows; one pivot + ONE aggregate: all twelve
-    * counts come out of a single pass over the pivoted table (one
-    * `agg` emitting `n_fail`/`n_fail_alone` per gate, unpivoted by an
-    * explode to the 6-row shape) — the round-13 form built six
-    * per-gate aggregate branches and unioned them, relying on
-    * exchange reuse to avoid six scans; single-pass by construction
-    * is the plan that survives 100×.
-    */
   /** Refuse-loudly coverage guard shared by the rollups: a report row
     * missing for any (doc, gate) pivots to NULL, which would
     * null-poison the pass conjunctions and silently zero every count
@@ -331,14 +316,13 @@ object Admission {
     * before the 7_neardup gate produces). The per-gate null counts
     * ride in the SAME single aggregate as the overlap counts — no
     * second scan of the report — and an `assert_true` filter over the
-    * one aggregated row turns any gap into a loud execution-time
+    * aggregated rows turns any gap into a loud execution-time
     * error, the [[Stamp]] discipline applied to decision
     * tables. Catches both a wholly-missing gate and a single doc's
     * dropped row.
     */
-  private def withCoverageGuard(agg: DataFrame, gates: Seq[String],
-                                what: String): DataFrame =
-    agg.filter(gates.map { g =>
+  private def withCoverageGuard(agg: DataFrame, what: String): DataFrame =
+    agg.filter(RollupGates.map { g =>
       assert_true(col(s"${g}__n_null") === 0,
         concat(col(s"${g}__n_null").cast("string"),
           lit(s" documents lack a '$g' row in the decision table fed to " +
@@ -347,29 +331,59 @@ object Admission {
             "Admission.report"))).isNull
     }.reduce(_ && _))
 
-  private def nullCounts(gates: Seq[String],
-                         passCol: String => Column = col(_)): Seq[Column] =
-    gates.map(g => count(when(passCol(g).isNull, lit(1))).as(s"${g}__n_null"))
+  /** The seven gates the calibration rollups pivot (the decision row is
+    * their conjunction, so no rollup reads it).
+    */
+  private val RollupGates: Seq[String] = GateOrder.filterNot(_ == DecisionGate)
 
-  def gateOverlap(report: DataFrame): DataFrame = {
-    val gates = GateOrder.filterNot(_ == DecisionGate)
+  /** The ONE calibration-rollup skeleton every rollup below runs: pivot
+    * the seven gates into one row per (keys, doc) with `pivotAggs`
+    * (`passCol` names a gate's pass column in that row: the gate itself
+    * under one pivot aggregation, `<gate>_pass` under several), run ONE
+    * aggregate per key emitting `counts` plus the coverage guard's
+    * per-gate null counts, and explode the `rows` structs (fields named
+    * as the output columns) to the bounded row shape, keys first. With
+    * no keys both groupings are global aggregates — one row, no key
+    * column. Single pass by construction — one aggregate, never a
+    * per-gate branch and a union — the plan that survives 100×.
+    */
+  private def rollup(report: DataFrame, keys: Seq[String], what: String,
+                     pivotAggs: Seq[Column], passCol: String => Column,
+                     counts: Seq[Column], rows: Seq[Column]): DataFrame = {
+    val keyCols = keys.map(col)
     val wide = report.filter(col("gate") =!= DecisionGate)
-      .groupBy(col("doc_id"))
-      .pivot("gate", gates)
-      .agg(first(col("pass")))
+      .groupBy(keyCols :+ col("doc_id"): _*)
+      .pivot("gate", RollupGates)
+      .agg(pivotAggs.head, pivotAggs.tail: _*)
+    val all = counts ++ RollupGates.map(g =>
+      count(when(passCol(g).isNull, lit(1))).as(s"${g}__n_null"))
+    withCoverageGuard(wide.groupBy(keyCols: _*).agg(all.head, all.tail: _*),
+        what)
+      .select(keyCols :+ explode(array(rows: _*)).as("r"): _*)
+      .select(keyCols :+ col("r.*"): _*)
+  }
+
+  /** CALIBRATION rollup of a [[report]] decision table: per gate, how
+    * many documents it fails (`n_fail`) and how many it ALONE keeps
+    * out (`n_fail_alone` — the doc passes every other gate). The
+    * numbers that say which gate is load-bearing and which is
+    * redundant overlap — tuning one threshold without this table is
+    * guessing at the ensemble's joint behavior. Works on any report
+    * output (batch, or the union of a streamed run's per-batch
+    * tables). Six bounded rows from one pivot + ONE aggregate
+    * ([[rollup]]).
+    */
+  def gateOverlap(report: DataFrame): DataFrame = {
+    val gates = RollupGates
     val counts = gates.flatMap { g =>
       val others = gates.filterNot(_ == g).map(col).reduce[Column](_ && _)
       Seq(count(when(!col(g), lit(1))).as(s"${g}__n_fail"),
         count(when(!col(g) && others, lit(1))).as(s"${g}__n_fail_alone"))
-    } ++ nullCounts(gates)
-    withCoverageGuard(wide.agg(counts.head, counts.tail: _*), gates,
-        "gateOverlap")
-      .select(explode(array(gates.map(g =>
-        struct(lit(g).as("gate"),
-          col(s"${g}__n_fail").as("n_fail"),
-          col(s"${g}__n_fail_alone").as("n_fail_alone"))): _*)).as("r"))
-      .select(col("r.gate").as("gate"), col("r.n_fail").as("n_fail"),
-        col("r.n_fail_alone").as("n_fail_alone"))
+    }
+    rollup(report, Nil, "gateOverlap", Seq(first(col("pass"))), col, counts,
+      gates.map(g => struct(lit(g).as("gate"),
+        col(s"${g}__n_fail").as("n_fail"),
+        col(s"${g}__n_fail_alone").as("n_fail_alone"))))
   }
 
   /** PAIRWISE overlap matrix of a [[report]] decision table: for every
@@ -384,29 +398,10 @@ object Admission {
     * Same single-pass shape as [[gateOverlap]]: one pivot + ONE
     * aggregate emitting all (7·8)/2 = 28 counts, exploded to rows —
     * never a per-pair rescan. Bounded output (28 rows) regardless of
-    * corpus size.
+    * corpus size. [[gateOverlapMatrixBy]] with no key.
     */
-  def gateOverlapMatrix(report: DataFrame): DataFrame = {
-    val gates = GateOrder.filterNot(_ == DecisionGate)
-    val wide = report.filter(col("gate") =!= DecisionGate)
-      .groupBy(col("doc_id"))
-      .pivot("gate", gates)
-      .agg(first(col("pass")))
-    val pairs = for {
-      a <- gates; b <- gates if a <= b
-    } yield (a, b)
-    val counts = pairs.map { case (a, b) =>
-      count(when(!col(a) && !col(b), lit(1))).as(s"${a}__${b}")
-    } ++ nullCounts(gates)
-    withCoverageGuard(wide.agg(counts.head, counts.tail: _*), gates,
-        "gateOverlapMatrix")
-      .select(explode(array(pairs.map { case (a, b) =>
-        struct(lit(a).as("gate_a"), lit(b).as("gate_b"),
-          col(s"${a}__${b}").as("n_both"))
-      }: _*)).as("r"))
-      .select(col("r.gate_a").as("gate_a"), col("r.gate_b").as("gate_b"),
-        col("r.n_both").as("n_both"))
-  }
+  def gateOverlapMatrix(report: DataFrame): DataFrame =
+    overlapMatrix(report, Nil, "gateOverlapMatrix")
 
   /** [[gateOverlapMatrix]] keyed by a TIME AXIS (release id, batch id):
     * the joint-failure matrix per key over a union of per-release
@@ -418,27 +413,22 @@ object Admission {
     * same in-aggregate null counts — a release whose report predates a
     * gate refuses loudly instead of zeroing its row.
     */
-  def gateOverlapMatrixBy(report: DataFrame, keyCol: String): DataFrame = {
-    val gates = GateOrder.filterNot(_ == DecisionGate)
-    val wide = report.filter(col("gate") =!= DecisionGate)
-      .groupBy(col(keyCol), col("doc_id"))
-      .pivot("gate", gates)
-      .agg(first(col("pass")))
+  def gateOverlapMatrixBy(report: DataFrame, keyCol: String): DataFrame =
+    overlapMatrix(report, Seq(keyCol), "gateOverlapMatrixBy")
+
+  private def overlapMatrix(report: DataFrame, keys: Seq[String],
+                            what: String): DataFrame = {
     val pairs = for {
-      a <- gates; b <- gates if a <= b
+      a <- RollupGates; b <- RollupGates if a <= b
     } yield (a, b)
-    val counts = pairs.map { case (a, b) =>
-      count(when(!col(a) && !col(b), lit(1))).as(s"${a}__${b}")
-    } ++ nullCounts(gates)
-    withCoverageGuard(
-        wide.groupBy(col(keyCol)).agg(counts.head, counts.tail: _*), gates,
-        "gateOverlapMatrixBy")
-      .select(col(keyCol), explode(array(pairs.map { case (a, b) =>
+    rollup(report, keys, what, Seq(first(col("pass"))), col,
+      pairs.map { case (a, b) =>
+        count(when(!col(a) && !col(b), lit(1))).as(s"${a}__${b}")
+      },
+      pairs.map { case (a, b) =>
         struct(lit(a).as("gate_a"), lit(b).as("gate_b"),
           col(s"${a}__${b}").as("n_both"))
-      }: _*)).as("r"))
-      .select(col(keyCol), col("r.gate_a").as("gate_a"),
-        col("r.gate_b").as("gate_b"), col("r.n_both").as("n_both"))
+      })
   }
 
   /** SEQUENTIAL survival funnel of a [[report]] decision table: the
@@ -454,30 +444,10 @@ object Admission {
     * spec-pinned). Same single-pass shape as the other rollups: one
     * pivot + ONE aggregate emitting all 14 counts, exploded to seven
     * rows, with the same refuse-loudly coverage guard.
+    * [[gateFunnelBy]] with no key.
     */
-  def gateFunnel(report: DataFrame): DataFrame = {
-    val gates = GateOrder.filterNot(_ == DecisionGate)
-    val wide = report.filter(col("gate") =!= DecisionGate)
-      .groupBy(col("doc_id"))
-      .pivot("gate", gates)
-      .agg(first(col("pass")))
-    val counts = gates.indices.flatMap { i =>
-      val before =
-        if (i == 0) lit(true)
-        else gates.take(i).map(col).reduce[Column](_ && _)
-      val upTo = gates.take(i + 1).map(col).reduce[Column](_ && _)
-      Seq(count(when(before, lit(1))).as(s"${gates(i)}__n_in"),
-        count(when(upTo, lit(1))).as(s"${gates(i)}__n_out"))
-    } ++ nullCounts(gates)
-    withCoverageGuard(wide.agg(counts.head, counts.tail: _*), gates,
-        "gateFunnel")
-      .select(explode(array(gates.map(g =>
-        struct(lit(g).as("gate"),
-          col(s"${g}__n_in").as("n_in"),
-          col(s"${g}__n_out").as("n_out"))): _*)).as("r"))
-      .select(col("r.gate").as("gate"), col("r.n_in").as("n_in"),
-        col("r.n_out").as("n_out"))
-  }
+  def gateFunnel(report: DataFrame): DataFrame =
+    funnel(report, Nil, "gateFunnel")
 
   /** Per-gate SCORE DISTRIBUTION profile of a [[report]] decision
     * table: for every gate that emits a score and every requested
@@ -534,12 +504,12 @@ object Admission {
     * in-aggregate null counts — a release whose report predates a
     * gate refuses loudly instead of zeroing its funnel.
     */
-  def gateFunnelBy(report: DataFrame, keyCol: String): DataFrame = {
-    val gates = GateOrder.filterNot(_ == DecisionGate)
-    val wide = report.filter(col("gate") =!= DecisionGate)
-      .groupBy(col(keyCol), col("doc_id"))
-      .pivot("gate", gates)
-      .agg(first(col("pass")))
+  def gateFunnelBy(report: DataFrame, keyCol: String): DataFrame =
+    funnel(report, Seq(keyCol), "gateFunnelBy")
+
+  private def funnel(report: DataFrame, keys: Seq[String],
+                     what: String): DataFrame = {
+    val gates = RollupGates
     val counts = gates.indices.flatMap { i =>
       val before =
         if (i == 0) lit(true)
@@ -547,16 +517,11 @@ object Admission {
       val upTo = gates.take(i + 1).map(col).reduce[Column](_ && _)
       Seq(count(when(before, lit(1))).as(s"${gates(i)}__n_in"),
         count(when(upTo, lit(1))).as(s"${gates(i)}__n_out"))
-    } ++ nullCounts(gates)
-    withCoverageGuard(
-        wide.groupBy(col(keyCol)).agg(counts.head, counts.tail: _*), gates,
-        "gateFunnelBy")
-      .select(col(keyCol), explode(array(gates.map(g =>
-        struct(lit(g).as("gate"),
-          col(s"${g}__n_in").as("n_in"),
-          col(s"${g}__n_out").as("n_out"))): _*)).as("r"))
-      .select(col(keyCol), col("r.gate").as("gate"),
-        col("r.n_in").as("n_in"), col("r.n_out").as("n_out"))
+    }
+    rollup(report, keys, what, Seq(first(col("pass"))), col, counts,
+      gates.map(g => struct(lit(g).as("gate"),
+        col(s"${g}__n_in").as("n_in"),
+        col(s"${g}__n_out").as("n_out"))))
   }
 
   /** CALIBRATION sweep of the LM gate's threshold — the ensemble's one
@@ -577,31 +542,26 @@ object Admission {
   def lmThresholdSweep(report: DataFrame,
                        thresholds: Seq[Double]): DataFrame = {
     require(thresholds.nonEmpty, "lmThresholdSweep: no candidate thresholds")
-    val gates = GateOrder.filterNot(_ == DecisionGate)
     val lmGate = "5_lm"
     // two pivot aggregations suffix the alias: columns are ${g}_pass /
     // ${g}_score (hence the passCol mapper on the shared null counts)
-    val wide = report.filter(col("gate") =!= DecisionGate)
-      .groupBy(col("doc_id"))
-      .pivot("gate", gates)
-      .agg(first(col("pass")).as("pass"), first(col("score")).as("score"))
     def pass(g: String) = col(s"${g}_pass")
-    val others = gates.filterNot(_ == lmGate).map(pass).reduce[Column](_ && _)
+    val others = RollupGates.filterNot(_ == lmGate).map(pass)
+      .reduce[Column](_ && _)
     val score = col(s"${lmGate}_score")
     val counts = thresholds.zipWithIndex.flatMap { case (t, i) =>
       Seq(count(when(score.isNull || score < lit(t), lit(1)))
           .as(s"t${i}__n_fail"),
         count(when(others && score.isNotNull && score >= lit(t), lit(1)))
           .as(s"t${i}__n_admit"))
-    } ++ nullCounts(gates, pass)
-    withCoverageGuard(wide.agg(counts.head, counts.tail: _*), gates,
-        "lmThresholdSweep")
-      .select(explode(array(thresholds.zipWithIndex.map { case (t, i) =>
+    }
+    rollup(report, Nil, "lmThresholdSweep",
+      Seq(first(col("pass")).as("pass"), first(col("score")).as("score")),
+      pass, counts,
+      thresholds.zipWithIndex.map { case (t, i) =>
         struct(lit(t).as("threshold"),
           col(s"t${i}__n_fail").as("n_fail"),
           col(s"t${i}__n_admit").as("n_admit"))
-      }: _*)).as("r"))
-      .select(col("r.threshold").as("threshold"),
-        col("r.n_fail").as("n_fail"), col("r.n_admit").as("n_admit"))
+      })
   }
 }

@@ -555,12 +555,12 @@ object Corpus {
     * FRACTION per source) and [[capPerSource]] (count-based: the best N
     * DOCUMENTS) — training mixtures are specified in tokens.
     *
-    * Scale shape: one two-phase prefix-sum pass
-    * ([[graft.operators.ScaleOps.withPrefixSum]]) per budgeted source —
-    * the mixture map is release configuration (a handful of entries,
-    * like mixSources' rates), and each pass range-partitions only that
-    * source's slice. No corpus-wide window, no single-task sort; driver
-    * traffic is O(partitions) per source (the prefix-sum offsets).
+    * Scale shape: ONE keyed two-phase prefix-sum pass
+    * ([[graft.operators.ScaleOps.withPrefixSumByKey]] keyed by source)
+    * over the budgeted sources' rows — one range shuffle whatever the
+    * number of sources — then each row's cut against its source's
+    * budget. No corpus-wide window, no single-task sort; driver traffic
+    * is one offset per (partition, source) segment.
     *
     * Returns (doc_id, source, n_tok, tok_before), tok_before the exact
     * admitted-token count preceding the document in its source's order.
@@ -573,15 +573,13 @@ object Corpus {
     val key = concat(
       substring(md5(concat(lit(salt + "|"), col("doc_id").cast("string"))), 1, 15),
       lit("|"), col("doc_id").cast("string"))
-    val base = docs
+    val base = docs.filter(col("source").isin(budgets.keys.toSeq: _*))
       .select(col("doc_id"), col("source"),
         size(split(col("text"), " ", -1)).as("n_tok"))
       .withColumn("bkey", key)
-    budgets.toSeq.sortBy(_._1).map { case (src, budget) =>
-      graft.operators.ScaleOps.withPrefixSum(
-          base.filter(col("source") === src), "bkey", "n_tok", "tok_before")
-        .filter(col("tok_before") < budget)
-    }.reduce(_ unionByName _)
+    graft.operators.ScaleOps.withPrefixSumByKey(
+        base, "source", "bkey", "n_tok", "tok_before")
+      .filter(col("tok_before") < element_at(typedLit(budgets), col("source")))
       .select(col("doc_id"), col("source"),
         col("n_tok").cast("long").as("n_tok"), col("tok_before"))
   }

@@ -178,46 +178,13 @@ object ScaleOps {
     * partition-dependent. Null values count as 0. `valueCol` must be an
     * INTEGRAL type (byte/short/int/long): a fractional column would be
     * silently floored by the long cast, so it is rejected instead —
-    * callers scale to fixed point first (the centsSum trick).
+    * callers scale to fixed point first (the centsSum trick). This is
+    * [[withPrefixSumByKey]]'s engine run with no key.
     */
   def withPrefixSum(df: DataFrame, orderCol: String, valueCol: String,
-                    outCol: String, numPartitions: Int = 0): DataFrame = {
-    import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType, StructField, StructType}
-    val spark = df.sparkSession
-    val n = if (numPartitions > 0) numPartitions
-      else spark.sparkContext.defaultParallelism
-    val vName = "_prefix_sum_v"
-    require(!df.columns.contains(vName) && !df.columns.contains(outCol),
-      s"input already has a $vName/$outCol column")
-    val vType = df.schema(valueCol).dataType
-    require(Seq(ByteType, ShortType, IntegerType, LongType).contains(vType),
-      s"withPrefixSum: $valueCol is $vType — only integral types sum " +
-        "exactly; scale fractional values to fixed point (e.g. cents) first")
-    val ranged = df.withColumn(vName, col(valueCol).cast("long"))
-      .repartitionByRange(n, col(orderCol))
-      .sortWithinPartitions(col(orderCol))
-    // ONE RDD value: both jobs below share its lineage, so the range
-    // shuffle runs once and the second pass reads the shuffle files.
-    val rangedRdd = ranged.rdd
-    val vIdx = ranged.schema.fieldIndex(vName)
-    def valueAt(r: org.apache.spark.sql.Row): Long =
-      if (r.isNullAt(vIdx)) 0L else r.getLong(vIdx)
-    val totals = rangedRdd.mapPartitionsWithIndex { (pid, it) =>
-      var s = 0L; it.foreach(s += valueAt(_)); Iterator((pid, s))
-    }.collect().sortBy(_._1).map(_._2)
-    val offsets = totals.scanLeft(0L)(_ + _) // offsets(pid) = sum of predecessors
-    val out = rangedRdd.mapPartitionsWithIndex { (pid, it) =>
-      var acc = offsets(pid)
-      it.map { r =>
-        val before = acc
-        acc += valueAt(r)
-        org.apache.spark.sql.Row.fromSeq(r.toSeq.patch(vIdx, Nil, 1) :+ before)
-      }
-    }
-    val schema = StructType(ranged.schema.fields.patch(vIdx, Nil, 1) :+
-      StructField(outCol, LongType, nullable = false))
-    spark.createDataFrame(out, schema)
-  }
+                    outCol: String, numPartitions: Int = 0): DataFrame =
+    prefixSum(df, None, orderCol, valueCol, outCol, numPartitions,
+      "withPrefixSum")
 
   /** How a STAGED rewrite becomes the live table — the promotion step of
     * the maintenance passes ([[compact]], [[retainRows]]), factored out
@@ -577,90 +544,16 @@ object ScaleOps {
     * therefore every selected value — is deterministic and
     * engine-portable. Ranks are 1-based in (value, id) order. Returns
     * (rank, value double) with one row per distinct requested rank.
+    * This is [[exactRanksByKey]]'s engine run with no key: the whole
+    * relation is one key's segment.
     */
   def exactRanks(df: DataFrame, valueCol: String, idCol: String,
                  ranks: Seq[Long], numPartitions: Int = 0): DataFrame = {
-    import org.apache.spark.sql.functions.col
-    import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
     require(ranks.nonEmpty && ranks.forall(_ >= 1), "ranks are 1-based")
-    val spark = df.sparkSession
-    val n = if (numPartitions > 0) numPartitions
-      else spark.sparkContext.defaultParallelism
-    val ranged = df.select(col(valueCol).cast("double"), col(idCol))
-      .repartitionByRange(n, col(valueCol), col(idCol))
-      .sortWithinPartitions(col(valueCol), col(idCol))
-    // one RDD value: the counting pass and the selection pass share the
-    // range shuffle's lineage (files), as in withPrefixSum.
-    val rdd = ranged.rdd
-    val counts = rdd.mapPartitionsWithIndex { (pid, it) =>
-      var c = 0L; it.foreach(_ => c += 1); Iterator((pid, c))
-    }.collect().sortBy(_._1).map(_._2)
-    val offsets = counts.scanLeft(0L)(_ + _)
-    val total = offsets.last
-    require(ranks.max <= total,
-      s"rank ${ranks.max} beyond the $total rows present")
-    // rank r lives in the last partition whose cumulative start < r
-    val byPart: Map[Int, Seq[(Long, Long)]] = ranks.distinct
-      .map { r =>
-        val p = offsets.lastIndexWhere(_ < r)
-        (p, (r - offsets(p), r)) // (1-based local offset, global rank)
-      }
-      .groupBy(_._1).map { case (p, xs) => p -> xs.map(_._2) }
-    val rows = rdd.mapPartitionsWithIndex { (pid, it) =>
-      byPart.get(pid) match {
-        case None => Iterator.empty
-        case Some(ws) =>
-          val needs = ws.sortBy(_._1)
-          val out = Seq.newBuilder[(Long, Double)]
-          var i = 0L
-          var ni = 0
-          while (it.hasNext && ni < needs.length) {
-            val row = it.next(); i += 1
-            while (ni < needs.length && needs(ni)._1 == i) {
-              out += ((needs(ni)._2, row.getDouble(0)))
-              ni += 1
-            }
-          }
-          out.result().iterator
-      }
-    }.collect() // result-sized: one row per requested rank
-    spark.createDataFrame(
-      spark.sparkContext.parallelize(rows.toIndexedSeq.map {
-        case (r, v) => org.apache.spark.sql.Row(r, v)
-      }),
-      StructType(Seq(StructField("rank", LongType, nullable = false),
-        StructField("value", DoubleType, nullable = false))))
+    selectRanks(df, None, valueCol, idCol, _ => ranks, numPartitions,
+      "exactRanks").select(col("rank"), col("value"))
   }
 
-  /** [[exactRanks]] for MANY keys in the SAME two passes — the
-    * multi-key distributed selection (round 15, closing the PLANS
-    * open thread): per-key exact order statistics where the key count
-    * is bounded (a gate enum, a class enum) but looping [[exactRanks]]
-    * per key would pay `2·|keys|` driver jobs and `|keys|` range
-    * shuffles over the same relation. One range partition by
-    * `(key, value, id)` puts every key's total order into contiguous
-    * partition ranges simultaneously; the counting pass returns one
-    * row per (partition, key) SEGMENT (keys are contiguous within a
-    * sorted partition, so segments are exact), the driver locates
-    * every requested rank of every key, and one selection pass reads
-    * them all out. Two jobs total, independent of key count — and
-    * key skew cannot straddle-starve a task, because partitioning is
-    * by the full `(key, value, id)` tuple: a hot key simply spans
-    * more partitions.
-    *
-    * Driver state is one tiny row per (partition, key) SEGMENT —
-    * bounded by `partitions × keys-present-per-partition`, i.e. a few
-    * counters per task even at thousands of keys, never row data.
-    *
-    * `ranksFor` maps each key's total count n to its requested
-    * 1-based ranks — resolved per key AFTER the counting pass, so
-    * quantile callers (`ceil(q·n)`) need no separate count job.
-    * `idCol` must be unique per key (the deterministic tie-break, as
-    * in [[exactRanks]]). Returns one row per (key, distinct rank):
-    * `(<key>, n, rank, value)` with the key column keeping its input
-    * name and type — bounded by `|keys| × |ranks|`, a driver-sized
-    * result.
-    */
   /** The keyed two-pass machinery compares keys with JVM `==` and
     * hashes them into driver maps — REFERENCE equality for array /
     * binary-typed columns, which would silently fragment segments and
@@ -694,39 +587,68 @@ object ScaleOps {
         "or a fixed-point long) first")
   }
 
+  /** [[exactRanks]] for MANY keys in the SAME two passes — the
+    * multi-key distributed selection (round 15, closing the PLANS
+    * open thread): per-key exact order statistics where the key count
+    * is bounded (a gate enum, a class enum) but looping [[exactRanks]]
+    * per key would pay `2·|keys|` driver jobs and `|keys|` range
+    * shuffles over the same relation. One range partition by
+    * `(key, value, id)` puts every key's total order into contiguous
+    * partition ranges simultaneously; the counting pass returns one
+    * row per (partition, key) SEGMENT (keys are contiguous within a
+    * sorted partition, so segments are exact), the driver locates
+    * every requested rank of every key, and one selection pass reads
+    * them all out. Two jobs total, independent of key count — and
+    * key skew cannot straddle-starve a task, because partitioning is
+    * by the full `(key, value, id)` tuple: a hot key simply spans
+    * more partitions.
+    *
+    * Driver state is one tiny row per (partition, key) SEGMENT —
+    * bounded by `partitions × keys-present-per-partition`, i.e. a few
+    * counters per task even at thousands of keys, never row data.
+    *
+    * `ranksFor` maps each key's total count n to its requested
+    * 1-based ranks — resolved per key AFTER the counting pass, so
+    * quantile callers (`ceil(q·n)`) need no separate count job.
+    * `idCol` must be unique per key (the deterministic tie-break, as
+    * in [[exactRanks]]). Returns one row per (key, distinct rank):
+    * `(<key>, n, rank, value)` with the key column keeping its input
+    * name and type — bounded by `|keys| × |ranks|`, a driver-sized
+    * result.
+    */
   def exactRanksByKey(df: DataFrame, keyCol: String, valueCol: String,
                       idCol: String, ranksFor: Long => Seq[Long],
-                      numPartitions: Int = 0): DataFrame = {
-    import org.apache.spark.sql.functions.col
+                      numPartitions: Int = 0): DataFrame =
+    selectRanks(df, Some(keyCol), valueCol, idCol, ranksFor, numPartitions,
+      "exactRanksByKey")
+
+  /** The one two-pass selection engine behind [[exactRanks]] and
+    * [[exactRanksByKey]]. With no key every row carries the same unit
+    * key, so the relation is a single key whose segments are the
+    * partitions. Returns `([key,] n, rank, value)`.
+    */
+  private def selectRanks(df: DataFrame, keyCol: Option[String],
+                          valueCol: String, idCol: String,
+                          ranksFor: Long => Seq[Long], numPartitions: Int,
+                          op: String): DataFrame = {
     import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
-    requireAtomicKey(df, keyCol, "exactRanksByKey")
+    keyCol.foreach(requireAtomicKey(df, _, op))
     val spark = df.sparkSession
     val n = if (numPartitions > 0) numPartitions
       else spark.sparkContext.defaultParallelism
-    val ranged = df.select(col(keyCol), col(valueCol).cast("double"), col(idCol))
-      .repartitionByRange(n, col(keyCol), col(valueCol), col(idCol))
-      .sortWithinPartitions(col(keyCol), col(valueCol), col(idCol))
+    val keyCols = keyCol.toSeq.map(col)
+    val order = keyCols ++ Seq(col(valueCol), col(idCol))
+    val ranged = df.select(keyCols ++ Seq(col(valueCol).cast("double"), col(idCol)): _*)
+      .repartitionByRange(n, order: _*)
+      .sortWithinPartitions(order: _*)
+    val keyed = keyCol.isDefined
+    val vIdx = if (keyed) 1 else 0
     // one RDD value: the counting pass and the selection pass share the
-    // range shuffle's lineage (files), as in exactRanks/withPrefixSum.
+    // range shuffle's lineage (files), as in prefixSum.
     val rdd = ranged.rdd
-    // per-(partition, key) segment counts IN within-partition order —
     // segment order matters: a rank's local row position adds the
     // preceding segments' rows of the same partition.
-    val segs: Array[(Int, Seq[(Any, Long)])] =
-      rdd.mapPartitionsWithIndex { (pid, it) =>
-        val out = Seq.newBuilder[(Any, Long)]
-        var cur: Any = null
-        var started = false
-        var c = 0L
-        it.foreach { r =>
-          val k = r.get(0)
-          if (!started) { cur = k; started = true; c = 1L }
-          else if (k == cur) c += 1
-          else { out += ((cur, c)); cur = k; c = 1L }
-        }
-        if (started) out += ((cur, c))
-        Iterator((pid, out.result()))
-      }.collect().sortBy(_._1)
+    val segs = segmentTotals(rdd, r => if (keyed) r.get(0) else (), _ => 1L)
     // per key: totals in pid order → cumulative offsets; per (pid, key):
     // the segment's start position within its partition
     val byKey = scala.collection.mutable.LinkedHashMap
@@ -738,6 +660,7 @@ object ScaleOps {
         pos += c
       }
     }
+    require(byKey.nonEmpty, s"$op: empty input — nothing to rank")
     // locate every requested (key, rank): partition + local row position
     val needsByPid = scala.collection.mutable.Map
       .empty[Int, Seq[(Long, Any, Long)]] // pid -> (localRowPos1Based, key, rank)
@@ -747,8 +670,8 @@ object ScaleOps {
       nOf(k) = total
       val ranks = ranksFor(total).distinct
       require(ranks.nonEmpty && ranks.forall(r => r >= 1 && r <= total),
-        s"exactRanksByKey: ranks for key $k (n=$total) must be in [1, n], " +
-          s"got ${ranks.mkString(", ")}")
+        s"$op: ranks${if (keyed) s" for key $k" else ""} (n=$total) must " +
+          s"be in [1, n], got ${ranks.mkString(", ")}")
       // cumulative starts of this key's segments across partitions
       val cum = segsOfK.map(_._3).scanLeft(0L)(_ + _)
       ranks.foreach { r =>
@@ -758,7 +681,6 @@ object ScaleOps {
         needsByPid(pid) = needsByPid.getOrElse(pid, Nil) :+ ((local, k, r))
       }
     }
-    require(byKey.nonEmpty, "exactRanksByKey: empty input — no keys to rank")
     val needs = needsByPid.toMap.view.mapValues(_.sortBy(_._1)).toMap
     val picked: Array[(Any, Long, Double)] =
       rdd.mapPartitionsWithIndex { (pid, it) =>
@@ -771,23 +693,49 @@ object ScaleOps {
             while (it.hasNext && ni < ws.length) {
               val row = it.next(); i += 1
               while (ni < ws.length && ws(ni)._1 == i) {
-                out += ((ws(ni)._2, ws(ni)._3, row.getDouble(1)))
+                out += ((ws(ni)._2, ws(ni)._3, row.getDouble(vIdx)))
                 ni += 1
               }
             }
             out.result().iterator
         }
       }.collect() // result-sized: one row per requested (key, rank)
-    val keyField = ranged.schema.fields(0)
+    val keyField = keyCol.map(_ => ranged.schema.fields(0).copy(nullable = true))
     spark.createDataFrame(
       spark.sparkContext.parallelize(picked.toIndexedSeq.map {
-        case (k, r, v) => org.apache.spark.sql.Row(k, nOf(k), r, v)
+        case (k, r, v) =>
+          val row = Seq[Any](nOf(k), r, v)
+          org.apache.spark.sql.Row.fromSeq(if (keyed) k +: row else row)
       }),
-      StructType(Seq(keyField.copy(nullable = true),
+      StructType(keyField.toSeq ++ Seq(
         StructField("n", LongType, nullable = false),
         StructField("rank", LongType, nullable = false),
         StructField("value", DoubleType, nullable = false))))
   }
+
+  /** The counting pass both engines share: one row per (partition,
+    * key) SEGMENT holding the total `weight` of its rows, in
+    * within-partition order — keys are contiguous in a range-partitioned,
+    * sorted partition, so segments are exact. Sorted by partition id.
+    */
+  private def segmentTotals(rdd: org.apache.spark.rdd.RDD[org.apache.spark.sql.Row],
+                            keyAt: org.apache.spark.sql.Row => Any,
+                            weight: org.apache.spark.sql.Row => Long)
+      : Array[(Int, Seq[(Any, Long)])] =
+    rdd.mapPartitionsWithIndex { (pid, it) =>
+      val out = Seq.newBuilder[(Any, Long)]
+      var cur: Any = null
+      var started = false
+      var s = 0L
+      it.foreach { r =>
+        val k = keyAt(r)
+        if (!started) { cur = k; started = true; s = weight(r) }
+        else if (k == cur) s += weight(r)
+        else { out += ((cur, s)); cur = k; s = weight(r) }
+      }
+      if (started) out += ((cur, s))
+      Iterator((pid, out.result()))
+    }.collect().sortBy(_._1)
 
   /** [[withPrefixSum]] PER KEY in the same two passes — the keyed
     * exclusive prefix sum (cumulative counts below each row within its
@@ -807,9 +755,20 @@ object ScaleOps {
     */
   def withPrefixSumByKey(df: DataFrame, keyCol: String, orderCol: String,
                          valueCol: String, outCol: String,
-                         numPartitions: Int = 0): DataFrame = {
+                         numPartitions: Int = 0): DataFrame =
+    prefixSum(df, Some(keyCol), orderCol, valueCol, outCol, numPartitions,
+      "withPrefixSumByKey")
+
+  /** The one two-pass prefix-sum engine behind [[withPrefixSum]] and
+    * [[withPrefixSumByKey]]. With no key every row carries the same unit
+    * key, so each partition is one segment and its offset is the sum of
+    * its predecessors' totals.
+    */
+  private def prefixSum(df: DataFrame, keyCol: Option[String],
+                        orderCol: String, valueCol: String, outCol: String,
+                        numPartitions: Int, op: String): DataFrame = {
     import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType, StructField, StructType}
-    requireAtomicKey(df, keyCol, "withPrefixSumByKey")
+    keyCol.foreach(requireAtomicKey(df, _, op))
     val spark = df.sparkSession
     val n = if (numPartitions > 0) numPartitions
       else spark.sparkContext.defaultParallelism
@@ -818,32 +777,22 @@ object ScaleOps {
       s"input already has a $vName/$outCol column")
     val vType = df.schema(valueCol).dataType
     require(Seq(ByteType, ShortType, IntegerType, LongType).contains(vType),
-      s"withPrefixSumByKey: $valueCol is $vType — only integral types " +
-        "sum exactly; scale fractional values to fixed point first")
+      s"$op: $valueCol is $vType — only integral types sum exactly; " +
+        "scale fractional values to fixed point (e.g. cents) first")
+    val order = (keyCol.toSeq :+ orderCol).map(col)
     val ranged = df.withColumn(vName, col(valueCol).cast("long"))
-      .repartitionByRange(n, col(keyCol), col(orderCol))
-      .sortWithinPartitions(col(keyCol), col(orderCol))
+      .repartitionByRange(n, order: _*)
+      .sortWithinPartitions(order: _*)
+    // ONE RDD value: both jobs below share its lineage, so the range
+    // shuffle runs once and the second pass reads the shuffle files.
     val rangedRdd = ranged.rdd
-    val kIdx = ranged.schema.fieldIndex(keyCol)
+    val kIdx = keyCol.fold(-1)(ranged.schema.fieldIndex)
     val vIdx = ranged.schema.fieldIndex(vName)
+    def keyAt(r: org.apache.spark.sql.Row): Any =
+      if (kIdx < 0) () else r.get(kIdx)
     def valueAt(r: org.apache.spark.sql.Row): Long =
       if (r.isNullAt(vIdx)) 0L else r.getLong(vIdx)
-    // per-(partition, key) segment totals, in within-partition order
-    val segs: Array[(Int, Seq[(Any, Long)])] =
-      rangedRdd.mapPartitionsWithIndex { (pid, it) =>
-        val out = Seq.newBuilder[(Any, Long)]
-        var cur: Any = null
-        var started = false
-        var s = 0L
-        it.foreach { r =>
-          val k = r.get(kIdx)
-          if (!started) { cur = k; started = true; s = valueAt(r) }
-          else if (k == cur) s += valueAt(r)
-          else { out += ((cur, s)); cur = k; s = valueAt(r) }
-        }
-        if (started) out += ((cur, s))
-        Iterator((pid, out.result()))
-      }.collect().sortBy(_._1)
+    val segs = segmentTotals(rangedRdd, keyAt, valueAt)
     // exclusive offset of each (pid, key) segment = sum of the SAME
     // key's totals in earlier partitions
     val running = scala.collection.mutable.Map.empty[Any, Long]
@@ -859,7 +808,7 @@ object ScaleOps {
       var started = false
       var acc = 0L
       it.map { r =>
-        val k = r.get(kIdx)
+        val k = keyAt(r)
         if (!started || k != cur) {
           cur = k; started = true; acc = offsets((pid, k))
         }

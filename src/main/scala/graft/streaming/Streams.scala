@@ -44,6 +44,15 @@ object Streams {
     ss
   }
 
+  /** The file feed of the maintenance and admission pipelines: ONE
+    * landed file per micro-batch, the granularity their replay and
+    * batch == stream laws are stated at (three files → three batches).
+    */
+  private def oneFilePerBatch(spark: SparkSession, schema: StructType,
+                              srcDir: String): DataFrame =
+    spark.readStream.schema(schema).option("maxFilesPerTrigger", 1)
+      .parquet(srcDir)
+
   /** Watermarked hourly windowed aggregation (event-time). Cents-exact
     * sums as everywhere else.
     */
@@ -275,10 +284,8 @@ object Streams {
   def sketchMaintainPipeline(spark: SparkSession, schema: StructType,
                              srcDir: String, stateDir: String,
                              checkpointDir: String, itemCol: String, k: Int,
-                             prepare: DataFrame => DataFrame = identity,
-                             maxFilesPerTrigger: Int = 1): StreamingQuery =
-    prepare(spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", maxFilesPerTrigger).parquet(srcDir))
+                             prepare: DataFrame => DataFrame = identity): StreamingQuery =
+    prepare(oneFilePerBatch(spark, schema, srcDir))
       .writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
@@ -345,10 +352,8 @@ object Streams {
   def histMaintainPipeline(spark: SparkSession, schema: StructType,
                            srcDir: String, stateDir: String,
                            checkpointDir: String, valueCol: String,
-                           binWidth: Double,
-                           maxFilesPerTrigger: Int = 1): StreamingQuery =
-    spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger).parquet(srcDir)
+                           binWidth: Double): StreamingQuery =
+    oneFilePerBatch(spark, schema, srcDir)
       .writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
@@ -482,10 +487,8 @@ object Streams {
                            srcDir: String, stateDir: String,
                            checkpointDir: String,
                            targetPred: org.apache.spark.sql.Column,
-                           buckets: Int = 4096,
-                           maxFilesPerTrigger: Int = 1): StreamingQuery =
-    spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger).parquet(srcDir)
+                           buckets: Int = 4096): StreamingQuery =
+    oneFilePerBatch(spark, schema, srcDir)
       .writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
@@ -527,10 +530,8 @@ object Streams {
                          srcDir: String, stateDir: String,
                          checkpointDir: String,
                          labelCol: String = "lang",
-                         buckets: Int = 1024,
-                         maxFilesPerTrigger: Int = 1): StreamingQuery =
-    spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger).parquet(srcDir)
+                         buckets: Int = 1024): StreamingQuery =
+    oneFilePerBatch(spark, schema, srcDir)
       .writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
@@ -631,10 +632,8 @@ object Streams {
     */
   def lmMaintainPipeline(spark: SparkSession, schema: StructType,
                          srcDir: String, stateDir: String,
-                         checkpointDir: String,
-                         maxFilesPerTrigger: Int = 1): StreamingQuery =
-    spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger).parquet(srcDir)
+                         checkpointDir: String): StreamingQuery =
+    oneFilePerBatch(spark, schema, srcDir)
       .writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
@@ -733,13 +732,11 @@ object Streams {
     */
   def lmGatePipeline(spark: SparkSession, schema: StructType,
                      srcDir: String, lmStateDir: String, outDir: String,
-                     checkpointDir: String, minAvgLp: Double,
-                     maxFilesPerTrigger: Int = 1): StreamingQuery = {
+                     checkpointDir: String, minAvgLp: Double): StreamingQuery = {
     import graft.ext.TextAnalysis
     val lm = TextAnalysis.resolveLm(
       TextAnalysis.lmModelFromCounts(lmReadCounts(spark, lmStateDir)))
-    spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger).parquet(srcDir)
+    oneFilePerBatch(spark, schema, srcDir)
       .writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
@@ -787,13 +784,12 @@ object Streams {
                         lmModel: DataFrame, minAvgLp: Double,
                         nbModel: DataFrame, allowedLabels: Seq[String],
                         nbBuckets: Int = 1024,
-                        maxFilesPerTrigger: Int = 1,
                         nearDup: Option[graft.ext.Admission.NearDupCfg] = None): StreamingQuery = {
     val lm = graft.ext.TextAnalysis.resolveLm(lmModel)
     val nb = graft.ext.Classifier.resolveNb(nbModel, nbBuckets)
     admissionPipelineWith(spark, schema, srcDir, outDir, checkpointDir,
       benchSources, shingleGate, contamThreshold, semantic, minAvgLp,
-      allowedLabels, maxFilesPerTrigger, nearDup,
+      allowedLabels, nearDup,
       modelsOf = _ => (lm, nb, None))
   }
 
@@ -820,7 +816,6 @@ object Streams {
                                  swapAtBatch: Long,
                                  minAvgLp: Double, allowedLabels: Seq[String],
                                  nbBuckets: Int = 1024,
-                                 maxFilesPerTrigger: Int = 1,
                                  nearDup: Option[graft.ext.Admission.NearDupCfg] = None): StreamingQuery = {
     require(swapAtBatch > 0,
       "admissionModelSwapPipeline: swapAtBatch must be > 0 — a rollout " +
@@ -832,7 +827,7 @@ object Streams {
     val nb1 = Classifier.resolveNb(nbV1, nbBuckets)
     admissionPipelineWith(spark, schema, srcDir, outDir, checkpointDir,
       benchSources, shingleGate, contamThreshold, semantic, minAvgLp,
-      allowedLabels, maxFilesPerTrigger, nearDup,
+      allowedLabels, nearDup,
       modelsOf = id =>
         if (id < swapAtBatch) (lm0, nb0, Some("v0"))
         else (lm1, nb1, Some("v1")))
@@ -852,7 +847,6 @@ object Streams {
                                     semantic: Option[graft.ext.Admission.SemanticCfg],
                                     minAvgLp: Double,
                                     allowedLabels: Seq[String],
-                                    maxFilesPerTrigger: Int,
                                     nearDup: Option[graft.ext.Admission.NearDupCfg],
                                     modelsOf: Long => (graft.ext.LmScorer, graft.ext.NbScorer, Option[String])): StreamingQuery = {
     val semFrozen = semantic.map(g =>
@@ -892,8 +886,7 @@ object Streams {
     // the Bloom gate is applied once too: its bitmap collect (and, for a
     // lazy filter frame, the filter build) is frozen state, not batch work
     val shHits = graft.ext.Admission.shingleHits(shingleGate)
-    spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger).parquet(srcDir)
+    oneFilePerBatch(spark, schema, srcDir)
       .writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
@@ -1142,10 +1135,8 @@ object Streams {
   def nearDedupPipeline(spark: SparkSession, schema: StructType,
                         srcDir: String, stateDir: String, outDir: String,
                         checkpointDir: String, w: Int = 5,
-                        numHashes: Int = 8, bandWidth: Int = 2,
-                        maxFilesPerTrigger: Int = 1): StreamingQuery =
-    spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger).parquet(srcDir)
+                        numHashes: Int = 8, bandWidth: Int = 2): StreamingQuery =
+    oneFilePerBatch(spark, schema, srcDir)
       .writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
@@ -1187,10 +1178,8 @@ object Streams {
   def indexMaintainPipeline(spark: SparkSession, schema: StructType,
                             srcDir: String, indexDir: String,
                             checkpointDir: String, numCells: Int = 16,
-                            m: Int = 4, numCodes: Int = 16, dim: Int = 64,
-                            maxFilesPerTrigger: Int = 1): StreamingQuery =
-    spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger).parquet(srcDir)
+                            m: Int = 4, numCodes: Int = 16, dim: Int = 64): StreamingQuery =
+    oneFilePerBatch(spark, schema, srcDir)
       .writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>

@@ -229,8 +229,22 @@ class CorpusSpec extends AnyFunSuite {
   test("token budget: greedy fill binds, overshoots by at most one doc, partition-invariant") {
     val docs = Tables.documents(spark, sfDir)
     val budgets = Map("src2" -> 800L, "src3" -> 500L, "src4" -> 200L)
-    val out = Corpus.sampleToTokenBudget(docs, budgets).collect()
+    // the Spark jobs one sampling run takes, counted through a job group
+    def jobsOf(group: String, bs: Map[String, Long]) = {
+      val sc = spark.sparkContext
+      sc.setJobGroup(group, "sampleToTokenBudget job count")
+      val rows = try Corpus.sampleToTokenBudget(docs, bs).collect()
+        finally sc.clearJobGroup()
+      (rows, sc.statusTracker.getJobIdsForGroup(group).length)
+    }
+    val (collected, jobs3) = jobsOf("budget3", budgets)
+    val out = collected
       .map(r => (r.getLong(0), r.getString(1), r.getLong(2), r.getLong(3)))
+    // one keyed prefix sum serves every budgeted source: three sources
+    // run the jobs one does, not one pass per source
+    val (_, jobs1) = jobsOf("budget1", Map("src2" -> 800L))
+    assert(jobs3 === jobs1,
+      s"3 budgeted sources ran $jobs3 jobs, 1 source ran $jobs1")
     assert(out.map(_._2).toSet === budgets.keySet, "only budgeted sources admitted")
     budgets.foreach { case (src, b) =>
       val rows = out.filter(_._2 == src)

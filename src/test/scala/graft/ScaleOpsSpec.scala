@@ -411,6 +411,10 @@ class ScaleOpsSpec extends AnyFunSuite {
     intercept[IllegalArgumentException] {
       ScaleOps.exactRanks(ev, "value", "event_id", Seq(n + 1))
     }
+    // so does an empty input: no row holds any rank
+    intercept[IllegalArgumentException] {
+      ScaleOps.exactRanks(ev.filter(lit(false)), "value", "event_id", Seq(1L))
+    }
   }
 
   test("retainRows deletes state rows for removed keys and compacts the files") {
@@ -525,6 +529,14 @@ class ScaleOpsSpec extends AnyFunSuite {
     val gotN = ScaleOps.withPrefixSum(withNull, "id", "v", "ps", 2)
       .orderBy("id").select("ps").collect().map(_.getLong(0))
     assert(gotN.toSeq === Seq(0L, 5L, 5L))
+    // an empty input is an empty frame with outCol appended
+    val empty = ScaleOps.withPrefixSum(df.filter(lit(false)), "id", "v", "ps")
+    assert(empty.columns.toSeq === Seq("id", "v", "ps"))
+    assert(empty.count() === 0L)
+    // an input already holding outCol is refused, not clobbered
+    intercept[IllegalArgumentException] {
+      ScaleOps.withPrefixSum(df.withColumn("ps", lit(0L)), "id", "v", "ps")
+    }
   }
 
   test("exactRanksByKey equals per-key sequential order statistics, in two jobs for any key count") {

@@ -6,7 +6,11 @@ import org.scalatest.Assertions._
 /** One shared local session for the whole forked test JVM. */
 object SparkTestBase {
   lazy val spark: SparkSession =
-    Session("4", confs = Seq("spark.app.name" -> "graft-tests"))
+    Session("4", confs = Seq("spark.app.name" -> "graft-tests",
+      // catalog tables the specs save (bucketed stars, warehouse
+      // layouts) live and die with the test JVM
+      "spark.sql.warehouse.dir" ->
+        TempDirs.create("graft_test_warehouse_").toUri.toString))
   val sfDir = "/root/testdata/sf0.001"
 
   /** A fixture directory under java.io.tmpdir named `prefix…`, deleted

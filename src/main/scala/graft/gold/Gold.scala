@@ -17,11 +17,14 @@ import graft.silver.Silver
   * bit-identical across engines regardless of partial-aggregation order.
   *
   * Scale notes: every mart is fact-scan → partial agg (map-side combine) →
-  * final agg on few keys. Bounded dims (nation, the calendar) carry
-  * explicit broadcast hints; data-scaled relations don't (AQE decides at
-  * runtime). No fact-fact shuffle except the deliberate starts⟗ends
-  * full-outer in station popularity, which aggregates BEFORE joining (two
-  * small aggregates joined, never the raw fact rows).
+  * final agg on few keys. A mart aggregates on the narrowest key that
+  * determines its groups and joins display attributes afterwards: the
+  * daily summary groups on the integer date key and only then joins the
+  * calendar. Bounded dims (nation, the calendar) carry explicit broadcast
+  * hints; data-scaled relations don't (AQE decides at runtime). No
+  * fact-fact shuffle except the deliberate starts⟗ends full-outer in
+  * station popularity, which aggregates BEFORE joining (two small
+  * aggregates joined, never the raw fact rows).
   */
 object Gold {
 
@@ -29,28 +32,19 @@ object Gold {
   private def centsSum(c: String) =
     sum(round(col(c) * 100).cast("long"))
 
-  /** dm_daily_trip_summary (gold_ddl.sql:11-26): fact ⋈ dim_date (J4),
-    * multi-key group on date attributes (A4), COUNT/SUM/AVG (A1) and
-    * COUNT(DISTINCT bike) (A2).
+  /** dm_daily_trip_summary (gold_ddl.sql:11-26) from the raw sources:
+    * [[dailySummaryFromStar]] over lineitem⋈orders projected to the
+    * fact's columns (`price_cents` as the fact computes it).
     */
   def dailyTripSummary(lineitem: DataFrame, orders: DataFrame,
-                       dimDate: DataFrame): DataFrame = {
-    val fact = lineitem.join(orders, col("l_orderkey") === col("o_orderkey"))
-      .withColumn("start_date_id",
-        year(col("o_orderdate")) * 10000 + month(col("o_orderdate")) * 100 +
-          dayofmonth(col("o_orderdate")))
-    fact
-      .join(broadcast(dimDate), col("start_date_id") === col("date_id")) // J4
-      .groupBy(col("cal_date"), col("year"), col("month_name"),
-        col("day_name"), col("is_weekend"))                              // A4
-      .agg(
-        count(lit(1)).as("total_trips"),                                 // A1
-        sum(col("l_quantity")).cast("long").as("total_qty"),  // whole-valued → exact
-        (sum(col("l_quantity")) / count(lit(1))).as("avg_qty"),
-        countDistinct(col("l_partkey")).as("unique_bikes"),              // A2
-        ((centsSum("l_extendedprice").cast("double") / lit(100.0)) /
-          count(lit(1)).cast("double")).as("avg_price"))
-  }
+                       dimDate: DataFrame): DataFrame =
+    dailySummaryFromStar(lineitem.join(orders, col("l_orderkey") === col("o_orderkey"))
+      .select(
+        (year(col("o_orderdate")) * 10000 + month(col("o_orderdate")) * 100 +
+          dayofmonth(col("o_orderdate"))).as("start_date_id"),
+        col("l_quantity").as("quantity"), col("l_partkey").as("bike_id"),
+        round(col("l_extendedprice") * 100).cast("long").as("price_cents")),
+      dimDate)
 
   /** dm_station_popularity (gold_ddl.sql:29-91): two pre-aggregations
     * full-outer-joined on the station key (J6) with COALESCE zero-fill,
@@ -90,24 +84,35 @@ object Gold {
         col("top_segment"))
   }
 
-  /** dm_daily_trip_summary off the PERSISTED fact: identical values to
-    * [[dailyTripSummary]] (count/sum/distinct roll up from the fact's
-    * columns; avg_price from the exact `price_cents` the fact carries),
-    * with NO join at refresh time beyond the broadcast calendar — the
+  /** dm_daily_trip_summary off the PERSISTED fact (`start_date_id`,
+    * `quantity`, `bike_id`, `price_cents`), the one definition of the
+    * daily mart: COUNT/SUM/AVG (A1) and COUNT(DISTINCT bike) (A2) per
+    * calendar day (A4), inner-joined to the broadcast calendar (J4). It
+    * aggregates on the integer `start_date_id` first and joins the
+    * calendar after: `date_id` → calendar row is 1:1, so the inner join
+    * drops the same groups (a NULL or uncovered date) as joining first
+    * would, and every measure is an integer or a whole-valued double
+    * sum, exact in any order. No join beyond the calendar: the
     * lineitem⋈orders shuffle was paid once when the fact was persisted.
     */
   def dailySummaryFromStar(factTrips: DataFrame, dimDate: DataFrame): DataFrame =
     factTrips
-      .join(broadcast(dimDate), col("start_date_id") === col("date_id"))  // J4
-      .groupBy(col("cal_date"), col("year"), col("month_name"),
-        col("day_name"), col("is_weekend"))
+      .groupBy(col("start_date_id"))
       .agg(
-        count(lit(1)).as("total_trips"),
-        sum(col("quantity")).cast("long").as("total_qty"),
-        (sum(col("quantity")) / count(lit(1))).as("avg_qty"),
-        countDistinct(col("bike_id")).as("unique_bikes"),
-        ((sum(col("price_cents")).cast("double") / lit(100.0)) /
-          count(lit(1)).cast("double")).as("avg_price"))
+        count(lit(1)).as("n"),
+        sum(col("quantity")).as("qty"),            // whole-valued → exact
+        countDistinct(col("bike_id")).as("bikes"),
+        sum(col("price_cents")).as("cents"))
+      .join(broadcast(dimDate), col("start_date_id") === col("date_id"))
+      .select(
+        col("cal_date"), col("year"), col("month_name"), col("day_name"),
+        col("is_weekend"),
+        col("n").as("total_trips"),
+        col("qty").cast("long").as("total_qty"),
+        (col("qty") / col("n")).as("avg_qty"),
+        col("bikes").as("unique_bikes"),
+        ((col("cents").cast("double") / lit(100.0)) /
+          col("n").cast("double")).as("avg_price"))
 
   /** dm_popular_routes (gold_ddl.sql:94-113): fact grouped by the two
     * station endpoints, double left join to the dim + null filter (J7),

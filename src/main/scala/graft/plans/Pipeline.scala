@@ -52,20 +52,23 @@ object Pipeline {
     val region = Tables.region(spark, srcDir)
     val customer = Tables.customer(spark, srcDir)
     val supplier = Tables.supplier(spark, srcDir)
-    // spread the fact sources: when the planner broadcasts the dims the
-    // fact pipeline inherits the SCAN's partitioning, and a few-row-group
-    // source would serialize the surrogate-key projection and the fact
-    // write into one or two tasks. Identity at warehouse scale (a big
-    // scan already has ≥ default parallelism splits).
-    val orders = Tables.spread(Tables.orders(spark, srcDir))
-    val lineitem = Tables.spread(Tables.lineitem(spark, srcDir))
+    val orders = Tables.orders(spark, srcDir)
+    val lineitem = Tables.lineitem(spark, srcDir)
 
-    val dimDate = Silver.dimDate(orders, lineitem)
+    // Only the fact pipeline spreads its sources: with the dims broadcast
+    // it inherits the SCAN's partitioning, and a few-row-group source
+    // would serialize the row-wise key projection and the fact write into
+    // one or two tasks. dim_date, dim_user and the two order-grain marts
+    // collapse the same scans in a partial aggregate, which runs in the
+    // scan task; a round-robin shuffle in front of it would only move
+    // rows the aggregate then discards. Identity at warehouse scale (a
+    // big scan already has ≥ default parallelism splits).
     val silverTables: Seq[(String, DataFrame)] = Seq(
       "dim_station" -> Silver.dimStation(nation, region, customer, supplier),
       "dim_user" -> Silver.dimUser(customer, orders),
-      "dim_date" -> dimDate,
-      "fact_trips" -> Silver.factTrips(lineitem, orders, customer, supplier))
+      "dim_date" -> Silver.dimDate(orders, lineitem),
+      "fact_trips" -> Silver.factTrips(Tables.spread(lineitem),
+        Tables.spread(orders), customer, supplier))
 
     val staging = Paths.get(warehouseDir, s".staging-${java.util.UUID.randomUUID}")
     Files.createDirectories(staging)
@@ -82,7 +85,7 @@ object Pipeline {
       // roll up from the persisted fact instead of re-joining raw
       // sources. station_popularity and user_behavior are ORDER-grain
       // (trips_started counts orders, not line items), aggregate their
-      // sources directly, and overlap the whole silver wave.
+      // unspread sources directly, and overlap the whole silver wave.
       import scala.concurrent.{Await, Future}
       import scala.concurrent.duration.Duration
       import scala.concurrent.ExecutionContext.Implicits.global
@@ -90,8 +93,13 @@ object Pipeline {
         failpoint(name)
         df.write.mode("overwrite").parquet(staging.resolve(name).toString)
       }
+      // a staged table is read with the schema of the frame that wrote
+      // it: no schema-inference job on the tail. The broadcast dims are
+      // not spread (a broadcast build collects every row anyway); the
+      // fact is, for the parallelism of the marts' aggregates.
+      val written = silverTables.toMap
       def staged(name: String): DataFrame =
-        Tables.spread(spark.read.parquet(staging.resolve(name).toString))
+        spark.read.schema(written(name).schema).parquet(staging.resolve(name).toString)
       val silverDone = silverTables.map { case (name, df) =>
         name -> Future(write(name, df))
       }.toMap
@@ -101,11 +109,13 @@ object Pipeline {
         Future(write("dm_user_behavior", Gold.userBehavior(orders, customer))),
         silverDone("fact_trips").zip(silverDone("dim_date")).map { _ =>
           write("dm_daily_trip_summary",
-            Gold.dailySummaryFromStar(staged("fact_trips"), staged("dim_date")))
+            Gold.dailySummaryFromStar(Tables.spread(staged("fact_trips")),
+              staged("dim_date")))
         },
         silverDone("fact_trips").zip(silverDone("dim_station")).map { _ =>
           write("dm_popular_routes",
-            Gold.popularRoutesFromStar(staged("fact_trips"), staged("dim_station")))
+            Gold.popularRoutesFromStar(Tables.spread(staged("fact_trips")),
+              staged("dim_station")))
         })
       // SETTLE every future (lift to Try — never fail-fast): the enclosing
       // finally deletes the staging directory, and a fail-fast Await would
@@ -283,21 +293,22 @@ object Pipeline {
     */
   def refreshMart(spark: SparkSession, srcDir: String, warehouseDir: String,
                   mart: String): Unit = {
+    // the star is read as runFullEtl reads its staged copy: the fact
+    // spread, the broadcast dims not
     def live(n: String): Option[DataFrame] = {
       val p = Paths.get(warehouseDir, n)
-      if (Files.exists(p)) Some(Tables.spread(spark.read.parquet(p.toString)))
-      else None
+      if (Files.exists(p)) Some(spark.read.parquet(p.toString)) else None
     }
     val df = mart match {
       case "dm_daily_trip_summary" =>
-        (live("fact_trips"), live("dim_date")) match {
+        (live("fact_trips").map(Tables.spread), live("dim_date")) match {
           case (Some(fact), Some(dd)) => Gold.dailySummaryFromStar(fact, dd)
           case _ =>
             Gold.dailyTripSummary(Tables.lineitem(spark, srcDir), Tables.orders(spark, srcDir),
               Silver.dimDate(Tables.orders(spark, srcDir), Tables.lineitem(spark, srcDir)))
         }
       case "dm_popular_routes" =>
-        (live("fact_trips"), live("dim_station")) match {
+        (live("fact_trips").map(Tables.spread), live("dim_station")) match {
           case (Some(fact), Some(ds)) => Gold.popularRoutesFromStar(fact, ds)
           case _ =>
             Gold.popularRoutes(Tables.lineitem(spark, srcDir), Tables.orders(spark, srcDir),

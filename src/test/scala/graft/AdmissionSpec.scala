@@ -335,10 +335,7 @@ class AdmissionSpec extends AnyFunSuite {
           w = 5, numHashes = 8, bandWidth = 2, stateDir = Some(stateDir))))
       q.awaitTermination()
       assert(q.recentProgress.count(_.numInputRows > 0) === 3)
-      // listener events are delivered asynchronously: drain the bus
-      val bus = spark.sparkContext.getClass.getMethod("listenerBus")
-        .invoke(spark.sparkContext)
-      bus.getClass.getMethod("waitUntilEmpty").invoke(bus)
+      drainListenerBus()
       jobs.toArray(Array.empty[(String, String, String)]).toSeq
         .filter(_._1 == q.id.toString)
         .groupBy(_._2).map { case (b, js) =>

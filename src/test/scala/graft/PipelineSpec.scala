@@ -23,6 +23,62 @@ class PipelineSpec extends AnyFunSuite {
     }
   }
 
+  /** Runs one [[Pipeline.runFullEtl]] at sf0.01 and returns its job
+    * count and, per staged table, the physical plans of the SQL
+    * executions that wrote it.
+    */
+  private def tracedRebuild(): (Int, Map[String, Seq[String]]) = {
+    val dir = new java.io.File(new java.io.File(sfDir).getParentFile, "sf0.01").getPath
+    val wh = tmpDir("graft_wh_budget").toString
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+      override def onOtherEvent(e: org.apache.spark.scheduler.SparkListenerEvent): Unit =
+        e match {
+          case s: org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart =>
+            plans.add(s.physicalPlanDescription)
+          case _ =>
+        }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      Pipeline.runFullEtl(spark, dir, wh)
+      drainListenerBus()
+    } finally spark.sparkContext.removeSparkListener(listener)
+    // the write command's first argument is its output path
+    val target = """Arguments: \S*\.staging-[0-9a-f-]+/(\w+),""".r
+    val writes = plans.toArray(Array.empty[String]).toSeq
+      .flatMap(p => target.findFirstMatchIn(p).map(m => m.group(1) -> p))
+      .groupBy(_._1).map { case (t, ps) => t -> ps.map(_._2) }
+    (jobs.get, writes)
+  }
+
+  test("a rebuild stays within its job budget and spreads only the fact pipeline") {
+    // Measured at 47 jobs on this fixture (sf0.01, 4 cores): the silver
+    // wave, the two source-read marts and the two star-read marts, whose
+    // shuffle and broadcast stages adaptive execution submits as jobs of
+    // their own. A schema-inference read of a staged table, or a
+    // round-robin spread in front of an aggregate, raises it.
+    val JobsPerRebuild = 47
+    val (jobs, writes) = tracedRebuild()
+    info(s"one rebuild ran $jobs jobs")
+    assert(writes.keySet === Set("dim_station", "dim_user", "dim_date", "fact_trips",
+      "dm_daily_trip_summary", "dm_popular_routes", "dm_station_popularity",
+      "dm_user_behavior"), s"unexpected write targets ${writes.keySet}")
+    // the aggregate-only consumers read the plain scan: their partial
+    // aggregate runs in the scan task, behind no round-robin exchange
+    Seq("dim_date", "dim_user", "dm_station_popularity", "dm_user_behavior").foreach { t =>
+      writes(t).foreach(plan => assert(!plan.contains("RoundRobinPartitioning"),
+        s"$t spreads its source before aggregating it:\n$plan"))
+    }
+    // the fact keeps its spread: one-file sources, four cores
+    assert(writes("fact_trips").exists(_.contains("RoundRobinPartitioning")),
+      "fact_trips lost the spread of its one-file sources")
+    assert(jobs <= JobsPerRebuild, s"one rebuild ran $jobs jobs, over the budget $JobsPerRebuild")
+  }
+
   test("corpus ETL: every stage binds, release is self-consistent, re-release replaces atomically") {
     import org.apache.spark.sql.functions._
     val wh = tmpDir("graft_corpus_wh").toString

@@ -35,6 +35,26 @@ object SparkTestBase {
     assert(left.isEmpty, s"$what left persistent RDDs $left behind")
   }
 
+  /** Blocks until every listener event posted so far is delivered:
+    * listener events are delivered asynchronously.
+    */
+  def drainListenerBus(): Unit = {
+    val bus = spark.sparkContext.getClass.getMethod("listenerBus")
+      .invoke(spark.sparkContext)
+    bus.getClass.getMethod("waitUntilEmpty").invoke(bus)
+  }
+
+  /** `a` and `b` have the same column names and types and hold the same
+    * multiset of rows, checked with `exceptAll` both ways.
+    */
+  def assertSameRows(a: org.apache.spark.sql.DataFrame, b: org.apache.spark.sql.DataFrame,
+                     what: String): Unit = {
+    assert(a.schema.map(f => f.name -> f.dataType) === b.schema.map(f => f.name -> f.dataType),
+      s"$what: columns differ")
+    assert(a.exceptAll(b).count() === 0, s"$what: rows only in the first")
+    assert(b.exceptAll(a).count() === 0, s"$what: rows only in the second")
+  }
+
   /** Runs `op` and returns the entries it added under java.io.tmpdir
     * whose names start with `prefix` (suites run one at a time in the
     * test JVM, so the prefix isolates the operation under test).

@@ -99,9 +99,7 @@ class StampSpec extends AnyFunSuite {
     spark.sparkContext.addSparkListener(listener)
     try {
       body
-      val bus = spark.sparkContext.getClass.getMethod("listenerBus")
-        .invoke(spark.sparkContext)
-      bus.getClass.getMethod("waitUntilEmpty").invoke(bus)
+      drainListenerBus()
     } finally spark.sparkContext.removeSparkListener(listener)
     jobs.toArray(Array.empty[String]).toSeq
   }

@@ -42,32 +42,34 @@ import org.apache.spark.unsafe.types.UTF8String
   */
 object Classifier {
 
-  /** The hashed uni+bigram feature-bucket stream of one document — the
-    * ONE definition of the NB feature space, shared by the training
-    * aggregation ([[nbCountsBuild]]) and the scoring kernel
-    * ([[NbTable]]). Salt `nb|` keeps this hash family independent of
-    * the `dsir|` importance buckets; split keeps trailing empty tokens
-    * (limit -1) like split()/string_split; each bucket is the first 4
-    * md5 bytes ([[graft.functions.KeyFunctions.md5First32]]) of the
-    * salted feature string. A FUNCTION VALUE (bound to a local before
-    * each flatMap captures it): a method reference would drag the whole
-    * non-serializable Classifier object into the task closure.
+  /** The hashed uni+bigram feature-bucket stream of one document under
+    * a `salt` — the ONE feature kernel of the NB feature space (salt
+    * `nb|`: the training aggregation [[nbCountsBuild]] and the scoring
+    * kernel [[NbTable]]) and of the DSIR importance buckets (salt
+    * `dsir|`, [[Corpus]]); the salts keep the two hash families
+    * independent. Split keeps trailing empty tokens (limit -1) like
+    * split()/string_split; each bucket is the first 4 md5 bytes
+    * ([[graft.functions.KeyFunctions.md5First32]]) of the salted
+    * feature string. A FUNCTION VALUE (bound to a local before each
+    * flatMap captures it): a method reference would drag the whole
+    * non-serializable object into the task closure.
     */
-  private[ext] val bucketIter: (String, Int) => Iterator[Int] = (text, buckets) =>
-    if (text == null) Iterator.empty
-    else {
-      import org.apache.spark.unsafe.types.UTF8String
-      val t = text.split(" ", -1)
-      def b(f: String): Int =
-        (graft.functions.KeyFunctions.md5First32(
-          UTF8String.fromString("nb|" + f)) % buckets).toInt
-      val uni = t.iterator.map(b)
-      val bi =
-        if (t.length < 2) Iterator.empty
-        else (0 until t.length - 1).iterator
-          .map(i => b(t(i) + " " + t(i + 1)))
-      uni ++ bi
-    }
+  private[ext] val ngramBuckets: (String, String, Int) => Iterator[Int] =
+    (salt, text, buckets) =>
+      if (text == null) Iterator.empty
+      else {
+        import org.apache.spark.unsafe.types.UTF8String
+        val t = text.split(" ", -1)
+        def b(f: String): Int =
+          (graft.functions.KeyFunctions.md5First32(
+            UTF8String.fromString(salt + f)) % buckets).toInt
+        val uni = t.iterator.map(b)
+        val bi =
+          if (t.length < 2) Iterator.empty
+          else (0 until t.length - 1).iterator
+            .map(i => b(t(i) + " " + t(i + 1)))
+        uni ++ bi
+      }
 
   /** Sentinel bucket carrying the per-label DOCUMENT count (the prior's
     * numerator) inside the same additive count frame as the feature
@@ -96,11 +98,11 @@ object Classifier {
     // (label, bucket), so map-side combine collapses the occurrence
     // stream to ≤ labels×buckets rows per partition before the only
     // exchange.
-    val biFn = bucketIter // local copy: the closure must not capture the object
+    val biFn = ngramBuckets // local copy: the closure must not capture the object
     val feat = labeled.select(col("_label"), col("text"))
       .as[(String, String)]
       .flatMap { case (label, text) =>
-        biFn(text, buckets).map(bk => (label, bk))
+        biFn("nb|", text, buckets).map(bk => (label, bk))
       }
       .toDF("label", "bucket")
       .groupBy(col("label"), col("bucket"))
@@ -341,7 +343,7 @@ private[graft] final class NbTable private (
     * has no features.
     */
   def scores(text: String): Array[NbLabelScore] = {
-    val bs = Classifier.bucketIter(text, buckets).toArray
+    val bs = Classifier.ngramBuckets("nb|", text, buckets).toArray
     if (bs.isEmpty) Array.empty
     else {
       java.util.Arrays.sort(bs)

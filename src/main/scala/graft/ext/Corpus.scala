@@ -728,35 +728,20 @@ object Corpus {
     */
   private def hashedNgramFeatures(docs: DataFrame, buckets: Int,
                                   carry: Seq[String] = Nil): DataFrame = {
-    // Typed flatMap (round 17, the NB feature-kernel rewrite applied
-    // to the DSIR family): one corpus pass emits every uni+bigram
-    // occurrence's bucket directly via the JVM md5First32 kernel —
-    // bit-identical buckets (same "dsir|"-salted md5-first-8-hex value,
-    // split keeps trailing empty tokens), no interpreted array lambda,
-    // no two-scan union, no hex round-trip. Carry is the one boolean
-    // slice flag the sliced estimator threads through.
+    // Typed flatMap (round 17): one corpus pass emits every uni+bigram
+    // occurrence's bucket directly via the NB feature kernel
+    // ([[Classifier.ngramBuckets]]) under the "dsir|" salt — no
+    // interpreted array lambda, no two-scan union, no hex round-trip.
+    // Carry is the one boolean slice flag the sliced estimator threads
+    // through.
     val spark = docs.sparkSession
     import spark.implicits._
-    import org.apache.spark.unsafe.types.UTF8String
-    def bucketsOf(text: String): Iterator[Int] =
-      if (text == null) Iterator.empty
-      else {
-        val t = text.split(" ", -1)
-        def b(f: String): Int =
-          (graft.functions.KeyFunctions.md5First32(
-            UTF8String.fromString("dsir|" + f)) % buckets).toInt
-        val uni = t.iterator.map(b)
-        val bi =
-          if (t.length < 2) Iterator.empty
-          else (0 until t.length - 1).iterator
-            .map(i => b(t(i) + " " + t(i + 1)))
-        uni ++ bi
-      }
+    val kernel = Classifier.ngramBuckets // local copy: the closure must not capture the object
     carry match {
       case Seq() =>
         docs.select(col("doc_id").cast("long"), col("text"))
           .as[(Long, String)]
-          .flatMap { case (id, text) => bucketsOf(text).map(bk => (id, bk)) }
+          .flatMap { case (id, text) => kernel("dsir|", text, buckets).map(bk => (id, bk)) }
           .toDF("doc_id", "bucket")
       case Seq(k) =>
         require(docs.schema(k).dataType ==
@@ -767,7 +752,7 @@ object Corpus {
             col(k).cast("boolean"), col("text"))
           .as[(Long, Option[Boolean], String)]
           .flatMap { case (id, flag, text) =>
-            bucketsOf(text).map(bk => (id, flag, bk))
+            kernel("dsir|", text, buckets).map(bk => (id, flag, bk))
           }
           .toDF("doc_id", k, "bucket")
       case other => throw new IllegalArgumentException(

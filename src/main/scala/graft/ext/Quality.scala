@@ -118,24 +118,20 @@ object Quality {
     * stamp closes. The stamp is a constant column (RLE-compresses to
     * nothing); [[histMerge]] and [[driftStated]] cross-validate it.
     */
-  def histWrite(hist: DataFrame, dir: String, binWidth: Double): Unit = {
-    require(Seq("bin", "n").forall(hist.columns.contains),
-      "histWrite: not a histogram — need the (bin, n) columns histBuild emits")
-    Stamp.require(hist, "histWrite input", Seq("bin_width" -> binWidth))
-    hist.select(col("bin"), col("n")).withColumn("bin_width", lit(binWidth))
-      .write.mode("overwrite").parquet(dir)
-  }
+  def histWrite(hist: DataFrame, dir: String, binWidth: Double): Unit =
+    Sketches.writeStamped(hist, dir, "histWrite", Hist,
+      Seq("bin_width" -> binWidth), bounds = Nil)
+
+  private val Hist = Sketches.Shape("histogram", Seq("bin", "n"), "histBuild")
 
   /** Additive histogram merge: sum counts per bin — exactly the
     * single-pass histogram of the union stream. Stamped (persisted)
     * inputs are cross-validated against the declared width.
     */
   def histMerge(binWidth: Double, parts: DataFrame*): DataFrame = {
-    require(parts.nonEmpty, "histMerge: at least one histogram")
-    parts.foreach(p => require(Seq("bin", "n").forall(p.columns.contains),
-      "histMerge: not a histogram — need the (bin, n) columns histBuild emits"))
-    parts.foreach(Stamp.require(_, "histMerge input", Seq("bin_width" -> binWidth)))
-    parts.map(_.select(col("bin"), col("n"))).reduce(_ unionByName _)
+    Sketches.mergeChecked("histMerge", Hist, parts, Seq("bin_width"),
+      Seq("bin_width" -> binWidth))
+    Sketches.unionOf(parts, Seq("bin", "n"))
       .groupBy(col("bin")).agg(sum(col("n")).as("n"))
   }
 
@@ -164,8 +160,7 @@ object Quality {
                    removed: DataFrame): DataFrame = {
     Seq(state -> "histSubtract state", removed -> "histSubtract removed")
       .foreach { case (p, what) =>
-        require(Seq("bin", "n").forall(p.columns.contains),
-          s"$what: not a histogram — need the (bin, n) columns histBuild emits")
+        Hist.require(p, what)
         Stamp.require(p, what, Seq("bin_width" -> binWidth))
       }
     // materialized ONCE (histograms are bins-bounded, not corpus-sized):

@@ -1,7 +1,8 @@
 package graft.ext
 
 import scala.collection.immutable.ListMap
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Sketch aggregations — the sublinear-state summaries a 100 TB profile
@@ -24,68 +25,182 @@ object Sketches {
   //
   // The deterministic sketch family (Count-Min / Bloom / KMV / quantile
   // sample) is PIPELINE state: built per day/shard, persisted, merged
-  // with later batches, estimated/probed from the merged state. Persisted
-  // sketch tables carry their geometry as stamp columns, and every
-  // merge/estimate/probe checks it through [[Stamp]] before computing.
+  // with later batches, estimated/probed from the merged state.
+  // Persisted sketch tables carry their geometry as stamp columns, and
+  // every merge/estimate/probe checks it through [[Stamp]] before
+  // computing. Each operation the family shares has ONE implementation:
+  //
+  //  - ONE bottom-k selection ([[bottomK]]) builds and merges every KMV
+  //    sketch, keyed or not, and every quantile sample, and re-ranks the
+  //    overlap matrix's per-pair union sketch. An unkeyed form is the
+  //    keyed code at zero keys, and every input partition is pruned to
+  //    at most k distinct rows per key before the one exchange.
+  //  - ONE KMV estimator ([[kmvEst]]); [[kmvSetOps]] is the
+  //    [[kmvOverlapMatrix]] estimate block ([[setOpsBy]]) at zero keys.
+  //  - ONE stamped-state writer ([[writeStamped]]) behind every `*Write`
+  //    here and [[graft.ext.Quality.histWrite]]: shape check, stamp
+  //    check, one range probe over the declared bounds, then stamp and
+  //    write.
+  //  - ONE merge preamble ([[mergeChecked]]) in front of every merge:
+  //    at least one input, each of the family's shape, stamps agreeing.
 
-  /** Persist a Count-Min sketch with its geometry stamped. Validates
-    * the sketch actually FITS the declared geometry first (a one-job
-    * max probe over sketch-sized state) — writing a 4×4096 sketch as
-    * 4×1024 would corrupt every later estimate.
+  /** The rows of one sketch family as a refusal names them: the family,
+    * the columns an operation needs and the build that emits them.
     */
-  def countMinWrite(cms: DataFrame, dir: String,
-                    depth: Int = 4, width: Int = 1024): Unit = {
-    require(Seq("j", "bucket", "total").forall(cms.columns.contains),
-      "countMinWrite: not a Count-Min sketch — need (j, bucket, total)")
-    Stamp.require(cms, "countMinWrite input", Seq("depth" -> depth, "width" -> width))
-    val mx = cms.agg(max(col("j")), max(col("bucket"))).collect()(0)
-    if (!mx.isNullAt(0))
-      require(mx.getInt(0) < depth && mx.getLong(1) < width,
-        s"countMinWrite: sketch has rows up to (j=${mx.getInt(0)}, " +
-          s"bucket=${mx.getLong(1)}) — outside the declared ${depth}x$width geometry")
-    cms.select(col("j"), col("bucket"), col("total"))
-      .withColumn("depth", lit(depth)).withColumn("width", lit(width))
+  private[ext] final case class Shape(family: String, cols: Seq[String],
+                                      builtBy: String) {
+    def require(df: DataFrame, what: String): Unit =
+      Predef.require(cols.forall(df.columns.contains),
+        s"$what: not a $family — need (${cols.mkString(", ")}) as built by $builtBy")
+  }
+
+  private val CountMin = Shape("Count-Min sketch", Seq("j", "bucket", "total"), "countMinBuild")
+  private val BloomBits = Shape("Bloom filter", Seq("pos"), "bloomBuild")
+  private val KmvHashes = Shape("KMV sketch", Seq("h"), "kmvBuild")
+
+  /** The stamped-state writer: the `shape` check, [[Stamp.require]]
+    * against the declared `stamp`, ONE max probe over `bounds` (column →
+    * the largest value the declared geometry holds — a 4×4096 sketch
+    * written as 4×1024 would corrupt every later estimate), then the
+    * shape's columns with the stamp attached, overwritten into `dir`.
+    */
+  private[ext] def writeStamped(state: DataFrame, dir: String, what: String,
+                                shape: Shape, stamp: Seq[(String, Any)],
+                                bounds: Seq[(String, Long)]): Unit = {
+    shape.require(state, what)
+    Stamp.require(state, s"$what input", stamp)
+    if (bounds.nonEmpty) {
+      val mx = state.agg(max(col(bounds.head._1)),
+        bounds.tail.map(b => max(col(b._1))): _*).collect()(0)
+      require(bounds.indices.forall(i =>
+          mx.isNullAt(i) || mx.getAs[Number](i).longValue <= bounds(i)._2),
+        s"$what: sketch has rows up to " +
+          Stamp.show(bounds.indices.map(i => bounds(i)._1 -> mx.get(i))) +
+          s" — outside the declared ${Stamp.show(stamp)} geometry")
+    }
+    Stamp.restamp(state.select(shape.cols.map(col): _*), Some(ListMap(stamp: _*)))
       .write.mode("overwrite").parquet(dir)
   }
 
+  /** The merge preamble: at least one input, each of `shape`, their
+    * `stampCols` stamps agreeing ([[Stamp.agreeing]], one probe per
+    * input), and the common stamp equal to the geometry the merge
+    * declares (`declared`; none where the merge takes its geometry from
+    * the inputs).
+    */
+  private[ext] def mergeChecked(what: String, shape: Shape, parts: Seq[DataFrame],
+                                stampCols: Seq[String],
+                                declared: Seq[(String, Any)] = Nil): Unit = {
+    require(parts.nonEmpty, s"$what: at least one ${shape.family}")
+    parts.foreach(shape.require(_, what))
+    Stamp.require(Stamp.agreeing(parts, what, stampCols), s"$what input", declared)
+  }
+
+  /** The inputs' `cols`, unioned by name. */
+  private[ext] def unionOf(parts: Seq[DataFrame], cols: Seq[String]): DataFrame =
+    parts.map(_.select(cols.map(col): _*)).reduce(_ unionByName _)
+
+  /** The bottom-k selection: per group of `keys`, the k smallest
+    * DISTINCT rows in `order` (Long, Int or Double columns, ascending),
+    * ranked 1..min(k, distinct rows) — `(keys…, order…, rank)`. With no
+    * key the whole frame is one group.
+    *
+    * Bounded by construction: each input partition first keeps at most
+    * k distinct rows per group (a k-bounded TreeSet per group), so the
+    * one exchange carries at most partitions × groups × k rows — never
+    * the item stream. A row in a group's global bottom-k is in its own
+    * partition's bottom-k, the argument that also makes every merge law
+    * exact. The prune compares as Spark sorts (NULL first, -0.0 equal to
+    * 0.0, NaN equal to NaN and above every number), so it keeps exactly
+    * the rows the final ordering keeps; the final dense rank runs over
+    * the pruned rows, and the distinct over it folds rows that sort
+    * equal (Spark writes -0.0 as 0.0) inside the ranked partitions.
+    */
+  private def bottomK(rows: DataFrame, keys: Seq[String], order: Seq[String],
+                      k: Int): DataFrame = {
+    val in = rows.select((keys ++ order).map(col): _*)
+    val nk = keys.length
+    val ord = new SqlOrder(nk, nk + order.length)
+    val pruned = in.mapPartitions { it =>
+      val groups = scala.collection.mutable.HashMap
+        .empty[Row, scala.collection.mutable.TreeSet[Row]]
+      it.foreach { r =>
+        val g = groups.getOrElseUpdate(Row.fromSeq((0 until nk).map(r.get)),
+          scala.collection.mutable.TreeSet.empty[Row](ord))
+        if (g.size < k) g += r
+        else if (ord.lt(r, g.last) && g.add(r)) g -= g.last
+      }
+      groups.valuesIterator.flatMap(_.iterator)
+    }(Encoders.row(in.schema))
+    val w = Window.partitionBy(keys.map(col): _*).orderBy(order.map(col): _*)
+    pruned.withColumn("rank", dense_rank().over(w))
+      .filter(col("rank") <= k)
+      .distinct()
+  }
+
+  /** Row order over the columns `from until until` as Spark sorts them
+    * ascending: NULL first; doubles equal when `==` (so -0.0 is 0.0),
+    * else by `java.lang.Double.compare` (NaN equals NaN, above all).
+    */
+  private final class SqlOrder(from: Int, until: Int) extends Ordering[Row] {
+    def compare(a: Row, b: Row): Int = {
+      var i = from
+      var c = 0
+      while (c == 0 && i < until) {
+        c = (a.get(i), b.get(i)) match {
+          case (null, null) => 0
+          case (null, _) => -1
+          case (_, null) => 1
+          case (x: Double, y: Double) =>
+            if (x == y) 0 else java.lang.Double.compare(x, y)
+          case (x: Long, y: Long) => java.lang.Long.compare(x, y)
+          case (x: Int, y: Int) => Integer.compare(x, y)
+        }
+        i += 1
+      }
+      c
+    }
+  }
+
+  /** The KMV distinct-count estimator (Beyer et al., SIGMOD 2007):
+    * (k−1)·2³²/h_k over a full sketch, h_k its k-th smallest hash — one
+    * IEEE division of exact integers, bit-identical across engines — and
+    * the sketch size itself under k, where the sketch IS the exact
+    * distinct hash set.
+    */
+  private def kmvEst(n: Column, hK: Column, k: Int): Column =
+    when(n < k, n.cast("double"))
+      .otherwise(lit((k - 1).toDouble) * lit(4294967296.0) / hK.cast("double"))
+
+  /** Persist a Count-Min sketch with its geometry stamped, after the
+    * probe that it FITS the declared geometry.
+    */
+  def countMinWrite(cms: DataFrame, dir: String,
+                    depth: Int = 4, width: Int = 1024): Unit =
+    writeStamped(cms, dir, "countMinWrite", CountMin,
+      Seq("depth" -> depth, "width" -> width),
+      Seq("j" -> (depth - 1).toLong, "bucket" -> (width - 1).toLong))
+
   /** Persist a Bloom filter with its geometry stamped. Positions are
-    * range-checked against the declared numBits (max probe) — the
-    * failure [[bloomGateColumn]] would otherwise hit as an opaque
+    * range-checked against the declared numBits — the failure
+    * [[bloomGateColumn]] would otherwise hit as an opaque
     * ArrayIndexOutOfBounds on the driver.
     */
   def bloomWrite(bloom: DataFrame, dir: String,
-                 numBits: Int = 8192, numHashes: Int = 4): Unit = {
-    require(bloom.columns.contains("pos"),
-      "bloomWrite: not a Bloom filter — need the pos column bloomBuild emits")
-    Stamp.require(bloom, "bloomWrite input",
-      Seq("num_bits" -> numBits, "num_hashes" -> numHashes))
-    val mx = bloom.agg(max(col("pos"))).collect()(0)
-    if (!mx.isNullAt(0))
-      require(mx.getLong(0) < numBits,
-        s"bloomWrite: set bit at position ${mx.getLong(0)} — outside the " +
-          s"declared $numBits-bit geometry")
-    bloom.select(col("pos"))
-      .withColumn("num_bits", lit(numBits)).withColumn("num_hashes", lit(numHashes))
-      .write.mode("overwrite").parquet(dir)
-  }
+                 numBits: Int = 8192, numHashes: Int = 4): Unit =
+    writeStamped(bloom, dir, "bloomWrite", BloomBits,
+      Seq("num_bits" -> numBits, "num_hashes" -> numHashes),
+      Seq("pos" -> (numBits - 1).toLong))
 
   /** Persist a KMV sketch with k stamped — the estimator's (k−1)
     * numerator and under-full cutoff ride WITH the state instead of
     * being re-supplied (possibly wrong, silently skewing the estimate)
-    * at read time; [[kmvEstimateStated]] reads them back.
+    * at read time; [[kmvEstimateStated]] reads them back. A sketch
+    * holding more than k ranks was built with a larger k and refuses.
     */
-  def kmvWrite(sketch: DataFrame, dir: String, k: Int = 256): Unit = {
-    require(Seq("rank", "h").forall(sketch.columns.contains),
-      "kmvWrite: not a KMV sketch — need (rank, h) as built by kmvBuild")
-    Stamp.require(sketch, "kmvWrite input", Seq("k" -> k))
-    val mx = sketch.agg(max(col("rank"))).collect()(0)
-    if (!mx.isNullAt(0))
-      require(mx.getInt(0) <= k,
-        s"kmvWrite: sketch holds ${mx.getInt(0)} ranks — more than the " +
-          s"declared k=$k; it was built with a larger k")
-    sketch.select(col("rank"), col("h")).withColumn("k", lit(k))
-      .write.mode("overwrite").parquet(dir)
-  }
+  def kmvWrite(sketch: DataFrame, dir: String, k: Int = 256): Unit =
+    writeStamped(sketch, dir, "kmvWrite", Shape("KMV sketch", Seq("rank", "h"), "kmvBuild"),
+      Seq("k" -> k), Seq("rank" -> k.toLong))
 
   /** Distinct-count estimate from a STAMPED (persisted) KMV sketch: k
     * comes from the state itself, so a caller cannot skew the estimate
@@ -202,14 +317,8 @@ object Sketches {
     * matter how many trillions of items the inputs summarize.
     */
   def countMinMerge(parts: DataFrame*): DataFrame = {
-    require(parts.nonEmpty, "countMinMerge: at least one sketch")
-    parts.foreach(p =>
-      require(Seq("j", "bucket", "total").forall(p.columns.contains),
-        "countMinMerge: not a Count-Min sketch — need (j, bucket, total) " +
-          "columns as built by countMinBuild"))
-    Stamp.agreeing(parts, "countMinMerge", Seq("depth", "width"))
-    parts.map(_.select(col("j"), col("bucket"), col("total")))
-      .reduce(_ unionByName _)
+    mergeChecked("countMinMerge", CountMin, parts, Seq("depth", "width"))
+    unionOf(parts, Seq("j", "bucket", "total"))
       .groupBy(col("j"), col("bucket"))
       .agg(sum(col("total")).as("total"))
   }
@@ -257,55 +366,40 @@ object Sketches {
     * k smallest of A∪B, because any hash in the true global bottom-k is
     * in its own batch's bottom-k ([[kmvMerge]]).
     *
-    * Scale shape: a bounded TreeSet per partition caps in-flight state
-    * at k hashes no matter how many trillions of items stream through;
-    * only partitions×k rows reach the final distinct+sort, which is
-    * sketch-sized. The estimator is the standard unbiased KMV form
+    * Scale shape: the bottom-k selection ([[bottomK]]) caps each
+    * partition's in-flight state at k hashes no matter how many
+    * trillions of items stream through; only partitions×k rows reach
+    * the one exchange and the final rank, which is sketch-sized. The
+    * estimator is the standard unbiased KMV form
     * (k−1)·2³²/h_k ([[kmvEstimate]]) — one IEEE division of exact
     * integers, bit-identical across engines.
     * Output: (rank, h), rank 1..min(k, distinct).
     */
-  def kmvBuild(items: DataFrame, itemCol: String, k: Int = 256): DataFrame = {
-    require(k >= 2, "kmvBuild: need k >= 2 for the estimator")
-    val spark = items.sparkSession
-    import spark.implicits._
-    // family-wide null policy: null items dropped (a null hash would
-    // otherwise fail the non-nullable Long deserialization opaquely)
-    val hashed = items.filter(col(itemCol).isNotNull)
-      .select(Dedup.hash32(col(itemCol)).as("h")).as[Long]
-    val partial = hashed.mapPartitions { it =>
-      val set = scala.collection.mutable.TreeSet.empty[Long]
-      it.foreach { h =>
-        if (set.size < k) set += h
-        else if (h < set.last && set.add(h)) set -= set.last
-      }
-      set.iterator
-    }
-    val w = org.apache.spark.sql.expressions.Window.orderBy(col("h"))
-    // the rank window runs over at most k post-limit rows — never data.
-    partial.toDF("h").distinct().orderBy(col("h")).limit(k)
-      .withColumn("rank", row_number().over(w))
-      .select(col("rank"), col("h"))
-  }
+  def kmvBuild(items: DataFrame, itemCol: String, k: Int = 256): DataFrame =
+    kmvSketch(items, None, itemCol, k).select(col("rank"), col("h"))
 
   /** Per-key KMV sketches in ONE frame — `(key, rank, h)`, rank
     * 1..min(k, distinct items of that key). The grouped form of
     * [[kmvBuild]] for partitioned audits (one sketch per source /
-    * shard / release). The `row_number ≤ k` filter plans as
-    * WindowGroupLimit: each group prunes to its k smallest hashes
-    * per-partition BEFORE the full sort, so the exchange carries
-    * ~keys×k rows, never the item stream.
+    * shard / release): the same bounded selection with the key, so the
+    * exchange carries at most partitions × keys × k rows, never the
+    * item stream.
     */
   def kmvBuildBy(items: DataFrame, keyCol: String, itemCol: String,
-                 k: Int = 256): DataFrame = {
-    require(k >= 2, "kmvBuildBy: need k >= 2 for the estimator")
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("key")).orderBy(col("h"))
-    items.filter(col(itemCol).isNotNull && col(keyCol).isNotNull)
-      .select(col(keyCol).as("key"), Dedup.hash32(col(itemCol)).as("h"))
-      .distinct()
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+                 k: Int = 256): DataFrame =
+    kmvSketch(items, Some(keyCol), itemCol, k)
+
+  /** `(key, h, rank)` KMV sketches of `itemCol` per `keyCol` (renamed
+    * `key`), or `(h, rank)` of the whole frame with no key.
+    */
+  private def kmvSketch(items: DataFrame, keyCol: Option[String], itemCol: String,
+                        k: Int): DataFrame = {
+    require(k >= 2, "KMV sketch: need k >= 2 for the estimator")
+    // family-wide null policy: null items (and keys) dropped
+    val kept = (keyCol.toSeq :+ itemCol).map(col(_).isNotNull).reduce(_ && _)
+    bottomK(items.filter(kept).select(
+        keyCol.toSeq.map(col(_).as("key")) :+ Dedup.hash32(col(itemCol)).as("h"): _*),
+      keyCol.toSeq.map(_ => "key"), Seq("h"), k)
   }
 
   /** Merge grouped KMV sketch frames per key: each key's merged sketch
@@ -319,17 +413,9 @@ object Sketches {
     * only one input keep their sketch unchanged.
     */
   def kmvMergeBy(k: Int, parts: DataFrame*): DataFrame = {
-    require(parts.nonEmpty, "kmvMergeBy: at least one sketch frame")
-    parts.foreach(p => require(Seq("key", "h").forall(p.columns.contains),
-      "kmvMergeBy: not a grouped KMV sketch — need (key, h) as built " +
-        "by kmvBuildBy"))
-    parts.foreach(Stamp.require(_, "kmvMergeBy input", Seq("k" -> k)))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("key")).orderBy(col("h"))
-    parts.map(_.select(col("key"), col("h"))).reduce(_.unionByName(_))
-      .distinct()
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+    mergeChecked("kmvMergeBy", Shape("grouped KMV sketch", Seq("key", "h"), "kmvBuildBy"),
+      parts, Seq("k"), Seq("k" -> k))
+    bottomK(unionOf(parts, Seq("key", "h")), Seq("key"), Seq("h"), k)
   }
 
   /** ALL-PAIRS overlap estimates from [[kmvBuildBy]] sketches — the
@@ -345,9 +431,8 @@ object Sketches {
     * not a data-sized cartesian.)
     */
   def kmvOverlapMatrix(sketches: DataFrame, k: Int = 256): DataFrame = {
-    require(Seq("key", "rank", "h").forall(sketches.columns.contains),
-      "kmvOverlapMatrix: not a grouped KMV sketch frame — need " +
-        "(key, rank, h) as built by kmvBuildBy")
+    Shape("grouped KMV sketch frame", Seq("key", "rank", "h"), "kmvBuildBy")
+      .require(sketches, "kmvOverlapMatrix")
     Stamp.require(sketches, "kmvOverlapMatrix input", Seq("k" -> k))
     // materialized ONCE (≤ keys×k rows — bounded by the scaladoc's
     // keys-are-sources contract): the matrix reads the sketch frame
@@ -363,32 +448,37 @@ object Sketches {
       .crossJoin(keys.select(col("key").as("s2")))
       .filter(col("s1") < col("s2"))
     val left = pairs.join(sk.withColumnRenamed("key", "s1"), Seq("s1"))
-      .select(col("s1"), col("s2"), col("h"),
-        lit(1).as("in_a"), lit(0).as("in_b"))
+      .select(col("s1"), col("s2"), col("h"))
     val right = pairs.join(sk.withColumnRenamed("key", "s2"), Seq("s2"))
-      .select(col("s1"), col("s2"), col("h"),
-        lit(0).as("in_a"), lit(1).as("in_b"))
-    val flagged = left.unionByName(right)
-      .groupBy(col("s1"), col("s2"), col("h"))
+      .select(col("s1"), col("s2"), col("h"))
+    setOpsBy(left, right, Seq("s1", "s2"), k)
+  }
+
+  /** The [[kmvSetOps]] estimates per group of `keys`, from two sketch
+    * sides `(keys…, h)`: the union sketch is the bottom-k of both sides'
+    * hashes, each flagged by the sides that hold it, and `n_common`
+    * counts the union hashes both sides hold. Output `(keys…,
+    * n_union_sketch, h_k, n_common, union_est, jaccard, inter_est)`; at
+    * zero keys the one row of [[kmvSetOps]].
+    */
+  private def setOpsBy(a: DataFrame, b: DataFrame, keys: Seq[String],
+                       k: Int): DataFrame = {
+    val kc = keys.map(col)
+    def side(df: DataFrame, inA: Int) = df.select(kc ++ Seq(col("h"),
+      lit(inA).as("in_a"), lit(1 - inA).as("in_b")): _*)
+    val flagged = side(a, 1).unionByName(side(b, 0))
+      .groupBy(kc :+ col("h"): _*)
       .agg(max(col("in_a")).as("in_a"), max(col("in_b")).as("in_b"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("s1"), col("s2")).orderBy(col("h"))
-    val unionSk = flagged.withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
-    val unionEst =
-      when(col("n_union_sketch") < k, col("n_union_sketch").cast("double"))
-        .otherwise(lit((k - 1).toDouble) * lit(4294967296.0) /
-          col("h_k").cast("double"))
-    unionSk.groupBy(col("s1"), col("s2"))
+    val unionEst = kmvEst(col("n_union_sketch"), col("h_k"), k)
+    val jaccard = col("n_common").cast("double") / col("n_union_sketch").cast("double")
+    bottomK(flagged, keys, Seq("h", "in_a", "in_b"), k)
+      .groupBy(kc: _*)
       .agg(count(lit(1)).as("n_union_sketch"), max(col("h")).as("h_k"),
         sum(when(col("in_a") === 1 && col("in_b") === 1, 1L).otherwise(0L))
           .as("n_common"))
-      .select(col("s1"), col("s2"), col("n_union_sketch"), col("h_k"),
-        col("n_common"), unionEst.as("union_est"),
-        (col("n_common").cast("double") /
-          col("n_union_sketch").cast("double")).as("jaccard"),
-        (col("n_common").cast("double") /
-          col("n_union_sketch").cast("double") * unionEst).as("inter_est"))
+      .select(kc ++ Seq(col("n_union_sketch"), col("h_k"), col("n_common"),
+        unionEst.as("union_est"), jaccard.as("jaccard"),
+        (jaccard * unionEst).as("inter_est")): _*)
   }
 
   /** Merge KMV sketches: k smallest distinct hashes of the union of the
@@ -397,15 +487,8 @@ object Sketches {
     * contract); pass the same k used at build time.
     */
   def kmvMerge(k: Int, parts: DataFrame*): DataFrame = {
-    require(parts.nonEmpty, "kmvMerge: at least one sketch")
-    parts.foreach(p => require(p.columns.contains("h"),
-      "kmvMerge: not a KMV sketch — need the h column kmvBuild emits"))
-    parts.foreach(Stamp.require(_, "kmvMerge input", Seq("k" -> k)))
-    val w = org.apache.spark.sql.expressions.Window.orderBy(col("h"))
-    parts.map(_.select(col("h"))).reduce(_ unionByName _)
-      .distinct().orderBy(col("h")).limit(k)
-      .withColumn("rank", row_number().over(w))
-      .select(col("rank"), col("h"))
+    mergeChecked("kmvMerge", KmvHashes, parts, Seq("k"), Seq("k" -> k))
+    bottomK(unionOf(parts, Seq("h")), Nil, Seq("h"), k).select(col("rank"), col("h"))
   }
 
   /** Distinct-count estimate from a KMV sketch: (k−1)·2³²/h_k when the
@@ -417,15 +500,14 @@ object Sketches {
     Stamp.require(sketch, "kmvEstimate sketch", Seq("k" -> k))
     sketch.agg(count(lit(1)).as("n_sketch"), max(col("h")).as("h_k"))
       .select(col("n_sketch"), col("h_k"),
-        when(col("n_sketch") < k, col("n_sketch").cast("double"))
-          .otherwise(lit((k - 1).toDouble) * lit(4294967296.0) /
-            col("h_k").cast("double")).as("n_est"))
+        kmvEst(col("n_sketch"), col("h_k"), k).as("n_est"))
   }
 
   /** SET ALGEBRA on two KMV sketches — the estimator family's reason to
     * exist beyond single-set counting: |A∪B|, Jaccard(A, B) and |A∩B|
     * from two k-hash lists, WITHOUT touching the underlying sets. The
-    * union sketch is [[kmvMerge]] (exact by the bottom-k property); the
+    * union sketch is the bottom-k of both hash lists (exact by the
+    * [[kmvMerge]] law); the
     * standard KMV set-op estimator (Beyer et al., SIGMOD'07) then reads
     * Jaccard off the union sketch directly: the union's k hashes are a
     * uniform sample of A∪B, so the fraction of them present in BOTH
@@ -434,11 +516,11 @@ object Sketches {
     * Every step is deterministic — set membership of exact integers,
     * one integer ratio and two IEEE multiplications/divisions — so the
     * whole row is bit-reproducible by the DuckDB oracle (contrast theta
-    * /HLL intersections, which no second engine can re-derive). Both
-    * membership probes are sketch-sized joins (≤ k rows a side, ≤ 2k
-    * state total) — the driver never sees the data, and the same row
-    * works on day-30 persisted sketches ([[kmvWrite]] stamps validate
-    * here through [[kmvMerge]]'s [[Stamp]] check).
+    * /HLL intersections, which no second engine can re-derive). The
+    * membership flags ride the sketch-sized union (≤ 2k rows) — the
+    * driver never sees the data, and the same row works on day-30
+    * persisted sketches ([[kmvWrite]] stamps are checked against k).
+    * This is the [[kmvOverlapMatrix]] estimate block at zero keys.
     *
     * When the union holds fewer than k distinct hashes the sketches ARE
     * the exact sets, so n_common/ρ/estimates all turn exact — the same
@@ -447,25 +529,8 @@ object Sketches {
     * inter_est).
     */
   def kmvSetOps(a: DataFrame, b: DataFrame, k: Int = 256): DataFrame = {
-    val u = kmvMerge(k, a, b) // validates both stamps against k
-    val flagged = u
-      .join(a.select(col("h"), lit(1).as("in_a")), Seq("h"), "left")
-      .join(b.select(col("h"), lit(1).as("in_b")), Seq("h"), "left")
-    val unionEst =
-      when(col("n_union_sketch") < k, col("n_union_sketch").cast("double"))
-        .otherwise(lit((k - 1).toDouble) * lit(4294967296.0) /
-          col("h_k").cast("double"))
-    flagged.agg(
-        count(lit(1)).as("n_union_sketch"),
-        max(col("h")).as("h_k"),
-        sum(when(col("in_a") === 1 && col("in_b") === 1, 1L).otherwise(0L))
-          .as("n_common"))
-      .select(col("n_union_sketch"), col("h_k"), col("n_common"),
-        unionEst.as("union_est"),
-        (col("n_common").cast("double") /
-          col("n_union_sketch").cast("double")).as("jaccard"),
-        (col("n_common").cast("double") /
-          col("n_union_sketch").cast("double") * unionEst).as("inter_est"))
+    mergeChecked("kmvSetOps", KmvHashes, Seq(a, b), Seq("k"), Seq("k" -> k))
+    setOpsBy(a, b, Nil, k)
   }
 
   /** Per-row Bloom membership GATE — the no-shuffle form of
@@ -518,11 +583,8 @@ object Sketches {
     * numHashes) — the caller contract the whole family carries.
     */
   def bloomMerge(parts: DataFrame*): DataFrame = {
-    require(parts.nonEmpty, "bloomMerge: at least one filter")
-    parts.foreach(p => require(p.columns.contains("pos"),
-      "bloomMerge: not a Bloom filter — need the pos column bloomBuild emits"))
-    Stamp.agreeing(parts, "bloomMerge", Seq("num_bits", "num_hashes"))
-    parts.map(_.select(col("pos"))).reduce(_ unionByName _).distinct()
+    mergeChecked("bloomMerge", BloomBits, parts, Seq("num_bits", "num_hashes"))
+    unionOf(parts, Seq("pos")).distinct()
   }
 
   /** Membership probe: an item MIGHT be in the set iff every one of its
@@ -567,10 +629,10 @@ object Sketches {
     * batch is a no-op, the same exactly-once-by-algebra argument the
     * streamed KMV maintenance rides.
     *
-    * Scale shape: a k-bounded TreeSet per partition caps in-flight
-    * state at k pairs no matter how many rows stream through; only
-    * partitions×k pairs reach the final distinct+sort, and every later
-    * window runs over ≤ k rows — never data. CDF rank error of the
+    * Scale shape: the bottom-k selection ([[bottomK]], the one KMV
+    * runs) caps each partition's in-flight state at k pairs no matter
+    * how many rows stream through; only partitions×k pairs reach the
+    * final rank — never data. CDF rank error of the
     * q-quantile read is the standard uniform-sample binomial bound
     * O(√(q(1−q)/k)).
     * Output: (rank, h, v), rank 1..min(k, rows) in (h, v) order.
@@ -578,27 +640,11 @@ object Sketches {
   def quantileSampleBuild(items: DataFrame, keyCol: String, valueCol: String,
                           k: Int = 512): DataFrame = {
     require(k >= 2, "quantileSampleBuild: need k >= 2")
-    val spark = items.sparkSession
-    import spark.implicits._
     // family-wide null policy: null keys/values dropped up front
-    val hashed = items
-      .filter(col(keyCol).isNotNull && col(valueCol).isNotNull)
-      .select(Dedup.hash32(col(keyCol).cast("string")).as("h"),
-        col(valueCol).cast("double").as("v"))
-      .as[(Long, Double)]
-    val partial = hashed.mapPartitions { it =>
-      val ord = implicitly[Ordering[(Long, Double)]]
-      val set = scala.collection.mutable.TreeSet.empty[(Long, Double)](ord)
-      it.foreach { p =>
-        if (set.size < k) set += p
-        else if (ord.lt(p, set.last) && set.add(p)) set -= set.last
-      }
-      set.iterator
-    }
-    val w = org.apache.spark.sql.expressions.Window.orderBy(col("h"), col("v"))
-    // the rank window runs over at most k post-limit rows — never data.
-    partial.toDF("h", "v").distinct().orderBy(col("h"), col("v")).limit(k)
-      .withColumn("rank", row_number().over(w))
+    bottomK(items.filter(col(keyCol).isNotNull && col(valueCol).isNotNull)
+        .select(Dedup.hash32(col(keyCol).cast("string")).as("h"),
+          col(valueCol).cast("double").as("v")),
+      Nil, Seq("h", "v"), k)
       .select(col("rank"), col("h"), col("v"))
   }
 
@@ -608,15 +654,10 @@ object Sketches {
     * inputs are cross-validated against the declared k.
     */
   def quantileSampleMerge(k: Int, parts: DataFrame*): DataFrame = {
-    require(parts.nonEmpty, "quantileSampleMerge: at least one sample")
-    parts.foreach(p => require(Seq("h", "v").forall(p.columns.contains),
-      "quantileSampleMerge: not a quantile sample — need the (h, v) " +
-        "columns quantileSampleBuild emits"))
-    parts.foreach(Stamp.require(_, "quantileSampleMerge input", Seq("k" -> k)))
-    val w = org.apache.spark.sql.expressions.Window.orderBy(col("h"), col("v"))
-    parts.map(_.select(col("h"), col("v"))).reduce(_ unionByName _)
-      .distinct().orderBy(col("h"), col("v")).limit(k)
-      .withColumn("rank", row_number().over(w))
+    mergeChecked("quantileSampleMerge",
+      Shape("quantile sample", Seq("h", "v"), "quantileSampleBuild"),
+      parts, Seq("k"), Seq("k" -> k))
+    bottomK(unionOf(parts, Seq("h", "v")), Nil, Seq("h", "v"), k)
       .select(col("rank"), col("h"), col("v"))
   }
 
@@ -625,19 +666,10 @@ object Sketches {
     * day-30 merge against day-1 state cannot silently re-truncate at
     * the wrong k.
     */
-  def quantileSampleWrite(sketch: DataFrame, dir: String, k: Int = 512): Unit = {
-    require(Seq("rank", "h", "v").forall(sketch.columns.contains),
-      "quantileSampleWrite: not a quantile sample — need (rank, h, v) " +
-        "as built by quantileSampleBuild")
-    Stamp.require(sketch, "quantileSampleWrite input", Seq("k" -> k))
-    val mx = sketch.agg(max(col("rank"))).collect()(0)
-    if (!mx.isNullAt(0))
-      require(mx.getInt(0) <= k,
-        s"quantileSampleWrite: sample holds ${mx.getInt(0)} ranks — more " +
-          s"than the declared k=$k; it was built with a larger k")
-    sketch.select(col("rank"), col("h"), col("v")).withColumn("k", lit(k))
-      .write.mode("overwrite").parquet(dir)
-  }
+  def quantileSampleWrite(sketch: DataFrame, dir: String, k: Int = 512): Unit =
+    writeStamped(sketch, dir, "quantileSampleWrite",
+      Shape("quantile sample", Seq("rank", "h", "v"), "quantileSampleBuild"),
+      Seq("k" -> k), Seq("rank" -> k.toLong))
 
   /** Quantile reads from a STAMPED (persisted) sample: for each q, the
     * value at rank clamp(⌊q·(n_s+1)⌋, 1, n_s) of the sample in (v, h)
@@ -657,7 +689,7 @@ object Sketches {
         "with quantileSampleWrite")
     val spark = sketch.sparkSession
     import spark.implicits._
-    val wv = org.apache.spark.sql.expressions.Window.orderBy(col("v"), col("h"))
+    val wv = Window.orderBy(col("v"), col("h"))
     val ranked = sketch.select(col("h"), col("v"))
       .withColumn("rv", row_number().over(wv))
     qs.toDF("q")

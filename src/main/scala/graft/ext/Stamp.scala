@@ -104,6 +104,7 @@ private[graft] object Stamp {
   def restamp(df: DataFrame, stamp: Option[Values]): DataFrame =
     stamp.fold(df)(_.foldLeft(df) { case (d, (c, v)) => d.withColumn(c, lit(v)) })
 
-  private def show(vs: Seq[(String, Any)]): String =
+  /** `(c1=v1, c2=v2)`, as every refusal prints a stamp. */
+  private[ext] def show(vs: Seq[(String, Any)]): String =
     vs.map { case (c, v) => s"$c=$v" }.mkString("(", ", ", ")")
 }

@@ -487,21 +487,20 @@ object TextAnalysis {
     * with any parquet sink; [[lmScoreBigram]] re-derives the context
     * and vocab tables from it).
     *
+    * Trained FROM ITS COUNT STATE — [[lmModelFromCounts]] over
+    * [[lmCountsBuild]], the composition `Classifier.nbTrain` uses — so
+    * a stream folding the same counts ends at this model by
+    * construction. The `kind` filters fold the unused branch of the
+    * count union away, leaving the same exchanges as a direct train.
+    *
     * Scale: the only shuffles are vocabulary-keyed partial+final
     * aggregations (map-side combine collapses the token stream to
     * distinct-bigram grain before the exchange). The model is
     * distinct-bigram-sized — far smaller than the corpus at 100 TB —
     * and v rides along as a column instead of a driver-side collect.
     */
-  def bigramLmTrain(docs: DataFrame): DataFrame = {
-    val big = bigramPairs(docs).groupBy(col("w1"), col("w2"))
-      .agg(count(lit(1)).as("c2"))
-    val ctx = big.groupBy(col("w1")).agg(sum(col("c2")).as("c1"))
-    val v = docs.select(explode(toks).as("t"))
-      .agg(countDistinct(col("t")).as("v"))
-    big.join(ctx, "w1").crossJoin(v)
-      .select(col("w1"), col("w2"), col("c2"), col("c1"), col("v"))
-  }
+  def bigramLmTrain(docs: DataFrame): DataFrame =
+    lmModelFromCounts(lmCountsBuild(docs))
 
   /** Row cap on an LM resolved for in-scan scoring ([[resolveLm]]): the
     * model is collected to the driver and broadcast, so a model past

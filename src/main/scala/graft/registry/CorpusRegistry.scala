@@ -7,7 +7,7 @@ import graft.silver.Silver
 import graft.gold.Gold
 import graft.bronze.Bronze
 import graft.enrich.Enrich
-import graft.ext.{Dedup, Multimodal, Similarity, TextAnalysis}
+import graft.ext.{Dedup, Multimodal, TextAnalysis}
 import Shared._
 
 /** Corpus operations: split/sample/mix/pack/chunk, decontamination, release pipeline.
@@ -1588,19 +1588,8 @@ private[graft] object CorpusRegistry {
     "corpus_release_incremental" -> {
       // the semantic sweep's banding fragments — identical ±1 planes and
       // band layout as the corpus_decontaminate_embedding oracle
-      val planes = Similarity.planeMatrix(16, 64)
-      def planeLit(p: Int): String =
-        planes(p).map(v => if (v > 0) "1.0" else "-1.0").mkString("[", ",", "]")
-      val bitCols = (0 until 16).map { p =>
-        s"""    CASE WHEN list_sum(list_transform(generate_series(1, len(embedding)),
-           |      i -> CAST(embedding[i] AS DOUBLE) * (${planeLit(p)}::DOUBLE[])[i])) >= 0
-           |      THEN 1 ELSE 0 END AS b$p""".stripMargin
-      }.mkString(",\n")
-      def ebkey(bits: Seq[Int]) =
-        bits.map(b => s"CAST(b$b AS VARCHAR)").mkString(" || ',' || ")
-      val bandSelects = (0 until 4).map(b =>
-        s"  SELECT doc_id, source, embedding, $b AS band, ${ebkey(b * 4 until (b + 1) * 4)} AS bkey FROM esig")
-        .mkString("\n  UNION ALL\n")
+      val (bitCols, bandSelects) =
+        planeBandSql(16, "doc_id, source, embedding", "esig")
       s"""WITH $triSql,
          |$bandCteSql,
          |ep AS (
@@ -1872,19 +1861,8 @@ private[graft] object CorpusRegistry {
     "corpus_decontaminate_embedding" -> {
       // identical ±1 planes and band layout as the embedding-LSH dedup
       // oracle, restricted to train×bench candidate pairs
-      val planes = Similarity.planeMatrix(16, 64)
-      def planeLit(p: Int): String =
-        planes(p).map(v => if (v > 0) "1.0" else "-1.0").mkString("[", ",", "]")
-      val bitCols = (0 until 16).map { p =>
-        s"""    CASE WHEN list_sum(list_transform(generate_series(1, len(embedding)),
-           |      i -> CAST(embedding[i] AS DOUBLE) * (${planeLit(p)}::DOUBLE[])[i])) >= 0
-           |      THEN 1 ELSE 0 END AS b$p""".stripMargin
-      }.mkString(",\n")
-      def bkey(bits: Seq[Int]) =
-        bits.map(b => s"CAST(b$b AS VARCHAR)").mkString(" || ',' || ")
-      val bandSelects = (0 until 4).map(b =>
-        s"  SELECT doc_id, source, n_chars, embedding, $b AS band, ${bkey(b * 4 until (b + 1) * 4)} AS bkey FROM sig")
-        .mkString("\n  UNION ALL\n")
+      val (bitCols, bandSelects) =
+        planeBandSql(16, "doc_id, source, n_chars, embedding", "sig")
       s"""WITH p AS (
          |  SELECT d.doc_id, d.source, d.n_chars, e.embedding
          |  FROM documents d JOIN embeddings e ON e.vec_id = d.doc_id

@@ -576,19 +576,8 @@ private[graft] object Shared {
       // (identical ±1 planes; x unrestricted so bench docs flag
       // themselves), the text_lm_score chain at the -3.40 threshold,
       // and the text_nb_classify chain gated on label = 'en'.
-      val planes = Similarity.planeMatrix(16, 64)
-      def planeLit(p: Int): String =
-        planes(p).map(v => if (v > 0) "1.0" else "-1.0").mkString("[", ",", "]")
-      val bitCols = (0 until 16).map { p =>
-        s"""    CASE WHEN list_sum(list_transform(generate_series(1, len(embedding)),
-           |      i -> CAST(embedding[i] AS DOUBLE) * (${planeLit(p)}::DOUBLE[])[i])) >= 0
-           |      THEN 1 ELSE 0 END AS b$p""".stripMargin
-      }.mkString(",\n")
-      def bkey(bits: Seq[Int]) =
-        bits.map(b => s"CAST(b$b AS VARCHAR)").mkString(" || ',' || ")
-      val bandSelects = (0 until 4).map(b =>
-        s"  SELECT doc_id, source, embedding, $b AS band, ${bkey(b * 4 until (b + 1) * 4)} AS bkey FROM asig")
-        .mkString("\n  UNION ALL\n")
+      val (bitCols, bandSelects) =
+        planeBandSql(16, "doc_id, source, embedding", "asig")
       // near-dup gate (round 14): MinHash band table over the same
       // 5-shingles (identical 8-hash family / 2-wide bands as
       // bandCteSqlFor), probed against the admitted-cohort state
@@ -1408,6 +1397,31 @@ private[graft] object Shared {
       "\nORDER BY release, gate"
   }
 
+  /** The hyperplane-band fragments every embedding-LSH oracle inlines:
+    * `bitCols` projects one sign bit `b<p>` of `embedding` per ±1 plane
+    * of [[Similarity.planeMatrix]]`(numPlanes, 64)` (the engine's own
+    * planes), and `bandSelects` unions one `SELECT <cols>, <band> AS
+    * band, <bkey> AS bkey FROM <from>` per band of four bits. One
+    * generator, so no oracle can drift from the planes or band layout
+    * the engine bands with.
+    */
+  def planeBandSql(numPlanes: Int, cols: String, from: String): (String, String) = {
+    val planes = Similarity.planeMatrix(numPlanes, 64)
+    def planeLit(p: Int): String =
+      planes(p).map(v => if (v > 0) "1.0" else "-1.0").mkString("[", ",", "]")
+    val bitCols = (0 until numPlanes).map { p =>
+      s"""    CASE WHEN list_sum(list_transform(generate_series(1, len(embedding)),
+         |      i -> CAST(embedding[i] AS DOUBLE) * (${planeLit(p)}::DOUBLE[])[i])) >= 0
+         |      THEN 1 ELSE 0 END AS b$p""".stripMargin
+    }.mkString(",\n")
+    def bkey(bits: Seq[Int]) =
+      bits.map(b => s"CAST(b$b AS VARCHAR)").mkString(" || ',' || ")
+    val bandSelects = (0 until numPlanes / 4).map(b =>
+      s"  SELECT $cols, $b AS band, ${bkey(b * 4 until (b + 1) * 4)} AS bkey FROM $from")
+      .mkString("\n  UNION ALL\n")
+    (bitCols, bandSelects)
+  }
+
   def cosineSql(a: String, b: String): String = {
     def dot(x: String, y: String) =
       s"list_sum(list_transform(generate_series(1, len($x)), i -> CAST($x[i] AS DOUBLE)*CAST($y[i] AS DOUBLE)))"
@@ -1415,24 +1429,13 @@ private[graft] object Shared {
   }
 
   val lshOracle: String = {
-    val planes = Similarity.planeMatrix(8, 64)
-    def planeLit(p: Int): String =
-      planes(p).map(v => if (v > 0) "1.0" else "-1.0").mkString("[", ",", "]")
-    val bitCols = (0 until 8).map { p =>
-      s"""    CASE WHEN list_sum(list_transform(generate_series(1, len(embedding)),
-         |      i -> CAST(embedding[i] AS DOUBLE) * (${planeLit(p)}::DOUBLE[])[i])) >= 0
-         |      THEN 1 ELSE 0 END AS b$p""".stripMargin
-    }.mkString(",\n")
-    def bkey(bits: Seq[Int]) =
-      bits.map(b => s"CAST(b$b AS VARCHAR)").mkString(" || ',' || ")
+    val (bitCols, bandSelects) = planeBandSql(8, "vec_id, embedding", "sig")
     s"""WITH sig AS (
        |  SELECT vec_id, embedding,
        |$bitCols
        |  FROM embeddings
        |), banded AS (
-       |  SELECT vec_id, embedding, 0 AS band, ${bkey(0 until 4)} AS bkey FROM sig
-       |  UNION ALL
-       |  SELECT vec_id, embedding, 1 AS band, ${bkey(4 until 8)} AS bkey FROM sig
+       |$bandSelects
        |), cand AS (
        |  SELECT DISTINCT q.vec_id AS qid, q.embedding AS qe,
        |                  c.vec_id AS cid, c.embedding AS ce
@@ -1497,19 +1500,7 @@ private[graft] object Shared {
     * constants to [[Dedup.embeddingCosinePairsLsh]]'s defaults.
     */
   val embLshOracle: String = {
-    val planes = Similarity.planeMatrix(16, 64)
-    def planeLit(p: Int): String =
-      planes(p).map(v => if (v > 0) "1.0" else "-1.0").mkString("[", ",", "]")
-    val bitCols = (0 until 16).map { p =>
-      s"""    CASE WHEN list_sum(list_transform(generate_series(1, len(embedding)),
-         |      i -> CAST(embedding[i] AS DOUBLE) * (${planeLit(p)}::DOUBLE[])[i])) >= 0
-         |      THEN 1 ELSE 0 END AS b$p""".stripMargin
-    }.mkString(",\n")
-    def bkey(bits: Seq[Int]) =
-      bits.map(b => s"CAST(b$b AS VARCHAR)").mkString(" || ',' || ")
-    val bandSelects = (0 until 4).map(b =>
-      s"  SELECT vec_id, embedding, $b AS band, ${bkey(b * 4 until (b + 1) * 4)} AS bkey FROM sig")
-      .mkString("\n  UNION ALL\n")
+    val (bitCols, bandSelects) = planeBandSql(16, "vec_id, embedding", "sig")
     s"""WITH sig AS (
        |  SELECT vec_id, embedding,
        |$bitCols

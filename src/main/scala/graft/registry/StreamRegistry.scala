@@ -7,7 +7,7 @@ import graft.silver.Silver
 import graft.gold.Gold
 import graft.bronze.Bronze
 import graft.enrich.Enrich
-import graft.ext.{Dedup, Multimodal, Similarity, TextAnalysis}
+import graft.ext.{Dedup, Multimodal, TextAnalysis}
 import Shared._
 
 /** Structured Streaming surface: windowed aggs, joins, dedup, restart family, admission pipelines.
@@ -1058,19 +1058,8 @@ private[graft] object StreamRegistry {
       // decisions plus the banded-cosine semantic sweep (identical ±1
       // planes as every embedding oracle) subtracted from the admitted
       // set.
-      val planes = Similarity.planeMatrix(16, 64)
-      def planeLit(p: Int): String =
-        planes(p).map(v => if (v > 0) "1.0" else "-1.0").mkString("[", ",", "]")
-      val bitCols = (0 until 16).map { p =>
-        s"""    CASE WHEN list_sum(list_transform(generate_series(1, len(embedding)),
-           |      i -> CAST(embedding[i] AS DOUBLE) * (${planeLit(p)}::DOUBLE[])[i])) >= 0
-           |      THEN 1 ELSE 0 END AS b$p""".stripMargin
-      }.mkString(",\n")
-      def ebkey(bits: Seq[Int]) =
-        bits.map(b => s"CAST(b$b AS VARCHAR)").mkString(" || ',' || ")
-      val bandSelects = (0 until 4).map(b =>
-        s"  SELECT doc_id, source, embedding, $b AS band, ${ebkey(b * 4 until (b + 1) * 4)} AS bkey FROM esig")
-        .mkString("\n  UNION ALL\n")
+      val (bitCols, bandSelects) =
+        planeBandSql(16, "doc_id, source, embedding", "esig")
       s"""WITH ep AS (
          |  SELECT d.doc_id, d.source, e.embedding
          |  FROM documents d JOIN embeddings e ON e.vec_id = d.doc_id

@@ -507,4 +507,152 @@ class SketchesSpec extends AnyFunSuite {
     }
     assert(e.getMessage.contains("not a grouped KMV sketch"))
   }
+
+  /** The bottom-k law, stated directly: per group of `keys`, the k
+    * smallest distinct rows in `order` order, ranked by row_number over
+    * a distinct window — the form every sketch build and merge must
+    * agree with.
+    */
+  private def lawBottomK(df: org.apache.spark.sql.DataFrame, keys: Seq[String],
+                         order: Seq[String], k: Int) = {
+    val w = org.apache.spark.sql.expressions.Window
+      .partitionBy(keys.map(col): _*).orderBy(order.map(col): _*)
+    df.select((keys ++ order).map(col): _*).distinct()
+      .withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
+  }
+
+  test("bottom-k law across forms: KMV keyed and unkeyed, merges, duplicates, nulls, under-full and exactly-k") {
+    import spark.implicits._
+    import graft.ext.Dedup
+    val k = 8
+    // full keys (k0..k3, duplicates), a NULL key, NULL items, a key with
+    // exactly k distinct items (each twice) and an under-full key
+    val rows = (0 until 120).map(i =>
+        (i, Option(s"k${i % 4}").filter(_ => i % 11 != 0),
+          Option(s"i${i % 37}").filter(_ => i % 13 != 0))) ++
+      (0 until 2 * k).map(i => (200 + i, Option("exact"), Option(s"e${i % k}"))) ++
+      Seq((300, Option("under"), Option("u1")), (301, Option("under"), Option("u2")),
+        (302, Option("under"), Option("u1")))
+    val items = rows.toDF("n", "key", "t").repartition(3)
+    val hashed = items.filter(col("t").isNotNull)
+      .select(col("key"), Dedup.hash32(col("t")).as("h"))
+    // keyed build == the law (NULL keys dropped, every key under k rows)
+    assertSameRows(Sketches.kmvBuildBy(items, "key", "t", k),
+      lawBottomK(hashed.filter(col("key").isNotNull), Seq("key"), Seq("h"), k),
+      "kmvBuildBy vs law")
+    Seq("all" -> items, "exactly k" -> items.filter(col("key") === "exact"),
+        "under-full" -> items.filter(col("key") === "under")).foreach { case (what, df) =>
+      val unkeyed = Sketches.kmvBuild(df, "t", k)
+      val law = lawBottomK(df.filter(col("t").isNotNull)
+        .select(Dedup.hash32(col("t")).as("h")), Nil, Seq("h"), k).select(col("rank"), col("h"))
+      assertSameRows(unkeyed, law, s"kmvBuild vs law ($what)")
+      // keyed with one key == unkeyed
+      assertSameRows(Sketches.kmvBuildBy(df.withColumn("one", lit("x")), "one", "t", k)
+        .select(col("rank"), col("h")), unkeyed, s"one-key kmvBuildBy vs kmvBuild ($what)")
+    }
+    assert(Sketches.kmvBuild(items.filter(col("key") === "exact"), "t", k).count() === k)
+    assert(Sketches.kmvBuild(items.filter(col("key") === "under"), "t", k).count() === 2L)
+    // build(A ∪ B) == merge(build A, build B), keyed and unkeyed
+    val (a, b) = (items.filter(col("n") % 2 === 0), items.filter(col("n") % 2 =!= 0))
+    assertSameRows(Sketches.kmvMerge(k, Sketches.kmvBuild(a, "t", k), Sketches.kmvBuild(b, "t", k)),
+      Sketches.kmvBuild(items, "t", k), "kmvMerge law")
+    assertSameRows(Sketches.kmvMergeBy(k, Sketches.kmvBuildBy(a, "key", "t", k),
+        Sketches.kmvBuildBy(b, "key", "t", k)),
+      Sketches.kmvBuildBy(items, "key", "t", k), "kmvMergeBy law")
+  }
+
+  test("bottom-k law for quantile samples: NaN and -0.0 values, duplicate keys, nulls, merge law") {
+    import spark.implicits._
+    import graft.ext.Dedup
+    val nan2 = java.lang.Double.longBitsToDouble(0x7ff8000000000001L)
+    val k = 6
+    val vals = Seq(-0.0, 0.0, Double.NaN, nan2, 1.5, -2.0, 0.0, -0.0)
+    val rows = (0 until 90).map(i =>
+      (i, Option(i.toLong % 23).filter(_ => i % 17 != 5),
+        Option(vals(i % vals.length)).filter(_ => i % 19 != 7)))
+    val items = rows.toDF("n", "key", "value").repartition(3)
+    def law(df: org.apache.spark.sql.DataFrame) = lawBottomK(
+      df.filter(col("key").isNotNull && col("value").isNotNull)
+        .select(Dedup.hash32(col("key").cast("string")).as("h"), col("value").as("v")),
+      Nil, Seq("h", "v"), k).select(col("rank"), col("h"), col("v"))
+    assertSameRows(Sketches.quantileSampleBuild(items, "key", "value", k), law(items),
+      "quantileSampleBuild vs law")
+    val (a, b) = (items.filter(col("n") % 2 === 0), items.filter(col("n") % 2 =!= 0))
+    assertSameRows(Sketches.quantileSampleMerge(k,
+        Sketches.quantileSampleBuild(a, "key", "value", k),
+        Sketches.quantileSampleBuild(b, "key", "value", k)),
+      Sketches.quantileSampleBuild(items, "key", "value", k), "quantileSampleMerge law")
+    // one partition holding -0.0 and 0.0 under one hash: the prune must
+    // count them as ONE row, as the final distinct does, or it keeps
+    // fewer than k distinct pairs
+    val zeros = Seq((1L, -0.0), (1L, 0.0), (1L, nan2), (1L, Double.NaN), (1L, 1.0), (1L, 2.0))
+      .toDF("key", "value").coalesce(1)
+    val got = Sketches.quantileSampleBuild(zeros, "key", "value", k = 3)
+    assertSameRows(got, law(zeros).filter(col("rank") <= 3), "one-partition -0.0/NaN sample")
+    assert(got.orderBy("rank").collect().map(_.getDouble(2)).toSeq === Seq(0.0, 1.0, 2.0))
+  }
+
+  test("the KMV build is bounded: kmvBuildBy over the sf0.01 shingles shuffles at most partitions x keys x k rows") {
+    import graft.ext.Dedup
+    val sf01 = new java.io.File(new java.io.File(sfDir).getParentFile, "sf0.01").getPath
+    val docs = Tables.documents(spark, sf01)
+    val sh = Dedup.shingles(docs, w = 3)
+      .join(docs.select(col("doc_id"), col("source")), Seq("doc_id"))
+      .select(col("source"), col("sh"))
+      .localCheckpoint(eager = true)
+    val parts = sh.rdd.getNumPartitions.toLong
+    val keys = sh.select(col("source")).distinct().count()
+    val k = 16
+    val records = new java.util.concurrent.atomic.LongAdder
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onTaskEnd(e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
+        Option(e.taskMetrics).foreach(m => records.add(m.shuffleWriteMetrics.recordsWritten))
+    }
+    spark.sparkContext.addSparkListener(listener)
+    val built = try {
+      val rows = Sketches.kmvBuildBy(sh, "source", "sh", k).collect()
+      drainListenerBus()
+      rows
+    } finally spark.sparkContext.removeSparkListener(listener)
+    info(s"${records.sum} shuffle records; bound $parts partitions x $keys keys x k=$k")
+    assert(built.length === keys * k, "every source holds more than k distinct shingles")
+    assert(records.sum <= parts * keys * k,
+      s"kmvBuildBy shuffled ${records.sum} records, above $parts partitions x $keys keys x k=$k")
+  }
+
+  test("each stamped-state writer refuses an out-of-geometry sketch with its own message") {
+    import spark.implicits._
+    val Q = graft.ext.Quality
+    val items = spark.range(400).select(concat(lit("t"), col("id")).as("t"))
+    val tmp = tmpDir("graft_sketch_writers").toString
+    try {
+      def refusal(body: => Unit) = intercept[IllegalArgumentException](body).getMessage
+      val cm = refusal(Sketches.countMinWrite(
+        Sketches.countMinBuild(items, "t", width = 2048), s"$tmp/cm"))
+      assert(cm.contains("countMinWrite:") && cm.contains("outside the declared") &&
+        cm.contains("width=1024"), cm)
+      val bloom = refusal(Sketches.bloomWrite(
+        Sketches.bloomBuild(items, "t", numBits = 16384), s"$tmp/bloom"))
+      assert(bloom.contains("bloomWrite:") && bloom.contains("outside the declared") &&
+        bloom.contains("num_bits=8192"), bloom)
+      val kmv = refusal(Sketches.kmvWrite(Sketches.kmvBuild(items, "t", k = 64),
+        s"$tmp/kmv", k = 32))
+      assert(kmv.contains("kmvWrite:") && kmv.contains("rank=64") &&
+        kmv.contains("outside the declared (k=32)"), kmv)
+      val sample = refusal(Sketches.quantileSampleWrite(
+        Sketches.quantileSampleBuild(spark.range(400).select(col("id"),
+          col("id").cast("double").as("v")), "id", "v", k = 64), s"$tmp/q", k = 32))
+      assert(sample.contains("quantileSampleWrite:") && sample.contains("rank=64") &&
+        sample.contains("outside the declared (k=32)"), sample)
+      // a histogram's geometry is its bin width: a state stamped under
+      // another width refuses before anything is written
+      Q.histWrite(Q.histBuild(Seq(1.0, 26.0).toDF("v"), "v", 25.0), s"$tmp/h", 25.0)
+      val hist = refusal(Q.histWrite(spark.read.parquet(s"$tmp/h"), s"$tmp/h2", 50.0))
+      assert(hist.contains("histWrite input layout mismatch") &&
+        hist.contains("bin_width"), hist)
+      // in-geometry sketches still write, stamped
+      Sketches.kmvWrite(Sketches.kmvBuild(items, "t", k = 32), s"$tmp/kmv_ok", k = 32)
+      assert(spark.read.parquet(s"$tmp/kmv_ok").columns.toSeq === Seq("rank", "h", "k"))
+    } finally graft.plans.Pipeline.deleteRecursively(java.nio.file.Paths.get(tmp))
+  }
 }

@@ -185,6 +185,41 @@ class TextAnalysisSpec extends AnyFunSuite {
     assert(got(0).isNullAt(3), "score must be NULL, not fabricated")
   }
 
+  /** The direct bigram-LM train, kept as the reference for the count-state
+    * form: bigram counts, context counts rolled up from them, and the
+    * distinct-token count crossed onto every row.
+    */
+  private def directLmTrain(docs: org.apache.spark.sql.DataFrame) = {
+    import org.apache.spark.sql.functions._
+    val pairs = docs.select(col("doc_id").cast("long"), col("text"))
+      .as[(Long, String)]
+      .flatMap { case (id, text) =>
+        val t = graft.ext.LmTable.pairTokens(text)
+        (0 until t.length - 1).iterator.map(i => (id, t(i), t(i + 1)))
+      }
+      .toDF("doc_id", "w1", "w2")
+    val big = pairs.groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("c2"))
+    val ctx = big.groupBy(col("w1")).agg(sum(col("c2")).as("c1"))
+    val v = docs.select(explode(split(col("text"), " ")).as("t"))
+      .agg(countDistinct(col("t")).as("v"))
+    big.join(ctx, "w1").crossJoin(v)
+      .select(col("w1"), col("w2"), col("c2"), col("c1"), col("v"))
+  }
+
+  test("bigram LM trained from its count state == the direct train (sf0.01, no bigrams, single-token docs)") {
+    val sf01 = new java.io.File(new java.io.File(sfDir).getParentFile, "sf0.01").getPath
+    val corpora = Seq(
+      "sf0.01" -> Tables.documents(spark, sf01),
+      "no bigrams" -> Seq((1L, Option("")), (2L, Option.empty[String]), (3L, Option("x")))
+        .toDF("doc_id", "text"),
+      "single-token docs" -> Seq((1L, "a"), (2L, "b"), (3L, "a"), (4L, "a b a"))
+        .toDF("doc_id", "text"))
+    corpora.foreach { case (what, docs) =>
+      assertSameRows(TextAnalysis.bigramLmTrain(docs), directLmTrain(docs), what)
+    }
+    assert(TextAnalysis.bigramLmTrain(corpora(1)._2).count() === 0L)
+  }
+
   test("per-language LM: statistics stay within the key partition; unknown keys score NULL") {
     // same surface bigram (a,b) in two languages with different
     // within-language statistics: en has (a,b)×2 of 3 bigrams
